@@ -249,6 +249,8 @@ import re
 import sys
 from collections import Counter
 
+import harness
+
 
 def main() -> None:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
@@ -272,9 +274,7 @@ def main() -> None:
                 print(f"{name}: {dup}")
         except Exception as ex:  # noqa: BLE001
             print(f"{name}: ERROR {str(ex)[:120]}")
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        harness.release(spark)
     spark.stop()
 
 

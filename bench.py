@@ -10,18 +10,9 @@ expression work (winnowing, signatures, chunk text) would go untimed —
 round-1 recorded 0.26 s for a winnowing query whose real cost was ~10 s.
 
 Steady-state protocol (r08, r07 verdict item 5): queries run in a fixed
-order; any query whose first rep exceeds ``SPARK_GRAFT_BENCH_REP2_FLOOR``
-seconds (default 1.5) is re-run once and the MIN of the two reps is
-recorded. Rationale: three consecutive rounds produced false bench
-flags from one-time JIT / python-worker warmup charged to whichever
-query hit a code shape first (r06 ``knn_lsh_multiprobe`` 1.17→3.1 s
-purely from registry position; r07 ``supplier_bradley_terry`` 14.0 s
-cold vs 5.4 s steady, ``order_value_poisson_bootstrap`` 5.0 vs 1.5 s) —
-each needed a hand-run solo re-measure. Warmup inflation by definition
-raises rep0 ABOVE steady state, so re-repping only the slow tail
-catches every artifact in the class while adding only the heavy
-queries' cost (~25-35% of a full single-rep sweep, not 2×). Set the
-floor to 0 for min-of-2 on everything, or very high to disable.
+order after ``harness.warm``; any query whose first rep takes 1.5 s or
+more is re-run once and the MIN of the two reps is recorded (see
+``harness.time_query``).
 """
 
 from __future__ import annotations
@@ -29,206 +20,35 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 
+import harness  # noqa: E402
+
+REP2_FLOOR_S = 1.5
+
 
 def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-
     from technical_test_data_engineer_spark.plans.star_queries import QUERIES
-    from technical_test_data_engineer_spark.session import get_spark
 
-    spark = get_spark(
-        "bench",
-        master=f"local[{cpus}]",
-        shuffle_partitions=int(cpus),
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-
-    # warm the JVM + parquet footers + Python UDF workers outside the
-    # timed region (one worker per core spawns on first pandas_udf use)
-    from pyspark.sql.functions import pandas_udf
-
-    identity = pandas_udf(lambda s: s, "long")
-    spark.range(int(cpus) * 4).repartition(int(cpus)).select(
-        identity("id")
-    ).count()
-    # (the pyspark.ml KMeans warmup that used to live here is gone with
-    # its last caller — IVF training is driver-side numpy k-means++ now)
-    # ... and the interpreter/JIT steady state for the heavy expression
-    # families. Catalyst evaluates higher-order functions (aggregate /
-    # zip_with / transform) OUTSIDE whole-stage codegen, so the decimal-
-    # exact dot-product fold runs on BigDecimal paths that HotSpot only
-    # optimizes after ~10⁴ invocations — the FIRST query to push real
-    # volume through each shape paid 10-20 s of interpreted execution
-    # (measured: embedding_near_dups_lsh_exact 21.6 s cold vs 2.6 s
-    # warm, identical plan). Which query paid it depended on registry
-    # order, so per-query numbers were order-sensitive noise. Burning
-    # the folds in here (untimed, like the worker/class warmups above)
-    # makes every timed query measure steady-state plan cost.
-    import random as _random
-
-    from pyspark.sql import functions as F
-
-    from technical_test_data_engineer_spark.operators.dedup import (
-        lsh_band_keys,
-        minhash_signature,
-        simhash_packed,
-        word_shingles,
-    )
-    from technical_test_data_engineer_spark.operators.similarity import (
-        exact_dot,
-        int_scaled_dot,
-    )
-
-    _rng = _random.Random(0)
-    _vecs = spark.createDataFrame(
-        [(i, [_rng.uniform(-1, 1) for _ in range(64)]) for i in range(160)],
-        "vec_id long, embedding array<float>",
-    )
-    _vecs.crossJoin(_vecs.selectExpr("embedding AS _e2")).select(
-        exact_dot(F.col("embedding"), F.col("_e2")).alias("d")
-    ).write.format("noop").mode("overwrite").save()
-    # the r10/r11 integer-scaled fold (zip_with round-to-BIGINT sum) is
-    # a distinct HOF shape from the decimal fold — with knn_bruteforce
-    # migrated to metric="int" (r11) it is now the bench's heaviest fold
-    # family, so burn it in too (measured: 7.4 s cold vs 1.1 s warm solo
-    # at sf0.1)
-    _vecs.crossJoin(_vecs.selectExpr("embedding AS _e2")).select(
-        int_scaled_dot(F.col("embedding"), F.col("_e2")).alias("d")
-    ).write.format("noop").mode("overwrite").save()
-    _docs = spark.createDataFrame(
-        [(i, f"warm {i} " + " ".join(f"w{j}" for j in range(40)))
-         for i in range(200)],
-        "doc_id long, text string",
-    )
-    for _portable in (False, True):
-        _sig = minhash_signature(
-            word_shingles("text", 3), 32, 42, _portable
-        )
-        _docs.select(
-            F.explode(lsh_band_keys(_sig, 8, 4, _portable)).alias("_b")
-        ).write.format("noop").mode("overwrite").save()
-    _docs.select(simhash_packed("text").alias("_s")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # the covariance moments' nested-transform decimal products are yet
-    # another HOF shape (measured ~6 s interpreted on first use)
-    from technical_test_data_engineer_spark.operators.linalg import (
-        embedding_moments,
-    )
-
-    _sums, _cross, _ = embedding_moments(_vecs)
-    _cross.write.format("noop").mode("overwrite").save()
-    _sums.write.format("noop").mode("overwrite").save()
-    # ... and the numpy-backed pandas-UDF families (IVF assignment,
-    # PQ/IVF-PQ encode) + the grouped-map path: their first use pays a
-    # per-worker numpy import plus Arrow grouped-map setup — one-time
-    # session costs, not query costs. Spread across all workers.
-    from technical_test_data_engineer_spark.operators.similarity import (
-        ivf_assignment_udf,
-        ivfpq_encode_udf,
-        pq_encode_udf,
-    )
-    import numpy as _np
-
-    _cents = [[1.0 if j == i else 0.0 for j in range(64)] for i in range(4)]
-    _books = _np.zeros((8, 4, 8))
-    _vw = _vecs.repartition(int(cpus))
-    _vw.select(ivf_assignment_udf(_cents)("embedding")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    _vw.select(pq_encode_udf(_books)("embedding")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    _vw.select(ivfpq_encode_udf(_cents, _books)("embedding")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    # ... and the array-of-struct HOF family (transform over suffix
-    # slices + flatten + explode — the basket-pair generator), another
-    # interpreted-eval shape HotSpot must warm
-    _bask = spark.range(512).selectExpr(
-        "id % 64 AS g", "CAST(id AS LONG) AS v"
-    ).groupBy("g").agg(F.array_sort(F.collect_set("v")).alias("items"))
-    _pairs = F.flatten(
-        F.transform(
-            F.col("items"),
-            lambda x, i: F.transform(
-                F.slice(F.col("items"), i + 2, F.size(F.col("items"))),
-                lambda y: F.struct(x.alias("a"), y.alias("b")),
-            ),
-        )
-    )
-    _bask.select(F.explode(_pairs)).write.format("noop").mode(
-        "overwrite"
-    ).save()
-    from technical_test_data_engineer_spark.operators.windows import (
-        grouped_ewma,
-    )
-
-    grouped_ewma(
-        spark.createDataFrame(
-            [(i % 8, i, float(i)) for i in range(64)], "k long, t long, v double"
-        ),
-        ["k"], ["t"], "v", alpha=0.5,
-    ).write.format("noop").mode("overwrite").save()
-    # ... and the interpolated-percentile ImperativeAggregate (another
-    # non-codegen family): daily_revenue_repeated_median's r10 driver
-    # number (4.80 s vs 2.6 s builder steady) decomposes to NLJ 0.3 s +
-    # grouped percentile 0.63 s warm locally, so the residual is this
-    # family's JIT, not the plan — burn one grouped + one global
-    # percentile through the same eval shape (r11 triage)
-    _pct = spark.range(200_000).selectExpr(
-        "id % 512 AS g", "CAST(id AS DOUBLE) / 7.0 AS v"
-    )
-    _pct.groupBy("g").agg(
-        F.percentile("v", F.lit(0.5)).alias("m")
-    ).agg(F.percentile("m", F.lit(0.5)).alias("mm")).write.format(
-        "noop"
-    ).mode("overwrite").save()
-
-    rep2_floor = float(os.environ.get("SPARK_GRAFT_BENCH_REP2_FLOOR", "1.5"))
-
-    def _run_once(fn) -> float:
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        # noop write: evaluates every column of every row JVM-side with
-        # zero sink cost — count() would column-prune the query body
-        df.write.format("noop").mode("overwrite").save()
-        elapsed = time.time() - t0
-        # drop intra-query persisted intermediates so queries are timed
-        # in isolation: clearCache frees DataFrame persists, but NOT
-        # localCheckpoint RDDs (iterative operators) — unpersist every
-        # persistent RDD explicitly, then nudge the JVM to collect,
-        # otherwise heap pressure from earlier queries taxes later ones
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-        spark._jvm.System.gc()
-        return elapsed
+    spark, sf_dir, cpus = harness.start_session("bench")
+    harness.warm(spark, cpus)
 
     timings: dict[str, float] = {}
     for name, fn in QUERIES.items():
-        rep0 = _run_once(fn)
-        if rep0 >= rep2_floor:
-            # slow enough to matter AND slow enough to be a possible
-            # warmup artifact — steady state is the min of two reps
-            # (clearCache between reps, so rep1 still pays the query's
-            # own scans/shuffles; only session-lifetime JIT and worker
-            # startup are amortized, which is the point)
-            rep1 = _run_once(fn)
-            timings[name] = round(min(rep0, rep1), 3)
+        reps = [
+            r.seconds
+            for r in harness.time_query(spark, fn, sf_dir, REP2_FLOOR_S)
+        ]
+        timings[name] = round(min(reps), 3)
+        if len(reps) == 2:
             print(
                 f"# {name}: {timings[name]:.3f}s"
-                f" (rep0 {rep0:.3f}, rep1 {rep1:.3f})",
+                f" (rep0 {reps[0]:.3f}, rep1 {reps[1]:.3f})",
                 file=sys.stderr,
             )
         else:
-            timings[name] = round(rep0, 3)
             print(f"# {name}: {timings[name]:.3f}s", file=sys.stderr)
 
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")

@@ -1,6 +1,6 @@
 """Same-JVM alternating-order A/B: times the CURRENT registry form of
 each named query against the form at a given git ref, in one session
-with bench_solo's warmups, alternating old/new order per round.
+with the harness warm set, alternating old/new order per round.
 
 Usage:
   python bench_ab.py <git_ref> <rounds> q1 q2 ...
@@ -12,13 +12,13 @@ and min-of-rounds for both forms.
 from __future__ import annotations
 
 import json
-import os
 import subprocess
 import sys
-import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+import harness  # noqa: E402
 
 REPO = Path(__file__).resolve().parent
 MODULES = [
@@ -35,8 +35,6 @@ def main() -> None:
     ref = sys.argv[1]
     rounds = int(sys.argv[2])
     names = sys.argv[3:]
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
 
     from technical_test_data_engineer_spark.plans import star_queries as SQ
 
@@ -67,29 +65,11 @@ def main() -> None:
     if missing:
         sys.exit(f"old form not found for {missing} (module list?)")
 
-    from technical_test_data_engineer_spark.session import get_spark
-
-    spark = get_spark(
-        "bench_ab", master=f"local[{cpus}]", shuffle_partitions=int(cpus)
-    )
-    spark.sparkContext.setLogLevel("ERROR")
-    from pyspark.sql.functions import pandas_udf
-
-    identity = pandas_udf(lambda s: s, "long")
-    spark.range(int(cpus) * 4).repartition(int(cpus)).select(
-        identity("id")
-    ).count()
+    spark, sf_dir, cpus = harness.start_session("bench_ab")
+    harness.warm(spark, cpus)
 
     def run_once(fn) -> float:
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        df.write.format("noop").mode("overwrite").save()
-        el = time.time() - t0
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
-        spark._jvm.System.gc()
-        return round(el, 3)
+        return round(harness.run_once(spark, fn, sf_dir).seconds, 3)
 
     res = {n: {"old": [], "new": []} for n in names}
     # warm both forms once (uncounted) so JIT/codegen state is shared

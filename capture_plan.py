@@ -1,8 +1,10 @@
 """Capture .explain('formatted') for named queries into plans/r15/.
 
 Usage: python capture_plan.py <suffix> q1 q2 ...
-Writes plans/r15/<query>_<suffix>.txt. Not part of the bench path —
-plan compilation only, no job runs (safe to run alongside other work).
+Writes plans/r15/<query>_<suffix>.txt. Not part of the bench path:
+the plans are compiled, not executed — but a driver-side query runs
+Spark jobs while its plan is built (its bounded collects), so a capture
+is not free of job work and can perturb a concurrent timing run.
 """
 from __future__ import annotations
 
@@ -11,6 +13,8 @@ import sys
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parent))
+
+import harness  # noqa: E402
 
 
 def main() -> None:
@@ -36,9 +40,7 @@ def main() -> None:
         n_scan = txt.count("Scan parquet")
         print(f"{n}: {len(txt.splitlines())} lines, {n_exch} Exchange, "
               f"{n_scan} scans -> {p.name}")
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        harness.release(spark)
     spark.stop()
 
 

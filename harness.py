@@ -1,0 +1,197 @@
+"""Shared timing harness for the bench scripts (bench.py, bench_solo.py,
+bench_ab.py) and the per-query isolation every registry sweep uses.
+
+- ``start_session(app)``: the SparkSession on local[$SPARK_GRAFT_CPUS]
+  (default 32) plus the scale-factor directory $SPARK_GRAFT_SF_DIR
+  (default: the sf0.1 test data).
+- ``warm(spark, cpus)``: the untimed JIT / Python-worker warm set.
+- ``release(spark)``: drop every cached frame and persisted RDD.
+- ``run_once`` / ``time_query``: the timing protocol. The timed region
+  is plan build plus a noop write; release and a JVM GC follow it, and
+  queries whose first rep reaches a floor run a second rep, keeping
+  the min. Job counts are read outside the timer.
+"""
+
+from __future__ import annotations
+
+import os
+import random
+import time
+from typing import NamedTuple
+
+
+def start_session(app: str):
+    """Returns ``(spark, sf_dir, cpus)``."""
+    from technical_test_data_engineer_spark.session import get_spark
+
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    spark = get_spark(app, master=f"local[{cpus}]", shuffle_partitions=cpus)
+    spark.sparkContext.setLogLevel("ERROR")
+    return spark, sf_dir, cpus
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def warm(spark, cpus: int) -> None:
+    """Warm the JVM, parquet footers and Python UDF workers outside the
+    timed region, so every timed query measures steady-state plan cost.
+
+    Catalyst evaluates higher-order functions (aggregate / zip_with /
+    transform) OUTSIDE whole-stage codegen, so each interpreted-eval
+    family runs on paths HotSpot only optimizes after ~10⁴ invocations —
+    the FIRST query to push real volume through a shape paid 10-20 s
+    (measured: embedding_near_dups_lsh_exact 21.6 s cold vs 2.6 s warm,
+    identical plan), and which query paid it depended on registry
+    order. A query family migrated to a new non-codegen expression
+    shape adds its burn-in here in the same change."""
+    from pyspark.sql import functions as F
+    from pyspark.sql.functions import pandas_udf
+
+    from technical_test_data_engineer_spark.operators.dedup import (
+        lsh_band_keys,
+        minhash_signature,
+        simhash_packed,
+        word_shingles,
+    )
+    from technical_test_data_engineer_spark.operators.similarity import (
+        exact_dot,
+        int_scaled_dot,
+        ivf_assignment_udf,
+        ivfpq_encode_udf,
+        pq_encode_udf,
+    )
+    from technical_test_data_engineer_spark.operators.windows import (
+        grouped_ewma,
+    )
+
+    # one Python worker per core spawns on first pandas_udf use
+    identity = pandas_udf(lambda s: s, "long")
+    spark.range(cpus * 4).repartition(cpus).select(identity("id")).count()
+    # the decimal-exact dot-product fold, and the r10/r11 integer-scaled
+    # fold (zip_with round-to-BIGINT sum) — a distinct HOF shape, the
+    # heaviest fold family since knn_bruteforce moved to metric="int"
+    # (measured: 7.4 s cold vs 1.1 s warm solo at sf0.1)
+    rng = random.Random(0)
+    vecs = spark.createDataFrame(
+        [(i, [rng.uniform(-1, 1) for _ in range(64)]) for i in range(160)],
+        "vec_id long, embedding array<float>",
+    )
+    for dot in (exact_dot, int_scaled_dot):
+        _noop(
+            vecs.crossJoin(vecs.selectExpr("embedding AS _e2")).select(
+                dot(F.col("embedding"), F.col("_e2")).alias("d")
+            )
+        )
+    # the md5/minhash/simhash signature pipelines
+    docs = spark.createDataFrame(
+        [(i, f"warm {i} " + " ".join(f"w{j}" for j in range(40)))
+         for i in range(200)],
+        "doc_id long, text string",
+    )
+    for portable in (False, True):
+        sig = minhash_signature(word_shingles("text", 3), 32, 42, portable)
+        bands = lsh_band_keys(sig, 8, 4, portable)
+        _noop(docs.select(F.explode(bands).alias("_b")))
+    _noop(docs.select(simhash_packed("text").alias("_s")))
+    # the numpy-backed pandas-UDF families (IVF assignment, PQ/IVF-PQ
+    # encode) and the grouped-map path: their first use pays a
+    # per-worker numpy import plus Arrow grouped-map setup — one-time
+    # session costs, not query costs. Spread across all workers.
+    import numpy as np
+
+    cents = [[1.0 if j == i else 0.0 for j in range(64)] for i in range(4)]
+    books = np.zeros((8, 4, 8))
+    vw = vecs.repartition(cpus)
+    _noop(vw.select(ivf_assignment_udf(cents)("embedding")))
+    _noop(vw.select(pq_encode_udf(books)("embedding")))
+    _noop(vw.select(ivfpq_encode_udf(cents, books)("embedding")))
+    # the array-of-struct HOF family (transform over suffix slices +
+    # flatten + explode — the basket-pair generator)
+    bask = spark.range(512).selectExpr(
+        "id % 64 AS g", "CAST(id AS LONG) AS v"
+    ).groupBy("g").agg(F.array_sort(F.collect_set("v")).alias("items"))
+    pairs = F.flatten(
+        F.transform(
+            F.col("items"),
+            lambda x, i: F.transform(
+                F.slice(F.col("items"), i + 2, F.size(F.col("items"))),
+                lambda y: F.struct(x.alias("a"), y.alias("b")),
+            ),
+        )
+    )
+    _noop(bask.select(F.explode(pairs)))
+    _noop(
+        grouped_ewma(
+            spark.createDataFrame(
+                [(i % 8, i, float(i)) for i in range(64)],
+                "k long, t long, v double",
+            ),
+            ["k"], ["t"], "v", alpha=0.5,
+        )
+    )
+    # the interpolated-percentile ImperativeAggregate (another
+    # non-codegen family, 5-7 s interpreted on its first real-volume
+    # query): one grouped + one global percentile through the same
+    # eval shape
+    pct = spark.range(200_000).selectExpr(
+        "id % 512 AS g", "CAST(id AS DOUBLE) / 7.0 AS v"
+    )
+    _noop(
+        pct.groupBy("g")
+        .agg(F.percentile("v", F.lit(0.5)).alias("m"))
+        .agg(F.percentile("m", F.lit(0.5)).alias("mm"))
+    )
+
+
+def release(spark) -> None:
+    """Per-query isolation: clearCache frees DataFrame persists but NOT
+    localCheckpoint RDDs (iterative operators), so unpersist every
+    persistent RDD explicitly too."""
+    spark.catalog.clearCache()
+    for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
+        rdd.unpersist()
+
+
+class Rep(NamedTuple):
+    seconds: float  # build + noop write
+    build_s: float  # the Python/driver-side plan build alone
+    jobs: int  # Spark jobs launched by build + write
+
+
+def run_once(spark, fn, sf_dir: str) -> Rep:
+    """One timed rep of registry query ``fn``, then release + JVM GC
+    (heap pressure from earlier queries would otherwise tax later
+    ones)."""
+    tracker = spark.sparkContext.statusTracker()
+    jobs0 = len(tracker.getJobIdsForGroup(None) or [])
+    t0 = time.time()
+    df = fn(spark, sf_dir)
+    t1 = time.time()
+    # noop write: evaluates every column of every row JVM-side with zero
+    # sink cost — count() would column-prune the query body
+    _noop(df)
+    elapsed = time.time() - t0
+    jobs = len(tracker.getJobIdsForGroup(None) or []) - jobs0
+    release(spark)
+    spark._jvm.System.gc()
+    return Rep(elapsed, t1 - t0, jobs)
+
+
+def time_query(spark, fn, sf_dir: str, floor: float) -> list[Rep]:
+    """Steady-state protocol (r08): a query whose first rep reaches
+    ``floor`` seconds runs a second rep; its time is the min of the
+    reps. Warmup inflation raises rep0 ABOVE steady state, so re-repping
+    only the slow tail catches the one-time JIT / worker-start artifact
+    class (r06 knn_lsh_multiprobe 1.17→3.1 s purely from registry
+    position; r07 supplier_bradley_terry 14.0 s cold vs 5.4 s steady)
+    for ~25-35% of a single-rep sweep, not 2×. Release runs between
+    reps, so rep1 still pays the query's own scans and shuffles; only
+    session-lifetime JIT and worker start are amortized. ``floor=0``
+    always runs two reps."""
+    reps = [run_once(spark, fn, sf_dir)]
+    if reps[0].seconds >= floor:
+        reps.append(run_once(spark, fn, sf_dir))
+    return reps

@@ -1,5 +1,5 @@
-"""Aggregation operators (SURVEY.md §2.4, A1-A5) + the free Spark
-extensions (count-distinct, approx, rollup/cube).
+"""Aggregation operators (SURVEY.md §2.4, A4) + the free Spark
+extensions (exact and approximate count-distinct).
 
 All hash aggregations: Spark plans partial (map-side) + final
 aggregation automatically, so a groupBy over 100 TB shuffles only the
@@ -10,30 +10,6 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from technical_test_data_engineer_spark.functions.scalars import exact_sum
-
-
-def group_count(
-    df: DataFrame, keys: list[str], count_col: str, alias: str
-) -> DataFrame:
-    """A1 — group-by COUNT (``agg({'code_departement':'count'})``,
-    visualization.py:104). Counts non-null values of ``count_col``,
-    matching pandas 'count' semantics."""
-    return df.groupBy(*keys).agg(F.count(count_col).alias(alias))
-
-
-def group_sum(df: DataFrame, keys: list[str], sum_col: str, alias: str) -> DataFrame:
-    """A2 — group-by SUM (``agg({'surface_zone':'sum'})``,
-    visualization.py:193); exact decimal-path sum for doubles."""
-    return df.groupBy(*keys).agg(exact_sum(sum_col, alias))
-
-
-def global_min_max(df: DataFrame, col: str) -> tuple:
-    """A3 — global MIN/MAX to the driver (slider bounds,
-    visualization.py:237-238)."""
-    row = df.agg(F.min(col).alias("mn"), F.max(col).alias("mx")).collect()[0]
-    return row["mn"], row["mx"]
 
 
 def distinct_pairs_by_freq(df: DataFrame, cols: list[str]) -> DataFrame:
@@ -49,11 +25,6 @@ def distinct_pairs_by_freq(df: DataFrame, cols: list[str]) -> DataFrame:
     )
 
 
-def distinct_values(df: DataFrame, col: str) -> DataFrame:
-    """A5 — DISTINCT on one column (visualization.py:136, :255)."""
-    return df.select(col).distinct()
-
-
 def count_distinct(df: DataFrame, keys: list[str], col: str, alias: str) -> DataFrame:
     """Exact distinct-count per group (expand+dedup+count under the hood
     — two shuffles; prefer approx at extreme scale)."""
@@ -66,13 +37,3 @@ def approx_count_distinct(
     """HyperLogLog++ distinct count — one shuffle, fixed memory; the
     100 TB-scale answer to COUNT(DISTINCT)."""
     return df.groupBy(*keys).agg(F.approx_count_distinct(col, rsd).alias(alias))
-
-
-def rollup_sum(df: DataFrame, keys: list[str], sum_col: str, alias: str) -> DataFrame:
-    """ROLLUP hierarchy totals (engine surface beyond the reference)."""
-    return df.rollup(*keys).agg(exact_sum(sum_col, alias))
-
-
-def cube_sum(df: DataFrame, keys: list[str], sum_col: str, alias: str) -> DataFrame:
-    """CUBE over all key subsets."""
-    return df.cube(*keys).agg(exact_sum(sum_col, alias))

@@ -356,15 +356,6 @@ def simhash_bits(
     return F.transform(votes, lambda v: F.when(v > 0, 1).otherwise(0))
 
 
-def hamming_bits(a: Column, b: Column) -> Column:
-    """Hamming distance between two equal-length bit arrays."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: F.when(x != y, 1).otherwise(0)),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-
-
 def simhash_packed(text_col: str | Column = "text", hash_fn=None) -> Column:
     """SimHash packed into struct(h1, h2) — two 32-bit halves in longs.
 

@@ -39,84 +39,6 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_DEC = "decimal(30,10)"
-
-
-def _as_double(vec_col: str) -> str:
-    return f"transform({vec_col}, x -> cast(x as double))"
-
-
-def embedding_moments(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> tuple[DataFrame, DataFrame, int]:
-    """First and second moments of a vector column.
-
-    Returns ``(sums, cross, n)``: ``sums`` = (i, s) per-dimension exact
-    sums; ``cross`` = (i, j, sxy) upper-triangle (i ≤ j) exact sums of
-    x_i·x_j; ``n`` = row count. The cross products are generated
-    scan-side as ONE nested-transform expression (no self-join: each
-    row emits its D(D+1)/2 products inside its task), then reduced by
-    a single partial+final aggregation keyed on (i, j) — D²-bounded
-    state, corpus-sized input, one shuffle of tiny rows."""
-    from technical_test_data_engineer_spark.operators.partitioning import (
-        fan_out,
-    )
-
-    # fan_out: the local fixture is one parquet row-group, so without
-    # it the D(D+1)/2-products-per-row expression runs on ONE task
-    # (measured 7.4 s single-threaded at sf0.1 vs ~1.5 s spread)
-    df = fan_out(df.select(id_col, vec_col))
-    v = _as_double(vec_col)
-    # integer-scaled terms: round(x*1e10) as BIGINT — see module doc
-    pairs = F.expr(
-        f"""
-        flatten(transform({v}, (xi, i) ->
-            transform(slice({v}, i + 1, size({vec_col}) - i), (xj, j) ->
-                struct(i AS i, i + j AS j,
-                       cast(round(xi * xj * 1e10, 0) AS BIGINT) AS p))))
-        """
-    )
-    n = df.count()
-
-    # Overflow guard (r10, ADVICE item): past int64 Spark's non-ANSI
-    # long SUM wraps silently while DuckDB's HUGEINT->BIGINT cast
-    # throws — the engines would fail differently with no error here.
-    # max(abs(term)) rides the same shuffle as the sum (one extra agg
-    # buffer); n * maxabs < 2^62 proves the fold could not wrap, else
-    # raise. The check is per GROUP (D² rows), so its cost is nil.
-    def _guarded(sum_col: str, maxabs_col: str, out: str):
-        return F.when(
-            F.col(maxabs_col) * F.lit(float(n)) < F.lit(float(2**62)),
-            F.col(sum_col).cast("double") / F.lit(1e10),
-        ).otherwise(
-            F.raise_error(F.lit(
-                f"embedding_moments: integer-scaled {out} fold may "
-                f"exceed int64 at n={n} — rescale or shard the corpus"
-            ))
-        ).alias(out)
-
-    cross = (
-        df.select(F.explode(pairs).alias("e"))
-        .select("e.i", "e.j", "e.p")
-        .groupBy("i", "j")
-        .agg(
-            F.sum("p").alias("_s"),
-            F.max(F.abs(F.col("p"))).alias("_m"),
-        )
-        .select("i", "j", _guarded("_s", "_m", "sxy"))
-    )
-    xs = F.round(F.col("x") * F.lit(1e10), 0).cast("bigint")
-    sums = (
-        df.select(F.posexplode(F.expr(v)).alias("i", "x"))
-        .groupBy("i")
-        .agg(
-            F.sum(xs).alias("_s"),
-            F.max(F.abs(xs)).alias("_m"),
-        )
-        .select("i", _guarded("_s", "_m", "s"))
-    )
-    return sums, cross, n
-
 
 def covariance_matrix(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
@@ -139,8 +61,8 @@ def covariance_matrix(
     the exact operation order of the old Spark expression
     (float(Σp)/1e10, then (sxy − si·sj/n)/(n−1)), so every cov double
     is bit-identical; per-term parity with Spark ROUND is the
-    round_half_up_1e10 guarantee (tests/test_linalg.py). Raggedness /
-    int64-overflow fail loud exactly like pca_components."""
+    round_half_up_1e10 guarantee (tests/test_linalg.py). Raggedness,
+    n < 2 and int64 overflow fail loud exactly like pca_components."""
     rows = _moment_agg(df, vec_col, id_col).collect()
     spark = df.sparkSession
     schema = "i int, j int, cov double"
@@ -290,15 +212,20 @@ def _moment_agg(
 
 
 def _validate_moments(rows, label: str) -> tuple[int, int]:
-    """Uniformity + int64-overflow checks on the collected D²-bounded
-    moment rows (shared by pca_components / covariance_matrix).
-    Returns (n, d)."""
+    """Uniformity, n ≥ 2 and int64-overflow checks on the collected
+    D²-bounded moment rows (shared by pca_components /
+    covariance_matrix). Returns (n, d)."""
     n_lo = min(r["_c"] for r in rows)
     n = max(r["_c"] for r in rows)
     if n_lo != n:
         raise ValueError(
             f"{label}: ragged or null vectors — per-term counts range "
             f"{n_lo}..{n}, expected one count for every (i, j) pair"
+        )
+    if n < 2:
+        raise ValueError(
+            f"{label}: sample covariance needs at least 2 vectors, got "
+            f"n={n} (the (n - 1) divisor)"
         )
     if any(r["_m"] * float(n) >= float(2**62) for r in rows):
         raise ValueError(
@@ -337,8 +264,8 @@ def pca_components(
     # partial sums, whose addition is associative, so mean/cov/eigh
     # cannot depend on partition order (numpy-parity tests pin it).
     # First moments keep the j = -1 sentinel; the final (i, j)
-    # aggregate is D²-bounded. Ragged/null vectors and int64 overflow
-    # fail loud in _validate_moments.
+    # aggregate is D²-bounded. Ragged/null vectors, n < 2 and int64
+    # overflow fail loud in _validate_moments.
     rows = _moment_agg(df, vec_col, id_col).collect()
     if not rows:
         raise ValueError(

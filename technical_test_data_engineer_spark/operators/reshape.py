@@ -1,4 +1,4 @@
-"""Reshaping / generator operators (SURVEY.md §2.7, R1-R5).
+"""Reshaping / generator operators (SURVEY.md §2.7, R1-R3).
 
 R1 is the reference's slowest op — a row-wise Python lambda building a
 date list per row (/root/reference/tasks/visualization/src/visualization.py:186).
@@ -48,13 +48,3 @@ def date_spine(
 def rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:
     """R3 — bulk column rename (``rename(columns=…)``)."""
     return df.withColumnsRenamed(mapping)
-
-
-def drop_cols(df: DataFrame, *cols: str) -> DataFrame:
-    """R4 — drop columns (``drop(axis=1)``)."""
-    return df.drop(*cols)
-
-
-def with_computed(df: DataFrame, alias: str, expr: str) -> DataFrame:
-    """R5 — add a computed column from a SQL expression string."""
-    return df.withColumn(alias, F.expr(expr))

@@ -130,7 +130,7 @@ def int_scaled_dot(a: Column, b: Column) -> Column:
     """Order-stable inner product as an INTEGER-scaled BIGINT: each
     per-element double product rounds to 10 decimals as round(x*1e10)
     and sums as a long fold — exact, order-free, and cross-engine
-    bit-identical (the embedding_moments convention: rounding an
+    bit-identical (the linalg moment-fold convention: rounding an
     ~1e8-magnitude double at 0 decimals sits far inside both engines'
     representations, and long adds beat interpreted BigDecimal ~2.5x).
     Use where only the ORDERING of dots matters (cell argmax, bucket

@@ -59,10 +59,6 @@ def marker_hits(toks: Column, markers: list[str]) -> Column:
     return F.size(F.filter(toks, lambda t: F.array_contains(arr, t))).cast("bigint")
 
 
-def language_scores(toks: Column) -> dict[str, Column]:
-    return {lang: marker_hits(toks, ms) for lang, ms in sorted(LANG_MARKERS.items())}
-
-
 def predicted_language(toks: Column) -> Column:
     """Argmax over per-language marker-hit scores; ties break to the
     alphabetically-first language (deterministic, matching the oracle's

@@ -48,15 +48,6 @@ def topk_per_group(
     )
 
 
-def with_lag(
-    df: DataFrame, col: str, group_cols: list[str], order_cols: list[Column], alias: str
-) -> DataFrame:
-    """Analytic-window surface (lag) — free in Spark, absent in the
-    reference; used by the streaming/sessionize layer."""
-    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return df.withColumn(alias, F.lag(col).over(w))
-
-
 def running_sum(
     df: DataFrame, col: str, group_cols: list[str], order_cols: list[Column], alias: str
 ) -> DataFrame:

@@ -2449,7 +2449,7 @@ def price_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is a single partial-aggregated scan. Per-row LN runs
     on identical doubles (unit price is one exact-rounded division);
     moments accumulate as integer-scaled BIGINT folds (round(t*1e10),
-    the embedding_moments convention) so partition order can't drift
+    the operators/linalg.py moment convention) so partition order can't drift
     the hash and the sums stay in whole-stage codegen; NULLIF guards
     degenerate zero-variance fixtures. The
     synthetic fixture's slope ≈ 0 is itself the correct readout
@@ -2463,14 +2463,14 @@ def price_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("l_quantity")).alias("y"),
     )
     # r13: integer-scaled long folds (round(t*1e10) summed as BIGINT —
-    # the embedding_moments convention) replace the DECIMAL(30,12)
+    # the operators/linalg.py moment convention) replace the DECIMAL(30,12)
     # accumulators: same order-independence, whole-stage-codegen long
     # sums instead of interpreted BigDecimal (A/B 1.32 vs 2.11 s at
     # sf0.1). bigint->double then /1e10 mirrors the oracle's
     # CAST(BIGINT AS DOUBLE)/1e10 exactly (one rounding each). |terms|
     # <= ~1.3e12, so sums stay under 2^62 up to ~3.5e6 rows per table
     # at this scale; a 100 TB deployment rescales or shards per the
-    # embedding_moments guard class.
+    # linalg._validate_moments int64 guard class.
     i10 = lambda c: F.round(c * F.lit(1e10), 0).cast("bigint")  # noqa: E731
     m = p.agg(
         F.count("*").alias("n"),

@@ -1767,7 +1767,7 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     6.7 s → ~2 s in r08). r14 (r13 verdict item 5): the DECIMAL(38,30)
     accumulators on the centroid / norm / dot sums switched to the
     integer-scaled BIGINT fold convention (round(t·1e10) summed as
-    long — the price_quantity_elasticity / embedding_moments
+    long — the price_quantity_elasticity / linalg moment-fold
     precedent): same order-independence, but the sums stay in
     whole-stage codegen instead of interpreted BigDecimal; the oracle
     is regenerated with the matching CAST(SUM(...BIGINT) AS

@@ -73,6 +73,21 @@ def test_pca_components_fails_loud_on_bad_input(spark):
         pca_components(ragged, k=2)
 
 
+def test_moments_reject_single_vector_corpus(spark):
+    """A one-vector corpus has no sample covariance: both callers of
+    the shared moment fold raise a labelled error. Dividing by the zero
+    (n - 1) divisor would give NaN/inf numpy doubles (ADVICE r15)."""
+    import pytest
+
+    one = spark.createDataFrame(
+        [(0, [1.0, 2.0, 3.0])], "vec_id long, embedding array<double>"
+    )
+    with pytest.raises(ValueError, match="covariance_matrix: .*n=1"):
+        covariance_matrix(one)
+    with pytest.raises(ValueError, match="pca_components: .*n=1"):
+        pca_components(one, k=2)
+
+
 def test_pca_projection_variance_equals_eigenvalues(spark):
     emb, mat = _corpus(spark)
     _, _, vals = pca_components(emb, k=4)

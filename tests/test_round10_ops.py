@@ -338,22 +338,23 @@ def test_source_mixture_drift_single_scan(spark, sf_dir):
 
 
 def test_repeated_median_single_pair_pass(spark, sf_dir):
-    """daily_revenue_repeated_median's r10 fix: the 1-row ts frame is
-    persisted, so the 5.7M-pair NLJ + grouped-percentile pipeline is
-    ONE live subtree (the unpersisted form re-executed it for the
-    intercept branch — 2x wall). Tree-section operator counts are
-    unusable (InMemoryRelation definitions echo per reference), but the
-    DETAIL section prints one block per unique operator id: two live
-    pipelines carry two distinct partial_percentile(slope ...) ids,
-    the persisted form exactly one."""
+    """daily_revenue_repeated_median's pair work runs ONCE. Since r15 the
+    calendar-bounded d² slope matrix and both median levels run
+    driver-side in numpy off one Arrow fetch of the persisted daily
+    aggregate, so the plan Spark executes holds no percentile aggregate
+    and no pair join at all: only the daily agg and the OLS moment agg
+    (at most 6 Exchange in the formatted plan; the r10 Spark-side form
+    carried the 5.7M-pair NLJ and 26 Exchange)."""
     from technical_test_data_engineer_spark.plans import QUERIES
 
     # cold-cache the plan: a still-materialized persist from an earlier
-    # test swaps in InMemoryRelations whose definitions echo the
-    # percentile block a second time (suite-order dependent otherwise)
+    # test swaps in InMemoryRelations whose definitions echo extra
+    # operators (suite-order dependent otherwise)
     spark.catalog.clearCache()
     df = QUERIES["daily_revenue_repeated_median"](spark, sf_dir)
     plan = df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
-    assert plan.count("partial_percentile(slope") == 1, plan
+    assert "partial_percentile" not in plan, plan
+    assert "NestedLoopJoin" not in plan, plan
+    assert plan.count("Exchange") <= 6, plan

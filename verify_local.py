@@ -166,6 +166,7 @@ def main() -> int:
     only = set(sys.argv[2:])
 
     import __spark_entry__ as e
+    import harness
 
     if os.environ.get("SPARK_GRAFT_VANILLA"):
         # simulate the DRIVER's session: bare builder, no engine confs,
@@ -195,11 +196,7 @@ def main() -> int:
     for name, fn in qs.items():
         if only and name not in only:
             continue
-        # per-query isolation: also frees localCheckpoint RDDs, which
-        # clearCache alone does not (see bench.py)
-        spark.catalog.clearCache()
-        for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-            rdd.unpersist()
+        harness.release(spark)  # per-query isolation
         t0 = time.time()
         try:
             sdf = fn(spark, sf_dir)
