@@ -32,6 +32,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from technical_test_data_engineer_spark.operators.bounded import local_frame
+
 
 def _large_star(sym: DataFrame) -> DataFrame:
     """One large-star round over a symmetric edge list (a, b): connect
@@ -154,8 +156,8 @@ def connected_components(
             stats["rounds"] = 0
         spark = nodes.sparkSession
         if comp:
-            labels = spark.createDataFrame(
-                list(comp.items()), schema=e.select("a", "b").schema
+            labels = local_frame(
+                spark, list(comp.items()), schema=e.select("a", "b").schema
             ).select(F.col("a"), F.col("b").alias("component"))
         else:
             labels = e.select("a", F.col("b").alias("component")).limit(0)
@@ -416,7 +418,7 @@ def bfs_hops(
         # of scheduler latency regardless of frontier size, so a
         # bounded edge set (one collect) traverses on the driver and
         # the hop table broadcast-joins back implicitly via
-        # createDataFrame (it IS the result). Same output contract.
+        # local_frame (it IS the result). Same output contract.
         adj: dict = {}
         for r in e.collect():
             adj.setdefault(r["u"], []).append(r["v"])
@@ -436,12 +438,11 @@ def bfs_hops(
             frontier_ids = nxt
         spark = edges.sparkSession
         if hops:
-            out = spark.createDataFrame(
-                list(hops.items()),
-                schema=f"{node_col} long, hops int",
+            out = local_frame(
+                spark, list(hops.items()), f"{node_col} long, hops int"
             )
         else:
-            out = spark.createDataFrame([], f"{node_col} long, hops int")
+            out = local_frame(spark, [], f"{node_col} long, hops int")
         return out
     visited = (
         sources.select(F.col(node_col).alias("u"))
@@ -524,12 +525,13 @@ def k_core(
                 changed = True
         spark = edges.sparkSession
         if adj:
-            out = spark.createDataFrame(
+            out = local_frame(
+                spark,
                 [(u, len(nb)) for u, nb in adj.items()],
-                schema="node long, degree long",
+                "node long, degree long",
             )
         else:
-            out = spark.createDataFrame([], "node long, degree long")
+            out = local_frame(spark, [], "node long, degree long")
         return out
     for _ in range(max_iter):
         deg = e.groupBy("u").agg(F.count("*").alias("degree"))

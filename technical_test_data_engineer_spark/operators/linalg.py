@@ -39,6 +39,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from technical_test_data_engineer_spark.operators.bounded import local_frame
+
 
 def covariance_matrix(
     df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
@@ -67,7 +69,7 @@ def covariance_matrix(
     spark = df.sparkSession
     schema = "i int, j int, cov double"
     if not rows:
-        return spark.createDataFrame([], schema)
+        return local_frame(spark, [], schema)
     n, d = _validate_moments(rows, "covariance_matrix")
     s = np.zeros(d)
     for r in rows:
@@ -85,37 +87,48 @@ def covariance_matrix(
         for r in rows
         if r["j"] != -1
     ]
-    return spark.createDataFrame(out, schema)
+    return local_frame(spark, out, schema)
 
 
-def round_half_up_1e10(p: np.ndarray) -> np.ndarray:
-    """int64 of ROUND(p, 0) under Spark's double-ROUND semantics
-    (BigDecimal(Double.toString(p)) HALF_UP — away from zero on the
-    decimal-repr tie). Vectorized sign·floor(|p|+0.5) everywhere
-    except a MAGNITUDE-AWARE guard band — max(1e-4, 8 ulp of p) —
-    around |frac| = 0.5, where the decimal-repr-faithful
-    Decimal(repr(p)) path runs instead. The band scales with |p|
-    because the drift between the probe and the decimal repr is
-    ulp-proportional (repr-vs-binary gap + the +0.5 addition, ≤ 2
-    ulp; 8 ulp is a 4× margin), so every element matches Spark ROUND
-    bit-for-bit at ANY magnitude (ADVICE r13: the bare floor form can
-    round across the boundary inside those ulp-wide windows)."""
-    from decimal import ROUND_HALF_UP, Decimal
+def _half_up_rounder():
+    """Builds ``round_half_up_1e10`` as a nested function. cloudpickle
+    ships a nested function by value, so the Python workers running
+    ``_moment_agg``'s fold never import this package, which may be
+    importable only through the driver's ``sys.path``."""
 
-    v = np.abs(p)
-    out = (np.sign(p) * np.floor(v + 0.5)).astype(np.int64)
-    frac = v - np.floor(v)
-    risky = np.abs(frac - 0.5) < np.maximum(1e-4, 8.0 * np.spacing(v))
-    if risky.any():
-        flat = out.reshape(-1)
-        pv = p.reshape(-1)
-        for k in np.nonzero(risky.reshape(-1))[0]:
-            flat[k] = int(
-                Decimal(repr(float(pv[k]))).quantize(
-                    Decimal(1), ROUND_HALF_UP
+    def round_half_up_1e10(p: np.ndarray) -> np.ndarray:
+        """int64 of ROUND(p, 0) under Spark's double-ROUND semantics
+        (BigDecimal(Double.toString(p)) HALF_UP — away from zero on the
+        decimal-repr tie). Vectorized sign·floor(|p|+0.5) everywhere
+        except a MAGNITUDE-AWARE guard band — max(1e-4, 8 ulp of p) —
+        around |frac| = 0.5, where the decimal-repr-faithful
+        Decimal(repr(p)) path runs instead. The band scales with |p|
+        because the drift between the probe and the decimal repr is
+        ulp-proportional (repr-vs-binary gap + the +0.5 addition, ≤ 2
+        ulp; 8 ulp is a 4× margin), so every element matches Spark ROUND
+        bit-for-bit at ANY magnitude (ADVICE r13: the bare floor form can
+        round across the boundary inside those ulp-wide windows)."""
+        from decimal import ROUND_HALF_UP, Decimal
+
+        v = np.abs(p)
+        out = (np.sign(p) * np.floor(v + 0.5)).astype(np.int64)
+        frac = v - np.floor(v)
+        risky = np.abs(frac - 0.5) < np.maximum(1e-4, 8.0 * np.spacing(v))
+        if risky.any():
+            flat = out.reshape(-1)
+            pv = p.reshape(-1)
+            for k in np.nonzero(risky.reshape(-1))[0]:
+                flat[k] = int(
+                    Decimal(repr(float(pv[k]))).quantize(
+                        Decimal(1), ROUND_HALF_UP
+                    )
                 )
-            )
-    return out
+        return out
+
+    return round_half_up_1e10
+
+
+round_half_up_1e10 = _half_up_rounder()
 
 
 def _moment_agg(

@@ -14,6 +14,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from technical_test_data_engineer_spark.functions.hof import bind
+from technical_test_data_engineer_spark.operators.bounded import local_frame
 
 # Deterministic marker vocabularies for the heuristic language scorer.
 # The test corpus is an engine-vocabulary word soup (FIXTURES.md), so
@@ -621,8 +622,8 @@ def corpus_mix_rates(
     Returns (group, ``n_docs``, ``share``, ``rate``).
     """
     spark = df.sparkSession
-    share_df = spark.createDataFrame(
-        list(shares.items()), f"{group_col} string, share double"
+    share_df = local_frame(
+        spark, list(shares.items()), f"{group_col} string, share double"
     )
     counts = df.groupBy(group_col).agg(F.count("*").alias("n_docs"))
     joined = counts.join(F.broadcast(share_df), group_col)

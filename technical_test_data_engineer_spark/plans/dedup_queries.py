@@ -18,6 +18,7 @@ import random
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from technical_test_data_engineer_spark.operators.bounded import local_frame
 from technical_test_data_engineer_spark.operators.partitioning import fan_out
 from technical_test_data_engineer_spark.operators.text import md5_bucket
 from technical_test_data_engineer_spark.operators.dedup import (
@@ -1007,9 +1008,7 @@ def ingest_loop_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
     if not spark.catalog.tableExists(res_t):
         # no batch ever produced a candidate (possible on a tiny or
         # all-empty ingest): the loop's output is the empty pair set
-        return spark.createDataFrame(
-            [], "id_a long, id_b long, jaccard double"
-        )
+        return local_frame(spark, [], "id_a long, id_b long, jaccard double")
     from technical_test_data_engineer_spark.streaming.neardup import (
         stored_candidates,
     )

@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from technical_test_data_engineer_spark.functions.scalars import exact_sum
+from technical_test_data_engineer_spark.operators.bounded import local_frame
 from technical_test_data_engineer_spark.plans.star_queries import _decsum, query
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
 
@@ -6293,7 +6294,7 @@ def supplier_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     if len(pdf) == 0:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     from decimal import ROUND_HALF_UP, Decimal
 
@@ -6378,7 +6379,7 @@ def supplier_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for k in order
     ]
-    return spark.createDataFrame(rows, out_schema)
+    return local_frame(spark, rows, out_schema)
 
 
 @query(

@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from technical_test_data_engineer_spark.operators.bounded import local_frame
 from technical_test_data_engineer_spark.operators.similarity import (
     adaptive_n_planes,
     brute_force_topk,
@@ -572,7 +573,7 @@ def knn_anchor_routing_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
             T.StructField("recall_at_k", T.DoubleType()),
         ]
     )
-    return spark.createDataFrame(rows, schema).orderBy("query_id", "nprobe")
+    return local_frame(spark, rows, schema).orderBy("query_id", "nprobe")
 
 
 # 200 → 128 in r12 (bench-budget prune, the PQ_EXACT_BOUND 800→256
@@ -730,7 +731,7 @@ def embedding_coreset_facility3(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     if len(pdf) == 0:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
 
     ids = np.unique(pdf["i"].to_numpy())
     idx = {int(v): k for k, v in enumerate(ids)}
@@ -772,7 +773,7 @@ def embedding_coreset_facility3(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         for step in range(3)
     ]
-    return spark.createDataFrame(rows, out_schema)
+    return local_frame(spark, rows, out_schema)
 
 
 # rows-only (approximate): PQ reconstruction is lossy by design; recall
@@ -1667,9 +1668,7 @@ def matryoshka_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("dim", "query_id")
         .agg(F.count("*").alias("n_overlap"))
     )
-    dims = spark.createDataFrame(
-        [(d,) for d in RECALL_DIMS], "dim int"
-    )
+    dims = local_frame(spark, [(d,) for d in RECALL_DIMS], "dim int")
     grid = dims.crossJoin(full.select("query_id").distinct())
     return (
         grid.join(ov, ["dim", "query_id"], "left")
@@ -2187,7 +2186,7 @@ def knn_mmr_exact3(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     rows.sort(key=lambda t: (t[0], t[1]))
-    return spark.createDataFrame(rows, out_schema)
+    return local_frame(spark, rows, out_schema)
 
 
 _EVAL_QUERIES = 20

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from technical_test_data_engineer_spark.functions.hof import bind
+from technical_test_data_engineer_spark.operators.bounded import local_frame
 from technical_test_data_engineer_spark.operators import text as TX
 from technical_test_data_engineer_spark.operators.text import md5_bucket
 from technical_test_data_engineer_spark.plans.star_queries import query
@@ -2874,9 +2875,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c").over(wg).alias("total"),
         F.count("*").over(wg).alias("vocab"),
     )
-    ks = spark.range(0).sparkSession.createDataFrame(
-        [(10,), (100,), (1000,)], "k int"
-    )
+    ks = local_frame(spark, [(10,), (100,), (1000,)], "k int")
     j = F.broadcast(ks).crossJoin(r)
     return (
         j.groupBy("k")

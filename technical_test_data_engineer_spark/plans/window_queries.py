@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from technical_test_data_engineer_spark.functions.scalars import exact_sum
+from technical_test_data_engineer_spark.operators.bounded import local_frame
 from technical_test_data_engineer_spark.operators.joins import asof_join
 from technical_test_data_engineer_spark.plans.star_queries import _decsum, query
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
@@ -1697,8 +1698,10 @@ def channel_removal_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
         (c, round(e, 6), round(e / total, 6) if total > 0 else 0.0)
         for c, e in effects
     ]
-    return spark.createDataFrame(
-        rows, "channel string, removal_effect double, attribution_share double"
+    return local_frame(
+        spark,
+        rows,
+        "channel string, removal_effect double, attribution_share double",
     ).orderBy("channel")
 
 
@@ -1764,8 +1767,8 @@ def channel_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [
         (c, round(phi[c], 6), round(base, 6)) for c in channels
     ]
-    return spark.createDataFrame(
-        rows, "channel string, shapley_value double, v_empty double"
+    return local_frame(
+        spark, rows, "channel string, shapley_value double, v_empty double"
     ).orderBy("channel")
 
 
@@ -2768,9 +2771,9 @@ def channel_conversion_k8(spark: SparkSession, sf_dir: str) -> DataFrame:
         for s, x in v.items()
         if s not in (CONV, DROP)
     )
-    return spark.createDataFrame(
-        rows, "state string, p_convert_k8 double"
-    ).orderBy("state")
+    return local_frame(spark, rows, "state string, p_convert_k8 double").orderBy(
+        "state"
+    )
 
 
 @query(
@@ -3483,11 +3486,13 @@ def daily_revenue_repeated_median(
     ties (adversarially discriminated and pinned in
     tests/test_round15_ops.py) — and every slope/residual is the same
     IEEE double expression the old plan evaluated, so all five output
-    values are bit-identical. SCALE CEILING: the driver matrix is
-    d²·8 B (~46 MB at 2.4k days; ~10 GB at a century of daily grain)
-    — past that, the documented fallback is this query's previous
-    shape (grouped percentile over the pair NLJ, every buffer
-    d-bounded). Oracle unchanged."""
+    values are bit-identical. SCALE CEILING: the driver peak is
+    ≈ 5·d²·8 B — ``dx``, ``dy``, the two masked gathers and ``slopes``
+    are live at once (~230 MB at 2.4k days; ~53 GB at a century of
+    daily grain), so a driver with a few GB of heap caps d near 10k
+    days (~4 GB, about 27 years) — past that, the documented fallback
+    is this query's previous shape (grouped percentile over the pair
+    NLJ, every buffer d-bounded). Oracle unchanged."""
     import math
 
     import numpy as np
@@ -4633,7 +4638,7 @@ def daily_revenue_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy("day")).alias("rn"),
         F.count("*").over(Window.partitionBy()).alias("n"),
     )
-    sizes = spark.createDataFrame([(8,), (16,), (32,), (64,)], "size int")
+    sizes = local_frame(spark, [(8,), (16,), (32,), (64,)], "size int")
     blocks = (
         spine.crossJoin(F.broadcast(sizes))
         .withColumn(
@@ -5895,7 +5900,7 @@ def daily_revenue_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(Window.orderBy("day")).alias("rn"),
         F.count("*").over(Window.partitionBy()).alias("n"),
     )
-    halves = spark.createDataFrame([(1,), (2,), (4,), (8,)], "half int")
+    halves = local_frame(spark, [(1,), (2,), (4,), (8,)], "half int")
     size2 = 2 * F.col("half")
     blocks = (
         spine.crossJoin(F.broadcast(halves))

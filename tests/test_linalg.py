@@ -216,3 +216,52 @@ def test_pca_fold_wide_vectors_use_smaller_chunks(spark):
     want_mean = away(m * 1e10).sum(axis=0) / 1e10 / len(rows)
     assert np.allclose(mean, want_mean, atol=1e-9)
     assert np.allclose(comps @ comps.T, np.eye(2), atol=1e-9)
+
+
+def test_moment_fold_runs_from_a_foreign_cwd(tmp_path):
+    """The ``mapInPandas`` moment fold ships everything its Python
+    workers run: the package is importable here only through the
+    driver's ``sys.path``, not from the workers' cwd or PYTHONPATH."""
+    import ast
+    import os
+    import subprocess
+    import sys
+    import textwrap
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    script = textwrap.dedent(
+        f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from technical_test_data_engineer_spark.operators.linalg import (
+            covariance_matrix,
+        )
+        from technical_test_data_engineer_spark.session import get_spark
+
+        spark = get_spark(
+            "foreign-cwd", master="local[1]", shuffle_partitions=1,
+            extra_confs={{"spark.driver.memory": "1g"}},
+        )
+        df = spark.createDataFrame(
+            [(1, [1.0, 2.0]), (2, [2.0, 5.0]), (3, [4.0, 1.0])],
+            "vec_id long, embedding array<double>",
+        )
+        print(sorted(tuple(r) for r in covariance_matrix(df).collect()))
+        spark.stop()
+        """
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    cov = np.cov(np.array([[1.0, 2.0], [2.0, 5.0], [4.0, 1.0]]), rowvar=False)
+    want = [(i, j, cov[i, j]) for i in range(2) for j in range(i, 2)]
+    got = ast.literal_eval(out.stdout.strip().splitlines()[-1])
+    assert [g[:2] for g in got] == [w[:2] for w in want]
+    assert np.allclose([g[2] for g in got], [w[2] for w in want])
