@@ -18,14 +18,14 @@ partitioning, so consumers still get parallel scans; correctness is
 untouched because parquet round-trips the (bigint, bigint, bigint) edge
 rows exactly.
 
-Opt-out: set ``SPARK_GRAFT_NO_MATERIALIZE=1`` to force every consumer
-to rebuild from source (used by plan-audit tests that assert the
-BUILD's shape, e.g. ``audit_scans.py`` expected-scan counts).
+A consumer's plan is a parquet scan of the temp path; the plan-shape
+ledger (``tests/PLAN_SHAPES.json``) counts only source-table scans, so
+it reads the same whether this call built the relation or found it.
+A test that asserts the BUILD's shape calls the build function itself.
 """
 
 from __future__ import annotations
 
-import os
 import re
 import tempfile
 from pathlib import Path
@@ -59,8 +59,6 @@ def materialized_relation(
     session (new bench run, new driver round) rebuilds from source, so
     stale data cannot leak across runs even if /tmp survives.
     """
-    if os.environ.get("SPARK_GRAFT_NO_MATERIALIZE"):
-        return build()
     app_id = spark.sparkContext.applicationId
     path = (
         Path(tempfile.gettempdir())

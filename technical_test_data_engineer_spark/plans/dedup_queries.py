@@ -66,9 +66,7 @@ def _split_md5_sql(bound: int | None = None) -> str:
     )"""
 
 
-def shared_minhash_pairs(
-    spark: SparkSession, sf_dir: str, persist: bool = False
-) -> DataFrame:
+def shared_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The ONE MinHash+LSH pair pipeline behind minhash_near_dups,
     split_contamination_audit, and dedup_clusters.
 
@@ -77,13 +75,7 @@ def shared_minhash_pairs(
     fully seeded/deterministic, so it is written once per SparkSession
     to a temp parquet and every consumer scans that — the
     shingle→band→verify pipeline no longer replays per consumer even
-    though the harnesses clearCache between queries. ``persist=True``
-    keeps the legacy caller-managed block-manager path (used by tests
-    that assert the BUILD plan); ``SPARK_GRAFT_NO_MATERIALIZE=1``
-    forces a raw rebuild."""
-    if persist:
-        docs = load_table(spark, sf_dir, "documents")
-        return minhash_candidates(docs, threshold=0.5, persist=True)
+    though the harnesses clearCache between queries."""
     from technical_test_data_engineer_spark.operators.materialize import (
         materialized_relation,
     )
@@ -1603,7 +1595,7 @@ def part_record_linkage_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part")
     # persisted: the skinny blocked-attributes frame feeds three u-
     # estimation aggs and both pair sides — one part scan total
-    # (audit_scans r07)
+    # (tests/PLAN_SHAPES.json)
     p = part.select(
         "p_partkey",
         "p_brand",

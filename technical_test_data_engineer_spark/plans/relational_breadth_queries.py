@@ -2572,7 +2572,7 @@ def customer_segment_target_encoding(
     orders = load_table(spark, sf_dir, "orders")
     customer = load_table(spark, sf_dir, "customer")
     # persisted: cu feeds BOTH the segment rows and the global-mean
-    # smoothing prior — one orders scan total (audit_scans r07)
+    # smoothing prior — one orders scan total (tests/PLAN_SHAPES.json)
     cu = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
         F.count("*").alias("n"),
         exact_sum("o_totalprice").alias("s"),
@@ -2688,7 +2688,7 @@ def customer_acctbal_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.ntile(10).over(Window.orderBy("c_acctbal", "c_custkey")).alias("bin"),
     )
     # persisted: the 10-row bin frame feeds the class totals and the
-    # final WOE select — one customer/orders pass total (audit_scans r07)
+    # final WOE select — one customer/orders pass total (tests/PLAN_SHAPES.json)
     per_bin = binned.groupBy("bin").agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("bad").cast("bigint").alias("n_bad"),
@@ -2894,7 +2894,7 @@ def order_value_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
     channel_conversion_k8 bounded-collect discipline) instead of
     broadcast crossJoins — the lazy form re-executed the train-moments
     agg 6x and the interpreted percentile 2x (78-operator plan, zero
-    exchange reuse; ``plans/r14/order_value_conformal_before.txt``),
+    exchange reuse; the r14 plan is in git history),
     because every broadcast consumer re-derived its 1-row input. The
     collected doubles are the SAME Spark-computed values (bit-exact;
     literal re-embedding), and each stage now runs exactly once; the
@@ -2910,7 +2910,7 @@ def order_value_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").alias("n_items"))
     )
     # persisted: the 3-column feature frame feeds train / calibration /
-    # test branches — one orders+lineitem join total (audit_scans r07)
+    # test branches — one orders+lineitem join total (tests/PLAN_SHAPES.json)
     feat = orders.join(li, orders.o_orderkey == li.l_orderkey).select(
         F.col("o_totalprice").alias("y"),
         F.col("n_items").cast("double").alias("x"),
@@ -3083,7 +3083,7 @@ def elasticity_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("fold"),
     )
     # persisted: the 5-row fold-moments frame feeds totals, complement
-    # fits, and the MSE join — one lineitem scan total (audit_scans r07)
+    # fits, and the MSE join — one lineitem scan total (tests/PLAN_SHAPES.json)
     ml = p.groupBy("fold").agg(
         F.count("*").alias("n"),
         F.sum(i10(F.col("x"))).alias("sxl"),
@@ -3433,7 +3433,7 @@ def join_key_health(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     # persisted: the key histogram feeds the fanout stats AND both
     # orphan checks (orphaned lineitem mass = Σ fanout of keys absent
-    # from orders) — one lineitem scan total (audit_scans r07)
+    # from orders) — one lineitem scan total (tests/PLAN_SHAPES.json)
     fan = li.groupBy("l_orderkey").agg(
         F.count("*").cast("bigint").alias("fanout")
     ).persist()
@@ -4148,7 +4148,7 @@ def yearly_price_index_laspeyres(
     li = load_table(spark, sf_dir, "lineitem")
     dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     # persisted: the (part, year) grid feeds the base-year slice and
-    # the index join — one lineitem scan total (audit_scans r07)
+    # the index join — one lineitem scan total (tests/PLAN_SHAPES.json)
     # r14 (guide §2.3 narrower types): exact BIGINT cents/units folds
     # replace the DECIMAL(30,10) accumulators — unit_price and qty are
     # BIT-IDENTICAL doubles (prices are exact 2-decimal values,
@@ -4351,7 +4351,7 @@ def orders_concurrency_sweepline(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("day").over(Window.orderBy("day")).alias("next_day"),
     )
     # persisted: the peak-scalar attach and the final reduce both
-    # consume the day-step frame (audit_scans r07)
+    # consume the day-step frame (tests/PLAN_SHAPES.json)
     weighted = stepped.filter(F.col("next_day").isNotNull()).select(
         "day",
         "open_lines",
@@ -5836,7 +5836,7 @@ def yearly_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     # persisted: the (part, year) grid feeds the base-year slice and
-    # the index join — one lineitem scan total (audit_scans r07)
+    # the index join — one lineitem scan total (tests/PLAN_SHAPES.json)
     # r14 (guide §2.3 narrower types): exact BIGINT cents/units folds
     # replace the DECIMAL(30,10) accumulators — unit_price and qty are
     # BIT-IDENTICAL doubles (prices are exact 2-decimal values,
@@ -6298,14 +6298,7 @@ def supplier_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from decimal import ROUND_HALF_UP, Decimal
 
-    def _r(x: float, digits: int) -> float:
-        # Spark ROUND on double: BigDecimal(Double.toString(x)) HALF_UP
-        # — repr() is the same shortest round-trip decimal form
-        return float(
-            Decimal(repr(float(x))).quantize(
-                Decimal(1).scaleb(-digits), ROUND_HALF_UP
-            )
-        )
+    from technical_test_data_engineer_spark.functions.mirrors import spark_round
 
     # mirror both duel directions: wins_ji = n - wins_ij (exact — per-
     # game w flips 1<->0, 0.5 stays, and sums of halves are exact)
@@ -6332,10 +6325,10 @@ def supplier_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     games = np.bincount(si_ix, weights=n, minlength=len(supp))
     # exact: wins are multiples of 0.5 and games < 2^52
     w_i = np.bincount(si_ix, weights=wins, minlength=len(supp))
-    w_i = np.array([_r(x, 6) for x in w_i])
+    w_i = np.array([spark_round(x, 6) for x in w_i])
     # round 1: Σ_j ROUND(n/2.0, 9) == games/2 exactly (see docstring)
     s1 = np.array(
-        [_r(w, 12) for w in w_i / (games / 2.0)]
+        [spark_round(w, 12) for w in w_i / (games / 2.0)]
     )
 
     def _fold_terms(t: np.ndarray) -> np.ndarray:
@@ -6364,18 +6357,18 @@ def supplier_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = _fold_terms(n / (s1[si_ix] + s1[sj_ix]))
     np.add.at(den2_scaled, si_ix, terms)
     den2 = den2_scaled.astype(np.float64) / 1e9
-    s2 = np.array([_r(w, 12) for w in w_i / den2])
+    s2 = np.array([spark_round(w, 12) for w in w_i / den2])
 
     order = sorted(
         range(len(supp)),
-        key=lambda k: (-_r(s2[k], 9), int(supp[k])),
+        key=lambda k: (-spark_round(s2[k], 9), int(supp[k])),
     )[:20]
     rows = [
         (
             int(supp[k]),
             int(games[k]),
-            _r(w_i[k], 2),
-            _r(s2[k], 6),
+            spark_round(w_i[k], 2),
+            spark_round(s2[k], 6),
         )
         for k in order
     ]

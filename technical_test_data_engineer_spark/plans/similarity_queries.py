@@ -459,16 +459,22 @@ def knn_anchor_routing_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     off ONE Arrow fetch of the bounded corpus: anchor scores via the
     vectorized ``round_half_up_1e10`` mirror of ``int_scaled_dot``
     (identical int64s — parity-tested in tests/test_round15_ops.py),
-    the exact top-{TOP_K} via float64 dots with a 1e-6 candidate band
+    the exact top-{TOP_K} via float64 dots with a candidate band
     re-scored through the exact Decimal(repr)-quantize mirror of
-    ``exact_dot``'s DECIMAL(38,30) per-product cast (the float dot is
-    ≤ ~1e-12 from the decimal sum, so everything outside the band is
-    already strictly ordered), and the routing/recall arithmetic in
+    ``exact_dot``'s DECIMAL(38,30) per-product cast
+    (``functions/mirrors.exact_topk``: the band is derived from
+    dim·max‖v‖²·eps and checked at run time, so everything outside it
+    is already strictly ordered), and the routing/recall arithmetic in
     plain ints. Replaces 8 interpreted 64-element HOF folds per corpus
     row + a 5×corpus decimal-fold crossJoin + two windows + two joins
     with numpy on ~3 MB. Results bit-identical; oracle unchanged."""
     import numpy as np
 
+    from technical_test_data_engineer_spark.functions.mirrors import (
+        dot_band,
+        exact_topk,
+        spark_round,
+    )
     from technical_test_data_engineer_spark.operators.linalg import (
         round_half_up_1e10,
     )
@@ -505,52 +511,16 @@ def knn_anchor_routing_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ordq = np.lexsort((np.arange(N_ANCHOR_CELLS), -adot[q]))
         qrank[q, ordq] = np.arange(1, N_ANCHOR_CELLS + 1)
 
-    # exact_dot mirror: float64 dots order everything outside a 1e-6
-    # band around the k-th score; band members re-score through the
-    # exact DECIMAL(38,30) per-product quantize (Decimal(repr))
-    from decimal import ROUND_HALF_UP, Decimal, localcontext
-
-    q30 = Decimal(1).scaleb(-30)
-
-    def _exact_key(qv: np.ndarray, cv: np.ndarray) -> Decimal:
-        # prec=80 ≫ the 38 digits of the mirrored DECIMAL(38,30): the
-        # default context (28) raises InvalidOperation on a scale-30
-        # quantize; sums of scale-30 values at |v| ≤ 64 are exact
-        with localcontext() as ctx:
-            ctx.prec = 80
-            return sum(
-                (
-                    Decimal(repr(float(p))).quantize(q30, ROUND_HALF_UP)
-                    for p in qv * cv
-                ),
-                Decimal(0),
-            )
-
-    Sf = V[:n_q] @ V.T  # (n_q, n)
+    # exact_dot mirror: float64 dots order everything outside a band
+    # derived from dim·max‖v‖²·eps around the k-th score; band members
+    # re-score through the exact DECIMAL(38,30) per-product quantize
+    band = dot_band(V)
     top_rows: dict[int, list[int]] = {}
     for q in range(n_q):
         qid = int(ids[q])
         mask = ids != qid
-        cand_ids = ids[mask]
-        s = Sf[q][mask]
-        # float top-k with a safety band, then exact re-rank of the band
-        k_eff = min(TOP_K, len(s))
-        kth = np.partition(-s, k_eff - 1)[k_eff - 1]  # -score of k-th
-        band = np.nonzero(-s <= kth + 1e-6)[0]
-        ranked = sorted(
-            (
-                (-_exact_key(V[q], V[np.nonzero(ids == cand_ids[b])[0][0]]),
-                 int(cand_ids[b]))
-                for b in band
-            ),
-        )[:TOP_K]
-        top_rows[qid] = [vid for _, vid in ranked]
-
-    def _r6(x: float) -> float:
-        return float(
-            Decimal(repr(float(x))).quantize(
-                Decimal(1).scaleb(-6), ROUND_HALF_UP
-            )
+        top_rows[qid] = exact_topk(
+            V[q], V[mask], ids[mask], TOP_K, band, "knn_anchor_routing_recall"
         )
 
     id_pos = {int(v): i for i, v in enumerate(ids)}
@@ -562,7 +532,7 @@ def knn_anchor_routing_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
         for p in PROBE_GRID:
             nf = sum(1 for cr in ranks if cr <= p)
-            rows.append((qid, int(p), nf, _r6(nf / float(TOP_K))))
+            rows.append((qid, int(p), nf, spark_round(nf / float(TOP_K), 6)))
     from pyspark.sql import types as T
 
     schema = T.StructType(
@@ -682,7 +652,7 @@ def embedding_coreset_facility3(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-computing each pick's broadcast subtree) — measured as pure
     job-launch overhead, not arithmetic. Coverage totals, maxes and
     gains stay exact int64 end to end; only the display ROUND(t/1e10,
-    6) touches floats, mirrored via the Decimal(repr) HALF_UP helper
+    6) touches floats, mirrored by ``functions/mirrors.spark_round``
     (identical input double on both paths)."""
     from technical_test_data_engineer_spark.operators.partitioning import (
         fan_out,
@@ -710,15 +680,8 @@ def embedding_coreset_facility3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     import numpy as np
     from pyspark.sql import types as T
-    from decimal import ROUND_HALF_UP, Decimal
 
-    def _r(x: float, digits: int) -> float:
-        # Spark ROUND on double: BigDecimal(Double.toString(x)) HALF_UP
-        return float(
-            Decimal(repr(float(x))).quantize(
-                Decimal(1).scaleb(-digits), ROUND_HALF_UP
-            )
-        )
+    from technical_test_data_engineer_spark.functions.mirrors import spark_round
 
     pdf = sims.toPandas()
     key_type = emb.schema["vec_id"].dataType
@@ -766,8 +729,8 @@ def embedding_coreset_facility3(spark: SparkSession, sf_dir: str) -> DataFrame:
         (
             step + 1,
             int(ids[picks[step]]),
-            _r(tots[step] / 1e10, 6),
-            _r(
+            spark_round(tots[step] / 1e10, 6),
+            spark_round(
                 (tots[step] - (tots[step - 1] if step else 0)) / 1e10, 6
             ),
         )
@@ -1933,7 +1896,7 @@ def embedding_isotropy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     dec12 = lambda c: c.cast("decimal(30,12)")  # noqa: E731
     # persisted: the 1-row count attaches to both the per-dim frame and
-    # the final select — one pruned count scan total (audit_scans r07)
+    # the final select — one pruned count scan total (tests/PLAN_SHAPES.json)
     n = emb.agg(F.count("*").cast("double").alias("n")).persist()
     d = x.groupBy("i").agg(
         F.sum(dec(F.col("x"))).cast("double").alias("s"),

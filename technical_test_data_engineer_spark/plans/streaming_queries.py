@@ -1152,7 +1152,7 @@ def user_event_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("user_id") % 20 == 0
     )
     # persisted: the (user, type) count grid feeds the totals agg and
-    # the entropy join — one events scan total (audit_scans r07)
+    # the entropy join — one events scan total (tests/PLAN_SHAPES.json)
     c = events.groupBy("user_id", "event_type").agg(
         F.count("*").cast("bigint").alias("c")
     ).persist()

@@ -56,8 +56,7 @@ def shared_tfidf_neighbors(spark, sf_dir):
     session-scoped-materialized (operators/materialize): the
     inverted-index pipeline builds once per SparkSession and both
     consumers scan the temp parquet. Values are one realization of the
-    same plan written/read bit-exactly, so oracle hashes are untouched;
-    SPARK_GRAFT_NO_MATERIALIZE=1 rebuilds raw."""
+    same plan written/read bit-exactly, so oracle hashes are untouched."""
     from technical_test_data_engineer_spark.operators.materialize import (
         materialized_relation,
     )
@@ -2023,8 +2022,9 @@ def source_token_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     tok = docs.select("source", F.explode(TX.tokens("text")).alias("term"))
     # persist: st feeds the per-source totals, the corpus term table,
     # AND the grid's left-join side — unpersisted, each consumer
-    # replays the tokenize+count lineage (4 document scans measured by
-    # audit_scans). The frame is (sources x vocabulary)-sized.
+    # replays the tokenize+count lineage (4 document scans; the ledger,
+    # tests/PLAN_SHAPES.json, pins the persisted form). The frame is
+    # (sources x vocabulary)-sized.
     st = (
         tok.groupBy("source", "term")
         .agg(F.count("*").alias("c"))
@@ -2387,7 +2387,7 @@ def source_temperature_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(TX.token_count("text")).cast("bigint").alias("n_tokens"),
     )
     # persisted: the source-sized weight frame feeds the normalizer agg
-    # and the final select — one documents scan total (audit_scans r07)
+    # and the final select — one documents scan total (tests/PLAN_SHAPES.json)
     p = s.select(
         "*", F.pow(F.col("n_tokens").cast("double"), F.lit(0.7)).alias("pw")
     ).persist()

@@ -2161,7 +2161,7 @@ def daily_revenue_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("trend"),
     )
     # persisted: the day-spine detrended frame feeds the seasonal agg
-    # and the final join — one orders scan total (audit_scans r07)
+    # and the final join — one orders scan total (tests/PLAN_SHAPES.json)
     det = tr.select(
         "day",
         "rev",
@@ -2248,7 +2248,7 @@ def daily_revenue_forecast_backtest(
     ).agg(exact_sum("o_totalprice").alias("rev"))
     w = Window.orderBy("day")
     # persisted: the day-spine lag frame feeds both model scorecards —
-    # one orders scan total (audit_scans r07)
+    # one orders scan total (tests/PLAN_SHAPES.json)
     scored = daily.select(
         "rev",
         F.lag("rev", 1).over(w).alias("naive"),
@@ -2491,7 +2491,7 @@ def customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     # persisted: the per-customer cohort frame feeds cohort sizes AND
-    # the revenue-grid join — one orders scan per role (audit_scans r07)
+    # the revenue-grid join — one orders scan per role (tests/PLAN_SHAPES.json)
     f = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
         F.date_trunc("month", F.min(F.col("o_orderdate").cast("date"))).alias(
             "cohort"
@@ -2600,7 +2600,7 @@ def daily_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(exact_sum("o_totalprice").alias("rev"))
     w = Window.orderBy("day")
     # persisted: three per-lag moment aggs share the lag frame — one
-    # orders scan total (audit_scans r07)
+    # orders scan total (tests/PLAN_SHAPES.json)
     lagged = daily.select(
         "rev",
         F.lag("rev", 1).over(w).alias("l1"),
@@ -3015,7 +3015,7 @@ def ab_test_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("double").alias("n_events"),
     ).select((F.col("user_id") % 2 == 0).alias("in_a"), "view_sum", "click_sum", "n_events")
     # persisted: the per-user covariate frame feeds the 3-way unpivot —
-    # one events scan total (audit_scans r07)
+    # one events scan total (tests/PLAN_SHAPES.json)
     u = u.persist()
     long_ = (
         u.select("in_a", F.lit("view_sum").alias("covariate"), F.col("view_sum").alias("x"))
@@ -3555,16 +3555,10 @@ def daily_revenue_repeated_median(
         n_pairs = None
         n_days = 0
 
-    from decimal import ROUND_HALF_UP, Decimal
+    from technical_test_data_engineer_spark.functions.mirrors import spark_round
 
     def _r6(v):
-        if v is None:
-            return None
-        return float(
-            Decimal(repr(float(v))).quantize(
-                Decimal(1).scaleb(-6), ROUND_HALF_UP
-            )
-        )
+        return None if v is None else spark_round(v, 6)
 
     dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
@@ -4259,7 +4253,7 @@ def daily_revenue_leadlag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     w = Window.orderBy("day")
     # persisted: one moment agg per lag shares the lead frame — one
-    # orders scan total (audit_scans r07)
+    # orders scan total (tests/PLAN_SHAPES.json)
     lagged = daily.select(
         "rev",
         *[F.lead("cnt", k).over(w).alias(f"c{k}") for k in _XCORR_LAGS],

@@ -2,8 +2,7 @@
 
 Reference: SQLAlchemy ``MetaData().reflect`` existence check
 (/root/reference/tasks/visualization/src/visualization.py:64-73) and
-driver-side dict/distinct collection for UI legends
-(visualization.py:52, :136, :255).
+driver-side dict collection for UI legends (visualization.py:52).
 """
 
 from __future__ import annotations
@@ -31,13 +30,6 @@ def collect_dict(df: DataFrame, key_col: str, val_col: str) -> dict:
     """Small-result action: 2-col frame → driver dict (SURVEY.md S6,
     visualization.py:52). Only valid for driver-bound small results."""
     return {r[0]: r[1] for r in df.select(key_col, val_col).collect()}
-
-
-def collect_distinct_sorted(df: DataFrame, col: str) -> list:
-    """Sorted distinct values to the driver (SURVEY.md S7,
-    visualization.py:136/:255). Distinct runs distributed; only the
-    (small) result set crosses to the driver."""
-    return [r[0] for r in df.select(col).distinct().orderBy(col).collect()]
 
 
 def session_table_name(spark: SparkSession, base: str) -> str:

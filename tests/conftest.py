@@ -7,10 +7,16 @@ from technical_test_data_engineer_spark.session import get_spark
 SF_DIR = "/root/testdata/sf0.001"
 
 
-@pytest.fixture(scope="session")
-def spark():
+def make_session():
+    """The suite's session; the plan-shape ledger is generated on it too."""
     s = get_spark("tests", master="local[4]", shuffle_partitions=4)
     s.sparkContext.setLogLevel("ERROR")
+    return s
+
+
+@pytest.fixture(scope="session")
+def spark():
+    s = make_session()
     yield s
     s.stop()
 

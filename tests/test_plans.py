@@ -1,6 +1,7 @@
-"""Physical-plan assertions — lock in the optimization properties the
-engine's docs claim, so a refactor that silently loses pushdown, a
-broadcast, or scan-dedup fails CI rather than only showing up at scale.
+"""Physical-plan assertions the plan-shape ledger cannot express —
+pushed filters, read schemas, operator order, join types, partial
+aggregates and shuffle keys. Operator and scan counts per query live
+in ``tests/PLAN_SHAPES.json`` (see ``tests/test_queries_smoke.py``).
 """
 
 from __future__ import annotations
@@ -10,19 +11,14 @@ import re
 from technical_test_data_engineer_spark.plans import QUERIES
 
 
-def _plan(spark, sf_dir, name: str) -> str:
-    df = QUERIES[name](spark, sf_dir)
+def _explain(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
 
 
-def test_q5_dimension_joins_broadcast(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "q5_region_revenue")
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan.split("HashAggregate")[0] or True
-    # all five joins resolved without a single sort-merge on a dimension
-    assert plan.count("BroadcastHashJoin") >= 3, plan
+def _plan(spark, sf_dir, name: str) -> str:
+    return _explain(QUERIES[name](spark, sf_dir))
 
 
 def test_filter_pushdown_reaches_scan(spark, sf_dir):
@@ -41,18 +37,6 @@ def test_column_pruning_reaches_scan(spark, sf_dir):
     assert "l_orderkey" not in cols and "l_partkey" not in cols, cols
 
 
-def test_flagship_scans_fact_once(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "flagship_daily_backlog")
-    scans = re.findall(r"\(\d+\) Scan parquet", plan)
-    assert len(scans) == 2, plan  # lineitem + orders, each exactly once
-    assert len(re.findall(r"lineitem\.parquet", plan)) == 1, plan
-
-
-def test_knn_bruteforce_broadcasts_queries_not_corpus(spark, sf_dir):
-    plan = _plan(spark, sf_dir, "knn_bruteforce")
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan, plan
-
-
 def test_knn_topk_local_prune_before_window(spark, sf_dir):
     # the per-query ranking window must consume a per-partition
     # pre-top-k (MapInPandas), never the raw corpus × queries scored
@@ -66,14 +50,6 @@ def test_knn_topk_local_prune_before_window(spark, sf_dir):
         assert wd, f"{name}: no Window\n{plan}"
         # formatted-plan ids grow downstream: the prune precedes the window
         assert int(mp.group(1)) < int(wd.group(1)), f"{name}\n{plan}"
-
-
-def test_q8_dimension_chain_broadcasts(spark, sf_dir):
-    # 7-table join: both dimension chains (customer-side and supplier-
-    # side nation lookups) must resolve as broadcasts; only
-    # orders ⋈ lineitem may shuffle
-    plan = _plan(spark, sf_dir, "q8_market_share")
-    assert plan.count("BroadcastHashJoin") >= 2, plan
 
 
 def test_q9_part_filter_pushdown(spark, sf_dir):
@@ -90,34 +66,6 @@ def test_q21_reuses_base_relation_shape(spark, sf_dir):
     plan = _plan(spark, sf_dir, "q21_waiting_suppliers")
     assert "LeftSemi" in plan and "LeftAnti" in plan, plan
     assert "CartesianProduct" not in plan, plan
-
-
-def test_campaign_range_join_broadcasts_dim(spark, sf_dir):
-    # range join: tiny campaign dim broadcast-nested-loop against the
-    # events fact — the fact side must never shuffle
-    plan = _plan(spark, sf_dir, "events_campaign_attribution")
-    assert "BroadcastNestedLoopJoin" in plan, plan
-
-
-def test_repetition_stats_single_explode(spark, sf_dir):
-    # r15: fully scan-side — one corpus scan, ZERO explodes and ZERO
-    # grouping aggregates (the stats fold per row over the bound bigram
-    # array; the r14 form exploded once and shuffled two gram aggs)
-    plan = _plan(spark, sf_dir, "doc_repetition_stats")
-    assert len(re.findall(r"documents\.parquet", plan)) == 1, plan
-    assert len(re.findall(r"\(\d+\) Generate", plan)) == 0, plan
-    assert "HashAggregate" not in plan, plan
-
-
-def test_gapfill_by_type_is_fully_partitioned(spark, sf_dir):
-    # the multi-series gap fill must never funnel through a single
-    # partition (the documented limitation of the single-series form):
-    # windows partition by event_type and the spine derives in-plan,
-    # reusing the bounds-agg's hash partitioning — no SinglePartition
-    # exchange, no second events scan (the hourly agg is persisted)
-    plan = _plan(spark, sf_dir, "events_gapfilled_by_type")
-    assert "SinglePartition" not in plan, plan
-    assert len(re.findall(r"\(\d+\) Scan parquet", plan)) == 1, plan
 
 
 def test_centroids_partial_aggregation(spark, sf_dir):
@@ -184,34 +132,19 @@ def test_cms_never_underestimates(spark, sf_dir):
     assert all(r.est_count >= r.exact_count for r in rows)
 
 
-def test_cdc_merge_windows_changelog_only(spark, sf_dir):
-    """apply_changelog's top-1-per-key window must sit on the changelog
-    branch only: exactly one Window in the plan, and the base snapshot
-    reaches the output through a join (anti) + union, never a Window —
-    the property that keeps the 100 TB snapshot un-windowed."""
-    plan = _plan(spark, sf_dir, "orders_cdc_merge")
-    # exact Window nodes (not WindowGroupLimit, not the detail echo);
-    # the changelog window may appear twice because both consumers
-    # (anti-join keys, upsert rows) re-derive it — still changelog-only
-    nodes = re.findall(r"\(\d+\) Window\b", plan)
-    assert 1 <= len(nodes) <= 2, plan
-
-
-def test_corpus_mix_rates_join_is_broadcast(spark, sf_dir):
-    """The per-group keep-rates reach the corpus via a broadcast join —
-    the corpus itself is never shuffled for the mixing filter."""
-    plan = _plan(spark, sf_dir, "corpus_mix_rebalance")
-    assert "BroadcastHashJoin" in plan, plan
-
-
-def test_tfidf_neighbors_df_side_broadcast(spark, sf_dir, monkeypatch):
+def test_tfidf_neighbors_df_side_broadcast(spark, sf_dir):
     """The kept-terms (df-capped) relation joins the tf postings as a
     broadcast — vocabulary-sized, never a corpus shuffle. Asserts the
-    BUILD plan: the query normally serves from the session-scoped
-    materialized relation (a plain parquet scan), so force the raw
-    pipeline via the audit opt-out."""
-    monkeypatch.setenv("SPARK_GRAFT_NO_MATERIALIZE", "1")
-    plan = _plan(spark, sf_dir, "doc_tfidf_neighbors")
+    BUILD plan of the relation doc_tfidf_neighbors materializes (the
+    query itself scans the session-scoped temp parquet)."""
+    from technical_test_data_engineer_spark.operators import text as TX
+    from technical_test_data_engineer_spark.plans.text_queries import _docs
+
+    plan = _explain(
+        TX.tfidf_cosine_neighbors(
+            _docs(spark, sf_dir), "doc_id", "text", k=3, max_df_frac=0.2
+        )
+    )
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
 
@@ -222,203 +155,3 @@ def test_bpe_pairs_aggregate_is_partial(spark, sf_dir):
     bounds the shuffle by vocabulary, not the token stream."""
     plan = _plan(spark, sf_dir, "bpe_merge_candidates")
     assert plan.count("partial_count") + plan.count("partial_sum") >= 2, plan
-
-
-def test_pagerank_inflow_is_single_keyed_shuffle(spark, sf_dir):
-    """Each PageRank iteration's rank flow is hash joins + one keyed
-    aggregation — no cartesian, no nested-loop except the documented
-    1-row dangling-scalar broadcast."""
-    plan = _plan(spark, sf_dir, "part_copurchase_pagerank")
-    assert "CartesianProduct" not in plan, plan
-
-
-def test_pareto_phase1_is_grouped_map(spark, sf_dir):
-    """Two-phase skyline: both phases are FlatMapGroupsInPandas (the
-    vectorized dominance kernel), never a self-join — the all-pairs
-    NOT EXISTS shape lives only in the oracle."""
-    plan = _plan(spark, sf_dir, "pareto_parts")
-    nodes = re.findall(r"\(\d+\) FlatMapGroupsInPandas", plan)
-    assert len(nodes) == 2, plan
-    assert "CartesianProduct" not in plan and "BroadcastNestedLoopJoin" not in plan, plan
-
-
-# Queries where a BroadcastNestedLoopJoin / CartesianProduct is the
-# DOCUMENTED intent: bounded all-pairs ground truths, broadcast scalar
-# attach, non-equi broadcast joins against tiny dimensions, and
-# substring containment against a broadcast snippet set. Everything
-# else must plan hash/sort-merge joins only.
-_NONEQUI_ALLOWLIST = {
-    "ngram_jaccard_pairs",        # bounded all-pairs ground truth
-    "embedding_near_dup_exact",   # bounded exact twin
-    "neardup_keeper_docs",        # bounded keeper ground truth
-    "dedup_clusters_exact",       # bounded pair join for CC proof
-    "knn_bruteforce",             # corpus x broadcast-queries scan
-    "knn_mmr_rerank",             # shortlist from the same broadcast-
-                                  # queries brute-force scan (MMR stage
-                                  # itself joins hash-equi on vec_id)
-    "knn_ivf_exact_probeall",
-    "knn_pq_exact_rerankall",
-    "knn_ivfpq_exact",
-    "knn_matryoshka_trunc",
-    "matryoshka_recall_curve",    # 4 broadcast-queries brute-force
-                                  # passes + 3x5 dim/query eval grid
-                                  # (overlap join is hash-equi)
-    "source_loo_impact",          # 1-row global-moments broadcast
-                                  # attach (corpus_drift_psi pattern)
-    "source_token_js_divergence", # vocabulary-sized JS grid: tiny
-                                  # per-source/global totals broadcast
-                                  # onto the corpus term table
-    "doc_neyman_sample",          # 1-row allocation-total broadcast
-                                  # attach
-    "ab_test_cuped",              # 1-row pooled-theta broadcast attach
-    "customer_segment_target_encoding",  # 1-row global-mean broadcast
-                                  # attach (smoothing prior)
-    "customer_acctbal_woe_iv",    # 1-row class-totals broadcast attach
-    "order_value_conformal",      # 1-row fitted-scalars (a, b, q90)
-                                  # bounded-collect literal attaches
-                                  # (r14; was broadcast crossJoins)
-    "shard_balance_chisq",        # 1-row grand-total broadcast attach
-    "source_distinctive_terms",   # 1-row corpus-total broadcast attach
-    "embedding_isotropy_stats",   # 1-row count broadcast attach
-    "knn_mmr_exact3",             # corpus x broadcast-queries scan
-                                  # (knn family; pick stages hash-equi)
-    "knn_anchor_routing_recall",  # corpus x broadcast-queries exact
-                                  # reference scan (knn family); cell
-                                  # assignment is scan-side literals,
-                                  # hits joins hash-equi on vec_id/cell
-    "embedding_coreset_facility3",  # bounded all-pairs sim frame
-                                  # (CORESET_BOUND proof corpus) + the
-                                  # 1-row picked-id broadcast attaches;
-                                  # step reductions join hash-equi on j
-    "basket_rules_lift",          # 1-row basket-count broadcast attach
-                                  # (r12 single-action fusion; rule
-                                  # joins stay broadcast hash-equi)
-    "daily_revenue_runs_test",    # 1-row median broadcast attach
-    "daily_revenue_cusum",        # 1-row moments broadcast attach
-    "part_record_linkage_scores", # three 1-row u-scalar broadcast
-                                  # attaches (pair join is hash-equi
-                                  # on the blocking key)
-    "source_temperature_mixing",  # 1-row normalizer broadcast attach
-    "elasticity_kfold_cv",        # 1-row total-moments broadcast
-                                  # attach onto the 5-row fold frame
-    "join_key_health",            # two 1-row orphan-count broadcast
-                                  # attaches (the anti joins are
-                                  # hash-equi on the key)
-    "customer_rfm_kmeans2",       # k-row centroid-table broadcast per
-                                  # Lloyd round + 1-row max-date/moment
-                                  # attaches
-    "monthly_latency_control_chart",  # 1-row control-limits broadcast
-                                  # attach
-    "supplier_pareto_abc",        # 1-row revenue-total broadcast attach
-    "orders_littles_law",         # 1-row orphan/limit scalar attaches
-    "yearly_price_index_laspeyres",  # 1-row base-year broadcast attach
-    "customer_bg_nbd_stats",      # 1-row horizon-date broadcast attach
-    "hourly_traffic_profile",     # 1-row traffic-total broadcast attach
-    "user_conversion_survival",   # 1-row cohort-size broadcast attach
-    "orders_benford_audit",       # 1-row total-count broadcast attach
-    "embedding_silhouette",       # labels-sized centroid table
-                                  # broadcast onto one corpus scan
-    "hybrid_rrf_retrieval",       # dense side = broadcast-queries scan
-    "knn_lsh_exact",
-    "embedding_near_dups_lsh_exact",
-    "semantic_dedup_keep",
-    "hard_negative_mining",       # corpus x broadcast-anchors scan
-    "knn_maxsim_late_interaction",  # corpus x broadcast-queries scan
-    "lineitem_bloom_prune_revenue",  # 1-row bloom-bitmap broadcast
-                                  # attach (the semi join itself is
-                                  # hash-equi on l_orderkey)
-    "part_name_fuzzy_pairs",      # blocked non-equi length band
-    "daily_active_users",         # non-equi broadcast day grid
-    "eval_substring_contamination",  # contains() vs broadcast snippets
-    "events_campaign_attribution",   # point-in-interval vs tiny dims
-    "orders_active_on_day",
-    "corpus_drift_psi",           # 1-row totals broadcast attach
-    "corpus_stats_card",
-    "corpus_mix_rebalance",       # 1-row budget broadcast attach
-    "event_value_ks_drift",       # 1-row sample-size broadcast attach
-    "time_to_first_purchase",
-    "part_copurchase_pagerank",   # 1-row dangling-mass attach
-    "q19_disjunctive_predicates", # OR-of-ANDs join condition
-    "q11_important_parts",        # TPC-H scalar-subquery threshold
-    "q22_idle_rich_customers",    # TPC-H scalar-subquery average
-    "orders_concurrency_sweepline",  # 1-row peak-scalar broadcast
-                                  # attach onto the day-step frame
-    "retrieval_ndcg_mrr",         # corpus x broadcast-queries scan
-                                  # (knn family; metric joins hash-equi)
-    "daily_revenue_repeated_median",  # calendar-bounded day-frame pair
-                                  # join + 1-row slope/intercept attaches
-    "user_score_reliability",     # 1-row median + base-rate broadcast
-                                  # attaches onto the user frame
-    "copurchase_sppmi",           # 1-row co-occurrence-total broadcast
-                                  # attach (PMI normalizer)
-    "nation_t_closeness",         # bounded quasi-id x sensitive dense
-                                  # grid (segments broadcast + 1-row
-                                  # corpus total attach)
-    "customer_decayed_value",     # 1-row horizon (max order date)
-                                  # broadcast attach, the cohort-LTV
-                                  # convention
-    "ab_test_permutation",        # 1-row observed-diff broadcast attach
-    "orders_zonemap_report",      # 1-row max-key broadcast attach
-                                  # (relative probe band)
-    "daily_revenue_changepoint",  # 1-row series-total broadcast attach
-                                  # (split-gain normalizer)
-    "user_hll_md5_estimate",      # 1-row estimate + 1-row exact-count
-                                  # broadcast attaches onto the 256-max
-                                  # register frame
-    "event_type_overlap_kmv",     # |event_types|^2 pair enumeration on
-                                  # the k-row theta frame (sketch algebra
-                                  # moves only k x types rows)
-    "customer_theil_index",       # 1-row (n, total) broadcast attach
-                                  # (log-term normalizer)
-    "vocab_coverage_curve",       # 3-row literal k-ladder broadcast
-                                  # cross onto the vocab-sized frame
-    "customer_mahalanobis_outliers",  # 1-row covariance broadcast attach
-    "doc_length_lognormal_fit",   # 1-row (mu, sigma) broadcast attach
-    "daily_revenue_hurst",        # 4-row literal block-size ladder
-                                  # broadcast cross onto the day spine
-    "term_burstiness",            # 1-row doc-count broadcast attach
-    "copurchase_assortativity",   # 1-row node-count broadcast attach
-    "embedding_jl_distortion",    # 64x16 literal sign-matrix cross
-                                  # build (broadcast, dims-bounded)
-    "yearly_price_index_fisher",  # 1-row base-year broadcast attach
-                                  # (the Laspeyres convention)
-    "daily_revenue_kendall_tau",  # day-spine O(d^2) pair self-join
-                                  # (bounded documented proof; never
-                                  # fact-width)
-    "priority_value_gamma",       # lexicographic cell-pair enumeration
-                                  # on the bounded contingency grid
-    "daily_revenue_wavelet_energy",  # 4-row literal scale ladder
-                                  # broadcast cross onto the day spine
-    "order_value_hill_tail",      # 1-row (k+1)-th order statistic
-                                  # broadcast attach
-    "supplier_acctbal_kruskal",   # 1-row tie-correction broadcast
-                                  # attach
-    "nation_theil_decomposition", # 1-row (n, total) broadcast attach
-    "customer_partition_ari",     # 1-row combinatorics broadcast
-                                  # attaches (row/col pair counts)
-}
-
-
-def test_no_undocumented_cartesian_or_nested_loop_joins(spark, sf_dir):
-    """Global plan hygiene: every registered query must resolve its
-    joins to hash/sort-merge unless it is on the documented allowlist
-    (bounded proofs, broadcast-scalar attaches, deliberate non-equi
-    broadcasts). Catches the classic regression where a refactor drops
-    an equi-key and Catalyst silently falls back to a nested loop —
-    fine at sf0.001, catastrophic at 100 TB."""
-    from pyspark.sql import functions as F  # noqa: F401
-
-    offenders = []
-    for name, fn in QUERIES.items():
-        try:
-            df = fn(spark, sf_dir)
-        except Exception as exc:  # pragma: no cover - fail loudly
-            offenders.append((name, f"build failed: {exc}"))
-            continue
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "simple"
-        )
-        has_nl = "CartesianProduct" in plan or "BroadcastNestedLoopJoin" in plan
-        if has_nl and name not in _NONEQUI_ALLOWLIST:
-            offenders.append((name, "undocumented nested-loop/cartesian"))
-    assert not offenders, offenders

@@ -6,12 +6,16 @@ the k-weighted decimal folds must match per-occurrence sums.
 from __future__ import annotations
 
 import random
-from decimal import ROUND_HALF_UP, Decimal, localcontext
 
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from technical_test_data_engineer_spark.functions.mirrors import (
+    dot_band,
+    exact_topk,
+    spark_round,
+)
 from technical_test_data_engineer_spark.operators.linalg import (
     round_half_up_1e10,
 )
@@ -52,8 +56,8 @@ def test_int_scaled_dot_numpy_mirror(spark):
 
 
 def test_exact_dot_band_topk_matches_brute_force(spark):
-    """The exact-top-k mirror (float64 dots + 1e-6 band re-scored via
-    the Decimal(repr)-quantize DECIMAL(38,30) cast mirror) must pick
+    """The exact-top-k mirror (float64 dots + the derived band re-scored
+    via the Decimal(repr)-quantize DECIMAL(38,30) cast mirror) must pick
     the same (query, vec_id, rank) set as brute_force_topk."""
     n, dim, k = 60, 16, 5
     vecs = _rand_vecs(n, dim, seed=11)
@@ -72,31 +76,53 @@ def test_exact_dot_band_topk_matches_brute_force(spark):
     }
 
     V = np.array(vecs, dtype=np.float64)
-    q30 = Decimal(1).scaleb(-30)
-
-    def exact_key(qv, cv):
-        with localcontext() as ctx:
-            ctx.prec = 80
-            return sum(
-                (
-                    Decimal(repr(float(p))).quantize(q30, ROUND_HALF_UP)
-                    for p in qv * cv
-                ),
-                Decimal(0),
-            )
-
+    band = dot_band(V)
+    assert 0 < band < 1e-9
     ids = np.arange(n)
     for q in range(3):
         mask = ids != q
-        s = (V[q] @ V.T)[mask]
-        cand = ids[mask]
-        kth = np.partition(-s, k - 1)[k - 1]
-        band = np.nonzero(-s <= kth + 1e-6)[0]
-        ranked = sorted(
-            ((-exact_key(V[q], V[cand[b]]), int(cand[b])) for b in band)
-        )[:k]
-        for rank, (_, vid) in enumerate(ranked, start=1):
+        ranked = exact_topk(V[q], V[mask], ids[mask], k, band, "test")
+        for rank, vid in enumerate(ranked, start=1):
             assert want[(q, rank)] == vid, (q, rank)
+
+
+def test_exact_topk_rejects_a_band_narrower_than_the_float_error():
+    """A band too narrow for the float64 dots' error is a labelled
+    error, never a silently mis-ranked top-k: the exact dot of the first
+    row is 1 + 2^-60, which every float64 summation rounds to 1."""
+    qv = np.array([1.0, 2.0**-30])
+    V = np.array([[1.0, 2.0**-30], [0.5, 0.0]])
+    band = dot_band(np.vstack([qv, V]))
+    assert exact_topk(qv, V, np.arange(2), 1, band, "ok") == [0]
+    with pytest.raises(ValueError, match="probe: float dot for id 0"):
+        exact_topk(qv, V, np.arange(2), 1, 1e-18, "probe")
+
+
+def test_spark_round_matches_spark_sql_round_on_ties(spark):
+    """spark_round == Spark SQL ROUND on a DOUBLE column, including the
+    ties that HALF_UP on the printed digits decides (2.675 -> 2.68,
+    though its binary value is below the tie) and magnitudes where
+    scale-6 rounding needs 19 significant digits."""
+    cases = [
+        (0.125, 2),
+        (2.675, 2),
+        (-0.5, 0),
+        (1.5, 0),
+        (-2.675, 2),
+        (12345678901234.567, 6),
+        (9876543210123.4551, 3),
+        (0.1234565, 6),
+    ]
+    df = spark.createDataFrame(
+        [(i, x) for i, (x, _) in enumerate(cases)], "i int, x double"
+    )
+    got = df.select(
+        "i",
+        *[F.round("x", d).alias(f"r{d}") for d in sorted({d for _, d in cases})],
+    ).collect()
+    for r in got:
+        x, d = cases[r["i"]]
+        assert spark_round(x, d) == r[f"r{d}"], (x, d, r[f"r{d}"])
 
 
 @pytest.mark.parametrize("seed", [3, 4])

@@ -142,47 +142,6 @@ def test_scurve_monotone_in_similarity(spark, sf_dir):
         assert probs == sorted(probs), (cfg, pts)
 
 
-def _scan_counts(spark, sf_dir, name: str):
-    """Per-table parquet scan counts from the formatted plan — the
-    audit_scans.py metric (BNLJ counts are unusable here: a persisted
-    frame's definition prints once per reference, and the tiny
-    dims-x-queries grid crossJoin legitimately plans as BNLJ)."""
-    import re
-    from collections import Counter
-
-    from technical_test_data_engineer_spark.plans import QUERIES
-
-    df = QUERIES[name](spark, sf_dir)
-    plan = df._sc._jvm.PythonSQLUtils.explainString(
-        df._jdf.queryExecution(), "formatted"
-    )
-    pat = re.compile(
-        r"InMemoryFileIndex\s*(?:\(\d+ paths\))?\s*\[[^\]]*?/(\w+)\.parquet"
-    )
-    return Counter(pat.findall(plan)), plan
-
-
-def test_matryoshka_single_pass_scan_count(spark, sf_dir):
-    """The r09 single-pass rewrite's contract: embeddings scans exactly
-    twice (the fanned-out corpus side and the broadcast query side of
-    ONE pair enumeration) — the four-pass form scanned it ten times
-    unpersisted."""
-    counts, plan = _scan_counts(spark, sf_dir, "matryoshka_recall_curve")
-    assert counts["embeddings"] == 2, (counts, plan)
-
-
-def test_anchor_routing_scan_budget(spark, sf_dir):
-    """Cell argmax rides the corpus scan as literal-anchor expressions
-    (no join, no shuffle, no window over corpus rows): the plan's four
-    embeddings scans are the 8-row anchor collect feed, the assignment
-    pass, the query-bounded probe filter, and the exact-reference pass
-    — documented in audit_scans.py; a fifth scan means the routing
-    side regressed to a join shape."""
-    counts, plan = _scan_counts(spark, sf_dir, "knn_anchor_routing_recall")
-    assert counts["embeddings"] <= 4, (counts, plan)
-    assert "CartesianProduct" not in plan, plan
-
-
 def test_coreset_matches_numpy_greedy_and_is_submodular(spark, sf_dir):
     """Facility-location greedy re-derived in numpy over the SAME
     integer-scaled similarities (sign-aware half-away rounding mirrors

@@ -11,7 +11,6 @@ from pyspark.sql import types as T
 
 from technical_test_data_engineer_spark.sources.catalog import (
     collect_dict,
-    collect_distinct_sorted,
     register_star,
     table_exists,
 )
@@ -81,8 +80,6 @@ def test_collect_helpers(spark, sf_dir):
     region = load_table(spark, sf_dir, "region")
     d = collect_dict(region, "r_regionkey", "r_name")
     assert len(d) == region.count()
-    names = collect_distinct_sorted(region, "r_name")
-    assert names == sorted(names)
 
 
 def test_geojson_features(spark, tmp_path):
