@@ -225,6 +225,20 @@ def plan_shape(plan: str) -> dict[str, int]:
     return {k: v for k, v in sorted(shape.items()) if v}
 
 
+def formatted_plan(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def query_shape(spark, sf_dir: str, name: str) -> tuple[dict[str, int], str]:
+    """One query's shape and formatted plan, built as the sweep builds it
+    (after a release, so no earlier persist swaps in cached relations)."""
+    harness.release(spark)
+    plan = formatted_plan(QUERIES[name](spark, sf_dir))
+    return plan_shape(plan), plan
+
+
 def sweep(spark, sf_dir: str) -> dict:
     """Build every query once (after releasing the previous one's
     persists) and collect its shape plus every smoke-check problem."""
@@ -236,10 +250,7 @@ def sweep(spark, sf_dir: str) -> dict:
         try:
             df = fn(spark, sf_dir)
             assert df.columns, "no columns"
-            plan = df._sc._jvm.PythonSQLUtils.explainString(
-                df._jdf.queryExecution(), "formatted"
-            )
-            shape = out["shapes"][name] = plan_shape(plan)
+            shape = out["shapes"][name] = plan_shape(formatted_plan(df))
             # the driver's pandas canonicalizer hash-uniques every column
             # and dies on list/dict cells: vector results go long-form
             # (posexplode), maps round-trip through explode

@@ -299,13 +299,37 @@ def test_source_mixture_drift_matches_pure_python(spark, sf_dir):
     assert len(batch_tot) > 1, "vacuous fixture: single batch"
 
 
+def test_curation_pipeline_scan_budget(spark, sf_dir):
+    """The composed pipeline's contract: documents scans stay at the
+    five documented roles (band build, CC nodes, token/keeper frame,
+    funnel re-scan, train text re-attach), every one a doc_id<450-pruned
+    read. A sixth scan means a stage started re-deriving an upstream
+    frame instead of consuming the persisted pair/train relations."""
+    from test_queries_smoke import query_shape
+
+    shape, plan = query_shape(spark, sf_dir, "curation_pipeline_e2e")
+    assert shape.get("scans.documents", 0) <= 5, (shape, plan)
+    assert "CartesianProduct" not in plan, plan
+
+
+def test_source_mixture_drift_single_scan(spark, sf_dir):
+    """The mixture monitor is ONE corpus pass by contract (the rollup
+    kernel); shares/drift are windows over the bounded rollup. A second
+    documents scan means a share started re-reading the corpus."""
+    from test_queries_smoke import query_shape
+
+    shape, plan = query_shape(spark, sf_dir, "source_mixture_drift")
+    assert shape.get("scans.documents") == 1, (shape, plan)
+
+
 def test_repeated_median_single_pair_pass(spark, sf_dir):
     """daily_revenue_repeated_median's pair work runs ONCE. Since r15 the
     calendar-bounded d² slope matrix and both median levels run
     driver-side in numpy off one Arrow fetch of the persisted daily
     aggregate, so the plan Spark executes holds no percentile aggregate
-    (the r10 Spark-side form carried the 5.7M-pair NLJ). Its join and
-    Exchange counts are pinned by tests/PLAN_SHAPES.json."""
+    and no pair join at all: only the daily agg and the OLS moment agg
+    (at most 6 Exchange in the formatted plan; the r10 Spark-side form
+    carried the 5.7M-pair NLJ and 26 Exchange)."""
     from technical_test_data_engineer_spark.plans import QUERIES
 
     # cold-cache the plan: a still-materialized persist from an earlier
@@ -317,3 +341,5 @@ def test_repeated_median_single_pair_pass(spark, sf_dir):
         df._jdf.queryExecution(), "formatted"
     )
     assert "partial_percentile" not in plan, plan
+    assert "NestedLoopJoin" not in plan, plan
+    assert plan.count("Exchange") <= 6, plan

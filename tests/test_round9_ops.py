@@ -142,6 +142,32 @@ def test_scurve_monotone_in_similarity(spark, sf_dir):
         assert probs == sorted(probs), (cfg, pts)
 
 
+def test_matryoshka_single_pass_scan_count(spark, sf_dir):
+    """The r09 single-pass rewrite's contract: embeddings scans exactly
+    twice (the fanned-out corpus side and the broadcast query side of
+    ONE pair enumeration) — the four-pass form scanned it ten times
+    unpersisted. Scan counts, not BNLJ counts: a persisted frame's
+    definition prints once per reference, and the tiny dims-x-queries
+    grid crossJoin legitimately plans as BNLJ."""
+    from test_queries_smoke import query_shape
+
+    shape, plan = query_shape(spark, sf_dir, "matryoshka_recall_curve")
+    assert shape.get("scans.embeddings") == 2, (shape, plan)
+
+
+def test_anchor_routing_scan_budget(spark, sf_dir):
+    """Cell argmax rides the corpus scan as literal-anchor expressions
+    (no join, no shuffle, no window over corpus rows): the plan's four
+    embeddings scans are the 8-row anchor collect feed, the assignment
+    pass, the query-bounded probe filter, and the exact-reference pass;
+    a fifth scan means the routing side regressed to a join shape."""
+    from test_queries_smoke import query_shape
+
+    shape, plan = query_shape(spark, sf_dir, "knn_anchor_routing_recall")
+    assert shape.get("scans.embeddings", 0) <= 4, (shape, plan)
+    assert "CartesianProduct" not in plan, plan
+
+
 def test_coreset_matches_numpy_greedy_and_is_submodular(spark, sf_dir):
     """Facility-location greedy re-derived in numpy over the SAME
     integer-scaled similarities (sign-aware half-away rounding mirrors
