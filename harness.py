@@ -61,7 +61,6 @@ def warm(spark, cpus: int) -> None:
         int_scaled_dot,
         ivf_assignment_udf,
         ivfpq_encode_udf,
-        pq_encode_udf,
     )
     from technical_test_data_engineer_spark.operators.windows import (
         grouped_ewma,
@@ -96,17 +95,17 @@ def warm(spark, cpus: int) -> None:
         bands = lsh_band_keys(sig, 8, 4, portable)
         _noop(docs.select(F.explode(bands).alias("_b")))
     _noop(docs.select(simhash_packed("text").alias("_s")))
-    # the numpy-backed pandas-UDF families (IVF assignment, PQ/IVF-PQ
-    # encode) and the grouped-map path: their first use pays a
-    # per-worker numpy import plus Arrow grouped-map setup — one-time
-    # session costs, not query costs. Spread across all workers.
+    # the numpy-backed pandas-UDF families (IVF assignment, IVF-PQ
+    # encode, which plain PQ runs too) and the grouped-map path: their
+    # first use pays a per-worker numpy import plus Arrow grouped-map
+    # setup — one-time session costs, not query costs. Spread across
+    # all workers.
     import numpy as np
 
     cents = [[1.0 if j == i else 0.0 for j in range(64)] for i in range(4)]
     books = np.zeros((8, 4, 8))
     vw = vecs.repartition(cpus)
     _noop(vw.select(ivf_assignment_udf(cents)("embedding")))
-    _noop(vw.select(pq_encode_udf(books)("embedding")))
     _noop(vw.select(ivfpq_encode_udf(cents, books)("embedding")))
     # the array-of-struct HOF family (transform over suffix slices +
     # flatten + explode — the basket-pair generator)

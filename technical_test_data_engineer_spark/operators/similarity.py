@@ -1,14 +1,25 @@
 """Vector similarity search over embedding columns (north-star §2.11).
 
-Two tiers:
-- ``brute_force_topk`` — exact cosine top-k via broadcast of the query
-  set; the dot product is a JVM ``zip_with``+``aggregate`` fold (no
-  Python, no shuffle of the corpus). Correct at any scale where the
-  QUERY set is small; cost is one full corpus scan per batch of queries.
-- ``lsh_topk`` — random-hyperplane (SRP) LSH bucketing: corpus and
-  queries hash to sign-bit buckets; only same-bucket pairs are scored.
-  The scale path: the corpus shuffle is by bucket id, each bucket is a
-  tiny cross product, recall tunable via n_planes/n_tables.
+Families:
+- ``brute_force_topk`` — exact top-k via broadcast of the query set;
+  the dot product is a JVM ``zip_with``+``aggregate`` fold (no Python,
+  no shuffle of the corpus). ``hard_negatives`` (label-filtered) and
+  ``maxsim_topk`` (late-interaction MaxSim over token sub-vectors) are
+  the same full scan with another scorer.
+- ``lsh_topk`` — random-hyperplane (SRP) LSH bucketing: only pairs
+  sharing a bucket in some table are scored; the corpus shuffle is by
+  bucket id, recall tunable via planes/tables/multi-probe.
+- ``ivf_topk`` — Voronoi cells of a coarse k-means quantizer; each
+  query scores its ``n_probe`` nearest cells.
+- ``ivfpq_topk`` — IVF over PQ-compressed residuals, scored from codes
+  (asymmetric distance, ADC) with an optional exact re-rank.
+  ``pq_adc_topk`` is IVF-PQ with one all-zero cell.
+
+One top-k tail serves them all: the worker-side running merge
+(``_topk_merger``, inside ``local_topk`` and the fused ADC scorer)
+keeps each partition's k best rows per query, and one rank step
+(``_rank_topk``) orders them by (score desc, id asc) and keeps ranks
+≤ k. ``rrf_fuse`` and ``mmr_rerank`` re-rank such lists.
 
 Embeddings are float32 arrays; dot products fold in DECIMAL(38,30) so
 scores are exactly reproducible across partitionings (and match the
@@ -75,30 +86,62 @@ def local_topk(
     """
     schema = scored.schema
     cols = [f.name for f in schema.fields]
+    merge = _topk_merger(k, query_id_col, id_col, score_col)
 
     def _part(batches):
         best = None
         for pdf in batches:
-            if not len(pdf):
-                continue
-            cur = pdf if best is None else pd.concat([best, pdf], ignore_index=True)
-            # na_position="last" matches Spark's NULLS LAST under desc().
-            # Scores must arrive NaN-free (see nan_safe_score): the
-            # Arrow/pandas boundary cannot represent a float NaN (it
-            # arrives back as SQL NULL), and Spark orders NaN and NULL
-            # differently — so scorers normalize NaN → NULL up front and
-            # both sides of the prune agree on null-last.
-            cur = cur.sort_values(
-                [score_col, id_col],
-                ascending=[False, True],
-                kind="mergesort",
-                na_position="last",
-            )
-            best = cur.groupby(query_id_col, sort=False).head(k)
+            if len(pdf):
+                best = merge(best, pdf)
         if best is not None and len(best):
             yield best[cols]
 
     return scored.mapInPandas(_part, schema)
+
+
+def _topk_merger(
+    k: int, key: str | list[str], id_col: str, score_col: str = "score"
+):
+    """The worker-side running top-k merge: ``merge(best, cand)`` keeps
+    the k best rows per ``key`` of ``best`` ∪ ``cand`` (``best`` is None
+    on the first batch) under (score desc, id asc). Call it on the
+    driver and close over the result: a nested function ships by value,
+    a module-level one by reference, and a Python worker started outside
+    the repo cannot import the package.
+
+    NULL scores sort last, as under Spark's desc(). Scorers emit NaN-free
+    scores (see nan_safe_score): Arrow turns a float NaN into SQL NULL,
+    and Spark orders NaN first but NULL last."""
+
+    def merge(best, cand):
+        cur = cand if best is None else pd.concat([best, cand], ignore_index=True)
+        cur = cur.sort_values(
+            [score_col, id_col],
+            ascending=[False, True],
+            kind="mergesort",
+            na_position="last",
+        )
+        return cur.groupby(key, sort=False).head(k)
+
+    return merge
+
+
+def _rank_topk(
+    df: DataFrame,
+    k: int,
+    query_id_col: str | list[str] = "query_id",
+    id_col: str = "vec_id",
+) -> DataFrame:
+    """The global step of every top-k here: number each query's rows by
+    (score desc, id asc), keep ranks ≤ ``k``, and return (query, id,
+    rank, score). ``query_id_col`` may be a list for composite keys."""
+    keys = [query_id_col] if isinstance(query_id_col, str) else list(query_id_col)
+    w = Window.partitionBy(*keys).orderBy(F.desc("score"), F.asc(id_col))
+    return (
+        df.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select(*keys, id_col, "rank", "score")
+    )
 
 
 def nan_safe_score(c: Column) -> Column:
@@ -231,12 +274,7 @@ def brute_force_topk(
         )
     scored = paired.select(query_id_col, id_col, score.alias("score"))
     pruned = local_topk(scored, k, query_id_col, id_col)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "score")
-    )
+    return _rank_topk(pruned, k, query_id_col, id_col)
 
 
 def seeded_planes(
@@ -306,8 +344,7 @@ def ivf_assignment_udf(centroids, n_probe: int = 1):
     (dim × K) matmul, then the ``n_probe`` nearest (by cosine) centroid
     ids per vector. Centroids are L2-normalized so the argmax is the
     cosine-nearest cell regardless of vector norms."""
-    C = np.asarray(centroids, dtype=np.float64)  # (K, D)
-    C = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    C = _unit_rows(np.asarray(centroids, dtype=np.float64))  # (K, D)
     n_probe = min(n_probe, len(C))
 
     @pandas_udf(ArrayType(IntegerType()))
@@ -359,10 +396,7 @@ def train_ivf_centroids(
 
     Returns plain ``list[list[float]]`` — downstream assignment UDFs
     broadcast the centroids as a numpy closure."""
-    sample = _train_sample(corpus, id_col, max_train_vectors)
-    X = np.array(
-        [list(r[0]) for r in sample.select(vec_col).collect()], dtype=np.float64
-    )
+    X = _train_matrix(corpus, id_col, vec_col, max_train_vectors)
     if len(X) < n_centroids:
         raise ValueError(
             f"training sample has {len(X)} rows < k={n_centroids} "
@@ -393,31 +427,46 @@ def _fit_kmeans(
         else:  # all points coincide with chosen centroids
             C[j] = X[rng.randint(n)]
         d2 = np.minimum(d2, ((X - C[j]) ** 2).sum(axis=1))
+    return _lloyd(X, C, n_iter)
+
+
+def _lloyd(X: np.ndarray, C: np.ndarray, n_iter: int) -> np.ndarray:
+    """``n_iter`` Lloyd's sweeps from the initial centroids ``C``
+    (updated in place): assign each row to its nearest centroid, move
+    each centroid to its rows' mean. Empty clusters keep their centroid."""
     for _ in range(n_iter):
-        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for c in range(k):
+        d2 = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        assign = d2.argmin(axis=1)
+        for c in range(len(C)):
             mask = assign == c
             if mask.any():
                 C[c] = X[mask].mean(axis=0)
     return C
 
 
-def _train_sample(
-    corpus: DataFrame, id_col: str, max_train_vectors: int
-) -> DataFrame:
+def _train_matrix(
+    corpus: DataFrame, id_col: str, vec_col: str, max_train_vectors: int
+) -> np.ndarray:
     """Deterministic ≤ ~``max_train_vectors`` training subsample via
     ``xxhash64(id) % stride`` (hash, not raw id, so sparse/offset id
-    spaces still sample at the intended rate). Undersample guarding
-    happens in the trainers, where the sample is materialized anyway
-    (cached feats count / collected numpy array) — no extra scan here."""
+    spaces still sample at the intended rate), fetched as a float64
+    (rows × dim) matrix. Undersample guarding happens in the trainers,
+    which know their k."""
     n = corpus.count()
-    if n <= max_train_vectors:
-        return corpus
-    stride = -(-n // max_train_vectors)  # ceil → ~max_train_vectors kept
-    return corpus.filter(
-        F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0
+    if n > max_train_vectors:
+        stride = -(-n // max_train_vectors)  # ceil → ~max_train_vectors kept
+        corpus = corpus.filter(
+            F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0
+        )
+    return np.array(
+        [list(r[0]) for r in corpus.select(vec_col).collect()], dtype=np.float64
     )
+
+
+def _unit_rows(C: np.ndarray) -> np.ndarray:
+    """``C`` with each row scaled to unit L2 norm (zero rows stay zero):
+    centroids in the cosine form every IVF cell assignment uses."""
+    return C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
 
 
 def ivf_topk(
@@ -475,12 +524,7 @@ def ivf_topk(
         )
     )
     pruned = local_topk(scored, k, query_id_col, id_col)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "score")
-    )
+    return _rank_topk(pruned, k, query_id_col, id_col)
 
 
 def srp_signatures_batch(planes_tables: list[list[list[float]]]):
@@ -615,12 +659,7 @@ def lsh_topk(
         )
     )
     pruned = local_topk(scored, k, query_id_col, id_col)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "score")
-    )
+    return _rank_topk(pruned, k, query_id_col, id_col)
 
 
 # ---------------------------------------------------------------------------
@@ -649,8 +688,7 @@ def train_pq_codebooks(
     work is encoding/scoring, which stays distributed.
 
     Returns codebooks of shape (m, n_codes, dim // m)."""
-    sample = _train_sample(corpus, id_col, max_train_vectors)
-    X = np.array([list(r[0]) for r in sample.select(vec_col).collect()])
+    X = _train_matrix(corpus, id_col, vec_col, max_train_vectors)
     return _fit_pq(X, m, n_codes, seed, n_iter, max_train_vectors)
 
 
@@ -675,37 +713,24 @@ def _fit_pq(
         Xj = X[:, j * sub : (j + 1) * sub]
         # seeded k-means++ -ish init: distinct random rows
         idx = rng.choice(len(Xj), size=n_codes, replace=False)
-        C = Xj[idx].copy()
-        for _ in range(n_iter):
-            d2 = ((Xj[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(n_codes):
-                mask = assign == c
-                if mask.any():
-                    C[c] = Xj[mask].mean(axis=0)
-        books[j] = C
+        books[j] = _lloyd(Xj, Xj[idx].copy(), n_iter)
     return books
 
 
+def _zero_cell(codebooks: np.ndarray) -> np.ndarray:
+    """One all-zero IVF cell: plain PQ runs as IVF-PQ over it. The
+    residual ``x − 0`` is ``x`` bit for bit and every ``q · 0`` offset
+    is +0.0, so codes and ADC scores equal raw-vector PQ's."""
+    m, _, sub = np.shape(codebooks)
+    return np.zeros((1, m * sub))
+
+
 def pq_encode_udf(codebooks: np.ndarray):
-    """Vectorized encoder: per Arrow batch, one distance matrix per
-    subspace → argmin code. Returns array<int> of length m per vector."""
-    books = np.asarray(codebooks, dtype=np.float64)  # (m, k, sub)
-    m, _, sub = books.shape
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def _encode(v: pd.Series) -> pd.Series:
-        if len(v) == 0:
-            return pd.Series([], dtype=object)
-        X = np.vstack([np.asarray(x, dtype=np.float64) for x in v])
-        codes = np.empty((len(X), m), dtype=np.int32)
-        for j in range(m):
-            Xj = X[:, j * sub : (j + 1) * sub]
-            d2 = ((Xj[:, None, :] - books[j][None, :, :]) ** 2).sum(axis=2)
-            codes[:, j] = d2.argmin(axis=1)
-        return pd.Series(list(codes))
-
-    return _encode
+    """Vectorized PQ encoder: per Arrow batch, one distance matrix per
+    subspace → argmin code. Returns array<int> of length m per vector
+    (the IVF-PQ encoder over :func:`_zero_cell`)."""
+    encode = ivfpq_encode_udf(_zero_cell(codebooks), codebooks)
+    return lambda c: encode(c)["codes"]
 
 
 def pq_adc_topk(
@@ -724,10 +749,6 @@ def pq_adc_topk(
     dot products query_sub · centroid; a corpus vector's approximate
     score is the sum of m table lookups — no raw corpus vectors move.
 
-    Spark shape: codes computed scan-side (vectorized UDF); the query
-    LUTs broadcast inside a closure; scoring is one more scan-side UDF;
-    top-k via per-query window. The corpus is never shuffled.
-
     ``rerank > k`` enables the standard two-stage refinement: take the
     top-``rerank`` ADC shortlist, re-score JUST those candidates against
     raw vectors (broadcast join back), return exact-ranked top-k. ADC
@@ -735,104 +756,15 @@ def pq_adc_topk(
     → tied scores); re-ranking restores fine order while still scanning
     the full corpus only in compressed form.
 
-    Scoring + per-partition top-``max(k, rerank)`` are FUSED in one
-    ``mapInPandas`` over the codes scan: the (rows × queries) score
-    matrix lives only inside each Arrow batch and each partition emits
-    at most max(k, rerank) × n_queries light rows — nothing
-    corpus-sized is ever materialized JVM-side or shuffled, so the
-    final per-query ranking window is skew-free at any corpus size.
-    Query ids keep their native type end-to-end (emitted from pandas,
-    schema taken from the query frame). Note: corpus rows whose id
-    EQUALS the query id are excluded (self-match) — this assumes corpus
-    and queries share one id space, as in the other top-k paths."""
-    books = np.asarray(codebooks, dtype=np.float64)
-    m, n_codes, sub = books.shape
-
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = pd.Series([r[0] for r in q_rows])
-    Q = np.vstack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
-    # LUT[q, j, c] = Q[q, subspace j] · centroid c of subspace j
-    lut = np.einsum("qjs,jcs->qjc", Q.reshape(len(Q), m, sub), books)
-    n_q = len(q_ids)
-    n_keep = max(k, rerank)
-
-    encode = pq_encode_udf(books)
-    coded = fan_out(corpus.select(id_col, vec_col)).select(
-        id_col, encode(F.col(vec_col)).alias("_codes")
-    )
-    out_schema = StructType(
-        [
-            StructField(query_id_col, queries.schema[id_col].dataType),
-            StructField(id_col, corpus.schema[id_col].dataType),
-            StructField("score", DoubleType()),
-        ]
-    )
-
-    def _adc_local_topk(batches):
-        best = None
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            C = np.vstack([np.asarray(c, dtype=np.int64) for c in pdf["_codes"]])
-            sc = np.zeros((len(C), n_q))
-            for j in range(m):
-                sc += lut[:, j, C[:, j]].T  # (n, q)
-            cand = pd.DataFrame(
-                {
-                    query_id_col: q_ids.repeat(len(pdf)).reset_index(drop=True),
-                    id_col: pd.concat([pdf[id_col]] * n_q, ignore_index=True),
-                    "score": sc.T.ravel(),
-                }
-            )
-            cand = cand[cand[query_id_col] != cand[id_col]]
-            cur = cand if best is None else pd.concat([best, cand], ignore_index=True)
-            # na_position="last": NaN ADC scores (NaN-poisoned input
-            # vectors) leave this map as SQL NULL (Arrow), which the
-            # downstream desc() window also ranks last — see local_topk
-            cur = cur.sort_values(
-                ["score", id_col],
-                ascending=[False, True],
-                kind="mergesort",
-                na_position="last",
-            )
-            best = cur.groupby(query_id_col, sort=False).head(n_keep)
-        if best is not None and len(best):
-            yield best[[query_id_col, id_col, "score"]]
-
-    pruned = coded.mapInPandas(_adc_local_topk, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    shortlist = (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_keep)
-        .select(query_id_col, id_col, "rank", "score")
-    )
-    if rerank <= k:
-        return shortlist
-    qvecs = F.broadcast(
-        queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
-        )
-    )
-    refined = (
-        F.broadcast(shortlist.select(query_id_col, id_col))
-        .join(corpus.select(id_col, vec_col), id_col)
-        .join(qvecs, query_id_col)
-        .select(
-            query_id_col,
-            id_col,
-            # rerank_metric="exact"/"int": with rerank ≥ corpus size the
-            # shortlist is the whole corpus and the refined ranking is
-            # bit-identical to brute force — the oracle-paired limit
-            # proof of the two-stage path (knn_pq_exact_rerankall)
-            metric_score(
-                rerank_metric, F.col("_qvec"), F.col(vec_col)
-            ).alias("score"),
-        )
-    )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "score")
+    Runs as :func:`ivfpq_topk` over one all-zero cell
+    (:func:`_zero_cell`), which probes every row: same codes, same
+    scores, same fused scan-side scoring and per-partition top-k, same
+    shape. Corpus rows whose id EQUALS the query id are excluded
+    (self-match), as in the other top-k paths."""
+    return ivfpq_topk(
+        corpus, queries, _zero_cell(codebooks), codebooks, k=k, n_probe=1,
+        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
+        rerank=rerank, rerank_metric=rerank_metric,
     )
 
 
@@ -865,11 +797,9 @@ def train_ivfpq_codebooks(
     Assignment uses the same cosine-to-normalized-centroid rule as
     :func:`ivf_assignment_udf`, so training and encoding agree."""
     C = np.asarray(centroids, dtype=np.float64)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
-    sample = _train_sample(corpus, id_col, max_train_vectors)
-    X = np.array([list(r[0]) for r in sample.select(vec_col).collect()])
+    X = _train_matrix(corpus, id_col, vec_col, max_train_vectors)
     if len(X):
-        cells = (X @ Cn.T).argmax(axis=1)
+        cells = (X @ _unit_rows(C).T).argmax(axis=1)
         X = X - C[cells]
     return _fit_pq(X, m, n_codes, seed, n_iter, max_train_vectors)
 
@@ -881,7 +811,7 @@ def ivfpq_encode_udf(centroids, codebooks: np.ndarray):
     array<int>>`` — the entire stored index entry (~1+m small ints per
     vector, the 32× storage story)."""
     C = np.asarray(centroids, dtype=np.float64)  # (K, D)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
+    Cn = _unit_rows(C)
     books = np.asarray(codebooks, dtype=np.float64)  # (m, k, sub)
     m, _, sub = books.shape
     schema = StructType(
@@ -931,14 +861,20 @@ def ivfpq_topk(
     global). Driver-side per query: a (K,) cell-offset row, a probe
     mask, and an (m × n_codes) LUT — all O(queries), broadcast in the
     UDF closure. Corpus-side: ONE scan over (cell, codes), scoring +
-    per-partition top-keep fused in mapInPandas exactly like
-    :func:`pq_adc_topk` — unprobed rows are masked out before any
-    candidate frame materializes, nothing corpus-sized shuffles.
-    ``rerank`` ≥ corpus with ``n_probe`` ≥ n_cells degrades to exact
-    brute force (the oracle-pairing limit, like the other ANN paths).
+    per-partition top-``max(k, rerank)`` fused in one ``mapInPandas``:
+    the (rows × queries) score matrix lives only inside each Arrow
+    batch, unprobed rows are masked out before any candidate frame
+    materializes, and each partition emits at most max(k, rerank) ×
+    n_queries light rows — nothing corpus-sized crosses into the JVM or
+    shuffles. Query ids keep their native type end-to-end (schema taken
+    from the query frame).
+
+    ``rerank > k`` re-scores the top-``rerank`` shortlist against raw
+    vectors with ``rerank_metric`` (see :func:`pq_adc_topk`); ``rerank``
+    ≥ corpus with ``n_probe`` ≥ n_cells degrades to exact brute force
+    (the oracle-pairing limit, like the other ANN paths).
     """
     C = np.asarray(centroids, dtype=np.float64)  # (K, D)
-    Cn = C / np.maximum(np.linalg.norm(C, axis=1, keepdims=True), 1e-12)
     books = np.asarray(codebooks, dtype=np.float64)
     m, n_codes, sub = books.shape
     n_probe = min(n_probe, len(C))
@@ -947,11 +883,12 @@ def ivfpq_topk(
     q_ids = pd.Series([r[0] for r in q_rows])
     Q = np.vstack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
     n_q = len(q_ids)
-    cell_sims = Q @ Cn.T  # probe choice: same metric as assignment
+    cell_sims = Q @ _unit_rows(C).T  # probe choice: same metric as assignment
     probe_rank = np.argsort(-cell_sims, axis=1, kind="stable")[:, :n_probe]
     probed = np.zeros((n_q, len(C)), dtype=bool)
     np.put_along_axis(probed, probe_rank, True, axis=1)
     offsets = Q @ C.T  # (n_q, K) raw-centroid dot — the q·c term
+    # LUT[q, j, c] = Q[q, subspace j] · centroid c of subspace j
     lut = np.einsum("qjs,jcs->qjc", Q.reshape(n_q, m, sub), books)
     n_keep = max(k, rerank)
 
@@ -968,6 +905,8 @@ def ivfpq_topk(
             StructField("score", DoubleType()),
         ]
     )
+
+    merge = _topk_merger(n_keep, query_id_col, id_col)
 
     def _score_local_topk(batches):
         best = None
@@ -990,24 +929,13 @@ def ivfpq_topk(
                     "score": sc[rows, qs],
                 }
             )
-            cand = cand[cand[query_id_col] != cand[id_col]]
-            cur = cand if best is None else pd.concat([best, cand], ignore_index=True)
-            cur = cur.sort_values(
-                ["score", id_col],
-                ascending=[False, True],
-                kind="mergesort",
-                na_position="last",
-            )
-            best = cur.groupby(query_id_col, sort=False).head(n_keep)
+            best = merge(best, cand[cand[query_id_col] != cand[id_col]])
         if best is not None and len(best):
             yield best[[query_id_col, id_col, "score"]]
 
-    pruned = coded.mapInPandas(_score_local_topk, out_schema)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    shortlist = (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n_keep)
-        .select(query_id_col, id_col, "rank", "score")
+    shortlist = _rank_topk(
+        coded.mapInPandas(_score_local_topk, out_schema), n_keep,
+        query_id_col, id_col,
     )
     if rerank <= k:
         return shortlist
@@ -1023,16 +951,16 @@ def ivfpq_topk(
         .select(
             query_id_col,
             id_col,
+            # rerank_metric="exact"/"int": with rerank ≥ corpus size the
+            # shortlist is the whole corpus and the refined ranking is
+            # bit-identical to brute force — the oracle-paired limit
+            # proof of the two-stage path (knn_pq_exact_rerankall)
             metric_score(
                 rerank_metric, F.col("_qvec"), F.col(vec_col)
             ).alias("score"),
         )
     )
-    return (
-        refined.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "score")
-    )
+    return _rank_topk(refined, k, query_id_col, id_col)
 
 
 def rrf_fuse(
@@ -1060,8 +988,6 @@ def rrf_fuse(
     Returns (query_col, cand_col, ``rrf_score``, ``fused_rank`` ≤ k).
     """
     from functools import reduce
-
-    from pyspark.sql.window import Window
 
     tagged = [
         df.select(
@@ -1125,9 +1051,6 @@ def mmr_rerank(
 
     Returns (query_id, vec_id, ``mmr_rank`` 1..k, score).
     """
-    import numpy as np
-    import pandas as pd
-
     cands = shortlist.join(
         corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec")), id_col
     )
@@ -1219,14 +1142,7 @@ def hard_negatives(
         ).alias("score"),
     )
     pruned = local_topk(scored, k, anchor_id_col, id_col)
-    w = Window.partitionBy(anchor_id_col).orderBy(
-        F.desc("score"), F.asc(id_col)
-    )
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(anchor_id_col, id_col, "rank", "score")
-    )
+    return _rank_topk(pruned, k, anchor_id_col, id_col)
 
 
 def as_token_matrix(vec: Column, n_tokens: int) -> Column:
@@ -1304,9 +1220,4 @@ def maxsim_topk(
         ),
     )
     pruned = local_topk(scored, k, query_id_col, id_col)
-    w = Window.partitionBy(query_id_col).orderBy(F.desc("score"), F.asc(id_col))
-    return (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select(query_id_col, id_col, "rank", "score")
-    )
+    return _rank_topk(pruned, k, query_id_col, id_col)

@@ -9,7 +9,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from technical_test_data_engineer_spark.operators.bounded import local_frame
+from technical_test_data_engineer_spark.operators.bounded import (
+    collect_bounded,
+    local_frame,
+)
 from technical_test_data_engineer_spark.operators.similarity import (
     adaptive_n_planes,
     brute_force_topk,
@@ -482,9 +485,12 @@ def knn_anchor_routing_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < EXACT_BOUND
     )
-    # bounded collect — ≤ EXACT_BOUND rows (~200 KB at 64 dims); the
-    # bound is compiled into the scan filter, not data-dependent
-    pdf = emb.select("vec_id", "embedding").toPandas()
+    # ≤ EXACT_BOUND rows (~200 KB at 64 dims); the bound is compiled
+    # into the scan filter, not data-dependent
+    pdf = collect_bounded(
+        emb.select("vec_id", "embedding"), EXACT_BOUND,
+        "knn_anchor_routing_recall corpus",
+    ).to_pandas()
     ids = pdf["vec_id"].to_numpy(dtype=np.int64)
     order = np.argsort(ids)
     ids = ids[order]
@@ -683,7 +689,10 @@ def embedding_coreset_facility3(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from technical_test_data_engineer_spark.functions.mirrors import spark_round
 
-    pdf = sims.toPandas()
+    # every (i, j) pair of the ≤ CORESET_BOUND filtered corpus
+    pdf = collect_bounded(
+        sims, CORESET_BOUND**2, "embedding_coreset_facility3 pair sims"
+    ).to_pandas()
     key_type = emb.schema["vec_id"].dataType
     out_schema = T.StructType(
         [
@@ -1567,6 +1576,7 @@ def matryoshka_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-pass grid runs on a sampled query set against the ANN
     index."""
     from technical_test_data_engineer_spark.operators.similarity import (
+        _rank_topk,
         exact_dot,
         local_topk,
         nan_safe_score,
@@ -1574,7 +1584,6 @@ def matryoshka_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from technical_test_data_engineer_spark.operators.partitioning import (
         fan_out,
     )
-    from pyspark.sql.window import Window
 
     emb = load_table(spark, sf_dir, "embeddings").filter(
         F.col("vec_id") < EXACT_BOUND
@@ -1611,13 +1620,9 @@ def matryoshka_recall_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("s"),
     ).select("query_id", "vec_id", "s.dim", "s.score")
-    pruned = local_topk(scored, TOP_K, query_id_col=["query_id", "dim"])
-    w = Window.partitionBy("query_id", "dim").orderBy(
-        F.desc("score"), F.asc("vec_id")
-    )
+    keys = ["query_id", "dim"]
     topk = (
-        pruned.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
+        _rank_topk(local_topk(scored, TOP_K, keys), TOP_K, keys)
         .select("dim", "query_id", "vec_id")
         .persist()
     )
@@ -2092,15 +2097,20 @@ def knn_mmr_exact3(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # two bounded fetches (≤ 50 + ≤ 450 rows); the persisted shortlist
     # makes the second a cache read, not a recompute
-    short_rows = short.collect()
-    sim_rows = sims.collect()
+    n_short = N_QUERIES * _MMR_SHORT
+    short_rows = collect_bounded(
+        short, n_short, "knn_mmr_exact3 shortlist"
+    ).to_pylist()
+    sim_rows = collect_bounded(
+        sims, n_short * (_MMR_SHORT - 1), "knn_mmr_exact3 shortlist sims"
+    ).to_pylist()
 
     lam = round(_MMR_LAM * 10)
     one_m = 10 - lam
-    simd = {(r.query_id, r.va, r.vb): r.sim for r in sim_rows}
+    simd = {(r["query_id"], r["va"], r["vb"]): r["sim"] for r in sim_rows}
     byq: dict = {}
     for r in short_rows:
-        byq.setdefault(r.query_id, []).append((r.vec_id, r.rel))
+        byq.setdefault(r["query_id"], []).append((r["vec_id"], r["rel"]))
 
     rows = []
     for q in byq:

@@ -4,6 +4,7 @@ projection vs numpy eigendecomposition on the collected corpus."""
 from __future__ import annotations
 
 import numpy as np
+import pytest
 
 from technical_test_data_engineer_spark.operators.linalg import (
     covariance_matrix,
@@ -218,10 +219,45 @@ def test_pca_fold_wide_vectors_use_smaller_chunks(spark):
     assert np.allclose(comps @ comps.T, np.eye(2), atol=1e-9)
 
 
-def test_moment_fold_runs_from_a_foreign_cwd(tmp_path):
-    """The ``mapInPandas`` moment fold ships everything its Python
-    workers run: the package is importable here only through the
-    driver's ``sys.path``, not from the workers' cwd or PYTHONPATH."""
+_MOMENT_ROWS = [(1, [1.0, 2.0]), (2, [2.0, 5.0]), (3, [4.0, 1.0])]
+_PQ_VECS = [
+    [1.0, 0.2, -0.5, 0.3], [0.9, 0.1, -0.4, 0.5], [-1.0, 0.7, 0.2, 0.1],
+    [0.3, -0.8, 0.6, 0.2], [0.8, 0.4, -0.1, 0.9], [-0.2, 0.5, 0.9, -0.7],
+    [0.5, -0.3, -0.9, 0.4], [0.1, 0.9, 0.3, 0.6],
+]
+_FOREIGN_CWD_CASES = {
+    "moment_fold": f"""
+        from technical_test_data_engineer_spark.operators.linalg import (
+            covariance_matrix,
+        )
+        df = spark.createDataFrame(
+            {_MOMENT_ROWS!r}, "vec_id long, embedding array<double>"
+        )
+        print(sorted(tuple(r) for r in covariance_matrix(df).collect()))
+        """,
+    # rerank > k: the fused ADC scorer with its shared top-k merge, then
+    # the exact re-rank over the whole shortlist
+    "pq_adc_rerank": f"""
+        from technical_test_data_engineer_spark.operators.similarity import (
+            pq_adc_topk,
+            train_pq_codebooks,
+        )
+        df = spark.createDataFrame(
+            list(enumerate({_PQ_VECS!r})), "vec_id long, embedding array<double>"
+        )
+        books = train_pq_codebooks(df, m=2, n_codes=2)
+        out = pq_adc_topk(df, df.filter("vec_id < 2"), books, k=2, rerank=7)
+        print(sorted((r.query_id, r.vec_id, r.rank) for r in out.collect()))
+        """,
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FOREIGN_CWD_CASES))
+def test_moment_fold_runs_from_a_foreign_cwd(tmp_path, case):
+    """Python-worker closures ship everything their workers run: the
+    package is importable here only through the driver's ``sys.path``,
+    not from the workers' cwd or PYTHONPATH. Cases: the ``mapInPandas``
+    moment fold, and PQ's fused ADC scorer plus re-rank."""
     import ast
     import os
     import subprocess
@@ -233,23 +269,14 @@ def test_moment_fold_runs_from_a_foreign_cwd(tmp_path):
         f"""
         import sys
         sys.path.insert(0, {repo!r})
-        from technical_test_data_engineer_spark.operators.linalg import (
-            covariance_matrix,
-        )
         from technical_test_data_engineer_spark.session import get_spark
 
         spark = get_spark(
             "foreign-cwd", master="local[1]", shuffle_partitions=1,
             extra_confs={{"spark.driver.memory": "1g"}},
         )
-        df = spark.createDataFrame(
-            [(1, [1.0, 2.0]), (2, [2.0, 5.0]), (3, [4.0, 1.0])],
-            "vec_id long, embedding array<double>",
-        )
-        print(sorted(tuple(r) for r in covariance_matrix(df).collect()))
-        spark.stop()
         """
-    )
+    ) + textwrap.dedent(_FOREIGN_CWD_CASES[case]) + "spark.stop()\n"
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     out = subprocess.run(
         [sys.executable, "-c", script],
@@ -260,8 +287,17 @@ def test_moment_fold_runs_from_a_foreign_cwd(tmp_path):
         timeout=600,
     )
     assert out.returncode == 0, out.stderr[-3000:]
-    cov = np.cov(np.array([[1.0, 2.0], [2.0, 5.0], [4.0, 1.0]]), rowvar=False)
-    want = [(i, j, cov[i, j]) for i in range(2) for j in range(i, 2)]
     got = ast.literal_eval(out.stdout.strip().splitlines()[-1])
+    if case == "pq_adc_rerank":
+        # the shortlist holds every candidate, so the re-rank is exact
+        V = np.array(_PQ_VECS)
+        want = []
+        for q in range(2):
+            cands = sorted((-float(V[q] @ V[j]), j) for j in range(len(V)) if j != q)
+            want += [(q, j, r) for r, (_, j) in enumerate(cands[:2], 1)]
+        assert got == sorted(want)
+        return
+    cov = np.cov(np.array([v for _, v in _MOMENT_ROWS]), rowvar=False)
+    want = [(i, j, cov[i, j]) for i in range(2) for j in range(i, 2)]
     assert [g[:2] for g in got] == [w[:2] for w in want]
     assert np.allclose([g[2] for g in got], [w[2] for w in want])
