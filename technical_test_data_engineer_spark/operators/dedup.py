@@ -307,22 +307,6 @@ def minhash_candidates(
     return out
 
 
-def minhash_near_dup_pairs(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    threshold: float = 0.5,
-    seed: int = 42,
-) -> DataFrame:
-    """Back-compat name for :func:`minhash_candidates` (pre-round-3)."""
-    return minhash_candidates(
-        df, id_col, text_col, shingle_n, num_hashes, bands, threshold, seed
-    )
-
-
 # ---------------------------------------------------------------------------
 # SimHash
 # ---------------------------------------------------------------------------

@@ -44,9 +44,8 @@ from pyspark.sql.types import (
 )
 from pyspark.sql.window import Window
 
+from technical_test_data_engineer_spark.functions.scalars import dec, scaled_long
 from technical_test_data_engineer_spark.operators.partitioning import fan_out
-
-_DEC = "decimal(38,30)"
 
 
 def local_topk(
@@ -159,13 +158,13 @@ def exact_dot(a: Column, b: Column) -> Column:
     mult is exact-rounded, identical everywhere), summed exactly in
     decimal, surfaced as double."""
     products = F.zip_with(
-        a, b, lambda x, y: (x.cast("double") * y.cast("double")).cast(_DEC)
+        a, b, lambda x, y: dec(x.cast("double") * y.cast("double"), 38, 30)
     )
     # Spark widens decimal adds to scale-1; cast back each step to keep
     # the fold type-stable (step rounding ~1e-29 ≪ double ulp of the
     # surfaced result, so the double output is unaffected).
     return F.aggregate(
-        products, F.lit(0).cast(_DEC), lambda acc, x: (acc + x).cast(_DEC)
+        products, dec(F.lit(0), 38, 30), lambda acc, x: dec(acc + x, 38, 30)
     ).cast("double")
 
 
@@ -181,11 +180,7 @@ def int_scaled_dot(a: Column, b: Column) -> Column:
     remains the convention for surfaced decimal-exact scores. DuckDB
     twin: ``SUM(CAST(ROUND(x * y * 1e10, 0) AS BIGINT))``."""
     products = F.zip_with(
-        a,
-        b,
-        lambda x, y: F.round(
-            x.cast("double") * y.cast("double") * F.lit(1e10), 0
-        ).cast("bigint"),
+        a, b, lambda x, y: scaled_long(x.cast("double") * y.cast("double"))
     )
     return F.aggregate(
         products, F.lit(0).cast("bigint"), lambda acc, x: acc + x
@@ -229,10 +224,10 @@ def fast_dot(a: Column, b: Column) -> Column:
 
 
 def l2_norm(a: Column) -> Column:
-    sq = F.transform(a, lambda x: (x.cast("double") * x.cast("double")).cast(_DEC))
+    sq = F.transform(a, lambda x: dec(x.cast("double") * x.cast("double"), 38, 30))
     return F.sqrt(
         F.aggregate(
-            sq, F.lit(0).cast(_DEC), lambda acc, x: (acc + x).cast(_DEC)
+            sq, dec(F.lit(0), 38, 30), lambda acc, x: dec(acc + x, 38, 30)
         ).cast("double")
     )
 
@@ -1173,7 +1168,7 @@ def maxsim_score(qmat: Column, dmat: Column) -> Column:
         ),
     )
     return F.aggregate(
-        per_q, F.lit(0).cast(_DEC), lambda acc, x: (acc + x.cast(_DEC)).cast(_DEC)
+        per_q, dec(F.lit(0), 38, 30), lambda acc, x: dec(acc + dec(x, 38, 30), 38, 30)
     ).cast("double")
 
 

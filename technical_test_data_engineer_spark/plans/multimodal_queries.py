@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from technical_test_data_engineer_spark.functions.scalars import exact_sum
 from technical_test_data_engineer_spark.operators.multimodal import (
     decode_media_meta,
     fake_media_binary,
@@ -376,7 +377,7 @@ def media_nibble_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).otherwise(F.lit(0.0))
     ent = nib.groupBy("doc_id").agg(
         (F.max("ln") / 2).cast("bigint").alias("n_bytes"),
-        F.sum(term.cast("decimal(30,15)")).cast("double").alias("e"),
+        exact_sum(term, "e", precision=30, scale=15),
     )
     return ent.select(
         "doc_id",

@@ -13,7 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from technical_test_data_engineer_spark.functions.scalars import exact_sum
+from technical_test_data_engineer_spark.functions.scalars import (
+    dec,
+    exact_sum,
+    scaled_long,
+    unscale,
+)
 from technical_test_data_engineer_spark.operators.bounded import local_frame
 from technical_test_data_engineer_spark.plans.star_queries import _decsum, query
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
@@ -155,10 +160,8 @@ def promo_revenue_ratio(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("l_shipdate") < F.lit("1996-04-01"))
     )
     part = load_table(spark, sf_dir, "part").select("p_partkey", "p_type")
-    rev = F.expr("l_extendedprice * (1 - l_discount)").cast("decimal(30,10)")
-    promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(
-        F.lit(0).cast("decimal(30,10)")
-    )
+    rev = dec(F.expr("l_extendedprice * (1 - l_discount)"))
+    promo = F.when(F.col("p_type").like("PROMO%"), rev).otherwise(dec(F.lit(0)))
     agg = (
         li.join(F.broadcast(part), li.l_partkey == part.p_partkey)
         .agg(
@@ -293,9 +296,7 @@ def customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(30,10)"))
-        .cast("double")
-        .alias("total_spend")
+        exact_sum(F.col("o_totalprice"), "total_spend")
     )
     w = Window.orderBy(F.desc("total_spend"), F.asc("o_custkey"))
     q = spend.withColumn("quartile", F.ntile(4).over(w))
@@ -303,9 +304,7 @@ def customer_spend_quartiles(spark: SparkSession, sf_dir: str) -> DataFrame:
         q.groupBy("quartile")
         .agg(
             F.count("*").alias("n_customers"),
-            F.sum(F.col("total_spend").cast("decimal(30,10)"))
-            .cast("double")
-            .alias("quartile_spend"),
+            exact_sum(F.col("total_spend"), "quartile_spend"),
         )
         .orderBy("quartile")
     )
@@ -663,7 +662,7 @@ def rolling_7day_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     return daily.select(
         "day",
         "daily_rev",
-        F.sum(F.col("daily_rev").cast("decimal(30,10)"))
+        F.sum(dec(F.col("daily_rev")))
         .over(w)
         .cast("double")
         .alias("rev_7d"),
@@ -973,7 +972,7 @@ def segment_revenue_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.month("o_orderdate").alias("mon"),
         )
         .agg(exact_sum("o_totalprice", "rev"))
-        .select("segment", "mon", F.col("rev").cast("decimal(30,10)").alias("rev"))
+        .select("segment", "mon", dec("rev").alias("rev"))
     )
     mom = monthly.groupBy("segment").agg(
         F.count("*").cast("int").alias("n_months"),
@@ -1840,7 +1839,7 @@ def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     sell = (
         li.join(F.broadcast(sup), li.l_suppkey == sup.s_suppkey)
         .groupBy(F.col("s_nationkey").alias("nk"))
-        .agg(F.sum(F.col("rev").cast("decimal(30,10)")).cast("double").alias("sold"))
+        .agg(exact_sum(F.col("rev"), "sold"))
     )
     orders = load_table(spark, sf_dir, "orders").select(
         "o_custkey", "o_totalprice"
@@ -1852,9 +1851,7 @@ def nation_trade_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
         orders.join(F.broadcast(cust), orders.o_custkey == cust.c_custkey)
         .groupBy(F.col("c_nationkey").alias("nk"))
         .agg(
-            F.sum(F.col("o_totalprice").cast("decimal(30,10)"))
-            .cast("double")
-            .alias("bought")
+            exact_sum(F.col("o_totalprice"), "bought")
         )
     )
     nation = load_table(spark, sf_dir, "nation").select(
@@ -2183,7 +2180,6 @@ def acctbal_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr("percentile(c_acctbal, 0.05)").alias("lo"),
         F.expr("percentile(c_acctbal, 0.95)").alias("hi"),
     )
-    dec = "decimal(30,10)"
     clamped = F.least(
         F.greatest(F.col("c_acctbal"), F.col("lo")), F.col("hi")
     )
@@ -2197,11 +2193,11 @@ def acctbal_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n"),
             (
-                F.sum(F.col("c_acctbal").cast(dec)).cast("double")
+                exact_sum(F.col("c_acctbal"))
                 / F.count("*")
             ).alias("mean_raw"),
             (
-                F.sum(clamped.cast(dec)).cast("double") / F.count("*")
+                exact_sum(clamped) / F.count("*")
             ).alias("mean_winsor"),
             F.sum(clipped).cast("bigint").alias("n_clipped"),
         )
@@ -2314,16 +2310,15 @@ def customer_revenue_gini(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(w).alias("i"),
         F.count("*").over(W.partitionBy()).alias("n"),
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     return ranked.agg(
         F.max("n").cast("bigint").alias("n_customers"),
-        F.round(F.sum(dec(F.col("x"))).cast("double"), 2).alias(
+        F.round(exact_sum(F.col("x")), 2).alias(
             "total_revenue"
         ),
         F.round(
             F.lit(2.0)
-            * F.sum(dec(F.col("i") * F.col("x"))).cast("double")
-            / (F.max("n") * F.sum(dec(F.col("x"))).cast("double"))
+            * exact_sum(F.col("i") * F.col("x"))
+            / (F.max("n") * exact_sum(F.col("x")))
             - (F.max("n") + F.lit(1.0)) / F.max("n"),
             6,
         ).alias("gini"),
@@ -2472,21 +2467,20 @@ def price_quantity_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # <= ~1.3e12, so sums stay under 2^62 up to ~3.5e6 rows per table
     # at this scale; a 100 TB deployment rescales or shards per the
     # linalg._validate_moments int64 guard class.
-    i10 = lambda c: F.round(c * F.lit(1e10), 0).cast("bigint")  # noqa: E731
     m = p.agg(
         F.count("*").alias("n"),
-        F.sum(i10(F.col("x"))).alias("sxl"),
-        F.sum(i10(F.col("y"))).alias("syl"),
-        F.sum(i10(F.col("x") * F.col("y"))).alias("sxyl"),
-        F.sum(i10(F.col("x") * F.col("x"))).alias("sxxl"),
-        F.sum(i10(F.col("y") * F.col("y"))).alias("syyl"),
+        F.sum(scaled_long(F.col("x"))).alias("sxl"),
+        F.sum(scaled_long(F.col("y"))).alias("syl"),
+        F.sum(scaled_long(F.col("x") * F.col("y"))).alias("sxyl"),
+        F.sum(scaled_long(F.col("x") * F.col("x"))).alias("sxxl"),
+        F.sum(scaled_long(F.col("y") * F.col("y"))).alias("syyl"),
     ).select(
         "n",
-        (F.col("sxl").cast("double") / F.lit(1e10)).alias("sx"),
-        (F.col("syl").cast("double") / F.lit(1e10)).alias("sy"),
-        (F.col("sxyl").cast("double") / F.lit(1e10)).alias("sxy"),
-        (F.col("sxxl").cast("double") / F.lit(1e10)).alias("sxx"),
-        (F.col("syyl").cast("double") / F.lit(1e10)).alias("syy"),
+        unscale("sxl").alias("sx"),
+        unscale("syl").alias("sy"),
+        unscale("sxyl").alias("sxy"),
+        unscale("sxxl").alias("sxx"),
+        unscale("syyl").alias("syy"),
     )
     cov = F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n")
     varx = F.nullif(
@@ -2583,18 +2577,16 @@ def customer_segment_target_encoding(
         "n",
         "s",
     )
-    dec = lambda c: F.col(c).cast("decimal(30,10)")  # noqa: E731
     sf = rows.groupBy("segment", "fold").agg(
         F.sum("n").cast("bigint").alias("n_f"),
-        F.sum(dec("s")).cast("double").alias("s_f"),
+        exact_sum("s", "s_f"),
     )
     st = sf.groupBy("segment").agg(
         F.sum("n_f").cast("bigint").alias("n_tot"),
-        F.sum(dec("s_f")).cast("double").alias("s_tot"),
+        exact_sum("s_f", "s_tot"),
     )
-    dec2 = lambda c: F.col(c).cast("decimal(30,10)")  # noqa: E731
     g = cu.agg(
-        (F.sum(dec2("s")).cast("double") / F.sum("n")).alias("gmean")
+        (exact_sum("s") / F.sum("n")).alias("gmean")
     )
     out = sf.join(st, "segment").crossJoin(F.broadcast(g))
     return out.select(
@@ -2811,11 +2803,7 @@ def order_value_poisson_bootstrap(
         .agg(
             F.sum("w").cast("bigint").alias("n_draws"),
             F.round(
-                F.sum(
-                    (F.col("w") * F.col("o_totalprice")).cast(
-                        "decimal(30,10)"
-                    )
-                ).cast("double")
+                exact_sum(F.col("w") * F.col("o_totalprice"))
                 / F.sum("w"),
                 6,
             ).alias("boot_mean"),
@@ -3069,7 +3057,6 @@ def elasticity_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # lockstep) replace the DECIMAL(30,12) accumulators; complement
     # moments subtract EXACTLY in the integer domain before the one
     # double conversion. |terms| ≤ ~1.3e12 ⇒ sums < 2^60 through sf1.
-    i10 = lambda c: F.round(c * F.lit(1e10), 0).cast("bigint")  # noqa: E731
     p = li.select(
         F.log(F.col("l_extendedprice") / F.col("l_quantity")).alias("x"),
         F.log("l_quantity").alias("y"),
@@ -3086,21 +3073,20 @@ def elasticity_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fits, and the MSE join — one lineitem scan total (tests/PLAN_SHAPES.json)
     ml = p.groupBy("fold").agg(
         F.count("*").alias("n"),
-        F.sum(i10(F.col("x"))).alias("sxl"),
-        F.sum(i10(F.col("y"))).alias("syl"),
-        F.sum(i10(F.col("x") * F.col("y"))).alias("sxyl"),
-        F.sum(i10(F.col("x") * F.col("x"))).alias("sxxl"),
-        F.sum(i10(F.col("y") * F.col("y"))).alias("syyl"),
+        F.sum(scaled_long(F.col("x"))).alias("sxl"),
+        F.sum(scaled_long(F.col("y"))).alias("syl"),
+        F.sum(scaled_long(F.col("x") * F.col("y"))).alias("sxyl"),
+        F.sum(scaled_long(F.col("x") * F.col("x"))).alias("sxxl"),
+        F.sum(scaled_long(F.col("y") * F.col("y"))).alias("syyl"),
     ).persist()
-    e10 = lambda c: c.cast("double") / F.lit(1e10)  # noqa: E731
     m = ml.select(
         "fold",
         "n",
-        e10(F.col("sxl")).alias("sx"),
-        e10(F.col("syl")).alias("sy"),
-        e10(F.col("sxyl")).alias("sxy"),
-        e10(F.col("sxxl")).alias("sxx"),
-        e10(F.col("syyl")).alias("syy"),
+        unscale("sxl").alias("sx"),
+        unscale("syl").alias("sy"),
+        unscale("sxyl").alias("sxy"),
+        unscale("sxxl").alias("sxx"),
+        unscale("syyl").alias("syy"),
     )
     t = ml.agg(
         F.sum("n").alias("tn"),
@@ -3112,10 +3098,10 @@ def elasticity_kfold_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
     tr = ml.crossJoin(F.broadcast(t)).select(
         "fold",
         (F.col("tn") - F.col("n")).alias("trn"),
-        e10(F.col("tsxl") - F.col("sxl")).alias("trsx"),
-        e10(F.col("tsyl") - F.col("syl")).alias("trsy"),
-        e10(F.col("tsxyl") - F.col("sxyl")).alias("trsxy"),
-        e10(F.col("tsxxl") - F.col("sxxl")).alias("trsxx"),
+        unscale(F.col("tsxl") - F.col("sxl")).alias("trsx"),
+        unscale(F.col("tsyl") - F.col("syl")).alias("trsy"),
+        unscale(F.col("tsxyl") - F.col("sxyl")).alias("trsxy"),
+        unscale(F.col("tsxxl") - F.col("sxxl")).alias("trsxx"),
     )
     b = (
         F.col("trn") * F.col("trsxy") - F.col("trsx") * F.col("trsy")
@@ -3602,15 +3588,12 @@ def supplier_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window
 
     li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     rev = li.groupBy("l_suppkey").agg(
-        F.sum(
-            dec(F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")))
+        exact_sum(
+            F.col("l_extendedprice") * (F.lit(1) - F.col("l_discount")), "revenue"
         )
-        .cast("double")
-        .alias("revenue")
     ).persist()
-    tot = rev.agg(F.sum(dec(F.col("revenue"))).cast("double").alias("t"))
+    tot = rev.agg(exact_sum(F.col("revenue"), "t"))
     w = (
         Window.orderBy(F.desc("revenue"), F.asc("l_suppkey"))
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -3634,11 +3617,11 @@ def supplier_pareto_abc(spark: SparkSession, sf_dir: str) -> DataFrame:
         classed.groupBy("abc_class")
         .agg(
             F.count("*").cast("bigint").alias("n_suppliers"),
-            F.round(F.sum(dec(F.col("revenue"))).cast("double"), 6).alias(
+            F.round(exact_sum(F.col("revenue")), 6).alias(
                 "class_revenue"
             ),
             F.round(
-                F.sum(dec(F.col("revenue"))).cast("double") / F.max("t"), 6
+                exact_sum(F.col("revenue")) / F.max("t"), 6
             ).alias("revenue_share"),
         )
         .orderBy("abc_class")
@@ -3755,16 +3738,13 @@ def customer_rfm_kmeans2(spark: SparkSession, sf_dir: str) -> DataFrame:
     one pass. The feature and z frames persist; rounds never rescan
     orders."""
     orders = load_table(spark, sf_dir, "orders")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
-    dec12 = lambda c: c.cast("decimal(30,12)")  # noqa: E731
     # one orders scan: per-customer sufficient stats first (persisted);
     # the global max date is the max of per-customer last orders, so
     # recency derives from the aggregate, never a second fact scan
     rfm0 = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
         F.max(F.col("o_orderdate").cast("date")).alias("last_od"),
         F.count("*").cast("double").alias("f"),
-        F.sum(dec(F.col("o_totalprice"))).cast("double").alias("m"),
+        exact_sum(F.col("o_totalprice"), "m"),
     ).persist()
     mx = rfm0.agg(F.max("last_od").alias("mxd"))
     rfm = rfm0.crossJoin(F.broadcast(mx)).select(
@@ -3775,12 +3755,12 @@ def customer_rfm_kmeans2(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     mom = rfm.agg(
         F.count("*").alias("n"),
-        F.sum(dec(F.col("r"))).cast("double").alias("sr"),
-        F.sum(decp(F.col("r") * F.col("r"))).cast("double").alias("srr"),
-        F.sum(dec(F.col("f"))).cast("double").alias("sf"),
-        F.sum(decp(F.col("f") * F.col("f"))).cast("double").alias("sff"),
-        F.sum(dec(F.col("m"))).cast("double").alias("sm"),
-        F.sum(decp(F.col("m") * F.col("m"))).cast("double").alias("smm"),
+        exact_sum(F.col("r"), "sr"),
+        exact_sum(F.col("r") * F.col("r"), "srr", precision=38, scale=8),
+        exact_sum(F.col("f"), "sf"),
+        exact_sum(F.col("f") * F.col("f"), "sff", precision=38, scale=8),
+        exact_sum(F.col("m"), "sm"),
+        exact_sum(F.col("m") * F.col("m"), "smm", precision=38, scale=8),
     )
 
     def zcol(x: str, s: str, ss: str):
@@ -3831,9 +3811,9 @@ def customer_rfm_kmeans2(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def update(assigned: DataFrame) -> DataFrame:
         return assigned.groupBy("k").agg(
-            (F.sum(dec12(F.col("zr"))).cast("double") / F.count("*")).alias("cr"),
-            (F.sum(dec12(F.col("zf"))).cast("double") / F.count("*")).alias("cf"),
-            (F.sum(dec12(F.col("zm"))).cast("double") / F.count("*")).alias("cm"),
+            (exact_sum(F.col("zr"), precision=30, scale=12) / F.count("*")).alias("cr"),
+            (exact_sum(F.col("zf"), precision=30, scale=12) / F.count("*")).alias("cf"),
+            (exact_sum(F.col("zm"), precision=30, scale=12) / F.count("*")).alias("cm"),
         )
 
     a1 = assign(
@@ -3865,13 +3845,13 @@ def customer_rfm_kmeans2(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_customers"),
             F.round(
-                F.sum(dec12(F.col("zr"))).cast("double") / F.count("*"), 6
+                exact_sum(F.col("zr"), precision=30, scale=12) / F.count("*"), 6
             ).alias("centroid_r"),
             F.round(
-                F.sum(dec12(F.col("zf"))).cast("double") / F.count("*"), 6
+                exact_sum(F.col("zf"), precision=30, scale=12) / F.count("*"), 6
             ).alias("centroid_f"),
             F.round(
-                F.sum(dec12(F.col("zm"))).cast("double") / F.count("*"), 6
+                exact_sum(F.col("zm"), precision=30, scale=12) / F.count("*"), 6
             ).alias("centroid_m"),
         )
         .select(
@@ -3955,13 +3935,10 @@ def monthly_latency_control_chart(
         F.count("*").cast("bigint").alias("n"),
         (F.sum("lat_days").cast("double") / F.count("*")).alias("mean_lat"),
     ).persist()
-    dec12 = lambda c: c.cast("decimal(30,12)")  # noqa: E731
     lim = monthly.agg(
         F.count("*").alias("nm"),
-        F.sum(dec12(F.col("mean_lat"))).cast("double").alias("s"),
-        F.sum(dec12(F.col("mean_lat") * F.col("mean_lat")))
-        .cast("double")
-        .alias("ss"),
+        exact_sum(F.col("mean_lat"), "s", precision=30, scale=12),
+        exact_sum(F.col("mean_lat") * F.col("mean_lat"), "ss", precision=30, scale=12),
     )
     cl = lim.select(
         (F.col("s") / F.col("nm")).alias("center"),
@@ -4146,7 +4123,6 @@ def yearly_price_index_laspeyres(
     rollup. All sums DECIMAL; the unit-price ratio is one double
     division on exact sums."""
     li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     # persisted: the (part, year) grid feeds the base-year slice and
     # the index join — one lineitem scan total (tests/PLAN_SHAPES.json)
     # r14 (guide §2.3 narrower types): exact BIGINT cents/units folds
@@ -4192,8 +4168,8 @@ def yearly_price_index_laspeyres(
         .agg(
             F.count("*").cast("bigint").alias("n_parts"),
             F.round(
-                F.sum(dec(F.col("cur_val"))).cast("double")
-                / F.sum(dec(F.col("base_val"))).cast("double")
+                exact_sum(F.col("cur_val"))
+                / exact_sum(F.col("base_val"))
                 * F.lit(100.0),
                 6,
             ).alias("laspeyres_index"),
@@ -4528,7 +4504,6 @@ def ab_test_permutation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from technical_test_data_engineer_spark.operators.text import md5_bucket
 
     events = load_table(spark, sf_dir, "events")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     u = (
         events.groupBy("user_id")
         .agg(
@@ -4753,9 +4728,7 @@ def copurchase_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         ["x", "y"],
         "left_anti",
     )
-    term = F.round(F.lit(1.0) / F.log(F.col("outdeg")), 12).cast(
-        "decimal(30,15)"
-    )
+    term = dec(F.round(F.lit(1.0) / F.log(F.col("outdeg")), 12), 30, 15)
     return (
         cand.join(
             F.broadcast(deg.withColumnRenamed("src", "mid")), "mid"
@@ -4862,9 +4835,7 @@ def segment_priority_mutual_info(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(F.col("pmi"), 6).alias("pmi"),
         F.round(
             F.sum(
-                F.round(F.col("p_joint") * F.col("pmi"), 12).cast(
-                    "decimal(30,15)"
-                )
+                dec(F.round(F.col("p_joint") * F.col("pmi"), 12), 30, 15)
             )
             .over(wg)
             .cast("double"),
@@ -4949,9 +4920,6 @@ def lineitem_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem").select(
         F.col("l_quantity").alias("x"), F.col("l_extendedprice").alias("y")
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
-    d19 = lambda c: c.cast("decimal(19,0)")  # noqa: E731
 
     # y: doubled midranks on the fact via range buckets (y is
     # ~unique, so any distinct-value frame is fact-sized anyway)
@@ -4993,21 +4961,21 @@ def lineitem_spearman_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     m = r.agg(
         F.count("*").alias("n"),
-        F.sum(dec(F.col("x"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("y"))).cast("double").alias("sy"),
-        F.sum(decp(F.col("x") * F.col("y"))).cast("double").alias("sxy"),
-        F.sum(decp(F.col("x") * F.col("x"))).cast("double").alias("sxx"),
-        F.sum(decp(F.col("y") * F.col("y"))).cast("double").alias("syy"),
-        (F.sum(d19(F.col("ux"))).cast("double") / 2).alias("srx"),
-        (F.sum(d19(F.col("uy"))).cast("double") / 2).alias("sry"),
+        exact_sum(F.col("x"), "sx"),
+        exact_sum(F.col("y"), "sy"),
+        exact_sum(F.col("x") * F.col("y"), "sxy", precision=38, scale=8),
+        exact_sum(F.col("x") * F.col("x"), "sxx", precision=38, scale=8),
+        exact_sum(F.col("y") * F.col("y"), "syy", precision=38, scale=8),
+        (exact_sum(F.col("ux"), precision=19, scale=0) / 2).alias("srx"),
+        (exact_sum(F.col("uy"), precision=19, scale=0) / 2).alias("sry"),
         (
-            F.sum(d19(F.col("ux")) * d19(F.col("uy"))).cast("double") / 4
+            F.sum(dec(F.col("ux"), 19, 0) * dec(F.col("uy"), 19, 0)).cast("double") / 4
         ).alias("srxy"),
         (
-            F.sum(d19(F.col("ux")) * d19(F.col("ux"))).cast("double") / 4
+            F.sum(dec(F.col("ux"), 19, 0) * dec(F.col("ux"), 19, 0)).cast("double") / 4
         ).alias("srxx"),
         (
-            F.sum(d19(F.col("uy")) * d19(F.col("uy"))).cast("double") / 4
+            F.sum(dec(F.col("uy"), 19, 0) * dec(F.col("uy"), 19, 0)).cast("double") / 4
         ).alias("sryy"),
     )
 
@@ -5077,7 +5045,7 @@ def customer_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
     tot = spend.agg(
         F.count("*").alias("n"),
-        F.sum(F.col("x").cast("decimal(30,10)")).cast("double").alias("s"),
+        exact_sum(F.col("x"), "s"),
     )
     j = spend.crossJoin(F.broadcast(tot))
     terms = j.select(
@@ -5094,10 +5062,10 @@ def customer_theil_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     return terms.agg(
         F.max("n").cast("bigint").alias("n_customers"),
         F.round(
-            F.sum(F.col("tt").cast("decimal(30,15)")).cast("double"), 6
+            exact_sum(F.col("tt"), precision=30, scale=15), 6
         ).alias("theil_t"),
         F.round(
-            F.sum(F.col("tl").cast("decimal(30,15)")).cast("double")
+            exact_sum(F.col("tl"), precision=30, scale=15)
             / F.max("n"),
             6,
         ).alias("theil_l"),
@@ -5299,8 +5267,8 @@ def customer_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame
         .groupBy("c_custkey", "c_acctbal")
         .agg(
             F.coalesce(
-                F.sum(F.col("o_totalprice").cast("decimal(30,10)")),
-                F.lit(0).cast("decimal(30,10)"),
+                F.sum(dec(F.col("o_totalprice"))),
+                dec(F.lit(0)),
             )
             .cast("double")
             .alias("x2")
@@ -5308,15 +5276,13 @@ def customer_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame
         .withColumnRenamed("c_acctbal", "x1")
         .persist()  # feeds the 1-row moment reduce AND the distance pass
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
     m = feat.agg(
         F.count("*").alias("n"),
-        F.sum(dec(F.col("x1"))).cast("double").alias("s1"),
-        F.sum(dec(F.col("x2"))).cast("double").alias("s2"),
-        F.sum(decp(F.col("x1") * F.col("x1"))).cast("double").alias("s11"),
-        F.sum(decp(F.col("x2") * F.col("x2"))).cast("double").alias("s22"),
-        F.sum(decp(F.col("x1") * F.col("x2"))).cast("double").alias("s12"),
+        exact_sum(F.col("x1"), "s1"),
+        exact_sum(F.col("x2"), "s2"),
+        exact_sum(F.col("x1") * F.col("x1"), "s11", precision=38, scale=8),
+        exact_sum(F.col("x2") * F.col("x2"), "s22", precision=38, scale=8),
+        exact_sum(F.col("x1") * F.col("x2"), "s12", precision=38, scale=8),
     )
     cov = m.select(
         (F.col("s1") / F.col("n")).alias("m1"),
@@ -5411,23 +5377,13 @@ def nation_supplier_hhi(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("s_nationkey", "l_suppkey")
         .agg(
-            F.sum(
-                (
-                    F.col("l_extendedprice") * (1 - F.col("l_discount"))
-                ).cast("decimal(30,10)")
-            )
-            .cast("double")
-            .alias("r")
+            exact_sum(F.col("l_extendedprice") * (1 - F.col("l_discount")), "r")
         )
     )
     sh = rev.groupBy("s_nationkey").agg(
         F.count("*").alias("n_suppliers"),
-        F.sum(F.col("r").cast("decimal(30,10)")).cast("double").alias(
-            "total"
-        ),
-        F.sum(F.round(F.pow(F.col("r"), 2), 4).cast("decimal(38,4)"))
-        .cast("double")
-        .alias("sumsq"),
+        exact_sum(F.col("r"), "total"),
+        exact_sum(F.round(F.pow(F.col("r"), 2), 4), "sumsq", precision=38, scale=4),
     )
     hhi = F.col("sumsq") / (F.col("total") * F.col("total"))
     return (
@@ -5525,7 +5481,7 @@ def nation_jackknife_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("n_name").alias("nation"))
         .agg(
             F.count("*").alias("n_g"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,10)")).alias(
+            F.sum(dec(F.col("o_totalprice"))).alias(
                 "s_g"
             ),
         )
@@ -5553,7 +5509,7 @@ def nation_jackknife_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     se = pv.select(
         "*",
         (
-            F.sum(F.round(F.col("pseudo"), 9).cast("decimal(30,12)"))
+            F.sum(dec(F.round(F.col("pseudo"), 9), 30, 12))
             .over(wg)
             .cast("double")
             / F.col("gg")
@@ -5567,9 +5523,11 @@ def nation_jackknife_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round(
             F.sqrt(
                 F.sum(
-                    F.round(
-                        F.pow(F.col("pseudo") - F.col("pbar"), 2), 6
-                    ).cast("decimal(30,12)")
+                    dec(
+                        F.round(F.pow(F.col("pseudo") - F.col("pbar"), 2), 6),
+                        30,
+                        12,
+                    )
                 )
                 .over(wg)
                 .cast("double")
@@ -5630,9 +5588,7 @@ def part_pps_systematic(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
     rev = li.groupBy("l_partkey").agg(
         F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(30,10)"
-            )
+            dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         ).alias("r")
     )
     wo = Window.orderBy("l_partkey").rowsBetween(
@@ -5752,15 +5708,13 @@ def copurchase_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(dv, sym.dst == F.col("_v"))
         .select("dx", "dy")
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
     m = ed.agg(
         F.count("*").alias("n"),
-        F.sum(dec(F.col("dx"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("dy"))).cast("double").alias("sy"),
-        F.sum(decp(F.col("dx") * F.col("dy"))).cast("double").alias("sxy"),
-        F.sum(decp(F.col("dx") * F.col("dx"))).cast("double").alias("sxx"),
-        F.sum(decp(F.col("dy") * F.col("dy"))).cast("double").alias("syy"),
+        exact_sum(F.col("dx"), "sx"),
+        exact_sum(F.col("dy"), "sy"),
+        exact_sum(F.col("dx") * F.col("dy"), "sxy", precision=38, scale=8),
+        exact_sum(F.col("dx") * F.col("dx"), "sxx", precision=38, scale=8),
+        exact_sum(F.col("dy") * F.col("dy"), "syy", precision=38, scale=8),
     )
     n_nodes = deg.agg(F.count("*").cast("bigint").alias("c"))
     r = (F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n")) / F.nullif(
@@ -5834,7 +5788,6 @@ def yearly_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     identical to the Laspeyres query: one fact agg, one part-keyed
     join against the base basket, a years-sized rollup."""
     li = load_table(spark, sf_dir, "lineitem")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     # persisted: the (part, year) grid feeds the base-year slice and
     # the index join — one lineitem scan total (tests/PLAN_SHAPES.json)
     # r14 (guide §2.3 narrower types): exact BIGINT cents/units folds
@@ -5880,13 +5833,13 @@ def yearly_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     ix = joined.groupBy(F.col("yr").alias("year")).agg(
         F.count("*").cast("bigint").alias("n_parts"),
         (
-            F.sum(dec(F.col("l_num"))).cast("double")
-            / F.sum(dec(F.col("l_den"))).cast("double")
+            exact_sum(F.col("l_num"))
+            / exact_sum(F.col("l_den"))
             * F.lit(100.0)
         ).alias("laspeyres"),
         (
-            F.sum(dec(F.col("p_num"))).cast("double")
-            / F.sum(dec(F.col("p_den"))).cast("double")
+            exact_sum(F.col("p_num"))
+            / exact_sum(F.col("p_den"))
             * F.lit(100.0)
         ).alias("paasche"),
     )
@@ -5953,7 +5906,7 @@ def customer_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     orders = load_table(spark, sf_dir, "orders")
     spend = orders.groupBy("o_custkey").agg(
-        F.sum(F.col("o_totalprice").cast("decimal(30,10)")).alias("x")
+        F.sum(dec(F.col("o_totalprice"))).alias("x")
     )
     wo = W.orderBy(F.asc("x"), F.asc("o_custkey"))
     wor = wo.rowsBetween(W.unboundedPreceding, 0)
@@ -6046,7 +5999,7 @@ def segment_growth_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
     yr = F.year(F.col("o_orderdate").cast("date"))
-    zero = F.lit(0).cast("decimal(30,10)")
+    zero = dec(F.lit(0))
     seg = (
         orders.filter(yr.isin(1996, 1997))
         .join(
@@ -6057,12 +6010,12 @@ def segment_growth_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum(
                 F.when(
-                    yr == 1996, F.col("o_totalprice").cast("decimal(30,10)")
+                    yr == 1996, dec(F.col("o_totalprice"))
                 ).otherwise(zero)
             ).alias("rev_prev"),
             F.sum(
                 F.when(
-                    yr == 1997, F.col("o_totalprice").cast("decimal(30,10)")
+                    yr == 1997, dec(F.col("o_totalprice"))
                 ).otherwise(zero)
             ).alias("rev_cur"),
         )
@@ -6522,7 +6475,7 @@ def customer_value_quartile_migration(
     rollup."""
     orders = load_table(spark, sf_dir, "orders")
     yr = F.year(F.col("o_orderdate").cast("date"))
-    zero = F.lit(0).cast("decimal(30,10)")
+    zero = dec(F.lit(0))
     spend = (
         orders.filter(yr.isin(1996, 1997))
         .groupBy("o_custkey")
@@ -6530,13 +6483,13 @@ def customer_value_quartile_migration(
             F.sum(
                 F.when(
                     yr == 1996,
-                    F.col("o_totalprice").cast("decimal(30,10)"),
+                    dec(F.col("o_totalprice")),
                 ).otherwise(zero)
             ).alias("s96"),
             F.sum(
                 F.when(
                     yr == 1997,
-                    F.col("o_totalprice").cast("decimal(30,10)"),
+                    dec(F.col("o_totalprice")),
                 ).otherwise(zero)
             ).alias("s97"),
             F.sum(F.when(yr == 1996, 1).otherwise(0)).alias("n96"),
@@ -6661,24 +6614,22 @@ def supplier_acctbal_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("g")
         .agg(
             F.sum("c").cast("bigint").alias("n_g"),
-            F.sum(
-                F.round(F.col("c") * F.col("midrank"), 6).cast(
-                    "decimal(38,6)"
-                )
-            )
-            .cast("double")
-            .alias("r_g"),
+            exact_sum(
+                F.round(F.col("c") * F.col("midrank"), 6),
+                "r_g",
+                precision=38,
+                scale=6,
+            ),
             F.max("nn").alias("nn"),
         )
     )
     ties = vals.agg(
-        F.sum(
-            (
-                F.col("cv") * F.col("cv") * F.col("cv") - F.col("cv")
-            ).cast("decimal(38,0)")
+        exact_sum(
+            F.col("cv") * F.col("cv") * F.col("cv") - F.col("cv"),
+            "t3",
+            precision=38,
+            scale=0,
         )
-        .cast("double")
-        .alias("t3")
     )
     nnd = F.col("nn").cast("double")
     h = grp.select(
@@ -6690,9 +6641,7 @@ def supplier_acctbal_kruskal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(12.0)
             / (nnd * (F.col("nn") + 1))
             * F.sum(
-                F.round(
-                    F.col("r_g") * F.col("r_g") / F.col("n_g"), 6
-                ).cast("decimal(38,6)")
+                dec(F.round(F.col("r_g") * F.col("r_g") / F.col("n_g"), 6), 38, 6)
             ).over(wg)
             - F.lit(3.0) * (F.col("nn") + 1)
         ).alias("h_raw"),
@@ -6801,7 +6750,6 @@ def part_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
             "l_extendedprice", "l_discount",
         )
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     # ONE lineitem scan builds the (part, month) grid with BOTH
     # measures; the CV moments AND the revenue total come out of ONE
     # part-keyed agg (r14 fusion — see docstring), so pm has a single
@@ -6818,9 +6766,7 @@ def part_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         # (p·(1−d) is an arbitrary double)
         F.sum(F.round(F.col("l_quantity"), 0).cast("bigint")).alias("q"),
         F.sum(
-            (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(
-                "decimal(30,10)"
-            )
+            dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
         ).alias("rm"),
     )
     mean_q = F.col("sq").cast("double") / F.col("n_months")
@@ -6871,7 +6817,7 @@ def part_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
         abc.groupBy("abc_class", "xyz_class")
         .agg(
             F.count("*").cast("bigint").alias("n_parts"),
-            F.sum(F.round(F.col("cv"), 9).cast("decimal(30,12)")).alias(
+            F.sum(dec(F.round(F.col("cv"), 9), 30, 12)).alias(
                 "_cvsum"
             ),
         )
@@ -6965,7 +6911,7 @@ def nation_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     tot = spend.agg(
         F.count("*").alias("n"),
-        F.sum(F.col("x").cast("decimal(30,10)")).cast("double").alias("s"),
+        exact_sum(F.col("x"), "s"),
     )
     j = spend.crossJoin(F.broadcast(tot))
     t_term = F.round(
@@ -6975,12 +6921,8 @@ def nation_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     grp = j.groupBy("c_nationkey").agg(
         F.count("*").alias("n_g"),
-        F.sum(F.col("x").cast("decimal(30,10)")).cast("double").alias(
-            "s_g"
-        ),
-        F.sum(t_term.cast("decimal(30,15)")).cast("double").alias(
-            "t_term"
-        ),
+        exact_sum(F.col("x"), "s_g"),
+        exact_sum(t_term, "t_term", precision=30, scale=15),
         F.max("n").alias("n"),
         F.max("s").alias("s"),
     )
@@ -6992,11 +6934,11 @@ def nation_theil_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "c_nationkey",
         "n_g",
         between_term.alias("between_term"),
-        F.sum(between_term.cast("decimal(30,15)"))
+        F.sum(dec(between_term, 30, 15))
         .over(wg)
         .cast("double")
         .alias("t_between"),
-        F.sum(F.round(F.col("t_term"), 12).cast("decimal(30,15)"))
+        F.sum(dec(F.round(F.col("t_term"), 12), 30, 15))
         .over(wg)
         .cast("double")
         .alias("t_total"),
@@ -7091,7 +7033,7 @@ def customer_partition_ari(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_custkey")
         .agg(
             F.max("c_mktsegment").alias("segment"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,10)")).alias("x"),
+            F.sum(dec(F.col("o_totalprice"))).alias("x"),
         )
     )
     wo = Window.orderBy(F.asc("x"), F.asc("o_custkey"))
@@ -7258,7 +7200,7 @@ def copurchase_brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.round(qexpr, 6) + F.lit(0.0)).alias("q_brand"),
         (
             F.round(
-                F.sum(F.round(qexpr, 12).cast("decimal(30,15)"))
+                F.sum(dec(F.round(qexpr, 12), 30, 15))
                 .over(wg)
                 .cast("double"),
                 6,
@@ -7397,10 +7339,10 @@ def customer_decayed_value(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_orders"),
             F.round(
-                F.sum(F.col("raw").cast("decimal(30,10)")).cast("double"), 2
+                exact_sum(F.col("raw")), 2
             ).alias("raw_value"),
             F.round(
-                F.sum(F.col("dv").cast("decimal(30,12)")).cast("double"), 2
+                exact_sum(F.col("dv"), precision=30, scale=12), 2
             ).alias("decayed_value"),
         )
         .orderBy(F.desc("decayed_value"), F.asc("o_custkey"))

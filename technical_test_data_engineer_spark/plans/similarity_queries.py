@@ -9,6 +9,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from technical_test_data_engineer_spark.functions.scalars import (
+    dec,
+    exact_sum,
+    scaled_long,
+    unscale,
+)
 from technical_test_data_engineer_spark.operators.bounded import (
     collect_bounded,
     local_frame,
@@ -810,8 +816,7 @@ def embedding_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         ex.groupBy("label", "dim")
         .agg(
             (
-                F.sum(F.col("x").cast("double").cast("decimal(38,30)"))
-                .cast("double")
+                exact_sum(F.col("x").cast("double"), precision=38, scale=30)
                 / F.count("*")
             ).alias("centroid"),
             F.count("*").alias("n_vectors"),
@@ -1749,7 +1754,6 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle, one (vec × labels)-bounded partial-agg shuffle — and that
     is the ONLY knob that changes with scale."""
     emb = load_table(spark, sf_dir, "embeddings")
-    i10 = lambda c: F.round(c * F.lit(1e10), 0).cast("bigint")  # noqa: E731
     xl = emb.select(
         "vec_id",
         "label",
@@ -1761,23 +1765,13 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
     # concurrent broadcast futures against an unpopulated cache (the
     # r13 count-fusion-boundary class)
     cent_long = xl.groupBy("label", "dim").agg(
-        (
-            F.sum(i10(F.col("val"))).cast("double")
-            / F.lit(1e10)
-            / F.count("*")
-        ).alias("c")
+        (unscale(F.sum(scaled_long(F.col("val")))) / F.count("*")).alias("c")
     )  # (labels × dims)-bounded; recomputed per consumer, see above
     nv = xl.groupBy("vec_id").agg(
-        (
-            F.sum(i10(F.col("val") * F.col("val"))).cast("double")
-            / F.lit(1e10)
-        ).alias("na")
+        unscale(F.sum(scaled_long(F.col("val") * F.col("val")))).alias("na")
     )
     nc = cent_long.groupBy(F.col("label").alias("clabel")).agg(
-        (
-            F.sum(i10(F.col("c") * F.col("c"))).cast("double")
-            / F.lit(1e10)
-        ).alias("ncv")
+        unscale(F.sum(scaled_long(F.col("c") * F.col("c")))).alias("ncv")
     )
     dots = (
         xl.join(
@@ -1790,10 +1784,7 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("vec_id", "label", "clabel")
         .agg(
-            (
-                F.sum(i10(F.col("val") * F.col("c"))).cast("double")
-                / F.lit(1e10)
-            ).alias("dot")
+            unscale(F.sum(scaled_long(F.col("val") * F.col("c")))).alias("dot")
         )
     )
     scored = (
@@ -1823,7 +1814,7 @@ def embedding_silhouette(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_vectors"),
             F.round(
-                F.sum(margin.cast("decimal(30,15)")).cast("double")
+                exact_sum(margin, precision=30, scale=15)
                 / F.count("*"),
                 6,
             ).alias("mean_margin"),
@@ -1898,25 +1889,21 @@ def embedding_isotropy_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     x = fan_out(emb, 32).select(
         "vec_id", F.posexplode("embedding").alias("i", "x")
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    dec12 = lambda c: c.cast("decimal(30,12)")  # noqa: E731
     # persisted: the 1-row count attaches to both the per-dim frame and
     # the final select — one pruned count scan total (tests/PLAN_SHAPES.json)
     n = emb.agg(F.count("*").cast("double").alias("n")).persist()
     d = x.groupBy("i").agg(
-        F.sum(dec(F.col("x"))).cast("double").alias("s"),
-        F.sum(dec(F.col("x") * F.col("x"))).cast("double").alias("ss"),
+        exact_sum(F.col("x"), "s"),
+        exact_sum(F.col("x") * F.col("x"), "ss"),
     )
     mean = F.col("s") / F.col("n")
     evar = F.col("ss") / F.col("n") - mean * mean
     agg = d.crossJoin(F.broadcast(n)).agg(
         F.count("*").cast("bigint").alias("dims"),
-        F.sum(dec12(mean * mean)).cast("double").alias("mu_sq_norm"),
-        F.sum(dec12(F.col("ss") / F.col("n")))
-        .cast("double")
-        .alias("mean_sq_norm"),
+        exact_sum(mean * mean, "mu_sq_norm", precision=30, scale=12),
+        exact_sum(F.col("ss") / F.col("n"), "mean_sq_norm", precision=30, scale=12),
         F.max(evar).alias("max_var"),
-        F.sum(dec12(evar)).cast("double").alias("tot_var"),
+        exact_sum(evar, "tot_var", precision=30, scale=12),
     )
     return agg.crossJoin(F.broadcast(n)).select(
         "dims",
@@ -2417,9 +2404,7 @@ def embedding_int8_quant_error(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.max("mn"), 6).alias("dim_min"),
             F.round(F.max("mx"), 6).alias("dim_max"),
             F.round(
-                F.sum(
-                    F.round(F.abs(F.col("err")), 12).cast("decimal(30,15)")
-                ).cast("double")
+                exact_sum(F.round(F.abs(F.col("err")), 12), precision=30, scale=15)
                 / F.count("*"),
                 8,
             ).alias("mean_abs_err"),
@@ -2427,11 +2412,9 @@ def embedding_int8_quant_error(spark: SparkSession, sf_dir: str) -> DataFrame:
                 "max_abs_err"
             ),
             F.round(
-                F.sum(
-                    F.round(F.col("err") * F.col("err"), 15).cast(
-                        "decimal(30,18)"
-                    )
-                ).cast("double")
+                exact_sum(
+                    F.round(F.col("err") * F.col("err"), 15), precision=30, scale=18
+                )
                 / F.count("*"),
                 10,
             ).alias("mse"),
@@ -2565,11 +2548,7 @@ def embedding_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("vec_id", "j")
         .agg(
             (
-                F.sum(
-                    F.round(F.col("s") * F.col("x"), 12).cast(
-                        "decimal(30,15)"
-                    )
-                ).cast("double")
+                exact_sum(F.round(F.col("s") * F.col("x"), 12), precision=30, scale=15)
                 / F.lit(4.0)
             ).alias("p")
         )
@@ -2590,13 +2569,12 @@ def embedding_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             .filter(F.col("va") < F.col("vb"))
             .groupBy("va", "vb")
             .agg(
-                F.sum(
-                    F.round(
-                        F.pow(F.col("xa") - F.col("xb"), 2), 12
-                    ).cast("decimal(30,15)")
+                exact_sum(
+                    F.round(F.pow(F.col("xa") - F.col("xb"), 2), 12),
+                    out,
+                    precision=30,
+                    scale=15,
                 )
-                .cast("double")
-                .alias(out)
             )
         )
 
@@ -2621,7 +2599,7 @@ def embedding_jl_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("d2p", 6).alias("d2_proj"),
         F.round("ratio", 6).alias("ratio"),
         F.round(
-            F.sum(F.col("ratio").cast("decimal(30,15)"))
+            F.sum(dec(F.col("ratio"), 30, 15))
             .over(wg)
             .cast("double")
             / F.count("*").over(wg),

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from technical_test_data_engineer_spark.functions.scalars import (
+    dec,
     exact_avg,
     exact_sum,
     exact_sum_expr,
@@ -118,7 +119,7 @@ def flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.to_date("o_orderdate").alias("start_day"),
             F.to_date("l_shipdate").alias("end_day"),
             "l_returnflag",
-            F.col("l_quantity").cast("decimal(30,10)").alias("qty"),
+            dec("l_quantity").alias("qty"),
         )
     )
     # ONE pass over the join: each line explodes to its two delta events

@@ -11,6 +11,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from technical_test_data_engineer_spark.functions.scalars import dec, exact_sum
 from technical_test_data_engineer_spark.plans.star_queries import _decsum, query
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
 from technical_test_data_engineer_spark.streaming.transforms import (
@@ -228,7 +229,7 @@ def user_hll_md5_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).cast("double")
     s = regs.agg(
         F.count("*").alias("occ"),
-        F.sum(inv.cast("decimal(30,15)")).alias("sdec"),
+        F.sum(dec(inv, 30, 15)).alias("sdec"),
     )
     est = s.select(
         (F.lit(256) - F.col("occ")).cast("bigint").alias("v_zero"),
@@ -662,11 +663,10 @@ def hourly_traffic_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.dayofweek("ts").alias("dow"),
         F.hour("ts").alias("hod"),
     ).agg(F.count("*").alias("n"))
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     base = hourly.groupBy("dow", "hod").agg(
         F.count("*").alias("n_obs"),
-        F.sum(dec(F.col("n"))).cast("double").alias("s"),
-        F.sum(dec(F.col("n") * F.col("n"))).cast("double").alias("ss"),
+        exact_sum(F.col("n"), "s"),
+        exact_sum(F.col("n") * F.col("n"), "ss"),
     )
     j = hourly.join(F.broadcast(base), ["dow", "hod"]).filter(
         # n_obs > 1 alone is not enough: a (dow, hod) cell whose observed
@@ -1165,7 +1165,7 @@ def user_event_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("n").cast("bigint").alias("n_events"),
             F.count("*").cast("int").alias("n_types"),
             F.round(
-                F.sum((-p * F.log(p)).cast("decimal(30,15)")).cast("double"),
+                exact_sum(-p * F.log(p), precision=30, scale=15),
                 6,
             ).alias("entropy"),
         )
@@ -1331,7 +1331,6 @@ def user_score_reliability(spark: SparkSession, sf_dir: str) -> DataFrame:
     summation order irrelevance does not hold in general, so the
     per-bin means ride ROUND(...,6) like every ln/ratio output)."""
     events = load_table(spark, sf_dir, "events")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     # persisted: median attach + scored frame both consume it
     u = (
         events.groupBy("user_id")

@@ -9,6 +9,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from technical_test_data_engineer_spark.functions.hof import bind
+from technical_test_data_engineer_spark.functions.scalars import dec, exact_sum
 from technical_test_data_engineer_spark.operators.bounded import local_frame
 from technical_test_data_engineer_spark.operators import text as TX
 from technical_test_data_engineer_spark.operators.text import md5_bucket
@@ -2053,7 +2054,7 @@ def source_token_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
         + F.lit(0.5) * F.col("q") * F.log(F.col("q") / m)
     )
     return (
-        grid.select("source", contrib.cast("decimal(30,15)").alias("x"))
+        grid.select("source", dec(contrib, 30, 15).alias("x"))
         .groupBy("source")
         .agg(F.round(F.sum("x").cast("double"), 6).alias("js_divergence"))
         .orderBy("source")
@@ -2138,10 +2139,8 @@ def doc_neyman_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist(StorageLevel.MEMORY_AND_DISK)
     h = t.groupBy("lang").agg(
         F.count("*").alias("n"),
-        F.sum(F.col("x").cast("decimal(30,10)")).cast("double").alias("sx"),
-        F.sum((F.col("x") * F.col("x")).cast("decimal(30,10)"))
-        .cast("double")
-        .alias("sxx"),
+        exact_sum(F.col("x"), "sx"),
+        exact_sum(F.col("x") * F.col("x"), "sxx"),
     )
     var = F.when(F.col("n") < 2, F.lit(0.0)).otherwise(
         (F.col("sxx") - F.col("sx") * F.col("sx") / F.col("n"))
@@ -2231,14 +2230,13 @@ def vocab_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("r").cast("double")).alias("x"),
         F.log(F.col("c").cast("double")).alias("y"),
     )
-    dec = lambda c: c.cast("decimal(30,12)")  # noqa: E731
     m = p.agg(
         F.count("*").alias("n"),
-        F.sum(dec(F.col("x"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("y"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("x") * F.col("y"))).cast("double").alias("sxy"),
-        F.sum(dec(F.col("x") * F.col("x"))).cast("double").alias("sxx"),
-        F.sum(dec(F.col("y") * F.col("y"))).cast("double").alias("syy"),
+        exact_sum(F.col("x"), "sx", precision=30, scale=12),
+        exact_sum(F.col("y"), "sy", precision=30, scale=12),
+        exact_sum(F.col("x") * F.col("y"), "sxy", precision=30, scale=12),
+        exact_sum(F.col("x") * F.col("x"), "sxx", precision=30, scale=12),
+        exact_sum(F.col("y") * F.col("y"), "syy", precision=30, scale=12),
     )
     cov = F.col("sxy") - F.col("sx") * F.col("sy") / F.col("n")
     varx = F.nullif(
@@ -2391,10 +2389,9 @@ def source_temperature_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = s.select(
         "*", F.pow(F.col("n_tokens").cast("double"), F.lit(0.7)).alias("pw")
     ).persist()
-    dec = lambda c: F.col(c).cast("decimal(30,10)")  # noqa: E731
     t = p.agg(
-        F.sum(dec("n_tokens")).cast("double").alias("tot_tokens"),
-        F.sum(dec("pw")).cast("double").alias("tot_pw"),
+        exact_sum("n_tokens", "tot_tokens"),
+        exact_sum("pw", "tot_pw"),
     )
     return (
         p.crossJoin(F.broadcast(t))
@@ -2635,9 +2632,7 @@ def source_best_of_n_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_groups"),
             F.round(
-                F.sum(
-                    F.round(F.col("gmax"), 9).cast("decimal(20,9)")
-                ).cast("double")
+                exact_sum(F.round(F.col("gmax"), 9), precision=20, scale=9)
                 / F.count("*"),
                 6,
             ).alias("mean_best"),
@@ -2712,7 +2707,7 @@ def shard_balance_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("source", "ns")
         .agg(
             F.round(
-                F.sum(term.cast("decimal(30,12)")).cast("double"), 6
+                exact_sum(term, precision=30, scale=12), 6
             ).alias("chisq_contrib")
         )
         .select(
@@ -2973,10 +2968,8 @@ def doc_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).persist()
     m = l.agg(
         F.count("*").alias("n"),
-        F.sum(F.col("ll").cast("decimal(30,15)")).cast("double").alias("s"),
-        F.sum(F.round(F.col("ll") * F.col("ll"), 12).cast("decimal(30,15)"))
-        .cast("double")
-        .alias("ss"),
+        exact_sum(F.col("ll"), "s", precision=30, scale=15),
+        exact_sum(F.round(F.col("ll") * F.col("ll"), 12), "ss", precision=30, scale=15),
     )
     p = m.select(
         "n",
@@ -3015,9 +3008,7 @@ def doc_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("sigma", 6).alias("sigma"),
         F.round(
             F.sum(
-                F.round(
-                    F.pow(F.col("n_obs") - exp10, 2) / exp10, 9
-                ).cast("decimal(30,12)")
+                dec(F.round(F.pow(F.col("n_obs") - exp10, 2) / exp10, 9), 30, 12)
             )
             .over(wg)
             .cast("double"),
@@ -3236,13 +3227,15 @@ def doc_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.sum("bpe").cast("double") / F.sum("ws"), 6
             ).alias("fertility"),
             F.round(
-                F.sum(
+                exact_sum(
                     F.round(
                         F.col("bpe").cast("double")
                         / F.nullif(F.col("ws"), F.lit(0)),
                         9,
-                    ).cast("decimal(30,12)")
-                ).cast("double")
+                    ),
+                    precision=30,
+                    scale=12,
+                )
                 / F.count("*"),
                 6,
             ).alias("mean_doc_fertility"),
@@ -3518,7 +3511,7 @@ def source_lang_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.pow(F.col("n") - expected, 2) / expected, 9
         ).alias("term"),
     )
-    chi2 = F.sum(F.col("term").cast("decimal(30,12)")).cast("double")
+    chi2 = exact_sum(F.col("term"), precision=30, scale=12)
     return chi.agg(
         F.max("nn").cast("bigint").alias("n_docs"),
         F.max("r").cast("bigint").alias("n_sources"),
@@ -3722,7 +3715,7 @@ def doc_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_docs"),
             F.round(
-                F.sum(F.col("dup_frac").cast("decimal(30,12)")).cast("double")
+                exact_sum(F.col("dup_frac"), precision=30, scale=12)
                 / F.count("*"),
                 6,
             ).alias("mean_dup_bigram_frac"),

@@ -19,12 +19,14 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from technical_test_data_engineer_spark.functions.scalars import exact_sum_expr
+from technical_test_data_engineer_spark.functions.scalars import (
+    dec,
+    exact_sum,
+    exact_sum_expr,
+)
 from technical_test_data_engineer_spark.operators.joins import anti_join, semi_join
 from technical_test_data_engineer_spark.plans.star_queries import _decsum, query
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
-
-_DEC = "decimal(30,10)"
 
 
 @query(
@@ -127,9 +129,9 @@ def q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
             supplier.s_nationkey == F.col("_snk"),
         ).select("s_suppkey", "supp_nation")
     )
-    volume = (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(_DEC)
+    volume = dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
     national = F.when(F.col("supp_nation") == "NATION_7", volume).otherwise(
-        F.lit(0).cast(_DEC)
+        dec(F.lit(0))
     )
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
@@ -242,7 +244,7 @@ def q11_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("l_partkey")
         .agg(
             F.sum(
-                (F.col("l_extendedprice") * (1 - F.col("l_discount"))).cast(_DEC)
+                dec(F.col("l_extendedprice") * (1 - F.col("l_discount")))
             ).alias("value_dec")
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
@@ -582,8 +584,8 @@ def q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             (
                 F.lit(100.0)
-                * F.sum(promo.cast(_DEC)).cast("double")
-                / F.sum(rev.cast(_DEC)).cast("double")
+                * exact_sum(promo)
+                / exact_sum(rev)
             ).alias("promo_revenue_pct")
         )
     )

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from technical_test_data_engineer_spark.functions.scalars import (
+    dec,
     exact_sum,
     exact_sum_expr,
 )
@@ -376,7 +377,7 @@ def q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_custkey", "o_orderdate"
     )
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_quantity")
-    qty = F.sum(F.col("l_quantity").cast("decimal(30,10)"))
+    qty = F.sum(dec(F.col("l_quantity")))
     return (
         li.join(orders, li.l_orderkey == orders.o_orderkey)
         .groupBy("o_orderkey", "o_custkey", "o_orderdate")
@@ -437,11 +438,11 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     avg_qty = li.groupBy(F.col("l_partkey").alias("pk")).agg(
         (
             F.lit(0.5)
-            * (F.sum(F.col("l_quantity").cast("decimal(30,10)")) / F.count("*"))
+            * (F.sum(dec(F.col("l_quantity"))) / F.count("*"))
         ).alias("half_avg_qty")
     )
     joined = li.join(F.broadcast(avg_qty), li.l_partkey == avg_qty.pk).filter(
-        F.col("l_quantity").cast("decimal(30,10)") < F.col("half_avg_qty")
+        dec("l_quantity") < F.col("half_avg_qty")
     )
     return joined.agg(
         exact_sum("l_extendedprice", "total_price"),
@@ -523,12 +524,12 @@ def q22_idle_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     avg_bal = cust.filter(F.col("c_acctbal") > 0).agg(
         (
-            F.sum(F.col("c_acctbal").cast("decimal(30,10)")) / F.count("*")
+            F.sum(dec(F.col("c_acctbal"))) / F.count("*")
         ).alias("a")
     )
     rich = (
         cust.crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal").cast("decimal(30,10)") > F.col("a"))
+        .filter(dec("c_acctbal") > F.col("a"))
         .join(orders, cust.c_custkey == orders.o_custkey, "left_anti")
     )
     return (

@@ -8,7 +8,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from technical_test_data_engineer_spark.functions.scalars import exact_sum
+from technical_test_data_engineer_spark.functions.scalars import dec, exact_sum
 from technical_test_data_engineer_spark.operators.bounded import local_frame
 from technical_test_data_engineer_spark.operators.joins import asof_join
 from technical_test_data_engineer_spark.plans.star_queries import _decsum, query
@@ -40,7 +40,7 @@ def running_customer_spend(spark: SparkSession, sf_dir: str) -> DataFrame:
     return orders.select(
         "o_custkey",
         "o_orderkey",
-        F.sum(F.col("o_totalprice").cast("decimal(30,10)"))
+        F.sum(dec(F.col("o_totalprice")))
         .over(w)
         .cast("double")
         .alias("running_spend"),
@@ -95,9 +95,7 @@ def events_hourly_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,10)"))
-            .cast("double")
-            .alias("total_value"),
+            exact_sum(F.col("value"), "total_value"),
         )
         .orderBy("hour_start", "event_type")
     )
@@ -184,9 +182,7 @@ def events_campaign_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         joined.groupBy("campaign_id")
         .agg(
             F.count("*").alias("n_events"),
-            F.sum(F.col("value").cast("decimal(30,10)"))
-            .cast("double")
-            .alias("total_value"),
+            exact_sum(F.col("value"), "total_value"),
         )
         .orderBy("campaign_id")
     )
@@ -305,7 +301,7 @@ def events_gapfilled_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     hourly = events.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
         F.count("*").alias("n_events"),
         (
-            F.sum(F.col("value").cast("decimal(30,10)")).cast("double")
+            exact_sum(F.col("value"))
             / F.count("*")
         ).alias("avg_value"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -423,7 +419,7 @@ def events_gapfilled_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count("*").alias("n_events"),
         (
-            F.sum(F.col("value").cast("decimal(30,10)")).cast("double")
+            exact_sum(F.col("value"))
             / F.count("*")
         ).alias("avg_value"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
@@ -908,7 +904,7 @@ def incremental_daily_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     def partials(df: DataFrame) -> DataFrame:
         return df.groupBy(F.to_date("o_orderdate").alias("day")).agg(
             F.count("*").alias("n_orders"),
-            F.sum(F.col("o_totalprice").cast("decimal(30,10)")).alias(
+            F.sum(dec(F.col("o_totalprice"))).alias(
                 "revenue"
             ),
         )
@@ -947,7 +943,7 @@ def monthly_from_daily_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     orders = load_table(spark, sf_dir, "orders")
     daily = orders.groupBy(F.to_date("o_orderdate").alias("day")).agg(
         F.count("*").alias("n_orders"),
-        F.sum(F.col("o_totalprice").cast("decimal(30,10)")).alias("revenue"),
+        F.sum(dec(F.col("o_totalprice"))).alias("revenue"),
     )
     monthly = (
         daily.withColumn("month", F.trunc("day", "month"))
@@ -1079,7 +1075,6 @@ def event_value_ab_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     same operation order as the oracle."""
     events = load_table(spark, sf_dir, "events")
     in_a = F.col("user_id") % 2 == 0
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     s = events.groupBy("event_type").agg(
         F.count(F.when(in_a, 1)).alias("n_a"),
         F.count(F.when(~in_a, 1)).alias("n_b"),
@@ -1222,9 +1217,7 @@ def customer_rfm_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     base = orders.groupBy(F.col("o_custkey").alias("custkey")).agg(
         F.max(F.to_date("o_orderdate")).alias("last_order"),
         F.count("*").alias("frequency"),
-        F.sum(F.col("o_totalprice").cast("decimal(30,10)"))
-        .cast("double")
-        .alias("monetary"),
+        exact_sum(F.col("o_totalprice"), "monetary"),
     )
     scored = base.select(
         "custkey",
@@ -1344,19 +1337,18 @@ def lineitem_measure_correlations(spark: SparkSession, sf_dir: str) -> DataFrame
             "l_quantity", "l_extendedprice", "l_discount"
         )
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     q, p, d = F.col("l_quantity"), F.col("l_extendedprice"), F.col("l_discount")
     s = li.agg(
         F.count("*").alias("n"),
-        F.sum(dec(q)).cast("double").alias("sq"),
-        F.sum(dec(p)).cast("double").alias("sp"),
-        F.sum(dec(d)).cast("double").alias("sd"),
-        F.sum(dec(q * q)).cast("double").alias("sqq"),
-        F.sum(dec(p * p)).cast("double").alias("spp"),
-        F.sum(dec(d * d)).cast("double").alias("sdd"),
-        F.sum(dec(q * p)).cast("double").alias("sqp"),
-        F.sum(dec(q * d)).cast("double").alias("sqd"),
-        F.sum(dec(p * d)).cast("double").alias("spd"),
+        exact_sum(q, "sq"),
+        exact_sum(p, "sp"),
+        exact_sum(d, "sd"),
+        exact_sum(q * q, "sqq"),
+        exact_sum(p * p, "spp"),
+        exact_sum(d * d, "sdd"),
+        exact_sum(q * p, "sqp"),
+        exact_sum(q * d, "sqd"),
+        exact_sum(p * d, "spd"),
     )
     n = F.col("n")
 
@@ -1842,8 +1834,7 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     arms' covariate means coincide) and the per-arm variance-reduction
     fraction."""
     events = load_table(spark, sf_dir, "events")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    zero = F.lit(0).cast("decimal(30,10)")
+    zero = dec(F.lit(0))
     u = events.groupBy("user_id").agg(
         F.sum(
             F.when(F.col("event_type") == "view", dec(F.col("value"))).otherwise(zero)
@@ -1862,11 +1853,11 @@ def ab_test_cuped(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     arm = u.groupBy("in_a").agg(
         F.count("*").alias("n"),
-        F.sum(dec(F.col("x"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("y"))).cast("double").alias("sy"),
-        F.sum(dec(F.col("x") * F.col("y"))).cast("double").alias("sxy"),
-        F.sum(dec(F.col("x") * F.col("x"))).cast("double").alias("sxx"),
-        F.sum(dec(F.col("y") * F.col("y"))).cast("double").alias("syy"),
+        exact_sum(F.col("x"), "sx"),
+        exact_sum(F.col("y"), "sy"),
+        exact_sum(F.col("x") * F.col("y"), "sxy"),
+        exact_sum(F.col("x") * F.col("x"), "sxx"),
+        exact_sum(F.col("y") * F.col("y"), "syy"),
     )
     pool = arm.agg(
         F.sum("n").alias("pn"),
@@ -2042,8 +2033,7 @@ def ab_test_sprt(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "purchase"
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    zero = F.lit(0).cast("decimal(30,10)")
+    zero = dec(F.lit(0))
     in_a = F.col("user_id") % 2 == 0
     daily = events.groupBy(F.to_date("ts").alias("day")).agg(
         F.sum(F.when(in_a, 1).otherwise(0)).cast("bigint").alias("na"),
@@ -2148,7 +2138,6 @@ def daily_revenue_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``ISODOW``. Edge days average their partial frame on both engines
     (ROWS frame semantics). Rounded to 6dp."""
     orders = load_table(spark, sf_dir, "orders")
-    dec = lambda c: F.col(c).cast("decimal(30,10)")  # noqa: E731
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(exact_sum("o_totalprice").alias("rev"))
@@ -2170,7 +2159,7 @@ def daily_revenue_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.weekday("day") + F.lit(1)).alias("dow"),
     ).persist()
     seas = det.groupBy("dow").agg(
-        (F.sum(dec("detrended")).cast("double") / F.count("*")).alias(
+        (exact_sum("detrended") / F.count("*")).alias(
             "seasonal"
         )
     )
@@ -2254,27 +2243,28 @@ def daily_revenue_forecast_backtest(
         F.lag("rev", 1).over(w).alias("naive"),
         F.lag("rev", 7).over(w).alias("snaive"),
     ).filter(F.col("snaive").isNotNull()).persist()
-    dec = lambda c: c.cast("decimal(30,12)")  # noqa: E731
 
     def _metrics(fc: str, label: str) -> DataFrame:
         return scored.agg(
             F.lit(label).alias("model"),
             F.count("*").cast("bigint").alias("n_days"),
             F.round(
-                F.sum(dec(F.abs(F.col("rev") - F.col(fc)) / F.col("rev")))
-                .cast("double")
+                exact_sum(
+                    F.abs(F.col("rev") - F.col(fc)) / F.col("rev"),
+                    precision=30,
+                    scale=12,
+                )
                 / F.count("*"),
                 6,
             ).alias("mape"),
             F.round(
-                F.sum(
-                    dec(
-                        F.lit(2.0)
-                        * F.abs(F.col("rev") - F.col(fc))
-                        / (F.abs(F.col("rev")) + F.abs(F.col(fc)))
-                    )
+                exact_sum(
+                    F.lit(2.0)
+                    * F.abs(F.col("rev") - F.col(fc))
+                    / (F.abs(F.col("rev")) + F.abs(F.col(fc))),
+                    precision=30,
+                    scale=12,
                 )
-                .cast("double")
                 / F.count("*"),
                 6,
             ).alias("smape"),
@@ -2335,8 +2325,8 @@ def order_pit_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_custkey",
         F.count("*").over(w).cast("bigint").alias("prior_orders"),
         F.coalesce(
-            F.sum(F.col("o_totalprice").cast("decimal(30,10)")).over(w),
-            F.lit(0).cast("decimal(30,10)"),
+            F.sum(dec(F.col("o_totalprice"))).over(w),
+            dec(F.lit(0)),
         )
         .cast("double")
         .alias("prior_spend"),
@@ -2399,8 +2389,7 @@ def ab_test_uplift_deciles(spark: SparkSession, sf_dir: str) -> DataFrame:
     signal. One user-keyed shuffle for sufficient stats, one NTILE
     sort, then a 10-row frame. DECIMAL accumulation throughout."""
     events = load_table(spark, sf_dir, "events")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    zero = F.lit(0).cast("decimal(30,10)")
+    zero = dec(F.lit(0))
     u = events.groupBy("user_id").agg(
         F.sum(
             F.when(F.col("event_type") == "view", dec(F.col("value"))).otherwise(zero)
@@ -2489,7 +2478,6 @@ def customer_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL accumulation. Month-age is calendar year/month arithmetic,
     identical on both engines."""
     orders = load_table(spark, sf_dir, "orders")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     # persisted: the per-customer cohort frame feeds cohort sizes AND
     # the revenue-grid join — one orders scan per role (tests/PLAN_SHAPES.json)
     f = orders.groupBy(F.col("o_custkey").alias("ck")).agg(
@@ -2607,19 +2595,17 @@ def daily_revenue_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lag("rev", 7).over(w).alias("l7"),
         F.lag("rev", 28).over(w).alias("l28"),
     ).persist()
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
 
     def m_of(col: str, lag: int) -> DataFrame:
         s = lagged.filter(F.col(col).isNotNull())
         return s.agg(
             F.lit(lag).alias("lag"),
             F.count(col).alias("n"),
-            F.sum(dec(F.col("rev"))).cast("double").alias("sx"),
-            F.sum(dec(F.col(col))).cast("double").alias("sy"),
-            F.sum(decp(F.col("rev") * F.col(col))).cast("double").alias("sxy"),
-            F.sum(decp(F.col("rev") * F.col("rev"))).cast("double").alias("sxx"),
-            F.sum(decp(F.col(col) * F.col(col))).cast("double").alias("syy"),
+            exact_sum(F.col("rev"), "sx"),
+            exact_sum(F.col(col), "sy"),
+            exact_sum(F.col("rev") * F.col(col), "sxy", precision=38, scale=8),
+            exact_sum(F.col("rev") * F.col("rev"), "sxx", precision=38, scale=8),
+            exact_sum(F.col(col) * F.col(col), "syy", precision=38, scale=8),
         )
 
     m = (
@@ -2917,12 +2903,10 @@ def daily_revenue_cusum(spark: SparkSession, sf_dir: str) -> DataFrame:
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(exact_sum("o_totalprice").alias("rev")).persist()
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
     m = daily.agg(
         F.count("*").alias("n"),
-        F.sum(dec(F.col("rev"))).cast("double").alias("s"),
-        F.sum(decp(F.col("rev") * F.col("rev"))).cast("double").alias("ss"),
+        exact_sum(F.col("rev"), "s"),
+        exact_sum(F.col("rev") * F.col("rev"), "ss", precision=38, scale=8),
     )
     st = m.select(
         (F.col("s") / F.col("n")).alias("mu"),
@@ -3003,8 +2987,7 @@ def ab_test_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     sufficient statistics, unpivoted to long form, then a 6-row moment
     frame. DECIMAL accumulation; rounded to 6dp (sqrt ulp)."""
     events = load_table(spark, sf_dir, "events")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    zero = F.lit(0).cast("decimal(30,10)")
+    zero = dec(F.lit(0))
     u = events.groupBy("user_id").agg(
         F.sum(
             F.when(F.col("event_type") == "view", dec(F.col("value"))).otherwise(zero)
@@ -3024,8 +3007,8 @@ def ab_test_covariate_balance(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     m = long_.groupBy("covariate", "in_a").agg(
         F.count("*").alias("n"),
-        F.sum(dec(F.col("x"))).cast("double").alias("s"),
-        F.sum(dec(F.col("x") * F.col("x"))).cast("double").alias("ss"),
+        exact_sum(F.col("x"), "s"),
+        exact_sum(F.col("x") * F.col("x"), "ss"),
     )
     a = m.filter(F.col("in_a")).select(
         "covariate",
@@ -3282,7 +3265,6 @@ def hourly_traffic_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB ``ISODOW``, both engines' hour from the same µs-truncated
     timestamp); the share normalizer is a 1-row broadcast."""
     events = load_table(spark, sf_dir, "events")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     g = events.groupBy(
         (F.weekday("ts") + F.lit(1)).alias("dow"),
         F.hour("ts").alias("hr"),
@@ -3362,7 +3344,6 @@ def ab_test_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg -> 6-row stratum agg -> 1-row reduce; entirely map-side-
     combinable sufficient statistics, no attach, no window."""
     events = load_table(spark, sf_dir, "events")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
     u = events.groupBy("user_id").agg(
         F.sum((F.col("event_type") == "view").cast("int")).alias("n_views"),
         F.sum(
@@ -3560,14 +3541,12 @@ def daily_revenue_repeated_median(
     def _r6(v):
         return None if v is None else spark_round(v, 6)
 
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
     ols = daily.agg(
         F.count("*").alias("n"),
-        F.sum(dec(F.col("x"))).cast("double").alias("sx"),
-        F.sum(dec(F.col("y"))).cast("double").alias("sy"),
-        F.sum(decp(F.col("x") * F.col("y"))).cast("double").alias("sxy"),
-        F.sum(decp(F.col("x") * F.col("x"))).cast("double").alias("sxx"),
+        exact_sum(F.col("x"), "sx"),
+        exact_sum(F.col("y"), "sy"),
+        exact_sum(F.col("x") * F.col("y"), "sxy", precision=38, scale=8),
+        exact_sum(F.col("x") * F.col("x"), "sxx", precision=38, scale=8),
     )
     return ols.select(
         F.lit(n_days).cast("bigint").alias("n_days"),
@@ -3651,21 +3630,19 @@ def daily_revenue_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     1e12 magnitude, x*1e6 overflows 2^53 and DuckDB's multiply-based
     ROUND(x, 6) is not exact; x*100 is."""
     orders = load_table(spark, sf_dir, "orders")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    dbl2 = lambda c: c.cast("decimal(38,2)").cast("double")  # noqa: E731
     # persisted: the day spine feeds the 1-row total AND the cumulative curve
     daily = orders.groupBy(
         F.col("o_orderdate").cast("date").alias("day")
     ).agg(F.sum(dec(F.col("o_totalprice"))).alias("rev")).persist()
     tot = daily.agg(
         F.count("*").cast("bigint").alias("n"),
-        dbl2(F.sum(F.col("rev"))).alias("s"),
+        dec(F.sum(F.col("rev")), 38, 2).cast("double").alias("s"),
     )
     w = Window.orderBy("day").rowsBetween(Window.unboundedPreceding, 0)
     cum = daily.select(
         "day",
         F.row_number().over(Window.orderBy("day")).cast("bigint").alias("nl"),
-        dbl2(F.sum(F.col("rev")).over(w)).alias("cl"),
+        dec(F.sum(F.col("rev")).over(w), 38, 2).cast("double").alias("cl"),
     )
     ml = F.col("cl") / F.col("nl")
     mr = (F.col("s") - F.col("cl")) / (F.col("n") - F.col("nl"))
@@ -3848,8 +3825,7 @@ def ab_test_did(spark: SparkSession, sf_dir: str) -> DataFrame:
     final op); DiD is computed from the unrounded means then rounded
     to 6 alongside them."""
     events = load_table(spark, sf_dir, "events")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    zero = F.lit(0).cast("decimal(30,10)")
+    zero = dec(F.lit(0))
     p = events.filter(F.col("event_type") == "purchase").select(
         (F.col("user_id") % 2 == 0).alias("in_a"),
         (F.col("ts") >= F.lit("2024-01-16 00:00:00").cast("timestamp")).alias(
@@ -4117,7 +4093,7 @@ def events_raking_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def margin_sum(expr, win):
         return (
-            F.sum(F.round(expr, 9).cast("decimal(30,15)"))
+            F.sum(dec(F.round(expr, 9), 30, 15))
             .over(win)
             .cast("double")
         )
@@ -4258,8 +4234,6 @@ def daily_revenue_leadlag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         "rev",
         *[F.lead("cnt", k).over(w).alias(f"c{k}") for k in _XCORR_LAGS],
     ).persist()
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
 
     def m_of(k: int) -> DataFrame:
         c = F.col(f"c{k}")
@@ -4270,12 +4244,12 @@ def daily_revenue_leadlag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum(F.when(present, dec(F.col("rev"))))
             .cast("double")
             .alias("sx"),
-            F.sum(dec(c)).cast("double").alias("sy"),
-            F.sum(decp(F.col("rev") * c)).cast("double").alias("sxy"),
-            F.sum(F.when(present, decp(F.col("rev") * F.col("rev"))))
+            exact_sum(c, "sy"),
+            exact_sum(F.col("rev") * c, "sxy", precision=38, scale=8),
+            F.sum(F.when(present, dec(F.col("rev") * F.col("rev"), 38, 8)))
             .cast("double")
             .alias("sxx"),
-            F.sum(decp(c * c)).cast("double").alias("syy"),
+            exact_sum(c * c, "syy", precision=38, scale=8),
         )
 
     m = m_of(_XCORR_LAGS[0])
@@ -4349,12 +4323,10 @@ def monthly_revenue_gumbel(spark: SparkSession, sf_dir: str) -> DataFrame:
     mx = daily.groupBy(F.date_trunc("month", F.col("day")).alias("month")).agg(
         F.max("rev").alias("m")
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
     mo = mx.agg(
         F.count("*").alias("n"),
-        F.sum(dec(F.col("m"))).cast("double").alias("s"),
-        F.sum(decp(F.col("m") * F.col("m"))).cast("double").alias("ss"),
+        exact_sum(F.col("m"), "s"),
+        exact_sum(F.col("m") * F.col("m"), "ss", precision=38, scale=8),
     )
     mean = F.col("s") / F.col("n")
     sd = F.sqrt(F.col("ss") / F.col("n") - mean * mean)
@@ -4452,10 +4424,8 @@ def ab_test_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     orders = load_table(spark, sf_dir, "orders")
     cust = load_table(spark, sf_dir, "customer")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
-    zero = F.lit(0).cast("decimal(30,10)")
-    zerop = F.lit(0).cast("decimal(38,8)")
+    zero = dec(F.lit(0))
+    zerop = dec(F.lit(0), 38, 8)
     u = orders.join(
         F.broadcast(cust.select("c_custkey", "c_mktsegment")),
         orders.o_custkey == cust.c_custkey,
@@ -4474,10 +4444,10 @@ def ab_test_bh_fdr(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(~a, dec(F.col("v"))).otherwise(zero))
         .cast("double")
         .alias("sb"),
-        F.sum(F.when(a, decp(F.col("v") * F.col("v"))).otherwise(zerop))
+        F.sum(F.when(a, dec(F.col("v") * F.col("v"), 38, 8)).otherwise(zerop))
         .cast("double")
         .alias("qa"),
-        F.sum(F.when(~a, decp(F.col("v") * F.col("v"))).otherwise(zerop))
+        F.sum(F.when(~a, dec(F.col("v") * F.col("v"), 38, 8)).otherwise(zerop))
         .cast("double")
         .alias("qb"),
     )
@@ -4647,8 +4617,6 @@ def daily_revenue_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("rn") - F.col("blk") * F.col("size")).alias("pos"),
         )
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
     wb = Window.partitionBy("size", "blk")
     wbo = wb.orderBy("rn").rowsBetween(Window.unboundedPreceding, 0)
     cum = blocks.select(
@@ -4660,7 +4628,7 @@ def daily_revenue_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
             "mean"
         ),
         (
-            F.sum(decp(F.col("rev") * F.col("rev"))).over(wb).cast("double")
+            F.sum(dec(F.col("rev") * F.col("rev"), 38, 8)).over(wb).cast("double")
             / F.col("size")
         ).alias("m2"),
     )
@@ -4682,28 +4650,27 @@ def daily_revenue_hurst(spark: SparkSession, sf_dir: str) -> DataFrame:
     per_size = lnrs.groupBy("size").agg(
         F.count("y").cast("bigint").alias("n_blocks"),
         F.round(
-            F.sum(F.col("y").cast("decimal(30,15)")).cast("double")
+            exact_sum(F.col("y"), precision=30, scale=15)
             / F.count("y"),
             12,
         ).alias("mean_ln_rs"),
     )
     lx = F.round(F.log(F.col("size").cast("double")), 12)
     wg = Window.partitionBy()
-    d15 = "decimal(30,15)"
     reg = per_size.select(
         "size",
         "n_blocks",
         "mean_ln_rs",
         F.count("*").over(wg).alias("np"),
-        F.sum(lx.cast(d15)).over(wg).cast("double").alias("sx"),
-        F.sum(F.col("mean_ln_rs").cast(d15)).over(wg).cast("double").alias(
+        F.sum(dec(lx, 30, 15)).over(wg).cast("double").alias("sx"),
+        F.sum(dec(F.col("mean_ln_rs"), 30, 15)).over(wg).cast("double").alias(
             "sy"
         ),
-        F.sum(F.round(lx * F.col("mean_ln_rs"), 12).cast(d15))
+        F.sum(dec(F.round(lx * F.col("mean_ln_rs"), 12), 30, 15))
         .over(wg)
         .cast("double")
         .alias("sxy"),
-        F.sum(F.round(lx * lx, 12).cast(d15))
+        F.sum(dec(F.round(lx * lx, 12), 30, 15))
         .over(wg)
         .cast("double")
         .alias("sxx"),
@@ -4808,7 +4775,7 @@ def event_value_cvm_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("na").cast("double")
             * F.max("nb")
             / F.pow(F.max("na") + F.max("nb"), 2)
-            * F.sum(F.col("term").cast("decimal(30,15)")).cast("double"),
+            * exact_sum(F.col("term"), precision=30, scale=15),
             6,
         ).alias("cvm_t"),
     )
@@ -4916,19 +4883,18 @@ def retention_decay_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
         "retention",
         F.round(F.log("retention"), 12).alias("y"),
     )
-    d15 = "decimal(30,15)"
     reg = pts.select(
         "k",
         "n_active",
         "retention",
         F.count("*").over(wg).alias("np"),
-        F.sum(F.col("k").cast(d15)).over(wg).cast("double").alias("sx"),
-        F.sum(F.col("y").cast(d15)).over(wg).cast("double").alias("sy"),
-        F.sum(F.round(F.col("k") * F.col("y"), 12).cast(d15))
+        F.sum(dec(F.col("k"), 30, 15)).over(wg).cast("double").alias("sx"),
+        F.sum(dec(F.col("y"), 30, 15)).over(wg).cast("double").alias("sy"),
+        F.sum(dec(F.round(F.col("k") * F.col("y"), 12), 30, 15))
         .over(wg)
         .cast("double")
         .alias("sxy"),
-        F.sum((F.col("k") * F.col("k")).cast(d15))
+        F.sum(dec(F.col("k") * F.col("k"), 30, 15))
         .over(wg)
         .cast("double")
         .alias("sxx"),
@@ -5025,7 +4991,7 @@ def events_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
             12,
         ).alias("term"),
     )
-    ent = F.sum(F.col("term").cast("decimal(30,15)")).cast("double")
+    ent = exact_sum(F.col("term"), precision=30, scale=15)
     return t.agg(
         F.max("nn").cast("bigint").alias("n_transitions"),
         F.max("n_states").cast("bigint").alias("n_states"),
@@ -5102,8 +5068,6 @@ def orders_weekday_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     ROUND(x, 6) at those magnitudes overflows 2^53 in DuckDB's
     multiply-based rounding and is not exact."""
     orders = load_table(spark, sf_dir, "orders")
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    decp = lambda c: c.cast("decimal(38,8)")  # noqa: E731
     g = orders.groupBy(
         (F.weekday(F.col("o_orderdate").cast("date")) + F.lit(1)).alias(
             "dow"
@@ -5111,7 +5075,7 @@ def orders_weekday_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).agg(
         F.count("*").alias("n"),
         F.sum(dec(F.col("o_totalprice"))).alias("s_dec"),
-        F.sum(decp(F.col("o_totalprice") * F.col("o_totalprice"))).alias(
+        F.sum(dec(F.col("o_totalprice") * F.col("o_totalprice"), 38, 8)).alias(
             "ss_dec"
         ),
     )
@@ -5138,16 +5102,12 @@ def orders_weekday_anova(spark: SparkSession, sf_dir: str) -> DataFrame:
         "nn",
         "k",
         F.sum(
-            F.round(
-                F.col("n") * (mean_i - grand) * (mean_i - grand), 2
-            ).cast("decimal(38,2)")
+            dec(F.round(F.col("n") * (mean_i - grand) * (mean_i - grand), 2), 38, 2)
         )
         .over(wg)
         .alias("ssb"),
         F.sum(
-            F.round(
-                F.col("ss") - F.col("s") * F.col("s") / F.col("n"), 0
-            ).cast("decimal(38,0)")
+            dec(F.round(F.col("ss") - F.col("s") * F.col("s") / F.col("n"), 0), 38, 0)
         )
         .over(wg)
         .alias("ssw"),
@@ -5444,20 +5404,18 @@ def event_value_mann_whitney(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("c_b").over(wg).alias("nb"),
     )
     s = rk.groupBy("na", "nb").agg(
-        F.sum(
-            F.round(
-                F.col("c_a") * (F.col("k") - (F.col("c") - 1) / 2.0), 6
-            ).cast("decimal(38,6)")
-        )
-        .cast("double")
-        .alias("ra"),
-        F.sum(
-            (
-                F.col("c") * F.col("c") * F.col("c") - F.col("c")
-            ).cast("decimal(38,0)")
-        )
-        .cast("double")
-        .alias("tie3"),
+        exact_sum(
+            F.round(F.col("c_a") * (F.col("k") - (F.col("c") - 1) / 2.0), 6),
+            "ra",
+            precision=38,
+            scale=6,
+        ),
+        exact_sum(
+            F.col("c") * F.col("c") * F.col("c") - F.col("c"),
+            "tie3",
+            precision=38,
+            scale=0,
+        ),
     )
     nn = F.col("na") + F.col("nb")
     u_a = F.col("ra") - F.col("na") * (F.col("na") + 1) / 2.0
@@ -5585,11 +5543,11 @@ def ab_test_cmh_odds(spark: SparkSession, sf_dir: str) -> DataFrame:
             6,
         ).alias("stratum_or"),
         F.round(
-            F.sum(F.col("adn").cast("decimal(30,12)"))
+            F.sum(dec(F.col("adn"), 30, 12))
             .over(wg)
             .cast("double")
             / F.nullif(
-                F.sum(F.col("bcn").cast("decimal(30,12)"))
+                F.sum(dec(F.col("bcn"), 30, 12))
                 .over(wg)
                 .cast("double"),
                 F.lit(0.0),
@@ -5907,8 +5865,7 @@ def daily_revenue_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
             (((F.col("rn") - 1) % size2) < F.col("half")).alias("is_left"),
         )
     )
-    dec = lambda c: c.cast("decimal(30,10)")  # noqa: E731
-    zero = F.lit(0).cast("decimal(30,10)")
+    zero = dec(F.lit(0))
     coef = blocks.groupBy("half", "blk").agg(
         (
             (
@@ -5929,9 +5886,7 @@ def daily_revenue_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     lvl = coef.groupBy("half").agg(
         F.count("*").cast("bigint").alias("n_blocks"),
         (
-            F.sum(
-                F.round(F.col("d") * F.col("d"), 4).cast("decimal(38,6)")
-            ).cast("double")
+            exact_sum(F.round(F.col("d") * F.col("d"), 4), precision=38, scale=6)
             / F.count("*")
         ).alias("energy"),
     )
@@ -5942,7 +5897,7 @@ def daily_revenue_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("energy", 4).alias("mean_energy"),
         F.round(
             F.col("energy")
-            / F.sum(F.round(F.col("energy"), 4).cast("decimal(38,6)"))
+            / F.sum(dec(F.round(F.col("energy"), 4), 38, 6))
             .over(wg)
             .cast("double"),
             6,
@@ -6110,16 +6065,12 @@ def customer_interpurchase_cv(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").cast("bigint").alias("n_customers"),
             F.round(
-                F.sum(
-                    F.round(F.col("cv"), 9).cast("decimal(30,12)")
-                ).cast("double")
+                exact_sum(F.round(F.col("cv"), 9), precision=30, scale=12)
                 / F.count("*"),
                 6,
             ).alias("mean_cv"),
             F.round(
-                F.sum(
-                    F.round(F.col("mean_gap"), 9).cast("decimal(30,12)")
-                ).cast("double")
+                exact_sum(F.round(F.col("mean_gap"), 9), precision=30, scale=12)
                 / F.count("*"),
                 6,
             ).alias("mean_gap_days"),
@@ -6190,13 +6141,12 @@ def order_value_hill_tail(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(xk))
         .agg(
             F.count("*").alias("k"),
-            F.sum(
-                F.round(F.log(F.col("x") / F.col("xmin")), 12).cast(
-                    "decimal(30,15)"
-                )
-            )
-            .cast("double")
-            .alias("slog"),
+            exact_sum(
+                F.round(F.log(F.col("x") / F.col("xmin")), 12),
+                "slog",
+                precision=30,
+                scale=15,
+            ),
         )
     )
     return h.select(

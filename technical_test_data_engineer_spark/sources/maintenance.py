@@ -43,7 +43,7 @@ def _snapshot_dir(root: str, version: int | None = None) -> tuple[int, str]:
     if version is None:
         raise FileNotFoundError(
             f"no committed snapshot under {root} — publish before "
-            "upserting/compacting"
+            "upserting, compacting or forgetting keys"
         )
     vdir = os.path.join(root, f"_v{version}")
     if not os.path.isdir(vdir):
@@ -52,6 +52,19 @@ def _snapshot_dir(root: str, version: int | None = None) -> tuple[int, str]:
             "missing (GC'd or tampered) — the table root is corrupt"
         )
     return version, vdir
+
+
+def _carry_forward(
+    spark: SparkSession, vdir: str, tables: dict[str, DataFrame]
+) -> dict[str, DataFrame]:
+    """Adds every other table of the snapshot at ``vdir`` to ``tables``,
+    read as it is. ``publish_tables`` writes only the dict it is given
+    and flips the pointer for the whole store, so a table left out here
+    would silently vanish from the new snapshot."""
+    for other in sorted(os.listdir(vdir)):
+        if other not in tables and not other.startswith("."):
+            tables[other] = spark.read.parquet(os.path.join(vdir, other))
+    return tables
 
 
 def merge_upsert(base: DataFrame, updates: DataFrame, key_cols: list[str]) -> DataFrame:
@@ -210,11 +223,7 @@ def publish_upsert(
     _, vdir = _snapshot_dir(root, version)
     base = read_published(spark, root, name)
     merged = merge_upsert(base, updates, key_cols)
-    tables: dict[str, DataFrame] = {name: merged}
-    for other in os.listdir(vdir):
-        if other != name and not other.startswith("."):
-            tables[other] = spark.read.parquet(os.path.join(vdir, other))
-    return publish_tables(root, tables)
+    return publish_tables(root, _carry_forward(spark, vdir, {name: merged}))
 
 
 def compact_table(
@@ -230,11 +239,7 @@ def compact_table(
     incremental upserts."""
     _, vdir = _snapshot_dir(root)
     df = read_published(spark, root, name).coalesce(target_files)
-    tables: dict[str, DataFrame] = {name: df}
-    for other in os.listdir(vdir):
-        if other != name and not other.startswith("."):
-            tables[other] = spark.read.parquet(os.path.join(vdir, other))
-    return publish_tables(root, tables)
+    return publish_tables(root, _carry_forward(spark, vdir, {name: df}))
 
 
 def scd2_from_changelog(
@@ -333,22 +338,15 @@ def forget_keys(
     partitions whose min/max key ranges can contain the targets) —
     the anti-join shape is unchanged.
     """
+    _, vdir = _snapshot_dir(root)
     k = F.broadcast(keys.select(F.col("key")))
     new_snapshot = {}
-    # publish_tables writes ONLY the dict it is given and then flips
-    # the pointer for the WHOLE store — tables without a key column
-    # must be carried forward unchanged or the new snapshot silently
-    # loses them (a GDPR delete must never take an unrelated table
-    # offline)
-    cur = current_version(root)
-    vdir = os.path.join(root, f"_v{cur}")
-    for name in sorted(os.listdir(vdir)):
-        if name not in tables:
-            new_snapshot[name] = read_published(spark, root, name)
     for name, key_col in tables.items():
         df = read_published(spark, root, name)
         new_snapshot[name] = df.join(k, df[key_col] == k["key"], "left_anti")
-    return publish_tables(root, new_snapshot)
+    # tables without a key column are carried forward unchanged: a GDPR
+    # delete must never take an unrelated table offline
+    return publish_tables(root, _carry_forward(spark, vdir, new_snapshot))
 
 
 def expire_snapshots(root: str, keep_last: int = 2) -> list[int]:

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from technical_test_data_engineer_spark.functions.scalars import exact_sum
+
 
 def with_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
     """Normalize the event-time column (truncate to µs precision if the
@@ -50,9 +52,7 @@ def tumbling_rollup(
         F.window(ts_col, window).alias("win"), F.col(key_col)
     ).agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(30,10)"))
-        .cast("double")
-        .alias("total_value"),
+        exact_sum(F.col(value_col), "total_value"),
     ).select(
         F.col("win.start").alias("window_start"),
         key_col,
@@ -78,9 +78,7 @@ def sliding_rollup(
         F.window(ts_col, window, slide).alias("win"), F.col(key_col)
     ).agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(30,10)"))
-        .cast("double")
-        .alias("total_value"),
+        exact_sum(F.col(value_col), "total_value"),
     ).select(
         F.col("win.start").alias("window_start"),
         key_col,
@@ -108,9 +106,7 @@ def session_rollup(
         F.session_window(ts_col, gap).alias("win"), F.col(key_col)
     ).agg(
         F.count("*").alias("n_events"),
-        F.sum(F.col(value_col).cast("decimal(30,10)"))
-        .cast("double")
-        .alias("total_value"),
+        exact_sum(F.col(value_col), "total_value"),
     ).select(
         F.col("win.start").alias("session_start"),
         key_col,

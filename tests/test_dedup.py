@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 from technical_test_data_engineer_spark.operators.dedup import (
     exact_dedup,
     jaccard,
-    minhash_near_dup_pairs,
+    minhash_candidates,
     simhash_near_dup_pairs,
     word_shingles,
 )
@@ -43,7 +43,7 @@ def test_shingles_and_jaccard(spark):
 
 
 def test_minhash_finds_planted_near_dup(spark):
-    pairs = minhash_near_dup_pairs(_docs(spark), threshold=0.5)
+    pairs = minhash_candidates(_docs(spark), threshold=0.5)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert (1, 4) in got            # exact dup pair always collides
     assert (1, 2) in got            # planted near-dup (1 word of 18)
@@ -51,7 +51,7 @@ def test_minhash_finds_planted_near_dup(spark):
 
 
 def test_minhash_exact_dup_jaccard_is_one(spark):
-    pairs = minhash_near_dup_pairs(_docs(spark), threshold=0.5)
+    pairs = minhash_candidates(_docs(spark), threshold=0.5)
     j = {(r.id_a, r.id_b): r.jaccard for r in pairs.collect()}
     assert j[(1, 4)] == 1.0
 

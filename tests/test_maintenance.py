@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from technical_test_data_engineer_spark.sources.atomic import (
@@ -308,3 +309,13 @@ def test_forget_keys_carries_forward_unlisted_tables(spark, tmp_path):
     assert sorted(
         r["uid"] for r in read_published(spark, root, "users").collect()
     ) == [1]
+
+
+def test_forget_keys_on_unpublished_root_raises_labelled(spark, tmp_path):
+    from technical_test_data_engineer_spark.sources.maintenance import (
+        forget_keys,
+    )
+
+    keys = spark.createDataFrame([(2,)], "key long")
+    with pytest.raises(FileNotFoundError, match="no committed snapshot"):
+        forget_keys(spark, str(tmp_path / "store"), {"users": "uid"}, keys)

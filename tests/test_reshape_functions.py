@@ -1,12 +1,16 @@
 """R1/R2 date-spine and F1-F4 scalar semantics (inclusive arithmetic,
-literal typo repair) — the edge cases SURVEY.md §7 ranks hardest."""
+literal typo repair) — the edge cases SURVEY.md §7 ranks hardest — and
+the one home of the exact-sum convention in ``functions/scalars.py``."""
 
 from __future__ import annotations
 
+import ast
 import datetime as dt
+from pathlib import Path
 
 from pyspark.sql import functions as F
 
+import technical_test_data_engineer_spark
 from technical_test_data_engineer_spark.functions.scalars import (
     display_date,
     inclusive_duration_days,
@@ -50,3 +54,53 @@ def test_display_date(spark):
     df = spark.createDataFrame([("2023-08-15",)], "d string")
     out = df.select(display_date(F.to_date("d")).alias("x")).collect()[0].x
     assert out == "15/08/2023"
+
+
+_PKG = Path(technical_test_data_engineer_spark.__file__).parent
+
+
+def _decimal_casts(node: ast.AST) -> list[ast.Call]:
+    """Every ``<expr>.cast("decimal(...)")`` call under ``node``."""
+    return [
+        n
+        for n in ast.walk(node)
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr == "cast"
+        and n.args
+        and isinstance(n.args[0], ast.Constant)
+        and str(n.args[0].value).lower().startswith("decimal")
+    ]
+
+
+def test_exact_sum_convention_has_one_home():
+    """Plans reach the DECIMAL accumulator and the 1e10 long fold only
+    through ``functions/scalars`` (dec, exact_sum, scaled_long, unscale):
+    no lambda casts to decimal or scales by 1e10, and no ``F.sum`` argument
+    holds an inline decimal cast, anywhere else in the package."""
+    home = _PKG / "functions" / "scalars.py"
+    found = []
+    for path in sorted(_PKG.rglob("*.py")):
+        if path == home:
+            continue
+        where = path.relative_to(_PKG)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Lambda) and (
+                _decimal_casts(node.body)
+                or any(
+                    isinstance(n, ast.Constant) and n.value == 1e10
+                    for n in ast.walk(node.body)
+                )
+            ):
+                found.append(f"{where}:{node.lineno} lambda")
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "sum"
+                and isinstance(node.func.value, ast.Name)
+                and node.func.value.id == "F"
+                and node.args
+                and _decimal_casts(node.args[0])
+            ):
+                found.append(f"{where}:{node.lineno} F.sum")
+    assert not found, "\n".join(found)

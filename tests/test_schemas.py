@@ -9,7 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from technical_test_data_engineer_spark.operators.dedup import (
-    minhash_near_dup_pairs,
+    minhash_candidates,
     simhash_near_dup_pairs,
 )
 from technical_test_data_engineer_spark.schemas import STAR_SCHEMA
@@ -32,7 +32,7 @@ def test_declared_schemas_match_parquet(spark, sf_dir):
 
 def test_minhash_empty_input(spark):
     df = spark.createDataFrame([], "doc_id long, text string")
-    assert minhash_near_dup_pairs(df).count() == 0
+    assert minhash_candidates(df).count() == 0
 
 
 def test_simhash_empty_input(spark):
@@ -42,5 +42,5 @@ def test_simhash_empty_input(spark):
 
 def test_single_doc_no_pairs(spark):
     df = spark.createDataFrame([(1, "only one document here")], "doc_id long, text string")
-    assert minhash_near_dup_pairs(df).count() == 0
+    assert minhash_candidates(df).count() == 0
     assert simhash_near_dup_pairs(df).count() == 0
