@@ -19,9 +19,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from technical_test_data_engineer_spark.operators.bounded import collect_bounded
+
 START = "START"
 CONV = "CONV"
 DROP = "DROP"
+
+# the channel vocabulary a chain is solved over; the count matrix it
+# fetches holds at most (MAX_CHANNELS + 3)² (src, dst) cells
+MAX_CHANNELS = 100
 
 
 def journey_transition_counts(
@@ -92,11 +98,20 @@ def journey_transition_counts(
     )
 
 
+def fetch_transition_counts(events: DataFrame) -> list[dict]:
+    """``journey_transition_counts`` on the driver as (src, dst, n)
+    dicts, in no particular order: every consumer below sums integer
+    counts or reads one cell per (src, dst), so none depends on it."""
+    counts = journey_transition_counts(events)
+    bound = (MAX_CHANNELS + 3) ** 2
+    return collect_bounded(counts, bound, "journey transition counts").to_pylist()
+
+
 def channels_of(counts: list) -> list[str]:
     """Sorted channel vocabulary appearing in a collected count set."""
     return sorted(
-        {r.src for r in counts if r.src != START}
-        | {r.dst for r in counts if r.dst not in (CONV, DROP)}
+        {r["src"] for r in counts if r["src"] != START}
+        | {r["dst"] for r in counts if r["dst"] not in (CONV, DROP)}
     )
 
 
@@ -112,19 +127,19 @@ def absorption_probability(counts: list, kept: set[str]) -> float:
     n = len(trans)
     out = np.zeros(n)
     for r in counts:
-        if r.src in idx:
-            out[idx[r.src]] += r.n
+        if r["src"] in idx:
+            out[idx[r["src"]]] += r["n"]
     Q = np.zeros((n, n))
     R = np.zeros(n)
     for r in counts:
-        if r.src not in idx or out[idx[r.src]] == 0:
+        if r["src"] not in idx or out[idx[r["src"]]] == 0:
             continue
-        i = idx[r.src]
-        p = r.n / out[i]
-        if r.dst == CONV:
+        i = idx[r["src"]]
+        p = r["n"] / out[i]
+        if r["dst"] == CONV:
             R[i] += p
-        elif r.dst in idx:
-            Q[i, idx[r.dst]] += p
+        elif r["dst"] in idx:
+            Q[i, idx[r["dst"]]] += p
         # else: DROP, or a removed channel -> DROP (absorbed, p lost)
     if out[idx[START]] == 0:
         return 0.0

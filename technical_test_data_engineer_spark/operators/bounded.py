@@ -14,6 +14,11 @@ between Spark and the driver:
   from Arrow, where the JVM decodes the batches itself). The table is
   built here, so the path is the same whether or not the session
   enables Arrow.
+
+Every fetch in the query, operator and service layers (``plans/``,
+``operators/``, ``service.py``) goes through ``collect_bounded``;
+``tests/test_reshape_functions.py`` scans those layers for any other
+fetch call.
 """
 
 from __future__ import annotations

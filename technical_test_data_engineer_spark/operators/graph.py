@@ -32,7 +32,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from technical_test_data_engineer_spark.operators.bounded import local_frame
+from technical_test_data_engineer_spark.operators.bounded import (
+    collect_bounded,
+    local_frame,
+)
 
 
 def _large_star(sym: DataFrame) -> DataFrame:
@@ -151,7 +154,8 @@ def connected_components(
         # small-edge fast path: one collect + one broadcast join back
         # (see DRIVER_UNION_FIND_MAX_EDGES). Identical output contract:
         # component = min reachable id, isolated nodes label themselves.
-        comp = _driver_union_find((r["a"], r["b"]) for r in e.collect())
+        rows = collect_bounded(e, driver_max_edges, "connected_components edges")
+        comp = _driver_union_find((r["a"], r["b"]) for r in rows.to_pylist())
         if stats is not None:
             stats["rounds"] = 0
         spark = nodes.sparkSession
@@ -401,7 +405,9 @@ def bfs_hops(
     early-exits when the frontier drains.
 
     Returns (``node_col``, ``hops``) for every node reachable within
-    ``max_hops`` (seeds at hop 0).
+    ``max_hops`` (seeds at hop 0). An edge set of at most
+    ``driver_max_edges`` rows traverses on the driver, which then also
+    fetches the seed rows, at most ``driver_max_edges`` of them.
     """
     # checkpoint the edge list FIRST: every round joins against it, and
     # without materialization each round (plus each fixpoint probe)
@@ -420,11 +426,12 @@ def bfs_hops(
         # the hop table broadcast-joins back implicitly via
         # local_frame (it IS the result). Same output contract.
         adj: dict = {}
-        for r in e.collect():
+        for r in collect_bounded(e, driver_max_edges, "bfs_hops edges").to_pylist():
             adj.setdefault(r["u"], []).append(r["v"])
-        hops = {
-            r[node_col]: 0 for r in sources.select(node_col).collect()
-        }
+        seeds = collect_bounded(
+            sources.select(node_col), driver_max_edges, "bfs_hops seeds"
+        )
+        hops = {v: 0 for v in seeds.column(node_col).to_pylist()}
         frontier_ids = list(hops)
         for h in range(1, max_hops + 1):
             nxt = []
@@ -436,14 +443,9 @@ def bfs_hops(
             if not nxt:
                 break
             frontier_ids = nxt
-        spark = edges.sparkSession
-        if hops:
-            out = local_frame(
-                spark, list(hops.items()), f"{node_col} long, hops int"
-            )
-        else:
-            out = local_frame(spark, [], f"{node_col} long, hops int")
-        return out
+        return local_frame(
+            edges.sparkSession, list(hops.items()), f"{node_col} long, hops int"
+        )
     visited = (
         sources.select(F.col(node_col).alias("u"))
         .distinct()
@@ -512,7 +514,7 @@ def k_core(
         # latency; a bounded symmetric edge set peels on the driver.
         # Same output contract (surviving nodes + in-core degree).
         adj: dict = {}
-        for r in e.collect():
+        for r in collect_bounded(e, driver_max_edges, "k_core edges").to_pylist():
             adj.setdefault(r["u"], set()).add(r["v"])
         changed = True
         while changed:
@@ -523,16 +525,11 @@ def k_core(
                     if nb is not None:
                         nb.discard(u)
                 changed = True
-        spark = edges.sparkSession
-        if adj:
-            out = local_frame(
-                spark,
-                [(u, len(nb)) for u, nb in adj.items()],
-                "node long, degree long",
-            )
-        else:
-            out = local_frame(spark, [], "node long, degree long")
-        return out
+        return local_frame(
+            edges.sparkSession,
+            [(u, len(nb)) for u, nb in adj.items()],
+            "node long, degree long",
+        )
     for _ in range(max_iter):
         deg = e.groupBy("u").agg(F.count("*").alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("u")

@@ -39,7 +39,15 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from technical_test_data_engineer_spark.operators.bounded import local_frame
+from technical_test_data_engineer_spark.operators.bounded import (
+    collect_bounded,
+    local_frame,
+)
+
+# the widest vector the moment fold serves: its D(D+1)/2 + D moment rows
+# (525,824 at D = 1024, about 20 MB) are fetched to the driver
+MAX_DIM = 1024
+_MAX_MOMENT_ROWS = MAX_DIM * (MAX_DIM + 1) // 2 + MAX_DIM
 
 
 def covariance_matrix(
@@ -64,17 +72,14 @@ def covariance_matrix(
     (float(Σp)/1e10, then (sxy − si·sj/n)/(n−1)), so every cov double
     is bit-identical; per-term parity with Spark ROUND is the
     round_half_up_1e10 guarantee (tests/test_linalg.py). Raggedness,
-    n < 2 and int64 overflow fail loud exactly like pca_components."""
-    rows = _moment_agg(df, vec_col, id_col).collect()
+    n < 2, int64 overflow and vectors wider than ``MAX_DIM`` fail loud
+    exactly like pca_components."""
+    rows = _moment_agg(df, vec_col, id_col, "covariance_matrix")
     spark = df.sparkSession
     schema = "i int, j int, cov double"
     if not rows:
         return local_frame(spark, [], schema)
-    n, d = _validate_moments(rows, "covariance_matrix")
-    s = np.zeros(d)
-    for r in rows:
-        if r["j"] == -1:
-            s[r["i"]] = float(r["_s"]) / 1e10
+    n, s = _validate_moments(rows, "covariance_matrix")
     out = [
         (
             int(r["i"]),
@@ -132,14 +137,16 @@ round_half_up_1e10 = _half_up_rounder()
 
 
 def _moment_agg(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
+    df: DataFrame, vec_col: str, id_col: str, label: str
+) -> list[dict]:
     """The shared one-action Arrow moment fold (r13, factored out of
     pca_components in r15 so covariance_matrix rides it too): each task
     reduces its Arrow batches to D(D+1)/2 + D integer partial sums in
-    numpy, the final aggregate is D²-bounded. Returns (i, j, _s, _m,
-    _c) with j = -1 sentinel rows carrying the first moments. See
-    pca_components for the exactness/raggedness/overflow discussion."""
+    numpy, the final aggregate is D²-bounded. Returns its rows, at most
+    ``_MAX_MOMENT_ROWS`` and fetched in no particular order (each is
+    keyed by (i, j)), as (i, j, _s, _m, _c) dicts with j = -1 sentinel
+    rows carrying the first moments. See pca_components for the
+    exactness/raggedness/overflow discussion."""
     from technical_test_data_engineer_spark.operators.partitioning import (
         fan_out,
     )
@@ -211,7 +218,7 @@ def _moment_agg(
                 }
             )
 
-    return (
+    moments = (
         dfp.mapInPandas(
             _partial_fold, "i int, j int, p long, pm long, pc long"
         )
@@ -222,12 +229,15 @@ def _moment_agg(
             F.sum("pc").alias("_c"),
         )
     )
+    return collect_bounded(
+        moments, _MAX_MOMENT_ROWS, f"{label} moments"
+    ).to_pylist()
 
 
-def _validate_moments(rows, label: str) -> tuple[int, int]:
+def _validate_moments(rows, label: str) -> tuple[int, np.ndarray]:
     """Uniformity, n ≥ 2 and int64-overflow checks on the collected
     D²-bounded moment rows (shared by pca_components /
-    covariance_matrix). Returns (n, d)."""
+    covariance_matrix). Returns n and the D first-moment sums s."""
     n_lo = min(r["_c"] for r in rows)
     n = max(r["_c"] for r in rows)
     if n_lo != n:
@@ -245,8 +255,14 @@ def _validate_moments(rows, label: str) -> tuple[int, int]:
             f"{label}: integer-scaled fold may exceed int64 at n={n} — "
             "rescale or shard the corpus"
         )
-    d = max(r["i"] for r in rows) + 1
-    return int(n), int(d)
+    s = np.zeros(max(r["i"] for r in rows) + 1)
+    # float(_s) FIRST, then /1e10 — the old path was Spark
+    # cast(long AS double) / 1e10, and Python's exact-int division
+    # could differ by an ulp past 2^53
+    for r in rows:
+        if r["j"] == -1:
+            s[r["i"]] = float(r["_s"]) / 1e10
+    return int(n), s
 
 
 def pca_components(
@@ -277,21 +293,16 @@ def pca_components(
     # partial sums, whose addition is associative, so mean/cov/eigh
     # cannot depend on partition order (numpy-parity tests pin it).
     # First moments keep the j = -1 sentinel; the final (i, j)
-    # aggregate is D²-bounded. Ragged/null vectors, n < 2 and int64
-    # overflow fail loud in _validate_moments.
-    rows = _moment_agg(df, vec_col, id_col).collect()
+    # aggregate is D²-bounded, and a vector wider than MAX_DIM fails the
+    # fetch. Ragged/null vectors, n < 2 and int64 overflow fail loud in
+    # _validate_moments.
+    rows = _moment_agg(df, vec_col, id_col, "pca_components")
     if not rows:
         raise ValueError(
             "pca_components: empty corpus (no embedding rows to factor)"
         )
-    n, d = _validate_moments(rows, "pca_components")
-    s = np.zeros(d)
-    # float(_s) FIRST, then /1e10 — the old path was Spark
-    # cast(long AS double) / 1e10, and Python's exact-int division
-    # could differ by an ulp past 2^53
-    for r in rows:
-        if r["j"] == -1:
-            s[r["i"]] = float(r["_s"]) / 1e10
+    n, s = _validate_moments(rows, "pca_components")
+    d = len(s)
     mean = s / n
     cov = np.zeros((d, d))
     for r in rows:

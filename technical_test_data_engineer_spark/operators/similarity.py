@@ -45,6 +45,7 @@ from pyspark.sql.types import (
 from pyspark.sql.window import Window
 
 from technical_test_data_engineer_spark.functions.scalars import dec, scaled_long
+from technical_test_data_engineer_spark.operators.bounded import collect_bounded
 from technical_test_data_engineer_spark.operators.partitioning import fan_out
 
 
@@ -442,20 +443,26 @@ def _lloyd(X: np.ndarray, C: np.ndarray, n_iter: int) -> np.ndarray:
 def _train_matrix(
     corpus: DataFrame, id_col: str, vec_col: str, max_train_vectors: int
 ) -> np.ndarray:
-    """Deterministic ≤ ~``max_train_vectors`` training subsample via
+    """Deterministic ≤ ``max_train_vectors`` training subsample via
     ``xxhash64(id) % stride`` (hash, not raw id, so sparse/offset id
-    spaces still sample at the intended rate), fetched as a float64
-    (rows × dim) matrix. Undersample guarding happens in the trainers,
-    which know their k."""
+    spaces still sample at the intended rate), fetched in id order as a
+    float64 (rows × dim) matrix: the trainers' seeding picks rows by
+    index, so the order is part of the answer. The stride keeps about
+    n / stride ≤ ``max_train_vectors`` rows, not at most that many, so
+    the sample is then cut to its ``max_train_vectors`` lowest ids.
+    Undersample guarding happens in the trainers, which know their k."""
     n = corpus.count()
     if n > max_train_vectors:
         stride = -(-n // max_train_vectors)  # ceil → ~max_train_vectors kept
-        corpus = corpus.filter(
-            F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0
+        corpus = (
+            corpus.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0)
+            .orderBy(id_col)
+            .limit(max_train_vectors)
         )
-    return np.array(
-        [list(r[0]) for r in corpus.select(vec_col).collect()], dtype=np.float64
-    )
+    sample = collect_bounded(
+        corpus.select(id_col, vec_col), max_train_vectors, "training sample"
+    ).sort_by(id_col)
+    return np.array(sample.column(vec_col).to_pylist(), dtype=np.float64)
 
 
 def _unit_rows(C: np.ndarray) -> np.ndarray:
@@ -833,6 +840,11 @@ def ivfpq_encode_udf(centroids, codebooks: np.ndarray):
     return _encode
 
 
+# the query batch ivfpq_topk fetches to the driver: each Arrow batch
+# scores into a (rows × queries) matrix, 80 MB at 10k rows × 1,024
+MAX_ADC_QUERIES = 1_024
+
+
 def ivfpq_topk(
     corpus: DataFrame,
     queries: DataFrame,
@@ -855,8 +867,9 @@ def ivfpq_topk(
     up to quantization error; one LUT per query since codebooks are
     global). Driver-side per query: a (K,) cell-offset row, a probe
     mask, and an (m × n_codes) LUT — all O(queries), broadcast in the
-    UDF closure. Corpus-side: ONE scan over (cell, codes), scoring +
-    per-partition top-``max(k, rerank)`` fused in one ``mapInPandas``:
+    UDF closure, for at most ``MAX_ADC_QUERIES`` queries. Corpus-side:
+    ONE scan over (cell, codes), scoring + per-partition
+    top-``max(k, rerank)`` fused in one ``mapInPandas``:
     the (rows × queries) score matrix lives only inside each Arrow
     batch, unprobed rows are masked out before any candidate frame
     materializes, and each partition emits at most max(k, rerank) ×
@@ -874,9 +887,13 @@ def ivfpq_topk(
     m, n_codes, sub = books.shape
     n_probe = min(n_probe, len(C))
 
-    q_rows = queries.select(id_col, vec_col).collect()
-    q_ids = pd.Series([r[0] for r in q_rows])
-    Q = np.vstack([np.asarray(r[1], dtype=np.float64) for r in q_rows])
+    # each query is scored and ranked on its own, so the fetch order of
+    # the query rows does not matter
+    q_rows = collect_bounded(
+        queries.select(id_col, vec_col), MAX_ADC_QUERIES, "ivfpq_topk queries"
+    )
+    q_ids = pd.Series(q_rows.column(id_col).to_pylist())
+    Q = np.array(q_rows.column(vec_col).to_pylist(), dtype=np.float64)
     n_q = len(q_ids)
     cell_sims = Q @ _unit_rows(C).T  # probe choice: same metric as assignment
     probe_rank = np.argsort(-cell_sims, axis=1, kind="stable")[:, :n_probe]

@@ -14,7 +14,10 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from technical_test_data_engineer_spark.functions.hof import bind
-from technical_test_data_engineer_spark.operators.bounded import local_frame
+from technical_test_data_engineer_spark.operators.bounded import (
+    collect_bounded,
+    local_frame,
+)
 
 # Deterministic marker vocabularies for the heuristic language scorer.
 # The test corpus is an engine-vocabulary word soup (FIXTURES.md), so
@@ -377,8 +380,8 @@ def dsir_importance_weights(
     Scale: feature explode is scan-side; the two bucket-count aggs are
     partial+final over ≤ ``n_buckets`` groups; the log-ratio table is
     ≤ ``n_buckets`` rows → broadcast; per-doc scoring is one keyed agg.
-    The two ``count()`` actions produce scalar totals (bounded driver
-    data, S6-contract). Per-feature log-ratios are rounded to 9dp and
+    One 1-row ``collect_bounded`` fetch brings the two scalar totals
+    to the driver. Per-feature log-ratios are rounded to 9dp and
     summed in DECIMAL so doc weights are order-independent and match
     the oracle despite libm-vs-JVM last-ulp differences (the
     doc_unigram_logprob convention).
@@ -426,8 +429,8 @@ def dsir_importance_weights(
     # table so the scoring plan reuses it instead of re-exploding the
     # corpus a third time
     model = model.persist(StorageLevel.MEMORY_AND_DISK)
-    totals = model.agg(F.sum("_rc"), F.sum("_tc")).first()
-    n_raw, n_tgt = int(totals[0]), int(totals[1])
+    totals = model.agg(F.sum("_rc"), F.sum("_tc"))
+    n_raw, n_tgt = collect_bounded(totals, 1, "DSIR totals").to_pylist()[0].values()
     ratio = model.select(
         "_b",
         F.round(

@@ -19,7 +19,10 @@ from technical_test_data_engineer_spark.functions.scalars import (
     scaled_long,
     unscale,
 )
-from technical_test_data_engineer_spark.operators.bounded import local_frame
+from technical_test_data_engineer_spark.operators.bounded import (
+    collect_bounded,
+    local_frame,
+)
 from technical_test_data_engineer_spark.plans.star_queries import _decsum, query
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
 
@@ -2918,32 +2921,26 @@ def order_value_conformal(spark: SparkSession, sf_dir: str) -> DataFrame:
     ab = fit.select("n", b.alias("b"), ((F.col("sy") - b * F.col("sx")) / F.col("n")).alias("a"))
     # bounded collect #1 (1 row): a/b are Spark-computed doubles; the
     # literal re-embeds the exact bits the broadcast column carried
-    fit_row = ab.collect()[0]
+    fit_row = collect_bounded(ab, 1, "order_value_conformal fit").to_pylist()[0]
     a_l = F.lit(fit_row["a"]).cast("double")
     b_l = F.lit(fit_row["b"]).cast("double")
     resid = F.abs(F.col("y") - (a_l + b_l * F.col("x")))
     # bounded collect #2 (1 row): q90 from the interpreted percentile
     # aggregate, now executed exactly once
-    cal_row = (
-        feat.filter((F.col("bucket") >= 80) & (F.col("bucket") < 90))
-        .agg(
-            F.count("*").alias("n_cal"),
-            F.percentile(resid, F.lit(0.9)).alias("q90"),
-        )
-        .collect()[0]
+    cal = feat.filter((F.col("bucket") >= 80) & (F.col("bucket") < 90)).agg(
+        F.count("*").alias("n_cal"),
+        F.percentile(resid, F.lit(0.9)).alias("q90"),
     )
+    cal_row = collect_bounded(cal, 1, "order_value_conformal q90").to_pylist()[0]
     q90_l = F.lit(cal_row["q90"]).cast("double")
-    test_row = (
-        feat.filter(F.col("bucket") >= 90)
-        .agg(
-            F.count("*").alias("n_test"),
-            (
-                F.sum(F.when(resid <= q90_l, 1).otherwise(0)).cast("double")
-                / F.count("*")
-            ).alias("coverage"),
-        )
-        .collect()[0]
+    test = feat.filter(F.col("bucket") >= 90).agg(
+        F.count("*").alias("n_test"),
+        (
+            F.sum(F.when(resid <= q90_l, 1).otherwise(0)).cast("double")
+            / F.count("*")
+        ).alias("coverage"),
     )
+    test_row = collect_bounded(test, 1, "order_value_conformal test").to_pylist()[0]
     # 1-row assembly; rounds stay JVM-side (HALF_UP), same as before
     return spark.range(1).select(
         F.lit(fit_row["n"]).cast("bigint").alias("n_train"),
@@ -6042,6 +6039,12 @@ def segment_growth_contribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("segment")
 
 
+# supplier_bradley_terry's pair-count fetch ceiling: C(|supplier|, 2) at
+# sf1's 10,000 suppliers (~1.6 GB), the scale its docstring calls the
+# limit of the driver-side solve
+_BT_MAX_PAIRS = 10_000 * 9_999 // 2
+
+
 @query(
     "supplier_bradley_terry",
     """
@@ -6232,11 +6235,15 @@ def supplier_bradley_terry(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("w2").alias("wins2"),
     )
     # bounded collect — C(|supplier|, 2) rows max (499,500 / ~20 MB at
-    # sf0.1): the whole MM solve below is pair-matrix-sized, so it runs
-    # driver-side off this ONE Arrow fetch (see docstring)
+    # sf0.1), fetched up to the docstring's sf1 ceiling: the whole MM
+    # solve below is pair-matrix-sized, so it runs driver-side off this
+    # ONE Arrow fetch (see docstring). Every sum below is exact, so the
+    # fetch order does not matter.
     from pyspark.sql import types as T
 
-    pdf = pair_u.toPandas()
+    pdf = collect_bounded(
+        pair_u, _BT_MAX_PAIRS, "supplier_bradley_terry pair counts"
+    ).to_pandas()
     key_type = li.schema["l_suppkey"].dataType
     out_schema = T.StructType(
         [

@@ -10,7 +10,10 @@ from pyspark.sql.window import Window
 
 from technical_test_data_engineer_spark.functions.hof import bind
 from technical_test_data_engineer_spark.functions.scalars import dec, exact_sum
-from technical_test_data_engineer_spark.operators.bounded import local_frame
+from technical_test_data_engineer_spark.operators.bounded import (
+    collect_bounded,
+    local_frame,
+)
 from technical_test_data_engineer_spark.operators import text as TX
 from technical_test_data_engineer_spark.operators.text import md5_bucket
 from technical_test_data_engineer_spark.plans.star_queries import query
@@ -1254,13 +1257,14 @@ def doc_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("id") <= 100)
         .select("term", "id")
     )
-    vocab_rows = vocab.collect()  # bounded: exactly <=100 rows
+    # the map literal lists its entries in id order, as the window emits
+    # them; the fetch does not promise that order, so sort
+    vocab_rows = sorted(
+        collect_bounded(vocab, 100, "doc_token_ids vocabulary").to_pylist(),
+        key=lambda r: r["id"],
+    )
     vmap = F.create_map(
-        *[
-            lit
-            for r in vocab_rows
-            for lit in (F.lit(r["term"]), F.lit(int(r["id"])))
-        ]
+        *[lit for r in vocab_rows for lit in (F.lit(r["term"]), F.lit(r["id"]))]
     )
 
     def _ids(t: Column) -> Column:

@@ -9,7 +9,10 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from technical_test_data_engineer_spark.functions.scalars import dec, exact_sum
-from technical_test_data_engineer_spark.operators.bounded import local_frame
+from technical_test_data_engineer_spark.operators.bounded import (
+    collect_bounded,
+    local_frame,
+)
 from technical_test_data_engineer_spark.operators.joins import asof_join
 from technical_test_data_engineer_spark.plans.star_queries import _decsum, query
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
@@ -1669,11 +1672,10 @@ def channel_removal_effect(spark: SparkSession, sf_dir: str) -> DataFrame:
     from technical_test_data_engineer_spark.operators.attribution import (
         absorption_probability,
         channels_of,
-        journey_transition_counts,
+        fetch_transition_counts,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    counts = journey_transition_counts(ev).collect()  # vocab-bounded
+    counts = fetch_transition_counts(load_table(spark, sf_dir, "events"))
     channels = channels_of(counts)
     p_full = absorption_probability(counts, set(channels))
     effects = [
@@ -1730,11 +1732,10 @@ def channel_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     from technical_test_data_engineer_spark.operators.attribution import (
         absorption_probability,
         channels_of,
-        journey_transition_counts,
+        fetch_transition_counts,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    counts = journey_transition_counts(ev).collect()  # vocab-bounded
+    counts = fetch_transition_counts(load_table(spark, sf_dir, "events"))
     channels = channels_of(counts)
     k = len(channels)
     if k > SHAPLEY_MAX_CHANNELS:
@@ -2722,15 +2723,14 @@ def channel_conversion_k8(spark: SparkSession, sf_dir: str) -> DataFrame:
     from technical_test_data_engineer_spark.operators.attribution import (
         CONV,
         DROP,
-        journey_transition_counts,
+        fetch_transition_counts,
     )
 
-    ev = load_table(spark, sf_dir, "events")
     # bounded collect — the removal-effect/CC discipline: the transition
     # relation is channel-vocabulary-sized, and 8 recursion steps as
     # Spark jobs are pure scheduler latency (measured 12-19 s for ~30
     # rows); the DISTRIBUTED work is journey_transition_counts
-    counts = journey_transition_counts(ev).collect()
+    counts = fetch_transition_counts(load_table(spark, sf_dir, "events"))
     tot: dict[str, int] = {}
     for r in counts:
         tot[r["src"]] = tot.get(r["src"], 0) + r["n"]
@@ -3391,6 +3391,11 @@ def ab_test_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# daily_revenue_repeated_median's day-frame ceiling: its docstring's
+# ~4 GB driver peak at 10k days (about 27 years of daily grain)
+_REPMED_MAX_DAYS = 10_000
+
+
 @query(
     "daily_revenue_repeated_median",
     f"""
@@ -3493,7 +3498,11 @@ def daily_revenue_repeated_median(
         .agg(exact_sum("o_totalprice").alias("y"))
         .persist()
     )
-    pdf = daily.toPandas()  # calendar-bounded collect (see docstring)
+    # calendar-bounded collect (see docstring); every median below
+    # sorts first, so the fetch order does not matter
+    pdf = collect_bounded(
+        daily, _REPMED_MAX_DAYS, "daily_revenue_repeated_median days"
+    ).to_pandas()
     xs = pdf["x"].to_numpy(dtype=np.int64)
     ys = pdf["y"].to_numpy(dtype=np.float64)
     d = len(xs)

@@ -47,13 +47,14 @@ from technical_test_data_engineer_spark.operators.bounded import (
 from technical_test_data_engineer_spark.operators.relational import (
     point_in_interval,
 )
-from technical_test_data_engineer_spark.sources.catalog import collect_dict
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
 
 # construction bounds of the driver-side relations: the nation
-# dimension, and nations × priority levels (TPC-H: 25 × 5, plus NULL)
+# dimension, the priority levels, and nations × priority levels
+# (TPC-H: 25 × 5, plus NULL)
 _MAX_NATIONS = 1_000
-_MAX_DAY_GROUPS = _MAX_NATIONS * 100
+_MAX_PRIORITIES = 100
+_MAX_DAY_GROUPS = _MAX_NATIONS * _MAX_PRIORITIES
 
 _PLOT1_SCHEMA = "o_orderpriority string, nb_customers long not null"
 _PLOT2_SCHEMA = (
@@ -126,8 +127,8 @@ class QueryService:
     # -- widget helpers (S6/S7) ------------------------------------------
 
     def date_bounds(self) -> tuple[dt.date, dt.date]:
-        row = self.prepare().agg(F.min("debut"), F.max("fin")).collect()[0]
-        return row[0], row[1]
+        span = self.prepare().agg(F.min("debut"), F.max("fin"))
+        return tuple(collect_bounded(span, 1, "date bounds").to_pylist()[0].values())
 
     def priority_legend(self) -> dict:
         df = (
@@ -136,14 +137,15 @@ class QueryService:
             .count()
             .orderBy("o_orderpriority")
         )
-        return collect_dict(df, "o_orderpriority", "count")
+        rows = collect_bounded(df, _MAX_PRIORITIES, "priority legend").to_pylist()
+        return {r["o_orderpriority"]: r["count"] for r in rows}
 
     def nation_options(self) -> list[str]:
         """Distinct nation names of the fact, sorted: one global
         aggregate (``collect_set`` skips a NULL name, which the nation
         dimension never holds)."""
-        names = self.prepare().agg(F.collect_set("n_name")).collect()[0][0]
-        return sorted(names)
+        names = self.prepare().agg(F.collect_set("n_name"))
+        return sorted(collect_bounded(names, 1, "nation options").column(0)[0].as_py())
 
     # -- E3: the four plot queries ---------------------------------------
 

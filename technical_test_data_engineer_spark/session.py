@@ -47,6 +47,16 @@ DEFAULT_CONFS: dict[str, str] = {
 }
 
 
+def driver_memory() -> str:
+    """The driver heap: ``SPARK_GRAFT_DRIVER_MEM`` when set, else half the
+    box's physical memory, capped at 32g. A 32g heap on a 16 GB box lets
+    the JVM grow until the kernel kills it instead of collecting."""
+    if "SPARK_GRAFT_DRIVER_MEM" in os.environ:
+        return os.environ["SPARK_GRAFT_DRIVER_MEM"]
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") >> 20
+    return f"{min(phys_mb // 2, 32 << 10)}m"
+
+
 def get_spark(
     app_name: str = "technical_test_data_engineer_spark",
     master: str | None = None,
@@ -66,9 +76,7 @@ def get_spark(
     confs = dict(DEFAULT_CONFS)
     # local mode runs every task in the driver JVM; the 1g default heap
     # starves 32 executor threads. Only effective before JVM launch.
-    confs.setdefault(
-        "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g")
-    )
+    confs["spark.driver.memory"] = driver_memory()
     if shuffle_partitions is not None:
         confs["spark.sql.shuffle.partitions"] = str(shuffle_partitions)
     if extra_confs:

@@ -1,8 +1,10 @@
-"""Catalog helpers (SURVEY.md S5-S7).
+"""Catalog helpers (SURVEY.md S5).
 
 Reference: SQLAlchemy ``MetaData().reflect`` existence check
-(/root/reference/tasks/visualization/src/visualization.py:64-73) and
-driver-side dict collection for UI legends (visualization.py:52).
+(/root/reference/tasks/visualization/src/visualization.py:64-73). The
+reference's driver-side dict for UI legends (visualization.py:52) is
+``service.QueryService.priority_legend``, fetched through
+``operators/bounded.collect_bounded``.
 """
 
 from __future__ import annotations
@@ -24,12 +26,6 @@ def register_star(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     for name, df in tables.items():
         df.createOrReplaceTempView(name)
     return tables
-
-
-def collect_dict(df: DataFrame, key_col: str, val_col: str) -> dict:
-    """Small-result action: 2-col frame → driver dict (SURVEY.md S6,
-    visualization.py:52). Only valid for driver-bound small results."""
-    return {r[0]: r[1] for r in df.select(key_col, val_col).collect()}
 
 
 def session_table_name(spark: SparkSession, base: str) -> str:

@@ -3,31 +3,15 @@
 The reference fetches CSV over HTTP into one in-memory string, then
 ``pd.read_csv`` with full dtype inference
 (/root/reference/tasks/scraper/src/utils/utils.py:5-20). The engine
-equivalent: fetch to a staging path (driver- or distcp-side), then a
-parallel ``spark.read.csv`` — schema declared when known (one pass),
-inferred only for exploration (two passes over the data).
+equivalent reads a staged path with a parallel ``spark.read.csv`` —
+schema declared when known (one pass), inferred only for exploration
+(two passes over the data).
 """
 
 from __future__ import annotations
 
-import urllib.request
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
-
-
-def fetch_to_staging(url: str, staging_path: str, timeout: float = 60.0) -> str:
-    """Download ``url`` to ``staging_path`` (driver-side, for small dims).
-
-    For 100 TB-scale ingest the fetch itself must be distributed (many
-    files / ranged GETs on executors); this helper covers the reference's
-    actual use case — two small open-data CSVs.
-    """
-    with urllib.request.urlopen(url, timeout=timeout) as resp:  # noqa: S310
-        body = resp.read()
-    with open(staging_path, "wb") as f:
-        f.write(body)
-    return staging_path
 
 
 def read_csv(

@@ -7,6 +7,7 @@ import numpy as np
 import pytest
 
 from technical_test_data_engineer_spark.operators.linalg import (
+    MAX_DIM,
     covariance_matrix,
     pca_components,
     pca_project,
@@ -87,6 +88,18 @@ def test_moments_reject_single_vector_corpus(spark):
         covariance_matrix(one)
     with pytest.raises(ValueError, match="pca_components: .*n=1"):
         pca_components(one, k=2)
+
+
+def test_moments_past_the_dimension_bound_fail_the_fetch(spark):
+    """A corpus one dimension wider than ``MAX_DIM`` has more D²-bounded
+    moment rows than the driver fetch allows: covariance_matrix raises
+    the labelled bound error instead of fetching them all."""
+    wide = spark.createDataFrame(
+        [(i, [float(i + 1)] * (MAX_DIM + 1)) for i in range(2)],
+        "vec_id long, embedding array<double>",
+    )
+    with pytest.raises(ValueError, match="covariance_matrix moments: more than"):
+        covariance_matrix(wide)
 
 
 def test_pca_projection_variance_equals_eigenvalues(spark):

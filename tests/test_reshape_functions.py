@@ -1,6 +1,7 @@
 """R1/R2 date-spine and F1-F4 scalar semantics (inclusive arithmetic,
 literal typo repair) — the edge cases SURVEY.md §7 ranks hardest — and
-the one home of the exact-sum convention in ``functions/scalars.py``."""
+the one home of the exact-sum convention in ``functions/scalars.py`` and
+of driver-side fetches in ``operators/bounded.py``."""
 
 from __future__ import annotations
 
@@ -103,4 +104,35 @@ def test_exact_sum_convention_has_one_home():
                 and _decimal_casts(node.args[0])
             ):
                 found.append(f"{where}:{node.lineno} F.sum")
+    assert not found, "\n".join(found)
+
+
+_FETCHES = {"collect", "toPandas", "toArrow", "first"}
+
+
+def test_driver_fetches_go_through_collect_bounded():
+    """The query, operator and service layers fetch Spark rows to the
+    driver only through ``operators/bounded.collect_bounded``: no bare
+    ``.collect()``, ``.toPandas()``, ``.toArrow()`` or ``.first()`` call
+    outside ``operators/bounded.py``, and no ``collect_dict`` anywhere in
+    the package."""
+    home = _PKG / "operators" / "bounded.py"
+    layers = [*(_PKG / "plans").rglob("*.py"), *(_PKG / "operators").rglob("*.py")]
+    found = []
+    for path in sorted([*layers, _PKG / "service.py"]):
+        if path == home:
+            continue
+        where = path.relative_to(_PKG)
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in _FETCHES
+                and not node.args
+                and not node.keywords
+            ):
+                found.append(f"{where}:{node.lineno} .{node.func.attr}()")
+    for path in sorted(_PKG.rglob("*.py")):
+        if "collect_dict" in path.read_text():
+            found.append(f"{path.relative_to(_PKG)}: collect_dict")
     assert not found, "\n".join(found)

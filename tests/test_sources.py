@@ -9,8 +9,8 @@ import json
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from technical_test_data_engineer_spark.operators.bounded import collect_bounded
 from technical_test_data_engineer_spark.sources.catalog import (
-    collect_dict,
     register_star,
     table_exists,
 )
@@ -78,7 +78,8 @@ def test_register_star_and_sql(spark, sf_dir):
 
 def test_collect_helpers(spark, sf_dir):
     region = load_table(spark, sf_dir, "region")
-    d = collect_dict(region, "r_regionkey", "r_name")
+    rows = collect_bounded(region, 5, "regions").to_pylist()
+    d = {r["r_regionkey"]: r["r_name"] for r in rows}
     assert len(d) == region.count()
 
 
