@@ -15,10 +15,10 @@ between Spark and the driver:
   built here, so the path is the same whether or not the session
   enables Arrow.
 
-Every fetch in the query, operator and service layers (``plans/``,
-``operators/``, ``service.py``) goes through ``collect_bounded``;
-``tests/test_reshape_functions.py`` scans those layers for any other
-fetch call.
+Every fetch in the query, operator, source and service layers
+(``plans/``, ``operators/``, ``sources/``, ``service.py``) goes through
+``collect_bounded``; ``tests/test_reshape_functions.py`` scans those
+layers for any other fetch call.
 """
 
 from __future__ import annotations

@@ -460,13 +460,14 @@ def embedding_near_dup_pairs(
         # srp_signatures_batch), exploded to (table_idx, sig) rows →
         # ONE light self-join on (t, sig) instead of n_tables joins +
         # union; vectors are joined back only for the deduped pairs.
-        # No persist: the matmul signature pass is cheap, and measured
-        # A/B shows recomputing it for the two join branches beats the
-        # persist materialization barrier (unlike MinHash, whose
-        # shingling is expensive enough to cache).
+        # No persist: both join branches read one shuffle of the
+        # signatures on the join key, which AQE reuses, so the Python
+        # stage runs once and the join needs no shuffle of its own.
         sig_udf = srp_signatures_batch(planes_tables)
-        bucketed = fan_out(df.select(id_col, vec_col)).select(
-            id_col, F.posexplode(sig_udf(F.col(vec_col))).alias("_t", "_s")
+        bucketed = (
+            fan_out(df.select(id_col, vec_col))
+            .select(id_col, F.posexplode(sig_udf(F.col(vec_col))).alias("_t", "_s"))
+            .repartition("_t", "_s")
         )
         l = bucketed.select(F.col(id_col).alias("id_a"), "_t", "_s")
         r = bucketed.select(F.col(id_col).alias("id_b"), "_t", "_s")

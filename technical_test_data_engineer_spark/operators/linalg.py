@@ -342,7 +342,11 @@ def project_embeddings(
     — the projection arithmetic becomes order-independent and
     oracle-hashable (a float matmul's pairwise-summation order is not).
     Returns (id_col, ``pc`` array<double> or array<long>).
-    One corpus scan, zero shuffles."""
+    One corpus scan, zero shuffles. The UDF runs once per query as long
+    as nothing calls it twice: ``pc`` is never NULL or empty, so explode
+    it with ``posexplode_outer`` (``posexplode``'s inferred non-empty
+    filter is pushed through this projection and calls the UDF again),
+    and sort the result with ``partitioning.ordered_python_stage``."""
     from pyspark.sql import types as T
     from pyspark.sql.functions import pandas_udf
 

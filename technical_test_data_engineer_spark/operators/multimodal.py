@@ -278,6 +278,9 @@ def media_near_dups(
             )
         ).alias("bb"),
     ).select(id_col, "ahash", "bb.band", "bb.bh")
+    # both join sides read this one shuffle (AQE reuses it), so the
+    # signature kernel runs once, not once per side
+    bands = bands.repartition("band", "bh")
     a = bands.select(
         F.col(id_col).alias("id_a"), F.col("ahash").alias("ha"), "band", "bh"
     )

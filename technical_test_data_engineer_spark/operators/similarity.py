@@ -498,6 +498,10 @@ def ivf_topk(
     ``fast_dot`` — use for oracle-paired variants (probe-all ≡ brute
     force bit-for-bit, for ANY quantizer — pass ``train_max_iter=1``
     there, convergence buys nothing when every cell is probed).
+
+    The cell-assignment UDF runs once per query: ``_cell`` is declared
+    NOT NULL, so the join on it infers no ``isnotnull`` filter that
+    Catalyst would push through the assigning projection.
     """
     cents = train_ivf_centroids(
         corpus, n_centroids, id_col, vec_col, max_iter=train_max_iter,
@@ -506,8 +510,12 @@ def ivf_topk(
     c_assign = ivf_assignment_udf(cents, n_probe=1)
     q_assign = ivf_assignment_udf(cents, n_probe=n_probe)
 
+    # NOT NULL (coalesced to -1, a cell no query probes): the join on
+    # _cell then implies isnotnull(_cell) instead of inferring it as a
+    # filter, which Catalyst would push through this projection and so
+    # call the assignment UDF a second time
     corpus_cells = fan_out(corpus.select(id_col, vec_col)).withColumn(
-        "_cell", F.element_at(c_assign(F.col(vec_col)), 1)
+        "_cell", F.coalesce(F.element_at(c_assign(F.col(vec_col)), 1), F.lit(-1))
     )
     query_cells = F.broadcast(
         queries.select(

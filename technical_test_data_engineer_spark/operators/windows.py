@@ -83,7 +83,10 @@ def grouped_ewma(
     pandas ``ewm`` (whose running-normalization divides differently),
     so the float64 op sequence is reproducible by any engine stepping
     the same recurrence (the DuckDB recursive-CTE oracle matches
-    bit-for-bit)."""
+    bit-for-bit). To sort the result, pass this call as the stage of
+    ``partitioning.ordered_python_stage`` (range first on the key): the
+    range exchange also groups the map, and the Python stage runs once
+    per query. A plain ``orderBy`` on the result re-runs it to sample."""
     import pandas as _pd
 
     from pyspark.sql.types import DoubleType, StructField, StructType
@@ -128,7 +131,10 @@ def grouped_holt(
     fitted statsmodels variant — so a DuckDB recursive CTE stepping
     the identical expressions reproduces every bit (the
     ``user_value_ewma`` precedent, extended to a 2-state recurrence).
-    Forecast-at-horizon-1 is ``l + b`` and is left to the caller."""
+    Forecast-at-horizon-1 is ``l + b`` and is left to the caller. Sort
+    the result as ``grouped_ewma``'s is sorted, through
+    ``partitioning.ordered_python_stage``, so the Python stage runs once
+    per query."""
     import numpy as np
     import pandas as _pd
 

@@ -20,7 +20,10 @@ from technical_test_data_engineer_spark.operators.multimodal import (
     fake_media_binary,
     frame_sample,
 )
-from technical_test_data_engineer_spark.operators.partitioning import fan_out
+from technical_test_data_engineer_spark.operators.partitioning import (
+    fan_out,
+    ordered_python_stage,
+)
 from technical_test_data_engineer_spark.plans.star_queries import query
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
 
@@ -50,8 +53,13 @@ def media_decode_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     mapInPandas stub decoder, flatten the typed struct."""
     docs = load_table(spark, sf_dir, "documents")
     media = docs.select("doc_id", fake_media_binary("text").alias("media"))
-    meta = decode_media_meta(media)
-    return meta.select("doc_id", "meta.*").orderBy("doc_id")
+    # materialize after: blobs in, five scalars out
+    return ordered_python_stage(
+        media,
+        lambda m: decode_media_meta(m).select("doc_id", "meta.*"),
+        ["doc_id"],
+        range_first=False,
+    )
 
 
 @query(
@@ -167,8 +175,11 @@ def media_chunk_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
         chunk_media,
     )
 
-    return chunk_media(media, chunk_size=256).orderBy(
-        "doc_id", "chunk_idx"
+    return ordered_python_stage(
+        media,
+        lambda m: chunk_media(m, chunk_size=256),
+        ["doc_id", "chunk_idx"],
+        range_first=False,
     )
 
 
@@ -241,8 +252,12 @@ def media_ahash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the oracle reads bytes as ascii(char); guard the convention —
     # a non-ASCII fixture would silently change the byte plane
     docs = docs.withColumn("media", fake_media_binary("text"))
-    sigs = media_ahash(docs, "media", "doc_id")
-    return sigs.select("doc_id", "ahash").orderBy("doc_id")
+    return ordered_python_stage(
+        docs,
+        lambda d: media_ahash(d, "media", "doc_id").select("doc_id", "ahash"),
+        ["doc_id"],
+        range_first=False,
+    )
 
 
 @query(

@@ -23,6 +23,9 @@ from technical_test_data_engineer_spark.operators.bounded import (
     collect_bounded,
     local_frame,
 )
+from technical_test_data_engineer_spark.operators.partitioning import (
+    ordered_python_stage,
+)
 from technical_test_data_engineer_spark.plans.star_queries import _decsum, query
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
 
@@ -1352,9 +1355,16 @@ def pareto_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = load_table(spark, sf_dir, "part").select(
         "p_partkey", "p_retailprice", "p_size"
     )
-    return pareto_front(
-        part, minimize=("p_retailprice",), maximize=("p_size",)
-    ).orderBy("p_partkey")
+    # materialize after: phase 2 groups on a constant bucket, not on
+    # p_partkey, so a range exchange below the stage would be re-shuffled
+    return ordered_python_stage(
+        part,
+        lambda p: pareto_front(
+            p, minimize=("p_retailprice",), maximize=("p_size",)
+        ),
+        ["p_partkey"],
+        range_first=False,
+    )
 
 
 def _kcore_unrolled_sql(rounds: int, k: int = 2) -> str:
@@ -1962,16 +1972,15 @@ def segment_price_geomean(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_mktsegment"
     )
-    return (
+    return ordered_python_stage(
         orders.join(
             F.broadcast(customer), orders.o_custkey == customer.c_custkey
-        )
-        .groupBy("c_mktsegment")
-        .agg(
+        ),
+        lambda j: j.groupBy("c_mktsegment").agg(
             F.round(geomean("o_totalprice"), 6).alias("geomean_price"),
             n_rows("o_totalprice").alias("n_orders"),
-        )
-        .orderBy("c_mktsegment")
+        ),
+        ["c_mktsegment"],
     )
 
 

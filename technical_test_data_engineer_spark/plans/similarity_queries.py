@@ -19,6 +19,9 @@ from technical_test_data_engineer_spark.operators.bounded import (
     collect_bounded,
     local_frame,
 )
+from technical_test_data_engineer_spark.operators.partitioning import (
+    ordered_python_stage,
+)
 from technical_test_data_engineer_spark.operators.similarity import (
     adaptive_n_planes,
     brute_force_topk,
@@ -1212,18 +1215,29 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = pca_project(emb, "embedding", "vec_id", k=8)
-    return (
-        out.select(
-            "vec_id",
-            F.posexplode(F.col("pc")).alias("component", "value"),
-        )
-        .select(
-            "vec_id",
-            F.col("component").cast("int").alias("component"),
-            F.round(F.col("value"), 6).alias("value"),
-        )
-        .orderBy("vec_id", "component")
+    out = _long_form(pca_project(emb, "embedding", "vec_id", k=8), "value")
+    return out.withColumn("value", F.round("value", 6))
+
+
+def _long_form(projected: DataFrame, value_col: str) -> DataFrame:
+    """(vec_id, component, ``value_col``) rows of a projection's ``pc``
+    array, ordered by (vec_id, component), the projection UDF run once
+    per action:
+
+    - ``posexplode_outer``: ``pc`` is a k-length array, never NULL or
+      empty, so it yields ``posexplode``'s rows — without the inferred
+      ``size(pc) > 0 AND isnotnull(pc)`` filter, which Catalyst pushes
+      through the projection that defines ``pc``, calling the UDF twice;
+    - the sort materializes after the stage: 64 floats per vector go
+      in, k rows of three scalars come out, and that output is the
+      narrower shuffle (sf0.01: 101 kB vs 133 kB range-first)."""
+    return ordered_python_stage(
+        projected,
+        lambda p: p.select(
+            "vec_id", F.posexplode_outer("pc").alias("component", value_col)
+        ).withColumn("component", F.col("component").cast("int")),
+        ["vec_id", "component"],
+        range_first=False,
     )
 
 
@@ -1310,18 +1324,7 @@ def embedding_project_literal(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     out = project_embeddings(emb, _PROJ_MEAN, _PROJ_COMPS, int_scaled=True)
-    return (
-        out.select(
-            "vec_id",
-            F.posexplode(F.col("pc")).alias("component", "value_e10"),
-        )
-        .select(
-            "vec_id",
-            F.col("component").cast("int").alias("component"),
-            "value_e10",
-        )
-        .orderBy("vec_id", "component")
-    )
+    return _long_form(out, "value_e10")
 
 
 # rows-only: the greedy MMR selection is iterative (no SQL form); the
@@ -1346,13 +1349,18 @@ def knn_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     shortlist = brute_force_topk(emb, probes, k=25).select(
         "query_id", "vec_id", "score"
     )
-    out = mmr_rerank(shortlist, emb, k=TOP_K, lam=0.7)
-    return out.select(
-        "query_id",
-        "vec_id",
-        "mmr_rank",
-        F.round("score", 6).alias("score"),
-    ).orderBy("query_id", "mmr_rank")
+    # materialize after: the candidates carry vectors, the picks do not
+    return ordered_python_stage(
+        shortlist,
+        lambda s: mmr_rerank(s, emb, k=TOP_K, lam=0.7).select(
+            "query_id",
+            "vec_id",
+            "mmr_rank",
+            F.round("score", 6).alias("score"),
+        ),
+        ["query_id", "mmr_rank"],
+        range_first=False,
+    )
 
 
 N_ANCHORS = 10

@@ -14,6 +14,9 @@ from technical_test_data_engineer_spark.operators.bounded import (
     local_frame,
 )
 from technical_test_data_engineer_spark.operators.joins import asof_join
+from technical_test_data_engineer_spark.operators.partitioning import (
+    ordered_python_stage,
+)
 from technical_test_data_engineer_spark.plans.star_queries import _decsum, query
 from technical_test_data_engineer_spark.sources.parquet_source import load_table
 
@@ -717,11 +720,12 @@ def user_value_ewma(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") % 25 == 0)
         .select("user_id", "event_id", "ts", "value")
     )
-    out = grouped_ewma(
-        events, ["user_id"], ["ts", "event_id"], "value", alpha=0.3
-    )
-    return out.select("user_id", "event_id", "value", "ewma").orderBy(
-        "user_id", "event_id"
+    return ordered_python_stage(
+        events,
+        lambda ev: grouped_ewma(
+            ev, ["user_id"], ["ts", "event_id"], "value", alpha=0.3
+        ).select("user_id", "event_id", "value", "ewma"),
+        ["user_id", "event_id"],
     )
 
 
@@ -1949,17 +1953,20 @@ def user_value_holtwinters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("user_id") % 30 == 0)
         .select("user_id", "event_id", "ts", "value")
     )
-    out = grouped_holt(
-        events, ["user_id"], ["ts", "event_id"], "value", alpha=0.5, beta=0.3
+    return ordered_python_stage(
+        events,
+        lambda ev: grouped_holt(
+            ev, ["user_id"], ["ts", "event_id"], "value", alpha=0.5, beta=0.3
+        ).select(
+            "user_id",
+            "event_id",
+            "value",
+            "lvl",
+            "trend",
+            (F.col("lvl") + F.col("trend")).alias("forecast_1"),
+        ),
+        ["user_id", "event_id"],
     )
-    return out.select(
-        "user_id",
-        "event_id",
-        "value",
-        "lvl",
-        "trend",
-        (F.col("lvl") + F.col("trend")).alias("forecast_1"),
-    ).orderBy("user_id", "event_id")
 
 
 @query(

@@ -25,11 +25,16 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from technical_test_data_engineer_spark.operators.bounded import collect_bounded
 from technical_test_data_engineer_spark.sources.atomic import (
     current_version,
     publish_tables,
     read_published,
 )
+
+# Ceiling on one table's audit report in ``publish_if_clean``: a report
+# holds one row per check, and the quality operators build a few dozen.
+MAX_AUDIT_CHECKS = 1_000
 
 
 def _snapshot_dir(root: str, version: int | None = None) -> tuple[int, str]:
@@ -147,7 +152,7 @@ def apply_changelog(
     bad = changes.filter(
         F.col(op_col).isNull() | ~F.col(op_col).isin("U", "D")
     ).limit(1)
-    bad_rows = bad.collect()
+    bad_rows = collect_bounded(bad, 1, "apply_changelog bad-op probe").to_pylist()
     if bad_rows:
         raise ValueError(
             f"apply_changelog: unknown {op_col!r} value "
@@ -301,14 +306,16 @@ def publish_if_clean(
 
     ``audits`` maps table name → a (check_name, observed, passed)
     report DataFrame (``constraint_audit`` / ``referential_check``
-    output). Reports are tiny (one row per check) — collecting them is
-    a bounded driver action per the S6 contract."""
+    output). A report holds one row per check, and a table is audited
+    by at most ``MAX_AUDIT_CHECKS`` checks: each report is fetched
+    through ``collect_bounded`` with that bound."""
     failures: list[str] = []
     for tname, report in audits.items():
-        for r in report.collect():
-            if not r.passed:
+        rows = collect_bounded(report, MAX_AUDIT_CHECKS, f"{tname} audit report")
+        for r in rows.to_pylist():
+            if not r["passed"]:
                 failures.append(
-                    f"{tname}.{r.check_name} (observed={r.observed})"
+                    f"{tname}.{r['check_name']} (observed={r['observed']})"
                 )
     if failures:
         raise ValueError(

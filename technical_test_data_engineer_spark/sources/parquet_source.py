@@ -16,6 +16,8 @@ import weakref
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from technical_test_data_engineer_spark.operators.bounded import collect_bounded
+
 # Lazy-PLAN memo, per live SparkSession: building a parquet scan is
 # driver-side work (file listing + footer schema inference + py4j
 # round-trips, measured ~60-100 ms per call), and a registry sweep
@@ -178,10 +180,14 @@ def zorder_value(
     Pure JVM expressions (shifts/ors) — no UDF in the write path."""
     from pyspark.sql import functions as F
 
-    stats = df.agg(
-        *[F.min(c).cast("double").alias(f"_mn_{c}") for c in cols],
-        *[F.max(c).cast("double").alias(f"_mx_{c}") for c in cols],
-    ).collect()[0]
+    stats = collect_bounded(
+        df.agg(
+            *[F.min(c).cast("double").alias(f"_mn_{c}") for c in cols],
+            *[F.max(c).cast("double").alias(f"_mx_{c}") for c in cols],
+        ),
+        1,
+        "zorder_value min/max",
+    ).to_pylist()[0]
     scaled = []
     top = (1 << bits) - 1
     for c in cols:

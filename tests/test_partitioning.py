@@ -1,13 +1,17 @@
 """Scale-hygiene operators: salted skew joins (same result, bounded
-per-key task size) and bucketed co-located joins (no exchange in the
-plan)."""
+per-key task size), bucketed co-located joins (no exchange in the
+plan) and the sorted Python stage (``orderBy``'s row sequence)."""
 
 from __future__ import annotations
 
+import pandas as pd
+import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.functions import pandas_udf
 
 from technical_test_data_engineer_spark.operators.partitioning import (
     fan_out,
+    ordered_python_stage,
     salted_join,
 )
 from technical_test_data_engineer_spark.sources.parquet_source import (
@@ -21,6 +25,53 @@ def test_fan_out_only_when_undersplit(spark, sf_dir):
     assert fan_out(one).rdd.getNumPartitions() > 1
     many = spark.range(100).repartition(64)
     assert fan_out(many).rdd.getNumPartitions() == 64
+
+
+@pytest.mark.parametrize("range_first", [True, False], ids=["range_first", "after"])
+def test_ordered_python_stage_keeps_orderby_sequence(spark, range_first):
+    """``ordered_python_stage`` returns ``orderBy``'s row sequence through
+    a row-wise ``pandas_udf`` and through ``applyInPandas``, on keys that
+    break a partition-local sort: NULL leading keys, one key with 40% of
+    the rows (more than a partition's share of 4), and 42 distinct keys
+    (more than the 4 shuffle partitions). Coalescing is off so the
+    shuffles keep their 4 partitions; the control shows that sorting
+    within hash partitions does not give the sequence on this input."""
+
+    @pandas_udf("double")
+    def _halve(v: pd.Series) -> pd.Series:
+        return v / 2
+
+    def _cumsum(pdf: pd.DataFrame) -> pd.DataFrame:
+        pdf = pdf.sort_values("id")
+        return pdf.assign(v=pdf["v"].cumsum())
+
+    df = spark.range(0, 240, 1, 3).select(
+        F.when(F.col("id") % 7 == 0, F.lit(None))
+        .when(F.col("id") % 5 < 2, F.lit(5))
+        .otherwise(F.col("id") % 41)
+        .cast("long")
+        .alias("k"),
+        "id",
+        (F.col("id") * 3 % 17).cast("double").alias("v"),
+    )
+    stages = {
+        "pandas_udf": lambda d: d.select("k", "id", _halve("v").alias("v")),
+        "applyInPandas": lambda d: d.groupBy("k").applyInPandas(
+            _cumsum, "k long, id long, v double"
+        ),
+    }
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for name, stage in stages.items():
+            want = stage(df).orderBy("k", "id").collect()
+            got = ordered_python_stage(df, stage, ["k", "id"], range_first).collect()
+            assert got == want, name
+            hashed = stage(df.repartition("k")).sortWithinPartitions("k", "id")
+            assert hashed.collect() != want, name
+    finally:
+        spark.conf.set(key, prev)
 
 
 def test_salted_join_matches_plain_join(spark, sf_dir):

@@ -1,7 +1,8 @@
 """Smoke plus plan-shape ledger: every registered query is built ONCE at
-sf0.001, and that one build serves four checks — it runs (``count()``),
+sf0.001, and that one build serves five checks — it runs (``count()``),
 its top-level columns are atomic, its joins are hash/sort-merge unless
-allowlisted, and its physical-plan shape matches ``PLAN_SHAPES.json``.
+allowlisted, each Python-worker stage runs once per action, and its
+physical-plan shape matches ``PLAN_SHAPES.json``.
 
 The shape of a query is read off its formatted plan: parquet scans per
 table, ``SinglePartition`` exchanges, and the count of each operator in
@@ -225,6 +226,72 @@ def plan_shape(plan: str) -> dict[str, int]:
     return {k: v for k, v in sorted(shape.items()) if v}
 
 
+# Python-worker operators (Spark 4 class names; AggregateInPandas and
+# WindowInPandas plan as ArrowAggregatePython / ArrowWindowPython) and
+# the nodes a stage ends at when walking down from an exchange.
+_PYTHON_EXECS = {
+    "ArrowEvalPythonExec", "BatchEvalPythonExec",
+    "MapInPandasExec", "MapInArrowExec",
+    "FlatMapGroupsInPandasExec", "FlatMapGroupsInArrowExec",
+    "FlatMapCoGroupsInPandasExec", "FlatMapCoGroupsInArrowExec",
+    "ArrowAggregatePythonExec", "ArrowWindowPythonExec",
+}
+_STAGE_EDGES = {
+    "ShuffleExchangeExec", "BroadcastExchangeExec", "ReusedExchangeExec",
+    "InMemoryTableScanExec",
+}
+# a PythonUDF prints as ``name(args)#resultId``; the result id survives
+# when the optimizer copies the call into a pushed-down filter
+_UDF_RESULT = re.compile(r"\)#(\d+)")
+
+
+def python_reruns(df) -> list[str]:
+    """The places where ``df``'s plan runs a Python-worker stage more than
+    once per action, read off the AQE initial plan:
+
+    - a ``rangepartitioning`` exchange whose own stage (walking down to
+      the next exchange or cached relation) holds a Python node — the
+      RangePartitioner's sampling job recomputes that stage;
+    - a UDF result id evaluated in two Python nodes — an inferred filter
+      pushed through the projection that defines it calls it again, and
+      so does a self-join whose two sides each run the UDF.
+
+    An exchange equal to one already walked is skipped, as AQE reuses
+    its output instead of running its subtree again.
+    """
+    plan = df._jdf.queryExecution().executedPlan()
+    if plan.getClass().getSimpleName() == "AdaptiveSparkPlanExec":
+        plan = plan.initialPlan()
+    problems, owners, exchanges = [], Counter(), []
+
+    def walk(node, sampled: bool) -> None:
+        kind = node.getClass().getSimpleName()
+        if kind.endswith("ExchangeExec"):
+            if any(node.sameResult(seen) for seen in exchanges):
+                return
+            exchanges.append(node)
+        if kind in _PYTHON_EXECS:
+            text = node.simpleString(1000)
+            if sampled:
+                problems.append(f"range sort samples {text[:80]}")
+            owners.update(set(_UDF_RESULT.findall(text)))
+        ranged = kind == "ShuffleExchangeExec" and (
+            node.outputPartitioning().getClass().getSimpleName()
+            == "RangePartitioning"
+        )
+        sampled = ranged or (sampled and kind not in _STAGE_EDGES)
+        children = node.children()
+        for i in range(children.size()):
+            walk(children.apply(i), sampled)
+
+    walk(plan, False)
+    problems += [
+        f"UDF result #{rid} evaluated in {n} Python nodes"
+        for rid, n in sorted(owners.items()) if n > 1
+    ]
+    return problems
+
+
 def formatted_plan(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
@@ -244,13 +311,17 @@ def sweep(spark, sf_dir: str) -> dict:
     persists) and collect its shape plus every smoke-check problem."""
     from pyspark.sql.types import ArrayType, MapType, StructType
 
-    out = {"shapes": {}, "failed": [], "containers": [], "nested_loops": []}
+    out = {
+        "shapes": {}, "failed": [], "containers": [], "nested_loops": [],
+        "reruns": [],
+    }
     for name, fn in QUERIES.items():
         harness.release(spark)
         try:
             df = fn(spark, sf_dir)
             assert df.columns, "no columns"
             shape = out["shapes"][name] = plan_shape(formatted_plan(df))
+            out["reruns"] += [f"{name}: {p}" for p in python_reruns(df)]
             # the driver's pandas canonicalizer hash-uniques every column
             # and dies on list/dict cells: vector results go long-form
             # (posexplode), maps round-trip through explode
@@ -318,6 +389,10 @@ def test_no_undocumented_cartesian_or_nested_loop_joins(swept):
     assert not swept["nested_loops"], "\n".join(swept["nested_loops"])
 
 
+def test_no_python_stage_runs_twice(swept):
+    assert not swept["reruns"], "\n".join(swept["reruns"])
+
+
 def test_plan_shapes_match_ledger(swept):
     diff = ledger_diff(json.loads(LEDGER.read_text()), swept["shapes"])
     assert not diff, (
@@ -366,6 +441,9 @@ if __name__ == "__main__":
     result = sweep(session, SF_DIR)
     write_ledger(result["shapes"])
     print(f"{len(result['shapes'])} shapes -> {LEDGER}")
-    for line in result["failed"] + result["containers"] + result["nested_loops"]:
+    for line in (
+        result["failed"] + result["containers"] + result["nested_loops"]
+        + result["reruns"]
+    ):
         print(line)
     session.stop()

@@ -111,13 +111,17 @@ _FETCHES = {"collect", "toPandas", "toArrow", "first"}
 
 
 def test_driver_fetches_go_through_collect_bounded():
-    """The query, operator and service layers fetch Spark rows to the
-    driver only through ``operators/bounded.collect_bounded``: no bare
-    ``.collect()``, ``.toPandas()``, ``.toArrow()`` or ``.first()`` call
-    outside ``operators/bounded.py``, and no ``collect_dict`` anywhere in
-    the package."""
+    """The query, operator, source and service layers fetch Spark rows
+    to the driver only through ``operators/bounded.collect_bounded``: no
+    bare ``.collect()``, ``.toPandas()``, ``.toArrow()`` or ``.first()``
+    call outside ``operators/bounded.py``, and no ``collect_dict``
+    anywhere in the package."""
     home = _PKG / "operators" / "bounded.py"
-    layers = [*(_PKG / "plans").rglob("*.py"), *(_PKG / "operators").rglob("*.py")]
+    layers = [
+        path
+        for layer in ("plans", "operators", "sources")
+        for path in (_PKG / layer).rglob("*.py")
+    ]
     found = []
     for path in sorted([*layers, _PKG / "service.py"]):
         if path == home:
