@@ -6,7 +6,18 @@ Design rules for 100 TB:
   array_*) — zero Python per row;
 - candidate generation is always a *bucket equi-join* (shuffle on a
   band/bucket key), never an O(n²) cross join; exact verification runs
-  only on candidate pairs;
+  only on candidate pairs. Every such join in the package is built by
+  one of three helpers here: ``_bucket_self_join`` (rows sharing every
+  key → (id_a, id_b), id_a < id_b), ``_bucket_probe_join`` (new rows ×
+  corpus rows → least/greatest pairs) and ``_attach_both`` (per-id
+  columns onto id_a, then id_b). Capping hot buckets, persisting the
+  keyed frame, pair dedup and verification stay with each caller;
+- what rides the join is a per-operator choice: MinHash and SRP join
+  ~24-byte (id, bucket) rows and re-attach payloads (shingle arrays,
+  vectors) after pair dedup; SimHash and aHash carry their 8-16-byte
+  signatures through the join (the verify needs nothing else);
+  ``semantic_dedup`` carries vectors because each within-cell pair
+  meets in exactly one cell, so it is scored once either way;
 - all hashes are seeded literals → results are deterministic across
   runs and partitionings.
 """
@@ -190,6 +201,24 @@ def lsh_band_keys(
     return F.array(*entries)
 
 
+def minhash_band_rows(
+    df: DataFrame,
+    id_col: str,
+    sig: Column,
+    num_hashes: int,
+    bands: int,
+    portable: bool = False,
+) -> DataFrame:
+    """One (id, ``_band``, ``_bh``) row per LSH band of the MinHash
+    signature ``sig`` — the light relation every MinHash candidate join
+    keys on. Expressions only (no ``fan_out``, no action), so a
+    streaming frame bands through it too."""
+    keys = lsh_band_keys(sig, bands, num_hashes // bands, portable)
+    return df.select(F.col(id_col), F.explode(keys).alias("_b")).select(
+        id_col, F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh")
+    )
+
+
 def _minhash_base_and_bands(
     df: DataFrame,
     id_col: str,
@@ -208,7 +237,6 @@ def _minhash_base_and_bands(
     LIGHT exploded (id, band, band-hash) rows (~24 B) that enter the
     candidate equi-join. The KB-sized shingle arrays never ride the
     join — they come back via :func:`_jaccard_verify` after pair dedup."""
-    rows_per_band = num_hashes // bands
     base = (
         fan_out(df.select(id_col, text_col))
         .select(F.col(id_col), word_shingles(text_col, shingle_n).alias("_sh"))
@@ -217,13 +245,72 @@ def _minhash_base_and_bands(
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    banded = base.select(
-        id_col,
-        F.explode(
-            lsh_band_keys(F.col("_sig"), bands, rows_per_band, portable)
-        ).alias("_b"),
-    ).select(id_col, F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh"))
+    banded = minhash_band_rows(
+        base, id_col, F.col("_sig"), num_hashes, bands, portable
+    )
     return base, banded
+
+
+# ---------------------------------------------------------------------------
+# candidate pairs — the one bucket equi-join
+# ---------------------------------------------------------------------------
+
+
+def _id_side(
+    df: DataFrame, id_col: str, side: str, cols=(), keys=()
+) -> DataFrame:
+    """One side of a pair join: ``id_col`` as ``id_<side>``, each of
+    ``cols`` as ``<col>_<side>``, ``keys`` unchanged."""
+    return df.select(
+        F.col(id_col).alias(f"id_{side}"),
+        *[F.col(c).alias(f"{c}_{side}") for c in cols],
+        *keys,
+    )
+
+
+def _bucket_self_join(
+    keyed: DataFrame, id_col: str, keys: list[str], carry=()
+) -> DataFrame:
+    """Candidate pairs within ``keyed``: two rows sharing every one of
+    ``keys`` give one row with ``id_a < id_b`` (no self-pairs), plus
+    each ``carry`` column as ``<col>_a``/``<col>_b``. A pair sharing
+    several buckets comes once per bucket; a NULL key never pairs (it
+    is an equi-join). Capping, persisting or repartitioning ``keyed``
+    and pair dedup are the caller's."""
+    return (
+        _id_side(keyed, id_col, "a", carry, keys)
+        .join(_id_side(keyed, id_col, "b", carry, keys), keys)
+        .filter(F.col("id_a") < F.col("id_b"))
+    )
+
+
+def _bucket_probe_join(
+    probe: DataFrame, corpus: DataFrame, id_col: str, keys: list[str]
+) -> DataFrame:
+    """Candidate pairs between ``probe`` rows and ``corpus`` rows sharing
+    every one of ``keys``, oriented as ``id_a = least``, ``id_b =
+    greatest``, self-pairs dropped — the incremental form, where the
+    corpus contains the probe set. Pair dedup is the caller's."""
+    return (
+        _id_side(probe, id_col, "n", (), keys)
+        .join(_id_side(corpus, id_col, "c", (), keys), keys)
+        .filter(F.col("id_n") != F.col("id_c"))
+        .select(
+            F.least("id_n", "id_c").alias("id_a"),
+            F.greatest("id_n", "id_c").alias("id_b"),
+        )
+    )
+
+
+def _attach_both(
+    pairs: DataFrame, per_id: DataFrame, id_col: str, cols: list[str]
+) -> DataFrame:
+    """Join ``per_id``'s ``cols`` onto ``pairs``: onto ``id_a`` as
+    ``<col>_a``, then onto ``id_b`` as ``<col>_b`` (inner joins — a
+    pair whose id is missing from ``per_id`` drops)."""
+    return pairs.join(_id_side(per_id, id_col, "a", cols), "id_a").join(
+        _id_side(per_id, id_col, "b", cols), "id_b"
+    )
 
 
 def _jaccard_verify(
@@ -232,16 +319,8 @@ def _jaccard_verify(
     """Exact-verify stage shared by both pipelines: join the shingle
     arrays back onto the deduped candidate pairs (once per surviving
     side) and keep exact Jaccard ≥ threshold."""
-    shingles = base.select(id_col, "_sh")
     return (
-        cands.join(
-            shingles.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_sh_a")),
-            "id_a",
-        )
-        .join(
-            shingles.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_sh_b")),
-            "id_b",
-        )
+        _attach_both(cands, base.select(id_col, "_sh"), id_col, ["_sh"])
         .withColumn("jaccard", jaccard(F.col("_sh_a"), F.col("_sh_b")))
         .filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", "jaccard")
@@ -293,11 +372,8 @@ def minhash_candidates(
     # relative to the corpus; caller-owns-cleanup contract as with
     # ``base`` (clearCache per query in bench/verify, LRU otherwise).
     banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
-    left = banded.select(F.col(id_col).alias("id_a"), "_band", "_bh")
-    right = banded.select(F.col(id_col).alias("id_b"), "_band", "_bh")
     cands = (
-        left.join(right, ["_band", "_bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
+        _bucket_self_join(banded, id_col, ["_band", "_bh"])
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -410,12 +486,9 @@ def simhash_near_dup_pairs(
         id_col, "_sh", F.col("_b.i").alias("_i"), F.col("_b.v").alias("_v")
     )
     banded = cap_hot_buckets(banded, ["_i", "_v"], hot_bucket_cap)
-    left = banded.select(F.col(id_col).alias("id_a"), F.col("_sh").alias("_ha"), "_i", "_v")
-    right = banded.select(F.col(id_col).alias("id_b"), F.col("_sh").alias("_hb"), "_i", "_v")
     return (
-        left.join(right, ["_i", "_v"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("hamming", hamming_packed(F.col("_ha"), F.col("_hb")))
+        _bucket_self_join(banded, id_col, ["_i", "_v"], ["_sh"])
+        .withColumn("hamming", hamming_packed(F.col("_sh_a"), F.col("_sh_b")))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
         .dropDuplicates(["id_a", "id_b"])
@@ -469,8 +542,6 @@ def embedding_near_dup_pairs(
             .select(id_col, F.posexplode(sig_udf(F.col(vec_col))).alias("_t", "_s"))
             .repartition("_t", "_s")
         )
-        l = bucketed.select(F.col(id_col).alias("id_a"), "_t", "_s")
-        r = bucketed.select(F.col(id_col).alias("id_b"), "_t", "_s")
         # Pair-dedup placement depends on the scorer: re-scoring a pair
         # once per agreeing table (≤ n_tables×) costs a few extra
         # fast_dot folds — cheaper than the extra shuffle stage a
@@ -479,24 +550,17 @@ def embedding_near_dup_pairs(
         # is ~100× a double fold (interpreted HOF + BigDecimal), so on
         # the exact path the shuffle is the cheap side and duplicates
         # are dropped BEFORE any scoring happens.
-        cands = (
-            l.join(r, ["_t", "_s"])
-            .filter(F.col("id_a") < F.col("id_b"))
-            .select("id_a", "id_b")
+        cands = _bucket_self_join(bucketed, id_col, ["_t", "_s"]).select(
+            "id_a", "id_b"
         )
         if exact_scores or score_metric == "int":
             cands = cands.dropDuplicates(["id_a", "id_b"])
-        vecs = df.select(id_col, vec_col)
-        cands = cands.join(
-            vecs.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")), "id_a"
-        ).join(
-            vecs.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb")), "id_b"
-        )
+        cands = _attach_both(cands, df.select(id_col, vec_col), id_col, [vec_col])
     else:
         # stream side fanned out so the O(n²) scoring uses every core;
         # the build side stays as-is (it is broadcast whole).
-        l = fan_out(df.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("_va")))
-        r = df.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("_vb"))
+        l = fan_out(_id_side(df, id_col, "a", [vec_col]))
+        r = _id_side(df, id_col, "b", [vec_col])
         cands = l.crossJoin(F.broadcast(r)).filter(F.col("id_a") < F.col("id_b"))
     # decimal exact_dot on the oracle-compared exact path; double
     # fast_dot on the LSH path (rows-only checked, 5× cheaper);
@@ -512,7 +576,7 @@ def embedding_near_dup_pairs(
             dot = fast_dot if (planes_tables and not exact_scores) else exact_dot
         thresh = F.lit(threshold)
     out = (
-        cands.withColumn("score", dot(F.col("_va"), F.col("_vb")))
+        cands.withColumn("score", dot(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")))
         .filter(F.col("score") >= thresh)
         .select("id_a", "id_b", "score")
     )
@@ -534,23 +598,10 @@ def band_table(
     """The light (id, band, band-hash) relation on its own — what a
     production deployment STORES (≈ bands × 16 B per doc) instead of
     recomputing shingles + signatures from text per ingest."""
-    rows_per_band = num_hashes // bands
-    return (
-        fan_out(df.select(id_col, text_col))
-        .select(
-            F.col(id_col),
-            F.explode(
-                lsh_band_keys(
-                    minhash_signature(
-                        word_shingles(text_col, shingle_n), num_hashes, seed
-                    ),
-                    bands,
-                    rows_per_band,
-                    portable,
-                )
-            ).alias("_b"),
-        )
-        .select(id_col, F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh"))
+    shingles = word_shingles(text_col, shingle_n)
+    sig = minhash_signature(shingles, num_hashes, seed, portable)
+    return minhash_band_rows(
+        fan_out(df.select(id_col, text_col)), id_col, sig, num_hashes, bands, portable
     )
 
 
@@ -625,16 +676,8 @@ def incremental_candidates_vs_band_table(
     corpus_b = spark.table(table_name)
     if hot_bucket_cap is not None:
         corpus_b = cap_hot_buckets(corpus_b, ["_band", "_bh"], hot_bucket_cap)
-    left = new_b.select(F.col(id_col).alias("id_n"), "_band", "_bh")
-    right = corpus_b.select(F.col(id_col).alias("id_c"), "_band", "_bh")
-    return (
-        left.join(right, ["_band", "_bh"])
-        .filter(F.col("id_n") != F.col("id_c"))
-        .select(
-            F.least("id_n", "id_c").alias("id_a"),
-            F.greatest("id_n", "id_c").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    return _bucket_probe_join(new_b, corpus_b, id_col, ["_band", "_bh"]).dropDuplicates(
+        ["id_a", "id_b"]
     )
 
 
@@ -681,17 +724,8 @@ def minhash_incremental_pairs(
     new_b = banded.join(
         F.broadcast(new_ids), banded[id_col] == F.col("_nid")
     ).select(id_col, "_band", "_bh")
-
-    left = new_b.select(F.col(id_col).alias("id_n"), "_band", "_bh")
-    right = banded.select(F.col(id_col).alias("id_c"), "_band", "_bh")
-    cands = (
-        left.join(right, ["_band", "_bh"])
-        .filter(F.col("id_n") != F.col("id_c"))
-        .select(
-            F.least("id_n", "id_c").alias("id_a"),
-            F.greatest("id_n", "id_c").alias("id_b"),
-        )
-        .dropDuplicates(["id_a", "id_b"])
+    cands = _bucket_probe_join(new_b, banded, id_col, ["_band", "_bh"]).dropDuplicates(
+        ["id_a", "id_b"]
     )
     return _jaccard_verify(cands, base, id_col, threshold)
 
@@ -777,29 +811,16 @@ def semantic_dedup(
         F.col("_a.csim").alias("_cs"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     pairable = cap_hot_buckets(assigned, ["_c"], hot_cluster_cap)
-    l = pairable.select(
-        F.col(id_col).alias("id_a"),
-        F.col(vec_col).alias("_va"),
-        "_c",
-        F.col("_cs").alias("_csa"),
-    )
-    r = pairable.select(
-        F.col(id_col).alias("id_b"),
-        F.col(vec_col).alias("_vb"),
-        "_c",
-        F.col("_cs").alias("_csb"),
-    )
     dot = exact_dot if exact_scores else fast_dot
     pairs = (
-        l.join(r, "_c")
-        .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("_score", dot(F.col("_va"), F.col("_vb")))
+        _bucket_self_join(pairable, id_col, ["_c"], [vec_col, "_cs"])
+        .withColumn("_score", dot(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")))
         .filter(F.col("_score") >= threshold)
     )
     drops = pairs.select(
         F.when(
-            (F.col("_csa") > F.col("_csb"))
-            | ((F.col("_csa") == F.col("_csb")) & (F.col("id_a") > F.col("id_b"))),
+            (F.col("_cs_a") > F.col("_cs_b"))
+            | ((F.col("_cs_a") == F.col("_cs_b")) & (F.col("id_a") > F.col("id_b"))),
             F.col("id_a"),
         )
         .otherwise(F.col("id_b"))

@@ -30,6 +30,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from technical_test_data_engineer_spark.operators.dedup import _bucket_self_join
+
 MEDIA_META_SCHEMA = T.StructType(
     [
         T.StructField("format", T.StringType()),
@@ -39,8 +41,6 @@ MEDIA_META_SCHEMA = T.StructType(
         T.StructField("n_bytes", T.LongType()),
     ]
 )
-
-_FORMATS = ["png", "jpeg", "webp"]
 
 
 def fake_media_binary(text_col: str | Column = "text") -> Column:
@@ -64,14 +64,27 @@ def fake_media_binary(text_col: str | Column = "text") -> Column:
     return F.concat(header, payload)
 
 
-def _parse_header(blob: bytes) -> tuple[str, int, int, int, int]:
-    """STUB decode: parse the fake 12-byte header. A real implementation
-    would call Pillow/libav here; everything around it is unchanged."""
-    width = int.from_bytes(blob[0:4], "big")
-    height = int.from_bytes(blob[4:8], "big")
-    n_frames = int.from_bytes(blob[8:12], "big")
-    fmt = _FORMATS[len(blob) % 3]
-    return fmt, width, height, n_frames, len(blob)
+def _header_parser():
+    """Builds ``_parse_header`` as a nested function. cloudpickle ships a
+    nested function by value, so the Python workers running
+    ``decode_media_meta`` and ``frame_sample`` never import this
+    package, which may be importable only through the driver's
+    ``sys.path``."""
+    formats = ["png", "jpeg", "webp"]
+
+    def _parse_header(blob: bytes) -> tuple[str, int, int, int, int]:
+        """STUB decode: parse the fake 12-byte header. A real
+        implementation would call Pillow/libav here; everything around
+        it is unchanged."""
+        width = int.from_bytes(blob[0:4], "big")
+        height = int.from_bytes(blob[4:8], "big")
+        n_frames = int.from_bytes(blob[8:12], "big")
+        return formats[len(blob) % 3], width, height, n_frames, len(blob)
+
+    return _parse_header
+
+
+_parse_header = _header_parser()
 
 
 def decode_image_real(blob: bytes) -> tuple[str, int, int, int, int]:
@@ -281,19 +294,12 @@ def media_near_dups(
     # both join sides read this one shuffle (AQE reuses it), so the
     # signature kernel runs once, not once per side
     bands = bands.repartition("band", "bh")
-    a = bands.select(
-        F.col(id_col).alias("id_a"), F.col("ahash").alias("ha"), "band", "bh"
-    )
-    b = bands.select(
-        F.col(id_col).alias("id_b"), F.col("ahash").alias("hb"), "band", "bh"
-    )
     cands = (
-        a.join(b, ["band", "bh"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b", "ha", "hb")
+        _bucket_self_join(bands, id_col, ["band", "bh"], ["ahash"])
+        .select("id_a", "id_b", "ahash_a", "ahash_b")
         .distinct()
     )
-    ham = F.bit_count(F.col("ha").bitwiseXOR(F.col("hb")))
+    ham = F.bit_count(F.col("ahash_a").bitwiseXOR(F.col("ahash_b")))
     return (
         cands.withColumn("hamming", ham.cast("int"))
         .filter(F.col("hamming") <= max_hamming)

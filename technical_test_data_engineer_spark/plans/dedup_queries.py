@@ -22,6 +22,7 @@ from technical_test_data_engineer_spark.operators.bounded import local_frame
 from technical_test_data_engineer_spark.operators.partitioning import fan_out
 from technical_test_data_engineer_spark.operators.text import md5_bucket
 from technical_test_data_engineer_spark.operators.dedup import (
+    _attach_both,
     embedding_near_dup_pairs,
     jaccard,
     minhash_candidates,
@@ -568,14 +569,7 @@ def split_contamination_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     pairs = shared_minhash_pairs(spark, sf_dir)
     out = (
-        pairs.join(
-            split.select(F.col("doc_id").alias("id_a"), F.col("split").alias("split_a")),
-            "id_a",
-        )
-        .join(
-            split.select(F.col("doc_id").alias("id_b"), F.col("split").alias("split_b")),
-            "id_b",
-        )
+        _attach_both(pairs, split, "doc_id", ["split"])
         .filter(F.col("split_a") != F.col("split_b"))
         .select("id_a", "id_b", "split_a", "split_b", "jaccard")
     )
@@ -765,28 +759,11 @@ def cluster_aware_split_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise("val")
         .alias("cluster_split")
     )
+    with_component = pairs.join(
+        cc.select(F.col("doc_id").alias("id_a"), "component"), "id_a"
+    )
     out = (
-        pairs.join(
-            cc.select(
-                F.col("doc_id").alias("id_a"),
-                F.col("component").alias("component"),
-            ),
-            "id_a",
-        )
-        .join(
-            splits.select(
-                F.col("doc_id").alias("id_a"),
-                F.col("naive_split").alias("naive_split_a"),
-            ),
-            "id_a",
-        )
-        .join(
-            splits.select(
-                F.col("doc_id").alias("id_b"),
-                F.col("naive_split").alias("naive_split_b"),
-            ),
-            "id_b",
-        )
+        _attach_both(with_component, splits, "doc_id", ["naive_split"])
         .select(
             "id_a",
             "id_b",
@@ -1275,14 +1252,7 @@ def split_contamination_audit_md5(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     pairs = minhash_candidates(docs, threshold=0.5, portable=True)
     return (
-        pairs.join(
-            split.select(F.col("doc_id").alias("id_a"), F.col("split").alias("split_a")),
-            "id_a",
-        )
-        .join(
-            split.select(F.col("doc_id").alias("id_b"), F.col("split").alias("split_b")),
-            "id_b",
-        )
+        _attach_both(pairs, split, "doc_id", ["split"])
         .filter(F.col("split_a") != F.col("split_b"))
         .select("id_a", "id_b", "split_a", "split_b", "jaccard")
         .orderBy("id_a", "id_b")

@@ -4081,6 +4081,46 @@ def copurchase_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _part_year_basket(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The matched-basket grid both price indexes read: one row per
+    (part, ship year) with that year's average ``unit_price`` and
+    ``qty``, joined to the part's base-year (earliest year) ``p0`` and
+    ``q0``. Parts absent from the base year drop out."""
+    li = load_table(spark, sf_dir, "lineitem")
+    # persisted: the (part, year) grid feeds the base-year slice and
+    # the index join — one lineitem scan total (tests/PLAN_SHAPES.json).
+    # Exact BIGINT cents/units folds: prices are exact 2-decimal values
+    # and quantities integral, so unit_price and qty are the correctly
+    # rounded doubles of exact rationals; the oracle mirrors the fold.
+    cents = F.round(F.col("l_extendedprice") * F.lit(100), 0).cast("bigint")
+    qint = F.round(F.col("l_quantity"), 0).cast("bigint")
+    py = (
+        li.groupBy(
+            "l_partkey",
+            F.year(F.col("l_shipdate").cast("date")).cast("int").alias("yr"),
+        )
+        .agg(
+            (
+                (F.sum(cents).cast("double") / F.lit(100.0))
+                / F.sum(qint).cast("double")
+            ).alias("unit_price"),
+            F.sum(qint).cast("double").alias("qty"),
+        )
+        .persist()
+    )
+    min_yr = py.agg(F.min("yr").alias("myr"))
+    base = (
+        py.crossJoin(F.broadcast(min_yr))
+        .filter(F.col("yr") == F.col("myr"))
+        .select(
+            "l_partkey",
+            F.col("unit_price").alias("p0"),
+            F.col("qty").alias("q0"),
+        )
+    )
+    return py.join(base, "l_partkey")
+
+
 @query(
     "yearly_price_index_laspeyres",
     """
@@ -4128,43 +4168,7 @@ def yearly_price_index_laspeyres(
     then a part-keyed join against the base basket and a years-sized
     rollup. All sums DECIMAL; the unit-price ratio is one double
     division on exact sums."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # persisted: the (part, year) grid feeds the base-year slice and
-    # the index join — one lineitem scan total (tests/PLAN_SHAPES.json)
-    # r14 (guide §2.3 narrower types): exact BIGINT cents/units folds
-    # replace the DECIMAL(30,10) accumulators — unit_price and qty are
-    # BIT-IDENTICAL doubles (prices are exact 2-decimal values,
-    # quantities integral; both forms produce the correctly-rounded
-    # double of the same exact rational — the supplier_bradley_terry
-    # proof), so every downstream product, decimal sum and index value
-    # is unchanged; the oracle mirrors the same fold.
-    cents = F.round(F.col("l_extendedprice") * F.lit(100), 0).cast("bigint")
-    qint = F.round(F.col("l_quantity"), 0).cast("bigint")
-    py = (
-        li.groupBy(
-            "l_partkey",
-            F.year(F.col("l_shipdate").cast("date")).cast("int").alias("yr"),
-        )
-        .agg(
-            (
-                (F.sum(cents).cast("double") / F.lit(100.0))
-                / F.sum(qint).cast("double")
-            ).alias("unit_price"),
-            F.sum(qint).cast("double").alias("qty"),
-        )
-        .persist()
-    )
-    min_yr = py.agg(F.min("yr").alias("myr"))
-    base = (
-        py.crossJoin(F.broadcast(min_yr))
-        .filter(F.col("yr") == F.col("myr"))
-        .select(
-            "l_partkey",
-            F.col("unit_price").alias("p0"),
-            F.col("qty").alias("q0"),
-        )
-    )
-    joined = py.join(base, "l_partkey").select(
+    joined = _part_year_basket(spark, sf_dir).select(
         "yr",
         (F.col("unit_price") * F.col("q0")).alias("cur_val"),
         (F.col("p0") * F.col("q0")).alias("base_val"),
@@ -5793,43 +5797,7 @@ def yearly_price_index_fisher(spark: SparkSession, sf_dir: str) -> DataFrame:
     of DECIMAL-summed columns — no new scan, no new join. Cost profile
     identical to the Laspeyres query: one fact agg, one part-keyed
     join against the base basket, a years-sized rollup."""
-    li = load_table(spark, sf_dir, "lineitem")
-    # persisted: the (part, year) grid feeds the base-year slice and
-    # the index join — one lineitem scan total (tests/PLAN_SHAPES.json)
-    # r14 (guide §2.3 narrower types): exact BIGINT cents/units folds
-    # replace the DECIMAL(30,10) accumulators — unit_price and qty are
-    # BIT-IDENTICAL doubles (prices are exact 2-decimal values,
-    # quantities integral; both forms produce the correctly-rounded
-    # double of the same exact rational — the supplier_bradley_terry
-    # proof), so every downstream product, decimal sum and index value
-    # is unchanged; the oracle mirrors the same fold.
-    cents = F.round(F.col("l_extendedprice") * F.lit(100), 0).cast("bigint")
-    qint = F.round(F.col("l_quantity"), 0).cast("bigint")
-    py = (
-        li.groupBy(
-            "l_partkey",
-            F.year(F.col("l_shipdate").cast("date")).cast("int").alias("yr"),
-        )
-        .agg(
-            (
-                (F.sum(cents).cast("double") / F.lit(100.0))
-                / F.sum(qint).cast("double")
-            ).alias("unit_price"),
-            F.sum(qint).cast("double").alias("qty"),
-        )
-        .persist()
-    )
-    min_yr = py.agg(F.min("yr").alias("myr"))
-    base = (
-        py.crossJoin(F.broadcast(min_yr))
-        .filter(F.col("yr") == F.col("myr"))
-        .select(
-            "l_partkey",
-            F.col("unit_price").alias("p0"),
-            F.col("qty").alias("q0"),
-        )
-    )
-    joined = py.join(base, "l_partkey").select(
+    joined = _part_year_basket(spark, sf_dir).select(
         "yr",
         (F.col("unit_price") * F.col("q0")).alias("l_num"),
         (F.col("p0") * F.col("q0")).alias("l_den"),

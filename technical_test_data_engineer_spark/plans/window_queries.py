@@ -297,14 +297,25 @@ def events_gapfilled_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     filtered series yields an empty result instead of a parse error).
     Rounded to 9 dp: the interpolation is pure double arithmetic,
     structured identically in the oracle."""
-    from pyspark import StorageLevel
-
     events = load_table(spark, sf_dir, "events").filter(
         F.col("event_type") == "error"
     )
-    # persist: the (tiny) hourly aggregate feeds both the spine bounds
-    # and the join side — without it the events scan + agg run twice
-    hourly = events.groupBy(F.date_trunc("hour", "ts").alias("hour")).agg(
+    return _gapfilled_hourly(events, [])
+
+
+def _gapfilled_hourly(events: DataFrame, keys: list[str]) -> DataFrame:
+    """Hourly (count, average value) per series — one series per value
+    of ``keys``, a single series when ``keys`` is empty — on a full hour
+    spine from each series' own min to max hour: missing hours get
+    count 0 and a value linearly interpolated between the nearest
+    observed neighbors (boundary gaps take the nearest value), rounded
+    to 9 dp. Every window is partitioned by ``keys``. Ordered by
+    ``keys``, then hour."""
+    from pyspark import StorageLevel
+
+    # persist: the hourly aggregate feeds both the spine bounds and the
+    # join side — without it the events scan + agg run twice
+    hourly = events.groupBy(*keys, F.date_trunc("hour", "ts").alias("hour")).agg(
         F.count("*").alias("n_events"),
         (
             exact_sum(F.col("value"))
@@ -312,19 +323,25 @@ def events_gapfilled_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("avg_value"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     spine = (
-        hourly.agg(F.min("hour").alias("_lo"), F.max("hour").alias("_hi"))
+        hourly.groupBy(*keys)
+        .agg(F.min("hour").alias("_lo"), F.max("hour").alias("_hi"))
         .select(
+            *keys,
             F.explode(
                 F.sequence("_lo", "_hi", F.expr("interval 1 hour"))
-            ).alias("hour")
+            ).alias("hour"),
         )
     )
-    joined = spine.join(hourly, "hour", "left")
-    w_prev = Window.orderBy("hour").rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
+    joined = spine.join(hourly, [*keys, "hour"], "left")
+    w_prev = (
+        Window.partitionBy(*keys)
+        .orderBy("hour")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     )
-    w_next = Window.orderBy("hour").rowsBetween(
-        Window.currentRow, Window.unboundedFollowing
+    w_next = (
+        Window.partitionBy(*keys)
+        .orderBy("hour")
+        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
     )
     obs_hour = F.when(F.col("avg_value").isNotNull(), F.col("hour"))
     prev_v = F.last("avg_value", ignorenulls=True).over(w_prev)
@@ -345,10 +362,11 @@ def events_gapfilled_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return joined.select(
+        *keys,
         "hour",
         F.coalesce("n_events", F.lit(0)).cast("bigint").alias("n_events"),
         F.round(interp, 9).alias("avg_value_filled"),
-    ).orderBy("hour")
+    ).orderBy(*keys, "hour")
 
 
 @query(
@@ -415,65 +433,7 @@ def events_gapfilled_by_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     by the series key, so series fill in parallel and no executor ever
     holds more than one series' frame. Interpolation semantics are
     identical to events_gapfilled_hourly."""
-    from pyspark import StorageLevel
-
-    events = load_table(spark, sf_dir, "events")
-    # persist: the per-(type, hour) aggregate feeds both the per-series
-    # bounds and the join side — one events scan instead of two
-    hourly = events.groupBy(
-        "event_type", F.date_trunc("hour", "ts").alias("hour")
-    ).agg(
-        F.count("*").alias("n_events"),
-        (
-            exact_sum(F.col("value"))
-            / F.count("*")
-        ).alias("avg_value"),
-    ).persist(StorageLevel.MEMORY_AND_DISK)
-    spine = (
-        hourly.groupBy("event_type")
-        .agg(F.min("hour").alias("_lo"), F.max("hour").alias("_hi"))
-        .select(
-            "event_type",
-            F.explode(
-                F.sequence("_lo", "_hi", F.expr("interval 1 hour"))
-            ).alias("hour"),
-        )
-    )
-    joined = spine.join(hourly, ["event_type", "hour"], "left")
-    w_prev = (
-        Window.partitionBy("event_type")
-        .orderBy("hour")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    w_next = (
-        Window.partitionBy("event_type")
-        .orderBy("hour")
-        .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    )
-    obs_hour = F.when(F.col("avg_value").isNotNull(), F.col("hour"))
-    prev_v = F.last("avg_value", ignorenulls=True).over(w_prev)
-    next_v = F.first("avg_value", ignorenulls=True).over(w_next)
-    prev_h = F.last(obs_hour, ignorenulls=True).over(w_prev)
-    next_h = F.first(obs_hour, ignorenulls=True).over(w_next)
-    hours_between = lambda a, b: (  # noqa: E731
-        (F.unix_timestamp(b) - F.unix_timestamp(a)) / 3600
-    ).cast("double")
-    interp = (
-        F.when(F.col("avg_value").isNotNull(), F.col("avg_value"))
-        .when(prev_v.isNull(), next_v)
-        .when(next_v.isNull(), prev_v)
-        .otherwise(
-            prev_v
-            + (next_v - prev_v)
-            * (hours_between(prev_h, F.col("hour")) / hours_between(prev_h, next_h))
-        )
-    )
-    return joined.select(
-        "event_type",
-        "hour",
-        F.coalesce("n_events", F.lit(0)).cast("bigint").alias("n_events"),
-        F.round(interp, 9).alias("avg_value_filled"),
-    ).orderBy("event_type", "hour")
+    return _gapfilled_hourly(load_table(spark, sf_dir, "events"), ["event_type"])
 
 
 @query(

@@ -46,7 +46,7 @@ from pyspark.sql.types import (
 
 from technical_test_data_engineer_spark.operators.dedup import (
     DEFAULT_HOT_BUCKET_CAP,
-    lsh_band_keys,
+    minhash_band_rows,
     minhash_signature,
     word_shingles,
 )
@@ -80,8 +80,8 @@ def stream_minhash_candidates(
     """Candidate pairs (id_a < id_b) for every pair of docs sharing a
     MinHash band bucket, emitted incrementally as docs arrive.
 
-    Identical band-key expressions to the batch pipeline
-    (operators/dedup._minhash_base_and_bands), so a stream fed the same
+    Bands through the batch pipeline's own step
+    (operators/dedup.minhash_band_rows), so a stream fed the same
     corpus produces exactly the batch candidate set (asserted in
     tests/test_streaming_neardup.py). Works on a batch frame too —
     ``applyInPandasWithState`` requires a stream, so the batch path
@@ -101,22 +101,9 @@ def stream_minhash_candidates(
     loops timeout-cleanup batches indefinitely once any group arms a
     processing-time timeout (observed on Spark 4.1; the bounded-backfill
     trigger has no meaningful processing-time horizon anyway)."""
-    rows_per_band = num_hashes // bands
-    banded = (
-        docs.select(id_col, text_col)
-        .select(
-            F.col(id_col),
-            F.explode(
-                lsh_band_keys(
-                    minhash_signature(
-                        word_shingles(text_col, shingle_n), num_hashes, seed
-                    ),
-                    bands,
-                    rows_per_band,
-                )
-            ).alias("_b"),
-        )
-        .select(id_col, F.col("_b.band").alias("_band"), F.col("_b.bh").alias("_bh"))
+    sig = minhash_signature(word_shingles(text_col, shingle_n), num_hashes, seed)
+    banded = minhash_band_rows(
+        docs.select(id_col, text_col), id_col, sig, num_hashes, bands
     )
 
     def _pair_bucket(

@@ -331,3 +331,64 @@ def test_loop_twin_fixture_cap_inactive(spark):
         .collect()[0][0]
     )
     assert max_bucket < DEFAULT_HOT_BUCKET_CAP, max_bucket
+
+
+def _keyed(spark):
+    # buckets (k1, k2): (1, 1) holds 10, 11, 12; (2, 1) holds 10 and 11
+    # again; 13 shares only k1 with them; 14 and 15 have a NULL k1
+    return spark.createDataFrame(
+        [(10, 1, 1, "p10"), (11, 1, 1, "p11"), (12, 1, 1, "p12"),
+         (10, 2, 1, "p10"), (11, 2, 1, "p11"), (13, 1, 2, "p13"),
+         (14, None, 1, "p14"), (15, None, 1, "p15")],
+        "id long, k1 int, k2 int, p string",
+    )
+
+
+def test_bucket_self_join_pairs_once_per_shared_bucket(spark):
+    from technical_test_data_engineer_spark.operators.dedup import (
+        _bucket_self_join,
+    )
+
+    out = _bucket_self_join(_keyed(spark), "id", ["k1", "k2"], ["p"])
+    assert set(out.columns) == {"k1", "k2", "id_a", "p_a", "id_b", "p_b"}
+    got = sorted((r.id_a, r.id_b, r.p_a, r.p_b) for r in out.collect())
+    # (10, 11) shares two buckets, so it comes twice; no (i, i) pair
+    assert got == [
+        (10, 11, "p10", "p11"), (10, 11, "p10", "p11"),
+        (10, 12, "p10", "p12"), (11, 12, "p11", "p12"),
+    ]
+
+
+def test_bucket_probe_join_pairs_only_probe_rows(spark):
+    from technical_test_data_engineer_spark.operators.dedup import (
+        _bucket_probe_join,
+    )
+
+    corpus = _keyed(spark)
+    out = _bucket_probe_join(corpus.filter("id = 12"), corpus, "id", ["k1", "k2"])
+    assert out.columns == ["id_a", "id_b"]
+    # the probe id lands on either side: least/greatest, never (12, 12)
+    assert sorted(tuple(r) for r in out.collect()) == [(10, 12), (11, 12)]
+    # two probe ids in one bucket meet from both sides; dedup is the caller's
+    two = corpus.filter("id IN (10, 11)")
+    both = _bucket_probe_join(two, corpus, "id", ["k1", "k2"])
+    assert sorted(tuple(r) for r in both.collect()) == (
+        [(10, 11)] * 4 + [(10, 12), (11, 12)]
+    )
+
+
+def test_null_bucket_key_never_pairs(spark):
+    from technical_test_data_engineer_spark.operators.dedup import (
+        _attach_both,
+        _bucket_probe_join,
+        _bucket_self_join,
+    )
+
+    nulls = _keyed(spark).filter("k1 IS NULL")
+    assert _bucket_self_join(nulls, "id", ["k1", "k2"]).count() == 0
+    assert _bucket_probe_join(nulls, nulls, "id", ["k1", "k2"]).count() == 0
+    # attach: per-id columns arrive suffixed on both sides, an id
+    # missing from the per-id frame drops its pair
+    pairs = spark.createDataFrame([(14, 15), (14, 99)], "id_a long, id_b long")
+    got = _attach_both(pairs, nulls, "id", ["p"]).select("id_a", "id_b", "p_a", "p_b")
+    assert [tuple(r) for r in got.collect()] == [(14, 15, "p14", "p15")]

@@ -263,14 +263,28 @@ _FOREIGN_CWD_CASES = {
         print(sorted((r.query_id, r.vec_id, r.rank) for r in out.collect()))
         """,
 }
+# the two media queries on a mapInPandas stub decoder: each case prints
+# the registry query's rows, compared with the same query run here
+_FOREIGN_CWD_CASES.update(
+    {
+        q: f"""
+        from technical_test_data_engineer_spark.plans.multimodal_queries import (
+            {q},
+        )
+        print([tuple(r) for r in {q}(spark, {SF!r}).collect()])
+        """
+        for q in ("media_decode_meta", "media_frame_sample_stats")
+    }
+)
 
 
 @pytest.mark.parametrize("case", sorted(_FOREIGN_CWD_CASES))
-def test_moment_fold_runs_from_a_foreign_cwd(tmp_path, case):
+def test_moment_fold_runs_from_a_foreign_cwd(tmp_path, case, spark):
     """Python-worker closures ship everything their workers run: the
     package is importable here only through the driver's ``sys.path``,
     not from the workers' cwd or PYTHONPATH. Cases: the ``mapInPandas``
-    moment fold, and PQ's fused ADC scorer plus re-rank."""
+    moment fold, PQ's fused ADC scorer plus re-rank, and the two media
+    queries whose ``mapInPandas`` closures parse the stub header."""
     import ast
     import os
     import subprocess
@@ -301,6 +315,12 @@ def test_moment_fold_runs_from_a_foreign_cwd(tmp_path, case):
     )
     assert out.returncode == 0, out.stderr[-3000:]
     got = ast.literal_eval(out.stdout.strip().splitlines()[-1])
+    if case.startswith("media_"):
+        from technical_test_data_engineer_spark.plans import multimodal_queries
+
+        here = getattr(multimodal_queries, case)(spark, SF).collect()
+        assert got == [tuple(r) for r in here]
+        return
     if case == "pq_adc_rerank":
         # the shortlist holds every candidate, so the re-rank is exact
         V = np.array(_PQ_VECS)
