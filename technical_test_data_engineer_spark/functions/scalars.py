@@ -42,10 +42,10 @@ def inclusive_duration_days(debut: Column | str, fin: Column | str) -> Column:
     return (F.datediff(fin, debut) + F.lit(1)).alias("duration_days")
 
 
-def display_date(col: Column | str, fmt: str = "dd/MM/yyyy") -> Column:
+def display_date(col: Column | str) -> Column:
     """F4 — presentation date format (``strftime('%d/%m/%Y')``,
     visualization.py:107/:133), column-capable in the engine."""
-    return F.date_format(col, fmt)
+    return F.date_format(col, "dd/MM/yyyy")
 
 
 # ---------------------------------------------------------------------------

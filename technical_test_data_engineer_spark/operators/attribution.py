@@ -30,14 +30,10 @@ DROP = "DROP"
 MAX_CHANNELS = 100
 
 
-def journey_transition_counts(
-    events: DataFrame,
-    conversion_type: str = "purchase",
-    ts_col: str = "ts",
-    tiebreak_col: str = "event_id",
-) -> DataFrame:
+def journey_transition_counts(events: DataFrame) -> DataFrame:
     """Distributed transition counts over per-user journeys truncated
-    at the FIRST conversion: START→first-touch, touch→touch,
+    at the FIRST conversion (a ``purchase`` event, journeys ordered by
+    ``ts`` then ``event_id``): START→first-touch, touch→touch,
     last-touch→CONV/DROP, plus START→CONV for users converting with no
     prior touches. Output (src, dst, n) is channel-vocabulary-sized.
 
@@ -52,18 +48,16 @@ def journey_transition_counts(
     solo — sequential job latency beats the scan savings at bench
     scale, and both forms scan the fact O(1) times at 100 TB)."""
     conv = (
-        events.filter(F.col("event_type") == conversion_type)
+        events.filter(F.col("event_type") == "purchase")
         .groupBy("user_id")
-        .agg(F.min(ts_col).alias("conv_ts"))
+        .agg(F.min("ts").alias("conv_ts"))
     )
     touches = (
-        events.filter(F.col("event_type") != conversion_type)
+        events.filter(F.col("event_type") != "purchase")
         .join(conv, "user_id", "left")
-        .filter(
-            F.col("conv_ts").isNull() | (F.col(ts_col) < F.col("conv_ts"))
-        )
+        .filter(F.col("conv_ts").isNull() | (F.col("ts") < F.col("conv_ts")))
     )
-    w = Window.partitionBy("user_id").orderBy(ts_col, tiebreak_col)
+    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     seq = touches.select(
         "user_id",
         "conv_ts",

@@ -46,6 +46,16 @@ from technical_test_data_engineer_spark.operators.windows import top1_per_group
 # oracle-checked result; production tunes it per corpus.
 DEFAULT_HOT_BUCKET_CAP = 1000
 
+# The MinHash+LSH setting every MinHash pipeline here runs: word
+# 3-gram shingles, 32 seeded hash functions, 8 bands of 4 rows.
+SHINGLE_N = 3
+NUM_HASHES = 32
+BANDS = 8
+SEED = 42
+
+# SimHash band blocking: 8 bands of 8 bits over the 64-bit signature.
+SIMHASH_BANDS = 8
+
 
 def cap_hot_buckets(
     banded: DataFrame, key_cols: list[str], cap: int | None
@@ -130,7 +140,10 @@ def jaccard(a: Column, b: Column) -> Column:
 
 
 def minhash_signature(
-    shingles: Column, num_hashes: int = 32, seed: int = 42, portable: bool = False
+    shingles: Column,
+    num_hashes: int = NUM_HASHES,
+    seed: int = SEED,
+    portable: bool = False,
 ) -> Column:
     """MinHash signature (array<long>, length ``num_hashes``): the i-th
     element is min over shingles of xxhash64(seed_i, shingle). Each scan
@@ -220,33 +233,27 @@ def minhash_band_rows(
 
 
 def _minhash_base_and_bands(
-    df: DataFrame,
-    id_col: str,
-    text_col: str,
-    shingle_n: int,
-    num_hashes: int,
-    bands: int,
-    seed: int,
-    portable: bool,
+    df: DataFrame, portable: bool
 ) -> tuple[DataFrame, DataFrame]:
     """Shared front of the all-pairs and incremental candidate
-    pipelines: ``base`` is the persisted (id, shingles, signature)
-    relation (feeds banding AND both verify sides — without persist
-    each branch re-shingles the corpus; fan_out spreads the per-row
-    hash work when the input scan is under-split), ``banded`` the
-    LIGHT exploded (id, band, band-hash) rows (~24 B) that enter the
-    candidate equi-join. The KB-sized shingle arrays never ride the
-    join — they come back via :func:`_jaccard_verify` after pair dedup."""
+    pipelines over (doc_id, text): ``base`` is the persisted (id,
+    shingles, signature) relation (feeds banding AND both verify sides —
+    without persist each branch re-shingles the corpus; fan_out spreads
+    the per-row hash work when the input scan is under-split),
+    ``banded`` the LIGHT exploded (id, band, band-hash) rows (~24 B)
+    that enter the candidate equi-join. The KB-sized shingle arrays
+    never ride the join — they come back via :func:`_jaccard_verify`
+    after pair dedup."""
     base = (
-        fan_out(df.select(id_col, text_col))
-        .select(F.col(id_col), word_shingles(text_col, shingle_n).alias("_sh"))
+        fan_out(df.select("doc_id", "text"))
+        .select(F.col("doc_id"), word_shingles("text", SHINGLE_N).alias("_sh"))
         .withColumn(
-            "_sig", minhash_signature(F.col("_sh"), num_hashes, seed, portable)
+            "_sig", minhash_signature(F.col("_sh"), NUM_HASHES, SEED, portable)
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
     banded = minhash_band_rows(
-        base, id_col, F.col("_sig"), num_hashes, bands, portable
+        base, "doc_id", F.col("_sig"), NUM_HASHES, BANDS, portable
     )
     return base, banded
 
@@ -329,18 +336,13 @@ def _jaccard_verify(
 
 def minhash_candidates(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.5,
-    seed: int = 42,
     persist: bool = False,
     portable: bool = False,
     hot_bucket_cap: int | None = DEFAULT_HOT_BUCKET_CAP,
 ) -> DataFrame:
-    """Near-duplicate pairs (id_a < id_b, exact jaccard ≥ threshold) —
+    """Near-duplicate ``doc_id`` pairs (id_a < id_b, exact jaccard ≥
+    threshold over the ``text`` column) —
     THE shared MinHash+LSH candidate pipeline: the near-dup listing, the
     decontamination audit, and the dedup-cluster edge set all consume
     this one function (round-2 verdict item 7).
@@ -359,9 +361,7 @@ def minhash_candidates(
     is what per-query bench isolation and one-shot callers want. The
     caller owns the unpersist.
     """
-    base, banded = _minhash_base_and_bands(
-        df, id_col, text_col, shingle_n, num_hashes, bands, seed, portable
-    )
+    base, banded = _minhash_base_and_bands(df, portable)
     banded = cap_hot_buckets(banded, ["_band", "_bh"], hot_bucket_cap)
     # Persist the capped band frame: BOTH self-join sides consume it,
     # and without materialization each side re-runs the cap's
@@ -373,11 +373,11 @@ def minhash_candidates(
     # ``base`` (clearCache per query in bench/verify, LRU otherwise).
     banded = banded.persist(StorageLevel.MEMORY_AND_DISK)
     cands = (
-        _bucket_self_join(banded, id_col, ["_band", "_bh"])
+        _bucket_self_join(banded, "doc_id", ["_band", "_bh"])
         .select("id_a", "id_b")
         .dropDuplicates(["id_a", "id_b"])
     )
-    out = _jaccard_verify(cands, base, id_col, threshold)
+    out = _jaccard_verify(cands, base, "doc_id", threshold)
     if persist:
         out = out.persist(StorageLevel.MEMORY_AND_DISK)
     return out
@@ -388,10 +388,8 @@ def minhash_candidates(
 # ---------------------------------------------------------------------------
 
 
-def simhash_bits(
-    text_col: str | Column = "text", n_bits: int = 64, hash_fn=None
-) -> Column:
-    """SimHash as an array<int> of ``n_bits`` sign bits: per-token
+def simhash_bits(text_col: str | Column = "text", hash_fn=None) -> Column:
+    """SimHash as an array<int> of 64 sign bits: per-token
     xxhash64, majority vote per bit position. ``hash_fn`` swaps the
     token hash (e.g. text.md5_hash64 — 60 meaningful bits — for the
     oracle-paired twin; bits beyond the hash width vote all-negative
@@ -405,10 +403,10 @@ def simhash_bits(
     h = hash_fn or F.xxhash64
     toks = F.split(text_col if isinstance(text_col, str) else text_col, " ")
     hashes = F.transform(toks, lambda t: h(t))
-    positions = F.sequence(F.lit(0), F.lit(n_bits - 1))
+    positions = F.sequence(F.lit(0), F.lit(63))
     votes = F.aggregate(
         hashes,
-        F.expr(f"array_repeat(0, {n_bits})"),
+        F.expr("array_repeat(0, 64)"),
         lambda acc, h: F.zip_with(
             acc, positions, lambda a, j: a + (F.getbit(h, j).cast("int") * 2 - 1)
         ),
@@ -445,32 +443,28 @@ def hamming_packed(a: Column, b: Column) -> Column:
 
 def simhash_near_dup_pairs(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     max_hamming: int = 7,
-    n_bands: int = 8,
     hot_bucket_cap: int | None = DEFAULT_HOT_BUCKET_CAP,
 ) -> DataFrame:
-    """SimHash near-dup pairs via band blocking: with ``n_bands`` bands
-    over 64 bits, pigeonhole guarantees any pair with Hamming <
-    ``n_bands`` shares at least one exact band — so ``max_hamming`` ≤
-    ``n_bands - 1`` is exhaustive, above it probabilistic. Bucket-join
+    """SimHash near-dup ``doc_id`` pairs over ``text`` via band blocking:
+    with ``SIMHASH_BANDS`` bands over 64 bits, pigeonhole guarantees any
+    pair with Hamming < ``SIMHASH_BANDS`` shares at least one exact band
+    — so ``max_hamming`` ≤ ``SIMHASH_BANDS - 1`` is exhaustive, above it
+    probabilistic. Bucket-join
     on (band_idx, band_value), verify exact Hamming. ``hot_bucket_cap``
     guards the self-join against degenerate buckets (boilerplate
     corpora hash-collide entire slices into one band value — m² join
-    rows without the cap); capped buckets weaken the ≤ n_bands - 1
+    rows without the cap); capped buckets weaken the ≤ SIMHASH_BANDS - 1
     exhaustiveness guarantee only for pairs INSIDE dropped buckets,
     which the remaining bands can still pair."""
-    if 64 % n_bands:
-        raise ValueError("n_bands must divide 64")
-    band_bits = 64 // n_bands
+    band_bits = 64 // SIMHASH_BANDS
     mask = (1 << band_bits) - 1
     half_bands = 32 // band_bits
     # fan_out: the token-hash vote fold is the heavy stage. persist:
     # (id, 2×long) is ~24 B/row and feeds both self-join sides.
     base = (
-        fan_out(df.select(id_col, text_col))
-        .select(F.col(id_col), simhash_packed(text_col).alias("_sh"))
+        fan_out(df.select("doc_id", "text"))
+        .select(F.col("doc_id"), simhash_packed("text").alias("_sh"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
@@ -480,14 +474,17 @@ def simhash_near_dup_pairs(
         return F.shiftright(half, shift).bitwiseAND(F.lit(mask))
 
     bands = F.array(
-        *[F.struct(F.lit(i).alias("i"), _band(i).alias("v")) for i in range(n_bands)]
+        *[
+            F.struct(F.lit(i).alias("i"), _band(i).alias("v"))
+            for i in range(SIMHASH_BANDS)
+        ]
     )
-    banded = base.select(id_col, "_sh", F.explode(bands).alias("_b")).select(
-        id_col, "_sh", F.col("_b.i").alias("_i"), F.col("_b.v").alias("_v")
+    banded = base.select("doc_id", "_sh", F.explode(bands).alias("_b")).select(
+        "doc_id", "_sh", F.col("_b.i").alias("_i"), F.col("_b.v").alias("_v")
     )
     banded = cap_hot_buckets(banded, ["_i", "_v"], hot_bucket_cap)
     return (
-        _bucket_self_join(banded, id_col, ["_i", "_v"], ["_sh"])
+        _bucket_self_join(banded, "doc_id", ["_i", "_v"], ["_sh"])
         .withColumn("hamming", hamming_packed(F.col("_sh_a"), F.col("_sh_b")))
         .filter(F.col("hamming") <= max_hamming)
         .select("id_a", "id_b", "hamming")
@@ -503,23 +500,19 @@ def simhash_near_dup_pairs(
 def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     planes_tables: list[list[list[float]]] | None = None,
-    exact_scores: bool = False,
     score_metric: str | None = None,
 ) -> DataFrame:
-    """Pairs with cosine(dot for unit vectors) ≥ threshold.
+    """``vec_id`` pairs whose ``embedding`` cosine (dot for unit
+    vectors) is ≥ threshold.
 
-    With ``planes_tables``: SRP-LSH bucket self-join (scale path).
-    Without: full pair scoring — only for small/filtered inputs.
-    ``exact_scores=True`` forces the decimal-exact dot on the LSH path
-    too (oracle-paired companion queries); default keeps the 5× cheaper
-    double fold there. ``score_metric`` overrides the scorer outright:
-    ``"int"`` emits the integer-scaled BIGINT score (int_scaled_dot —
-    the r10 convention; the threshold compares as round(t·1e10) in the
-    same scaled domain, so the filter is the exact integer image of
-    ``score ≥ t``), ``"exact"``/``"fast"`` force those dots.
+    With ``planes_tables``: SRP-LSH bucket self-join (scale path),
+    scored with the 5× cheaper double fold. Without: full pair scoring
+    with the decimal-exact dot — only for small/filtered inputs.
+    ``score_metric="int"`` scores either path with the integer-scaled
+    BIGINT dot (int_scaled_dot — the r10 convention; the threshold
+    compares as round(t·1e10) in the same scaled domain, so the filter
+    is the exact integer image of ``score ≥ t``).
     """
     from technical_test_data_engineer_spark.operators.similarity import (
         exact_dot,
@@ -538,45 +531,43 @@ def embedding_near_dup_pairs(
         # stage runs once and the join needs no shuffle of its own.
         sig_udf = srp_signatures_batch(planes_tables)
         bucketed = (
-            fan_out(df.select(id_col, vec_col))
-            .select(id_col, F.posexplode(sig_udf(F.col(vec_col))).alias("_t", "_s"))
+            fan_out(df.select("vec_id", "embedding"))
+            .select(
+                "vec_id", F.posexplode(sig_udf(F.col("embedding"))).alias("_t", "_s")
+            )
             .repartition("_t", "_s")
         )
         # Pair-dedup placement depends on the scorer: re-scoring a pair
         # once per agreeing table (≤ n_tables×) costs a few extra
         # fast_dot folds — cheaper than the extra shuffle stage a
         # dropDuplicates on the full candidate set adds, so the fast
-        # path dedups only the survivors below. The decimal-exact fold
-        # is ~100× a double fold (interpreted HOF + BigDecimal), so on
-        # the exact path the shuffle is the cheap side and duplicates
-        # are dropped BEFORE any scoring happens.
-        cands = _bucket_self_join(bucketed, id_col, ["_t", "_s"]).select(
+        # path dedups only the survivors below. The integer-scaled fold
+        # rounds every element product to BIGINT, so on that path
+        # duplicates are dropped BEFORE any scoring happens.
+        cands = _bucket_self_join(bucketed, "vec_id", ["_t", "_s"]).select(
             "id_a", "id_b"
         )
-        if exact_scores or score_metric == "int":
+        if score_metric == "int":
             cands = cands.dropDuplicates(["id_a", "id_b"])
-        cands = _attach_both(cands, df.select(id_col, vec_col), id_col, [vec_col])
+        cands = _attach_both(
+            cands, df.select("vec_id", "embedding"), "vec_id", ["embedding"]
+        )
     else:
         # stream side fanned out so the O(n²) scoring uses every core;
         # the build side stays as-is (it is broadcast whole).
-        l = fan_out(_id_side(df, id_col, "a", [vec_col]))
-        r = _id_side(df, id_col, "b", [vec_col])
+        l = fan_out(_id_side(df, "vec_id", "a", ["embedding"]))
+        r = _id_side(df, "vec_id", "b", ["embedding"])
         cands = l.crossJoin(F.broadcast(r)).filter(F.col("id_a") < F.col("id_b"))
-    # decimal exact_dot on the oracle-compared exact path; double
-    # fast_dot on the LSH path (rows-only checked, 5× cheaper);
-    # score_metric overrides (the "int" path compares in the scaled
-    # integer domain — same predicate image, no float anywhere).
+    # the "int" path compares in the scaled integer domain — same
+    # predicate image, no float anywhere
     if score_metric == "int":
         dot = int_scaled_dot
         thresh = F.lit(int(round(threshold * 1e10))).cast("bigint")
     else:
-        if score_metric is not None:
-            dot = exact_dot if score_metric == "exact" else fast_dot
-        else:
-            dot = fast_dot if (planes_tables and not exact_scores) else exact_dot
+        dot = fast_dot if planes_tables else exact_dot
         thresh = F.lit(threshold)
     out = (
-        cands.withColumn("score", dot(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")))
+        cands.withColumn("score", dot(F.col("embedding_a"), F.col("embedding_b")))
         .filter(F.col("score") >= thresh)
         .select("id_a", "id_b", "score")
     )
@@ -585,23 +576,14 @@ def embedding_near_dup_pairs(
     return out
 
 
-def band_table(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
-    seed: int = 42,
-    portable: bool = False,
-) -> DataFrame:
-    """The light (id, band, band-hash) relation on its own — what a
-    production deployment STORES (≈ bands × 16 B per doc) instead of
-    recomputing shingles + signatures from text per ingest."""
-    shingles = word_shingles(text_col, shingle_n)
-    sig = minhash_signature(shingles, num_hashes, seed, portable)
+def band_table(df: DataFrame) -> DataFrame:
+    """The light (doc_id, band, band-hash) relation of a (``doc_id``,
+    ``text``) corpus on its own — what a production deployment STORES
+    (≈ bands × 16 B per doc) instead of recomputing shingles +
+    signatures from text per ingest."""
+    sig = minhash_signature(word_shingles("text", SHINGLE_N), NUM_HASHES, SEED)
     return minhash_band_rows(
-        fan_out(df.select(id_col, text_col)), id_col, sig, num_hashes, bands, portable
+        fan_out(df.select("doc_id", "text")), "doc_id", sig, NUM_HASHES, BANDS
     )
 
 
@@ -611,7 +593,6 @@ def materialize_band_table(
     n_buckets: int = 16,
     mode: str = "overwrite",
     ingest_batch: int | None = None,
-    **band_kwargs,
 ) -> None:
     """Persist the corpus band relation as a table BUCKETED on the band
     join keys — the storage layout that makes per-ingest dedup
@@ -640,7 +621,7 @@ def materialize_band_table(
         write_bucketed_table,
     )
 
-    bands = band_table(df, **band_kwargs)
+    bands = band_table(df)
     partition_cols = None
     if ingest_batch is not None:
         bands = bands.withColumn(
@@ -661,9 +642,7 @@ def incremental_candidates_vs_band_table(
     spark,
     table_name: str,
     new_docs: DataFrame,
-    id_col: str = "doc_id",
     hot_bucket_cap: int | None = DEFAULT_HOT_BUCKET_CAP,
-    **band_kwargs,
 ) -> DataFrame:
     """Candidate pairs (id_a < id_b, at least one side new) from the
     STORED band table: band the new batch (scan-side), join it against
@@ -672,29 +651,23 @@ def incremental_candidates_vs_band_table(
     joining shingles back (``_jaccard_verify``-style) downstream, where
     the text lives. The cap guards the same degenerate buckets as the
     in-memory path."""
-    new_b = band_table(new_docs, id_col=id_col, **band_kwargs)
+    new_b = band_table(new_docs)
     corpus_b = spark.table(table_name)
     if hot_bucket_cap is not None:
         corpus_b = cap_hot_buckets(corpus_b, ["_band", "_bh"], hot_bucket_cap)
-    return _bucket_probe_join(new_b, corpus_b, id_col, ["_band", "_bh"]).dropDuplicates(
-        ["id_a", "id_b"]
-    )
+    return _bucket_probe_join(
+        new_b, corpus_b, "doc_id", ["_band", "_bh"]
+    ).dropDuplicates(["id_a", "id_b"])
 
 
 def minhash_incremental_pairs(
     corpus: DataFrame,
     new_docs: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    shingle_n: int = 3,
-    num_hashes: int = 32,
-    bands: int = 8,
     threshold: float = 0.5,
-    seed: int = 42,
     portable: bool = False,
     hot_bucket_cap: int | None = DEFAULT_HOT_BUCKET_CAP,
 ) -> DataFrame:
-    """Incremental near-dedup: pairs (id_a < id_b, jaccard ≥ threshold)
+    """Incremental near-dedup: ``doc_id`` pairs (id_a < id_b, jaccard ≥ threshold)
     where AT LEAST ONE side is in ``new_docs`` — the daily-ingestion
     shape at corpus scale. Old-vs-old pairs are never generated: the
     band join is new-batch bands ⋈ full-corpus bands, so its cost is
@@ -713,21 +686,19 @@ def minhash_incremental_pairs(
     id — fine for any realistic ingest batch); band the new batch
     directly instead if it ever isn't. Deterministic for fixed seed.
     """
-    base, banded = _minhash_base_and_bands(
-        corpus, id_col, text_col, shingle_n, num_hashes, bands, seed, portable
-    )
+    base, banded = _minhash_base_and_bands(corpus, portable)
     # cap BEFORE deriving the new-batch side so both join inputs agree
     # on which buckets exist — a hot bucket is degenerate regardless of
     # which ingest batch its members arrived in
     banded = cap_hot_buckets(banded, ["_band", "_bh"], hot_bucket_cap)
-    new_ids = new_docs.select(F.col(id_col).alias("_nid")).distinct()
+    new_ids = new_docs.select(F.col("doc_id").alias("_nid")).distinct()
     new_b = banded.join(
-        F.broadcast(new_ids), banded[id_col] == F.col("_nid")
-    ).select(id_col, "_band", "_bh")
-    cands = _bucket_probe_join(new_b, banded, id_col, ["_band", "_bh"]).dropDuplicates(
-        ["id_a", "id_b"]
-    )
-    return _jaccard_verify(cands, base, id_col, threshold)
+        F.broadcast(new_ids), banded["doc_id"] == F.col("_nid")
+    ).select("doc_id", "_band", "_bh")
+    cands = _bucket_probe_join(
+        new_b, banded, "doc_id", ["_band", "_bh"]
+    ).dropDuplicates(["id_a", "id_b"])
+    return _jaccard_verify(cands, base, "doc_id", threshold)
 
 
 # ---------------------------------------------------------------------------
@@ -768,17 +739,16 @@ def semantic_dedup(
     df: DataFrame,
     centroids: list[list[float]],
     threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     exact_scores: bool = False,
     hot_cluster_cap: int | None = DEFAULT_HOT_BUCKET_CAP,
 ) -> DataFrame:
     """SemDeDup (Abbas et al., 2023, arXiv:2303.09540): cluster-scoped
-    semantic dedup — assign every vector to its nearest centroid, score
-    pairs only WITHIN a cluster, and for every pair above ``threshold``
-    drop the member with the HIGHER similarity to its centroid (the
-    paper's policy: prototypical near-dups go, the outlier stays; ties
-    drop the higher id). Returns the KEPT set as (id, cluster).
+    semantic dedup of (``vec_id``, ``embedding``) — assign every vector
+    to its nearest centroid, score pairs only WITHIN a cluster, and for
+    every pair above ``threshold`` drop the member with the HIGHER
+    similarity to its centroid (the paper's policy: prototypical
+    near-dups go, the outlier stays; ties drop the higher id). Returns
+    the KEPT set as (id, cluster).
 
     vs the SRP-LSH near-dup path: buckets there are random sign
     patterns (recall is probabilistic per band); clusters here are
@@ -800,21 +770,21 @@ def semantic_dedup(
         fast_dot,
     )
 
-    assigned = fan_out(df.select(id_col, vec_col)).select(
-        F.col(id_col),
-        F.col(vec_col),
-        centroid_sim_argmax(F.col(vec_col), centroids).alias("_a"),
+    assigned = fan_out(df.select("vec_id", "embedding")).select(
+        F.col("vec_id"),
+        F.col("embedding"),
+        centroid_sim_argmax(F.col("embedding"), centroids).alias("_a"),
     ).select(
-        id_col,
-        vec_col,
+        "vec_id",
+        "embedding",
         F.col("_a.cluster").alias("_c"),
         F.col("_a.csim").alias("_cs"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     pairable = cap_hot_buckets(assigned, ["_c"], hot_cluster_cap)
     dot = exact_dot if exact_scores else fast_dot
     pairs = (
-        _bucket_self_join(pairable, id_col, ["_c"], [vec_col, "_cs"])
-        .withColumn("_score", dot(F.col(f"{vec_col}_a"), F.col(f"{vec_col}_b")))
+        _bucket_self_join(pairable, "vec_id", ["_c"], ["embedding", "_cs"])
+        .withColumn("_score", dot(F.col("embedding_a"), F.col("embedding_b")))
         .filter(F.col("_score") >= threshold)
     )
     drops = pairs.select(
@@ -824,9 +794,9 @@ def semantic_dedup(
             F.col("id_a"),
         )
         .otherwise(F.col("id_b"))
-        .alias(id_col)
+        .alias("vec_id")
     ).distinct()
     return (
-        assigned.join(drops, id_col, "left_anti")
-        .select(F.col(id_col), F.col("_c").alias("cluster"))
+        assigned.join(drops, "vec_id", "left_anti")
+        .select(F.col("vec_id"), F.col("_c").alias("cluster"))
     )

@@ -82,6 +82,15 @@ def _small_star(edges: DataFrame) -> DataFrame:
 # star path runs unchanged.
 DRIVER_UNION_FIND_MAX_EDGES = 1_000_000
 
+# PageRank's damping factor (the Page et al. value) and the iterative
+# operators' lineage-truncation periods: a localCheckpoint every few
+# rounds, never every round (each checkpoint is a whole Spark job).
+PAGERANK_DAMPING = 0.85
+PAGERANK_CHECKPOINT_EVERY = 3
+BFS_CHECKPOINT_EVERY = 2
+# peel rounds before k_core declares non-convergence
+K_CORE_MAX_ITER = 50
+
 
 def _driver_union_find(edge_rows) -> dict:
     """Union-find with path compression over collected (a, b) pairs;
@@ -109,8 +118,6 @@ def connected_components(
     nodes: DataFrame,
     edges: DataFrame,
     id_col: str = "id",
-    src_col: str = "src",
-    dst_col: str = "dst",
     max_iter: int = 25,
     stats: dict | None = None,
     driver_max_edges: int = DRIVER_UNION_FIND_MAX_EDGES,
@@ -119,7 +126,7 @@ def connected_components(
 
     ``nodes``: one column ``id_col`` (isolated nodes allowed — they
     become singleton components). ``edges``: undirected pairs; each row
-    (src, dst) connects both ways.
+    (``src``, ``dst``) connects both ways.
 
     Returns (id_col, ``component``) — component = min id in the node's
     component, the canonical-representative convention (deterministic,
@@ -135,8 +142,8 @@ def connected_components(
     # re-executes inside the loop
     e = (
         edges.select(
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.least(F.col(src_col), F.col(dst_col)).alias("b"),
+            F.greatest(F.col("src"), F.col("dst")).alias("a"),
+            F.least(F.col("src"), F.col("dst")).alias("b"),
         )
         .filter(F.col("a") != F.col("b"))
         .distinct()
@@ -217,11 +224,10 @@ def connected_components(
     )
 
 
-def triangle_enumerate(
-    edges: DataFrame, src: str = "src", dst: str = "dst"
-) -> DataFrame:
-    """Enumerate every triangle in an undirected graph (one input row
-    per unordered edge), emitting ``node_a < node_b < node_c`` by id.
+def triangle_enumerate(edges: DataFrame) -> DataFrame:
+    """Enumerate every triangle in an undirected graph (one (``src``,
+    ``dst``) row per unordered edge), emitting ``node_a < node_b <
+    node_c`` by id.
 
     Distributed shape — the degree-ordered node-iterator (Cohen's
     MapReduce triangle counting / Latapy's compact-forward): orient
@@ -238,7 +244,7 @@ def triangle_enumerate(
     """
     from pyspark import StorageLevel
 
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     # persist the symmetric edge list: deg and the two degree-attach
     # joins all consume it, and each re-derivation otherwise replays
     # the caller's full edge-build lineage (the co-purchase query's
@@ -286,41 +292,35 @@ def triangle_enumerate(
     )
 
 
-def pagerank(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    damping: float = 0.85,
-    iters: int = 3,
-    checkpoint_every: int = 3,
-) -> DataFrame:
-    """Fixed-iteration PageRank over a directed edge list (Page et al.
-    1999; the power-iteration formulation every distributed engine
-    ships). Node set = distinct edge endpoints; rank starts uniform at
-    1/N and each iteration applies
+def pagerank(edges: DataFrame, iters: int = 3) -> DataFrame:
+    """Fixed-iteration PageRank over a directed (``src``, ``dst``) edge
+    list (Page et al. 1999; the power-iteration formulation every
+    distributed engine ships). Node set = distinct edge endpoints; rank
+    starts uniform at 1/N and each iteration applies
 
         r'(v) = (1-d)/N + d * (Σ_{(u,v)∈E} r(u)/outdeg(u) + dangling/N)
 
-    where ``dangling`` is the rank mass sitting on nodes with no
-    out-edges, redistributed uniformly (the standard stochastic-matrix
-    repair — without it rank mass leaks and scores drift toward 0).
+    with d = ``PAGERANK_DAMPING``, where ``dangling`` is the rank mass
+    sitting on nodes with no out-edges, redistributed uniformly (the
+    standard stochastic-matrix repair — without it rank mass leaks and
+    scores drift toward 0).
 
     Distributed shape: one groupBy(dst) per iteration — rank flows as
     ``rank/outdeg`` along each edge and re-aggregates at the target, a
     single keyed shuffle over the edge list with map-side partial sums.
     The dangling mass is a 1-row aggregate broadcast back via a scalar
     cross join (never a driver collect), and ``localCheckpoint`` every
-    ``checkpoint_every`` iterations truncates the lineage so a long run
-    does not replay earlier iterations or outgrow the planner — but NOT
-    every iteration: each checkpoint is a whole materialization job,
-    and for the common 3-5 iteration case scheduler latency on those
-    jobs (not the shuffles) dominated wall-clock, so a small unrolled
-    plan of 2-3 chained iterations per job is strictly cheaper. Fixed
-    ``iters`` (not convergence-tested) keeps the job count
+    ``PAGERANK_CHECKPOINT_EVERY`` iterations truncates the lineage so a
+    long run does not replay earlier iterations or outgrow the planner —
+    but NOT every iteration: each checkpoint is a whole materialization
+    job, and for the common 3-5 iteration case scheduler latency on
+    those jobs (not the shuffles) dominated wall-clock, so a small
+    unrolled plan of 2-3 chained iterations per job is strictly cheaper.
+    Fixed ``iters`` (not convergence-tested) keeps the job count
     deterministic and the result oracle-reproducible by unrolling.
     """
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -359,8 +359,8 @@ def pagerank(
                 "node",
                 "outdeg",
                 (
-                    F.lit((1.0 - damping) / n_nodes)
-                    + F.lit(damping)
+                    F.lit((1.0 - PAGERANK_DAMPING) / n_nodes)
+                    + F.lit(PAGERANK_DAMPING)
                     * (
                         F.coalesce(F.col("_in"), F.lit(0.0))
                         + F.col("_dm") / F.lit(float(n_nodes))
@@ -370,7 +370,7 @@ def pagerank(
         )
         # truncate lineage periodically, never after the final
         # iteration (the caller's action materializes it anyway)
-        if (it + 1) % checkpoint_every == 0 and it + 1 < iters:
+        if (it + 1) % PAGERANK_CHECKPOINT_EVERY == 0 and it + 1 < iters:
             ranks = ranks.localCheckpoint(eager=True)
     return ranks.select("node", F.col("r").alias("pagerank"))
 
@@ -378,14 +378,11 @@ def pagerank(
 def bfs_hops(
     edges: DataFrame,
     sources: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    node_col: str = "node",
     max_hops: int = 3,
-    checkpoint_every: int = 2,
     driver_max_edges: int = DRIVER_UNION_FIND_MAX_EDGES,
 ) -> DataFrame:
-    """Minimum hop distance from a seed set over a directed edge list —
+    """Minimum hop distance from a seed set (``sources.node``) over a
+    directed (``src``, ``dst``) edge list —
     frontier-at-a-time parallel BFS (the Pregel traversal primitive:
     reachability, blast-radius, "within-N-hops" recommendation scopes).
 
@@ -395,7 +392,7 @@ def bfs_hops(
     the frontier from re-expanding settled nodes (without it a cyclic
     graph re-visits forever and walk counts explode combinatorially —
     the reason this is NOT expressed as an unbounded self-join chain).
-    ``localCheckpoint`` every ``checkpoint_every`` rounds truncates
+    ``localCheckpoint`` every ``BFS_CHECKPOINT_EVERY`` rounds truncates
     lineage without paying a materialization job per round (each
     checkpoint is a whole job; for shallow traversals scheduler
     latency on those jobs dominates — same trade as ``pagerank``); the
@@ -404,7 +401,7 @@ def bfs_hops(
     deterministic and a recursive-CTE oracle can mirror it exactly;
     early-exits when the frontier drains.
 
-    Returns (``node_col``, ``hops``) for every node reachable within
+    Returns (``node``, ``hops``) for every node reachable within
     ``max_hops`` (seeds at hop 0). An edge set of at most
     ``driver_max_edges`` rows traverses on the driver, which then also
     fetches the seed rows, at most ``driver_max_edges`` of them.
@@ -414,7 +411,7 @@ def bfs_hops(
     # re-executes the possibly-expensive upstream pair generation —
     # measured 19 s vs ~5 s on the co-purchase graph at sf0.1
     e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        edges.select(F.col("src").alias("u"), F.col("dst").alias("v"))
         .distinct()
         .localCheckpoint(eager=True)
     )
@@ -429,9 +426,9 @@ def bfs_hops(
         for r in collect_bounded(e, driver_max_edges, "bfs_hops edges").to_pylist():
             adj.setdefault(r["u"], []).append(r["v"])
         seeds = collect_bounded(
-            sources.select(node_col), driver_max_edges, "bfs_hops seeds"
+            sources.select("node"), driver_max_edges, "bfs_hops seeds"
         )
-        hops = {v: 0 for v in seeds.column(node_col).to_pylist()}
+        hops = {v: 0 for v in seeds.column("node").to_pylist()}
         frontier_ids = list(hops)
         for h in range(1, max_hops + 1):
             nxt = []
@@ -444,10 +441,10 @@ def bfs_hops(
                 break
             frontier_ids = nxt
         return local_frame(
-            edges.sparkSession, list(hops.items()), f"{node_col} long, hops int"
+            edges.sparkSession, list(hops.items()), "node long, hops int"
         )
     visited = (
-        sources.select(F.col(node_col).alias("u"))
+        sources.select(F.col("node").alias("u"))
         .distinct()
         .withColumn("hops", F.lit(0))
         .localCheckpoint(eager=True)
@@ -462,24 +459,22 @@ def bfs_hops(
             .withColumn("hops", F.lit(h))
         )
         visited = visited.unionByName(nxt)
-        if h % checkpoint_every == 0 and h < max_hops:
+        if h % BFS_CHECKPOINT_EVERY == 0 and h < max_hops:
             visited = visited.localCheckpoint(eager=True)
         frontier = visited.filter(F.col("hops") == h)
         if frontier.limit(1).count() == 0:
             break
-    return visited.select(F.col("u").alias(node_col), "hops")
+    return visited.select(F.col("u").alias("node"), "hops")
 
 
 def k_core(
     edges: DataFrame,
     k: int,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
     driver_max_edges: int = DRIVER_UNION_FIND_MAX_EDGES,
 ) -> DataFrame:
     """The k-core: the maximal subgraph where every node has degree ≥ k
-    (undirected; one input row per edge, symmetrized internally) — the
+    (undirected; one (``src``, ``dst``) row per edge, symmetrized
+    internally) — the
     standard dense-community filter before expensive per-community
     work, and the degeneracy peel ordering's building block.
 
@@ -488,7 +483,7 @@ def k_core(
     join over the SURVIVING edge set (shrinking, never the original
     graph), ``localCheckpoint`` per round, scalar count as the fixpoint
     probe. Converges in at most O(n) rounds but typically few (each
-    round removes a whole shell); raises past ``max_iter`` like
+    round removes a whole shell); raises past ``K_CORE_MAX_ITER`` like
     ``connected_components``.
 
     Returns the surviving nodes: (``node``, ``degree``) with degree ≥ k
@@ -496,7 +491,7 @@ def k_core(
     need aggregation inside recursion) → planted-graph unit tests
     carry correctness.
     """
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     e = (
         edges.select(a.alias("u"), b.alias("v"))
         .unionByName(edges.select(b.alias("u"), a.alias("v")))
@@ -530,7 +525,7 @@ def k_core(
             [(u, len(nb)) for u, nb in adj.items()],
             "node long, degree long",
         )
-    for _ in range(max_iter):
+    for _ in range(K_CORE_MAX_ITER):
         deg = e.groupBy("u").agg(F.count("*").alias("degree"))
         keep = deg.filter(F.col("degree") >= k).select("u")
         e_next = (
@@ -544,7 +539,7 @@ def k_core(
             break
         n_prev = n_next
     else:
-        raise RuntimeError(f"k_core did not converge in {max_iter} rounds")
+        raise RuntimeError(f"k_core did not converge in {K_CORE_MAX_ITER} rounds")
     return e.groupBy("u").agg(F.count("*").alias("degree")).select(
         F.col("u").alias("node"), "degree"
     )
@@ -554,8 +549,6 @@ def k_core_peel_rounds(
     edges: DataFrame,
     k: int,
     rounds: int,
-    src: str = "src",
-    dst: str = "dst",
 ) -> DataFrame:
     """Exactly ``rounds`` iterations of the k-core peel — the
     fixed-depth twin of ``k_core`` (which runs to the fixpoint).
@@ -570,7 +563,7 @@ def k_core_peel_rounds(
     edge after the last round with its CURRENT degree (nodes a further
     round would peel are reported as-is — this is the state after
     ``rounds`` peels, not the core)."""
-    a, b = F.col(src), F.col(dst)
+    a, b = F.col("src"), F.col("dst")
     e = (
         edges.select(a.alias("u"), b.alias("v"))
         .unionByName(edges.select(b.alias("u"), a.alias("v")))

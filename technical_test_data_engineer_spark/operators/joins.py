@@ -16,14 +16,12 @@ from pyspark.sql.window import Window
 
 
 def inner_equi_join(
-    left: DataFrame, right: DataFrame, on: str | list[str], broadcast_right: bool = True
+    left: DataFrame, right: DataFrame, on: str | list[str]
 ) -> DataFrame:
     """J1 — inner equi-join on a shared key name
     (``merge(how='inner', on='id_zone')``, visualization.py:59). The
-    reference's zone dim is small → broadcast; pass
-    ``broadcast_right=False`` for fact⋈fact."""
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, on=on, how="inner")
+    reference's zone dim is small → broadcast."""
+    return left.join(F.broadcast(right), on=on, how="inner")
 
 
 def left_join_differing_keys(
@@ -31,13 +29,12 @@ def left_join_differing_keys(
     right: DataFrame,
     left_key: str,
     right_key: str,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """J2 — left outer join with differing key names
     (``merge(how='left', left_on='code', right_on='code_departement')``,
     visualization.py:153). Keeps the duplicate key column dropped, like
     pandas suffixing never fires in the reference."""
-    r = F.broadcast(right) if broadcast_right else right
+    r = F.broadcast(right)
     return left.join(r, left[left_key] == r[right_key], "left").drop(right_key)
 
 
@@ -58,25 +55,18 @@ def range_join(
     point_col: str,
     start_col: str,
     end_col: str,
-    equi_keys: list[str] | None = None,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Point-in-interval join: left rows matched to right intervals
     containing ``left[point_col]``.
 
-    With ``equi_keys`` the range predicate rides on a hash join (cheap).
-    Without, it is a broadcast-nested-loop join — fine when one side is
-    a dimension; at fact×fact scale, bucketize the point/interval into a
-    coarse grid key first (not needed by any reference query).
+    A broadcast-nested-loop join — fine when the right side is a
+    dimension; at fact×fact scale, bucketize the point/interval into a
+    coarse grid key first (see :func:`overlap_join`).
     """
     cond: Column = (left[point_col] >= right[start_col]) & (
         left[point_col] <= right[end_col]
     )
-    if equi_keys:
-        for k in equi_keys:
-            cond = cond & (left[k] == right[k])
-    r = F.broadcast(right) if broadcast_right else right
-    return left.join(r, cond, "inner")
+    return left.join(F.broadcast(right), cond, "inner")
 
 
 def fuzzy_pairs(
@@ -84,11 +74,10 @@ def fuzzy_pairs(
     text_col: str,
     block,
     max_dist: int,
-    min_dist: int = 1,
 ) -> DataFrame:
     """Blocked edit-distance self-join (record linkage): distinct
     ``text_col`` values whose Levenshtein distance is in
-    ``[min_dist, max_dist]``, restricted to pairs sharing ``block``.
+    ``[1, max_dist]``, restricted to pairs sharing ``block``.
 
     Scale shape — the three standard guards that keep fuzzy matching
     off the O(n²) cliff, in evaluation order:
@@ -106,8 +95,8 @@ def fuzzy_pairs(
 
     ``block`` is a callable ``Column -> Column`` mapping a string to
     its blocking key (so the caller states the policy, the operator the
-    plumbing). ``min_dist=1`` excludes exact duplicates (those belong
-    to ``exact_dedup``); emits ``(name_a, name_b, edit_dist)`` with
+    plumbing). Distance 0 (exact duplicates) is excluded — those belong
+    to ``exact_dedup``; emits ``(name_a, name_b, edit_dist)`` with
     ``name_a < name_b`` so each unordered pair appears once.
     """
     n = (
@@ -134,7 +123,7 @@ def fuzzy_pairs(
         )
         # threshold form returns -1 when the distance exceeds max_dist
         .filter(
-            (F.col("edit_dist") >= min_dist) & (F.col("edit_dist") <= max_dist)
+            (F.col("edit_dist") >= 1) & (F.col("edit_dist") <= max_dist)
         )
         .select("name_a", "name_b", "edit_dist")
     )
@@ -146,20 +135,16 @@ def asof_join(
     on: str,
     left_ts: str,
     right_ts: str,
-    direction: str = "backward",
 ) -> DataFrame:
     """As-of join: for each left row, the single latest right row with
-    ``right_ts <= left_ts`` (direction='backward') within the same ``on``
-    key — the time-series join Spark lacks natively.
+    ``right_ts <= left_ts`` within the same ``on`` key — the time-series
+    join Spark lacks natively.
 
     Implemented as union + window (one shuffle on ``on``), not a UDF:
     tag both sides, sort by time within key, and carry the most recent
     right payload forward onto left rows with ``last(ignorenulls)``.
     Scales as a single partitioned sort — no per-key collect.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError("direction must be 'backward' or 'forward'")
-
     payload = [c for c in right.columns if c not in (on, right_ts)]
     l_tag = left.withColumn("_ts", F.col(left_ts)).withColumn("_side", F.lit(1))
     for c in payload:
@@ -172,19 +157,12 @@ def asof_join(
     cols = [on, "_ts", "_side", *[c for c in left.columns if c != on], *payload]
     unioned = l_tag.select(*cols).unionByName(r_tag.select(*cols))
 
-    if direction == "backward":
-        # right rows (_side=0) sort before left rows at equal ts → "<="
-        w = (
-            Window.partitionBy(on)
-            .orderBy("_ts", "_side")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
-    else:
-        w = (
-            Window.partitionBy(on)
-            .orderBy(F.desc("_ts"), "_side")
-            .rowsBetween(Window.unboundedPreceding, 0)
-        )
+    # right rows (_side=0) sort before left rows at equal ts → "<="
+    w = (
+        Window.partitionBy(on)
+        .orderBy("_ts", "_side")
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
     out = unioned
     for c in payload:
         out = out.withColumn(c, F.last(c, ignorenulls=True).over(w))

@@ -115,16 +115,11 @@ def decode_image_real(blob: bytes) -> tuple[str, int, int, int, int]:
         )
 
 
-def decode_media_meta(
-    df: DataFrame,
-    media_col: str = "media",
-    id_col: str = "doc_id",
-    parse=_parse_header,
-) -> DataFrame:
-    """Extract a typed metadata struct from each media blob via
+def decode_media_meta(df: DataFrame, parse=_parse_header) -> DataFrame:
+    """Extract a typed metadata struct from each ``media`` blob via
     mapInPandas (Arrow-batched; one batch of blobs in memory per task).
 
-    Output: (id_col, meta struct, plus passthrough of media bytes
+    Output: (``doc_id``, meta struct, plus passthrough of media bytes
     count) — the schema/partitioning pattern any real decoder plugs
     into: ``parse`` is any ``bytes -> (format, width, height, n_frames,
     n_bytes)`` callable (default: the stub header decode;
@@ -132,7 +127,7 @@ def decode_media_meta(
     """
     out_schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("doc_id", T.LongType()),
             T.StructField("meta", MEDIA_META_SCHEMA),
         ]
     )
@@ -148,20 +143,16 @@ def decode_media_meta(
                         parse(bytes(blob)),
                     )
                 )
-                for blob in pdf[media_col]
+                for blob in pdf["media"]
             ]
-            yield pd.DataFrame({id_col: pdf[id_col], "meta": metas})
+            yield pd.DataFrame({"doc_id": pdf["doc_id"], "meta": metas})
 
-    return df.select(id_col, media_col).mapInPandas(_decode, out_schema)
+    return df.select("doc_id", "media").mapInPandas(_decode, out_schema)
 
 
-def frame_sample(
-    df: DataFrame,
-    every_n: int = 4,
-    media_col: str = "media",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Sample every ``every_n``-th frame of each video-like blob: one
+def frame_sample(df: DataFrame, every_n: int = 4) -> DataFrame:
+    """Sample every ``every_n``-th frame of each video-like ``media``
+    blob (rows keyed by ``doc_id``): one
     output row per sampled frame with a (stub) frame payload slice.
 
     The explode-shaped mapInPandas pattern for video: input rows fan out
@@ -169,7 +160,7 @@ def frame_sample(
     """
     out_schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("doc_id", T.LongType()),
             T.StructField("frame_idx", T.IntegerType()),
             T.StructField("frame_bytes", T.BinaryType()),
         ]
@@ -178,7 +169,7 @@ def frame_sample(
     def _sample(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, payloads = [], [], []
-            for doc_id, blob in zip(pdf[id_col], pdf[media_col]):
+            for doc_id, blob in zip(pdf["doc_id"], pdf["media"]):
                 if blob is None:
                     continue
                 blob = bytes(blob)
@@ -191,10 +182,10 @@ def frame_sample(
                     idxs.append(i)
                     payloads.append(body[i * step : (i + 1) * step])
             yield pd.DataFrame(
-                {id_col: ids, "frame_idx": idxs, "frame_bytes": payloads}
+                {"doc_id": ids, "frame_idx": idxs, "frame_bytes": payloads}
             )
 
-    return df.select(id_col, media_col).mapInPandas(_sample, out_schema)
+    return df.select("doc_id", "media").mapInPandas(_sample, out_schema)
 
 
 def media_ahash(
@@ -251,13 +242,10 @@ def media_ahash(
 
 
 def media_near_dups(
-    df: DataFrame,
-    media_col: str = "media",
-    id_col: str = "doc_id",
-    max_hamming: int = 6,
-    n_bands: int = 4,
+    df: DataFrame, max_hamming: int = 6, n_bands: int = 4
 ) -> DataFrame:
-    """Perceptual media near-dup pairs: aHash signatures, banded
+    """Perceptual near-dup pairs of ``media`` blobs (keyed by
+    ``doc_id``): aHash signatures, banded
     SimHash-style, then exact popcount verification JVM-side
     (``bit_count(xor)``). GUARANTEED recall is Hamming ≤ n_bands − 1
     (pigeonhole: fewer differing bits than bands forces one band to
@@ -272,10 +260,10 @@ def media_near_dups(
     # default (6 > 3) trades guaranteed recall for the conventional
     # threshold — same knob/trade as the text SimHash operator
     band_bits = 64 // n_bands
-    sigs = media_ahash(df, media_col, id_col)
+    sigs = media_ahash(df)
     mask = (1 << band_bits) - 1
     bands = sigs.select(
-        F.col(id_col),
+        F.col("doc_id"),
         "ahash",
         F.explode(
             F.array(
@@ -290,12 +278,12 @@ def media_near_dups(
                 ]
             )
         ).alias("bb"),
-    ).select(id_col, "ahash", "bb.band", "bb.bh")
+    ).select("doc_id", "ahash", "bb.band", "bb.bh")
     # both join sides read this one shuffle (AQE reuses it), so the
     # signature kernel runs once, not once per side
     bands = bands.repartition("band", "bh")
     cands = (
-        _bucket_self_join(bands, id_col, ["band", "bh"], ["ahash"])
+        _bucket_self_join(bands, "doc_id", ["band", "bh"], ["ahash"])
         .select("id_a", "id_b", "ahash_a", "ahash_b")
         .distinct()
     )
@@ -307,19 +295,13 @@ def media_near_dups(
     )
 
 
-def chunk_media(
-    df: DataFrame,
-    media_col: str = "media",
-    id_col: str = "doc_id",
-    chunk_size: int = 256,
-    header_bytes: int = 12,
-) -> DataFrame:
-    """Fixed-window byte chunking of a binary media column — the
+def chunk_media(df: DataFrame, chunk_size: int = 256) -> DataFrame:
+    """Fixed-window byte chunking of the binary ``media`` column — the
     preprocessing shape every audio/ASR and video pipeline needs
     (windowed segments + per-chunk integrity checksum) expressed for
     Spark: an Arrow-batched ``mapInPandas`` slices each blob's payload
-    (header stripped) into ``chunk_size`` windows and emits
-    (id, ``chunk_idx``, ``chunk_len``, ``chunk_md5``) — explode-shaped
+    (12-byte stub header stripped) into ``chunk_size`` windows and emits
+    (``doc_id``, ``chunk_idx``, ``chunk_len``, ``chunk_md5``) — explode-shaped
     output, rows-per-input bounded by payload/chunk_size, blobs never
     shuffled (chunking happens in the scan task; only the ~50-byte
     checksum rows move). The md5 is over raw payload bytes, so an
@@ -330,15 +312,13 @@ def chunk_media(
 
     import pandas as pd
 
-    out_schema = (
-        f"{id_col} long, chunk_idx int, chunk_len int, chunk_md5 string"
-    )
+    out_schema = "doc_id long, chunk_idx int, chunk_len int, chunk_md5 string"
 
     def _chunks(batches):
         for pdf in batches:
             ids, idxs, lens, sums = [], [], [], []
-            for i, blob in zip(pdf[id_col], pdf[media_col]):
-                payload = bytes(blob)[header_bytes:]
+            for i, blob in zip(pdf["doc_id"], pdf["media"]):
+                payload = bytes(blob)[12:]
                 for c in range(0, max(len(payload), 1), chunk_size):
                     piece = payload[c : c + chunk_size]
                     ids.append(i)
@@ -347,11 +327,11 @@ def chunk_media(
                     sums.append(hashlib.md5(piece).hexdigest())
             yield pd.DataFrame(
                 {
-                    id_col: ids,
+                    "doc_id": ids,
                     "chunk_idx": idxs,
                     "chunk_len": lens,
                     "chunk_md5": sums,
                 }
             )
 
-    return df.select(id_col, media_col).mapInPandas(_chunks, out_schema)
+    return df.select("doc_id", "media").mapInPandas(_chunks, out_schema)

@@ -116,7 +116,6 @@ def pareto_front(
     df: DataFrame,
     minimize: tuple[str, ...] = (),
     maximize: tuple[str, ...] = (),
-    n_buckets: int = 64,
 ) -> DataFrame:
     """Skyline / Pareto front: rows not dominated by any other row —
     dominance = at-least-as-good on every criterion AND strictly better
@@ -124,7 +123,7 @@ def pareto_front(
     shortlist operator (cheapest-vs-largest, quality-vs-length, ...).
 
     Two-phase distributed skyline (the MapReduce BNL shape): phase 1
-    computes each hash-bucket's LOCAL skyline with a vectorized numpy
+    computes each of 64 hash-buckets' LOCAL skyline with a vectorized numpy
     dominance test inside ``applyInPandas`` (blocked over dominator
     rows, so memory is O(block × bucket), not bucket²); phase 2 runs
     the same kernel once over the union of local skylines. Correct
@@ -155,7 +154,7 @@ def pareto_front(
 
     bucketed = df.withColumn(
         "_pb",
-        F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(n_buckets)),
+        F.pmod(F.xxhash64(*[F.col(c) for c in df.columns]), F.lit(64)),
     )
     local = bucketed.groupBy("_pb").applyInPandas(
         lambda _, pdf: _local(pdf), schema=bucketed.schema

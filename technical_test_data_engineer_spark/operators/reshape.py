@@ -33,16 +33,14 @@ def explode_to_rows(df: DataFrame, array_col: str, alias: str) -> DataFrame:
     return df.withColumn(alias, F.explode(array_col)).drop(array_col)
 
 
-def date_spine(
-    df: DataFrame, start_col: str, end_col: str, alias: str = "day"
-) -> DataFrame:
-    """R1+R2 fused: one row per (source row, day in validity interval).
+def date_spine(df: DataFrame, start_col: str, end_col: str) -> DataFrame:
+    """R1+R2 fused: one row per (source row, ``day`` in validity interval).
 
     Output cardinality = Σ interval lengths; at 100 TB bound the interval
     (filter degenerate/huge spans) BEFORE exploding — explode multiplies
     whatever garbage reaches it.
     """
-    return explode_to_rows(date_array(df, start_col, end_col, "_days"), "_days", alias)
+    return explode_to_rows(date_array(df, start_col, end_col, "_days"), "_days", "day")
 
 
 def rename(df: DataFrame, mapping: dict[str, str]) -> DataFrame:

@@ -48,16 +48,19 @@ from technical_test_data_engineer_spark.functions.scalars import dec, scaled_lon
 from technical_test_data_engineer_spark.operators.bounded import collect_bounded
 from technical_test_data_engineer_spark.operators.partitioning import fan_out
 
+# Seed of every driver-side quantizer fit (IVF k-means++, PQ codebooks)
+# and the training-sample ceiling of the PQ trainers.
+SEED = 42
+MAX_TRAIN_VECTORS = 4096
+
 
 def local_topk(
     scored: DataFrame,
     k: int,
     query_id_col: str | list[str] = "query_id",
-    id_col: str = "vec_id",
-    score_col: str = "score",
 ) -> DataFrame:
     """Per-partition pre-top-k: keep only each partition's k best rows
-    per query (score desc, id asc) BEFORE the global per-query ranking
+    per query (``score`` desc, ``vec_id`` asc) BEFORE the global per-query ranking
     window. ``query_id_col`` may be a list for composite keys (e.g.
     (query_id, dim) in the single-pass truncation-recall eval).
 
@@ -86,7 +89,7 @@ def local_topk(
     """
     schema = scored.schema
     cols = [f.name for f in schema.fields]
-    merge = _topk_merger(k, query_id_col, id_col, score_col)
+    merge = _topk_merger(k, query_id_col)
 
     def _part(batches):
         best = None
@@ -99,12 +102,10 @@ def local_topk(
     return scored.mapInPandas(_part, schema)
 
 
-def _topk_merger(
-    k: int, key: str | list[str], id_col: str, score_col: str = "score"
-):
+def _topk_merger(k: int, key: str | list[str]):
     """The worker-side running top-k merge: ``merge(best, cand)`` keeps
     the k best rows per ``key`` of ``best`` ∪ ``cand`` (``best`` is None
-    on the first batch) under (score desc, id asc). Call it on the
+    on the first batch) under (score desc, vec_id asc). Call it on the
     driver and close over the result: a nested function ships by value,
     a module-level one by reference, and a Python worker started outside
     the repo cannot import the package.
@@ -116,7 +117,7 @@ def _topk_merger(
     def merge(best, cand):
         cur = cand if best is None else pd.concat([best, cand], ignore_index=True)
         cur = cur.sort_values(
-            [score_col, id_col],
+            ["score", "vec_id"],
             ascending=[False, True],
             kind="mergesort",
             na_position="last",
@@ -127,20 +128,18 @@ def _topk_merger(
 
 
 def _rank_topk(
-    df: DataFrame,
-    k: int,
-    query_id_col: str | list[str] = "query_id",
-    id_col: str = "vec_id",
+    df: DataFrame, k: int, query_id_col: str | list[str] = "query_id"
 ) -> DataFrame:
     """The global step of every top-k here: number each query's rows by
-    (score desc, id asc), keep ranks ≤ ``k``, and return (query, id,
-    rank, score). ``query_id_col`` may be a list for composite keys."""
+    (score desc, vec_id asc), keep ranks ≤ ``k``, and return (query,
+    vec_id, rank, score). ``query_id_col`` may be a list for composite
+    keys."""
     keys = [query_id_col] if isinstance(query_id_col, str) else list(query_id_col)
-    w = Window.partitionBy(*keys).orderBy(F.desc("score"), F.asc(id_col))
+    w = Window.partitionBy(*keys).orderBy(F.desc("score"), F.asc("vec_id"))
     return (
         df.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select(*keys, id_col, "rank", "score")
+        .select(*keys, "vec_id", "rank", "score")
     )
 
 
@@ -241,12 +240,9 @@ def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     metric: str = "dot",
 ) -> DataFrame:
-    """Exact top-k neighbors for each query vector.
+    """Exact top-k neighbors (by ``embedding``) for each query vector.
 
     ``queries`` must be small (it is broadcast whole); the corpus is
     never shuffled — each scan task scores its partition and the top-k
@@ -254,23 +250,23 @@ def brute_force_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec")
         )
     )
-    paired = fan_out(corpus).crossJoin(q).filter(F.col(id_col) != F.col(query_id_col))
+    paired = fan_out(corpus).crossJoin(q).filter(F.col("vec_id") != F.col("query_id"))
     if metric == "int":
         # integer-scaled BIGINT scores (see metric_score) — NaN-free by
         # construction, so no nan_safe wrap (isnan doesn't type on long)
-        score = int_scaled_dot(F.col("_qvec"), F.col(vec_col))
+        score = int_scaled_dot(F.col("_qvec"), F.col("embedding"))
     else:
         score = nan_safe_score(
-            exact_dot(F.col("_qvec"), F.col(vec_col))
+            exact_dot(F.col("_qvec"), F.col("embedding"))
             if metric == "dot"
-            else cosine(F.col("_qvec"), F.col(vec_col))
+            else cosine(F.col("_qvec"), F.col("embedding"))
         )
-    scored = paired.select(query_id_col, id_col, score.alias("score"))
-    pruned = local_topk(scored, k, query_id_col, id_col)
-    return _rank_topk(pruned, k, query_id_col, id_col)
+    scored = paired.select("query_id", "vec_id", score.alias("score"))
+    pruned = local_topk(scored, k)
+    return _rank_topk(pruned, k)
 
 
 def seeded_planes(
@@ -288,14 +284,10 @@ def seeded_planes(
     ]
 
 
-def adaptive_n_planes(
-    n_vectors: int,
-    target_bucket: int = 64,
-    min_planes: int = 3,
-    max_planes: int = 24,
-) -> int:
+def adaptive_n_planes(n_vectors: int, target_bucket: int = 64) -> int:
     """Planes-per-table sized so the EXPECTED bucket holds about
-    ``target_bucket`` vectors: ``ceil(log2(n / target_bucket))``.
+    ``target_bucket`` vectors: ``ceil(log2(n / target_bucket))``,
+    clamped to [3, 24].
 
     This is the knob that makes SRP-LSH bucket selectivity scale: with a
     FIXED plane count, bucket population is n / 2^planes — corpus-
@@ -310,10 +302,8 @@ def adaptive_n_planes(
     import math
 
     if n_vectors <= target_bucket:
-        return min_planes
-    return max(
-        min_planes, min(max_planes, math.ceil(math.log2(n_vectors / target_bucket)))
-    )
+        return 3
+    return max(3, min(24, math.ceil(math.log2(n_vectors / target_bucket))))
 
 
 def srp_signature(vec: Column, planes: list[list[float]]) -> Column:
@@ -359,11 +349,8 @@ def ivf_assignment_udf(centroids, n_probe: int = 1):
 def train_ivf_centroids(
     corpus: DataFrame,
     n_centroids: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     max_iter: int = 10,
-    max_train_vectors: int = 4096,
+    max_train_vectors: int = MAX_TRAIN_VECTORS,
 ) -> list[list[float]]:
     """Coarse quantizer via seeded k-means++ (D²-weighted init +
     Lloyd's, driver-side numpy): real Voronoi cells, so probe recall
@@ -378,7 +365,8 @@ def train_ivf_centroids(
     and this is the standard FAISS practice; training on the full corpus
     would make quantizer fitting the dominant cost (it was 90% of the
     IVF query's wall-clock at sf0.1). Cell ASSIGNMENT still covers the
-    full corpus, scan-side. Deterministic for a fixed seed + input.
+    full corpus, scan-side. Deterministic for a fixed input (seeded
+    with ``SEED``).
 
     Why NOT ``pyspark.ml.KMeans`` for the fit itself: the training
     sample is bounded at a few thousand rows by design, and a
@@ -392,14 +380,14 @@ def train_ivf_centroids(
 
     Returns plain ``list[list[float]]`` — downstream assignment UDFs
     broadcast the centroids as a numpy closure."""
-    X = _train_matrix(corpus, id_col, vec_col, max_train_vectors)
+    X = _train_matrix(corpus, max_train_vectors)
     if len(X) < n_centroids:
         raise ValueError(
             f"training sample has {len(X)} rows < k={n_centroids} "
             f"(max_train_vectors={max_train_vectors}); raise "
             "max_train_vectors or shrink k"
         )
-    C = _fit_kmeans(X, n_centroids, seed, max_iter)
+    C = _fit_kmeans(X, n_centroids, SEED, max_iter)
     return [[float(x) for x in c] for c in C]
 
 
@@ -440,29 +428,28 @@ def _lloyd(X: np.ndarray, C: np.ndarray, n_iter: int) -> np.ndarray:
     return C
 
 
-def _train_matrix(
-    corpus: DataFrame, id_col: str, vec_col: str, max_train_vectors: int
-) -> np.ndarray:
-    """Deterministic ≤ ``max_train_vectors`` training subsample via
-    ``xxhash64(id) % stride`` (hash, not raw id, so sparse/offset id
-    spaces still sample at the intended rate), fetched in id order as a
-    float64 (rows × dim) matrix: the trainers' seeding picks rows by
-    index, so the order is part of the answer. The stride keeps about
-    n / stride ≤ ``max_train_vectors`` rows, not at most that many, so
-    the sample is then cut to its ``max_train_vectors`` lowest ids.
-    Undersample guarding happens in the trainers, which know their k."""
+def _train_matrix(corpus: DataFrame, max_train_vectors: int) -> np.ndarray:
+    """Deterministic ≤ ``max_train_vectors`` training subsample of the
+    ``embedding`` column via ``xxhash64(vec_id) % stride`` (hash, not
+    raw id, so sparse/offset id spaces still sample at the intended
+    rate), fetched in id order as a float64 (rows × dim) matrix: the
+    trainers' seeding picks rows by index, so the order is part of the
+    answer. The stride keeps about n / stride ≤ ``max_train_vectors``
+    rows, not at most that many, so the sample is then cut to its
+    ``max_train_vectors`` lowest ids. Undersample guarding happens in
+    the trainers, which know their k."""
     n = corpus.count()
     if n > max_train_vectors:
         stride = -(-n // max_train_vectors)  # ceil → ~max_train_vectors kept
         corpus = (
-            corpus.filter(F.pmod(F.xxhash64(F.col(id_col)), F.lit(stride)) == 0)
-            .orderBy(id_col)
+            corpus.filter(F.pmod(F.xxhash64(F.col("vec_id")), F.lit(stride)) == 0)
+            .orderBy("vec_id")
             .limit(max_train_vectors)
         )
     sample = collect_bounded(
-        corpus.select(id_col, vec_col), max_train_vectors, "training sample"
-    ).sort_by(id_col)
-    return np.array(sample.column(vec_col).to_pylist(), dtype=np.float64)
+        corpus.select("vec_id", "embedding"), max_train_vectors, "training sample"
+    ).sort_by("vec_id")
+    return np.array(sample.column("embedding").to_pylist(), dtype=np.float64)
 
 
 def _unit_rows(C: np.ndarray) -> np.ndarray:
@@ -477,12 +464,9 @@ def ivf_topk(
     n_centroids: int = 16,
     n_probe: int = 4,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     metric: str = "fast",
     train_max_iter: int = 10,
-    max_train_vectors: int = 4096,
+    max_train_vectors: int = MAX_TRAIN_VECTORS,
 ) -> DataFrame:
     """IVF approximate top-k: corpus partitioned into Voronoi cells of a
     coarse quantizer; each query scores only the ``n_probe`` nearest
@@ -504,7 +488,7 @@ def ivf_topk(
     Catalyst would push through the assigning projection.
     """
     cents = train_ivf_centroids(
-        corpus, n_centroids, id_col, vec_col, max_iter=train_max_iter,
+        corpus, n_centroids, max_iter=train_max_iter,
         max_train_vectors=max_train_vectors,
     )
     c_assign = ivf_assignment_udf(cents, n_probe=1)
@@ -514,27 +498,27 @@ def ivf_topk(
     # _cell then implies isnotnull(_cell) instead of inferring it as a
     # filter, which Catalyst would push through this projection and so
     # call the assignment UDF a second time
-    corpus_cells = fan_out(corpus.select(id_col, vec_col)).withColumn(
-        "_cell", F.coalesce(F.element_at(c_assign(F.col(vec_col)), 1), F.lit(-1))
+    corpus_cells = fan_out(corpus.select("vec_id", "embedding")).withColumn(
+        "_cell", F.coalesce(F.element_at(c_assign(F.col("embedding")), 1), F.lit(-1))
     )
     query_cells = F.broadcast(
         queries.select(
-            F.col(id_col).alias(query_id_col),
-            F.col(vec_col).alias("_qvec"),
-            F.explode(q_assign(F.col(vec_col))).alias("_cell"),
+            F.col("vec_id").alias("query_id"),
+            F.col("embedding").alias("_qvec"),
+            F.explode(q_assign(F.col("embedding"))).alias("_cell"),
         )
     )
     scored = (
         corpus_cells.join(query_cells, "_cell")
-        .filter(F.col(id_col) != F.col(query_id_col))
+        .filter(F.col("vec_id") != F.col("query_id"))
         .select(
-            query_id_col,
-            id_col,
-            metric_score(metric, F.col("_qvec"), F.col(vec_col)).alias("score"),
+            "query_id",
+            "vec_id",
+            metric_score(metric, F.col("_qvec"), F.col("embedding")).alias("score"),
         )
     )
-    pruned = local_topk(scored, k, query_id_col, id_col)
-    return _rank_topk(pruned, k, query_id_col, id_col)
+    pruned = local_topk(scored, k)
+    return _rank_topk(pruned, k)
 
 
 def srp_signatures_batch(planes_tables: list[list[list[float]]]):
@@ -573,9 +557,6 @@ def lsh_topk(
     queries: DataFrame,
     planes_tables: list[list[list[float]]],
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     metric: str = "fast",
     probe_bits: int = 0,
 ) -> DataFrame:
@@ -609,40 +590,40 @@ def lsh_topk(
     if not 0 <= probe_bits <= n_planes:
         raise ValueError(f"probe_bits={probe_bits} outside [0, {n_planes}]")
     c_sig = (
-        fan_out(corpus.select(id_col, vec_col))
-        .select(id_col, F.posexplode(sig_udf(F.col(vec_col))).alias("_t", "_s"))
+        fan_out(corpus.select("vec_id", "embedding"))
+        .select("vec_id", F.posexplode(sig_udf(F.col("embedding"))).alias("_t", "_s"))
     )
     q_base = queries.select(
-        F.col(id_col).alias(query_id_col),
-        F.posexplode(sig_udf(F.col(vec_col))).alias("_t", "_s"),
+        F.col("vec_id").alias("query_id"),
+        F.posexplode(sig_udf(F.col("embedding"))).alias("_t", "_s"),
     )
     if probe_bits:
         masks = F.array(F.lit(0), *[F.lit(1 << j) for j in range(probe_bits)])
         q_base = q_base.select(
-            query_id_col,
+            "query_id",
             "_t",
             "_s",
             F.explode(masks).alias("_m"),
         ).select(
-            query_id_col,
+            "query_id",
             "_t",
             F.col("_s").bitwiseXOR(F.col("_m")).alias("_s"),
         )
     q_sig = F.broadcast(q_base)
     cands = (
         c_sig.join(q_sig, ["_t", "_s"])
-        .select(query_id_col, id_col)
-        .filter(F.col(id_col) != F.col(query_id_col))
-        .dropDuplicates([query_id_col, id_col])
+        .select("query_id", "vec_id")
+        .filter(F.col("vec_id") != F.col("query_id"))
+        .dropDuplicates(["query_id", "vec_id"])
     )
     scored = (
         cands.join(
             F.broadcast(
                 queries.select(
-                    F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
+                    F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec")
                 )
             ),
-            query_id_col,
+            "query_id",
         )
         # Only the QUERY side is broadcast-hinted: the candidate set is
         # O(corpus × bucket-collision rate), so forcing it into a
@@ -651,25 +632,25 @@ def lsh_topk(
         # materialization barrier — the round-3 2.3× regression). Left
         # unhinted, AQE broadcasts the candidates only when their
         # RUNTIME size is actually small, else plans a shuffle
-        # equi-join on id_col.
+        # equi-join on vec_id.
         # fan_out: the corpus probe side of this join inherits the raw
         # scan's partitioning — locally a single row-group ⇒ ONE task
         # evaluating every candidate dot product (56 s vs 3 s for the
         # decimal metric at sf0.1); on a cluster the scan is already
         # split and fan_out is a no-op.
-        .join(fan_out(corpus.select(id_col, vec_col)), id_col)
+        .join(fan_out(corpus.select("vec_id", "embedding")), "vec_id")
         .select(
-            query_id_col,
-            id_col,
+            "query_id",
+            "vec_id",
             # fast_dot default: rows-only ranking needs within-run
             # determinism only; "exact"/"int" buy bit-exact oracle match.
-            metric_score(metric, F.col("_qvec"), F.col(vec_col)).alias(
+            metric_score(metric, F.col("_qvec"), F.col("embedding")).alias(
                 "score"
             ),
         )
     )
-    pruned = local_topk(scored, k, query_id_col, id_col)
-    return _rank_topk(pruned, k, query_id_col, id_col)
+    pruned = local_topk(scored, k)
+    return _rank_topk(pruned, k)
 
 
 # ---------------------------------------------------------------------------
@@ -684,40 +665,33 @@ def train_pq_codebooks(
     corpus: DataFrame,
     m: int = 8,
     n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     n_iter: int = 10,
-    max_train_vectors: int = 4096,
 ) -> np.ndarray:
     """Train per-subspace codebooks: split dims into ``m`` contiguous
     subspaces, run seeded Lloyd's k-means (``n_codes`` centroids) per
-    subspace on a deterministic ≤``max_train_vectors`` subsample,
+    subspace on a deterministic ≤``MAX_TRAIN_VECTORS`` subsample,
     driver-side in numpy. Codebook training is a constant-size problem
     (the sample bounds it) regardless of corpus size — the corpus-scale
     work is encoding/scoring, which stays distributed.
 
     Returns codebooks of shape (m, n_codes, dim // m)."""
-    X = _train_matrix(corpus, id_col, vec_col, max_train_vectors)
-    return _fit_pq(X, m, n_codes, seed, n_iter, max_train_vectors)
+    X = _train_matrix(corpus, MAX_TRAIN_VECTORS)
+    return _fit_pq(X, m, n_codes, n_iter)
 
 
-def _fit_pq(
-    X: np.ndarray, m: int, n_codes: int, seed: int, n_iter: int, hint: int
-) -> np.ndarray:
+def _fit_pq(X: np.ndarray, m: int, n_codes: int, n_iter: int) -> np.ndarray:
     """Per-subspace seeded Lloyd's over an in-memory training matrix —
     shared by raw-vector PQ and residual (IVF-PQ) training."""
     if len(X) < n_codes:
         raise ValueError(
             f"training sample has {len(X)} rows < n_codes={n_codes} "
-            f"(max_train_vectors={hint}); raise "
-            "max_train_vectors or shrink n_codes"
+            f"(MAX_TRAIN_VECTORS={MAX_TRAIN_VECTORS}); shrink n_codes"
         )
     dim = X.shape[1]
     if dim % m:
         raise ValueError(f"dim {dim} not divisible by m={m}")
     sub = dim // m
-    rng = np.random.RandomState(seed)
+    rng = np.random.RandomState(SEED)
     books = np.empty((m, n_codes, sub))
     for j in range(m):
         Xj = X[:, j * sub : (j + 1) * sub]
@@ -748,9 +722,6 @@ def pq_adc_topk(
     queries: DataFrame,
     codebooks: np.ndarray,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     rerank: int = 0,
     rerank_metric: str = "fast",
 ) -> DataFrame:
@@ -773,7 +744,6 @@ def pq_adc_topk(
     (self-match), as in the other top-k paths."""
     return ivfpq_topk(
         corpus, queries, _zero_cell(codebooks), codebooks, k=k, n_probe=1,
-        id_col=id_col, vec_col=vec_col, query_id_col=query_id_col,
         rerank=rerank, rerank_metric=rerank_metric,
     )
 
@@ -793,25 +763,21 @@ def train_ivfpq_codebooks(
     centroids,
     m: int = 8,
     n_codes: int = 16,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 42,
     n_iter: int = 10,
-    max_train_vectors: int = 4096,
 ) -> np.ndarray:
     """PQ codebooks trained on coarse-quantizer RESIDUALS
-    ``x − centroid(cell(x))``: same deterministic ≤``max_train_vectors``
+    ``x − centroid(cell(x))``: same deterministic ≤``MAX_TRAIN_VECTORS``
     sample and per-subspace Lloyd's as :func:`train_pq_codebooks`, with
     cell assignment + subtraction done in one numpy pass driver-side
     (training is a bounded-sample problem; encoding stays distributed).
     Assignment uses the same cosine-to-normalized-centroid rule as
     :func:`ivf_assignment_udf`, so training and encoding agree."""
     C = np.asarray(centroids, dtype=np.float64)
-    X = _train_matrix(corpus, id_col, vec_col, max_train_vectors)
+    X = _train_matrix(corpus, MAX_TRAIN_VECTORS)
     if len(X):
         cells = (X @ _unit_rows(C).T).argmax(axis=1)
         X = X - C[cells]
-    return _fit_pq(X, m, n_codes, seed, n_iter, max_train_vectors)
+    return _fit_pq(X, m, n_codes, n_iter)
 
 
 def ivfpq_encode_udf(centroids, codebooks: np.ndarray):
@@ -860,9 +826,6 @@ def ivfpq_topk(
     codebooks: np.ndarray,
     k: int = 5,
     n_probe: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
     rerank: int = 0,
     rerank_metric: str = "fast",
 ) -> DataFrame:
@@ -898,10 +861,10 @@ def ivfpq_topk(
     # each query is scored and ranked on its own, so the fetch order of
     # the query rows does not matter
     q_rows = collect_bounded(
-        queries.select(id_col, vec_col), MAX_ADC_QUERIES, "ivfpq_topk queries"
+        queries.select("vec_id", "embedding"), MAX_ADC_QUERIES, "ivfpq_topk queries"
     )
-    q_ids = pd.Series(q_rows.column(id_col).to_pylist())
-    Q = np.array(q_rows.column(vec_col).to_pylist(), dtype=np.float64)
+    q_ids = pd.Series(q_rows.column("vec_id").to_pylist())
+    Q = np.array(q_rows.column("embedding").to_pylist(), dtype=np.float64)
     n_q = len(q_ids)
     cell_sims = Q @ _unit_rows(C).T  # probe choice: same metric as assignment
     probe_rank = np.argsort(-cell_sims, axis=1, kind="stable")[:, :n_probe]
@@ -914,19 +877,21 @@ def ivfpq_topk(
 
     encode = ivfpq_encode_udf(C, books)
     coded = (
-        fan_out(corpus.select(id_col, vec_col))
-        .select(id_col, encode(F.col(vec_col)).alias("_e"))
-        .select(id_col, F.col("_e.cell").alias("_cell"), F.col("_e.codes").alias("_codes"))
+        fan_out(corpus.select("vec_id", "embedding"))
+        .select("vec_id", encode(F.col("embedding")).alias("_e"))
+        .select(
+            "vec_id", F.col("_e.cell").alias("_cell"), F.col("_e.codes").alias("_codes")
+        )
     )
     out_schema = StructType(
         [
-            StructField(query_id_col, queries.schema[id_col].dataType),
-            StructField(id_col, corpus.schema[id_col].dataType),
+            StructField("query_id", queries.schema["vec_id"].dataType),
+            StructField("vec_id", corpus.schema["vec_id"].dataType),
             StructField("score", DoubleType()),
         ]
     )
 
-    merge = _topk_merger(n_keep, query_id_col, id_col)
+    merge = _topk_merger(n_keep, "query_id")
 
     def _score_local_topk(batches):
         best = None
@@ -944,50 +909,46 @@ def ivfpq_topk(
                 continue
             cand = pd.DataFrame(
                 {
-                    query_id_col: q_ids.to_numpy()[qs],
-                    id_col: pdf[id_col].to_numpy()[rows],
+                    "query_id": q_ids.to_numpy()[qs],
+                    "vec_id": pdf["vec_id"].to_numpy()[rows],
                     "score": sc[rows, qs],
                 }
             )
-            best = merge(best, cand[cand[query_id_col] != cand[id_col]])
+            best = merge(best, cand[cand["query_id"] != cand["vec_id"]])
         if best is not None and len(best):
-            yield best[[query_id_col, id_col, "score"]]
+            yield best[["query_id", "vec_id", "score"]]
 
     shortlist = _rank_topk(
-        coded.mapInPandas(_score_local_topk, out_schema), n_keep,
-        query_id_col, id_col,
+        coded.mapInPandas(_score_local_topk, out_schema), n_keep
     )
     if rerank <= k:
         return shortlist
     qvecs = F.broadcast(
         queries.select(
-            F.col(id_col).alias(query_id_col), F.col(vec_col).alias("_qvec")
+            F.col("vec_id").alias("query_id"), F.col("embedding").alias("_qvec")
         )
     )
     refined = (
-        F.broadcast(shortlist.select(query_id_col, id_col))
-        .join(corpus.select(id_col, vec_col), id_col)
-        .join(qvecs, query_id_col)
+        F.broadcast(shortlist.select("query_id", "vec_id"))
+        .join(corpus.select("vec_id", "embedding"), "vec_id")
+        .join(qvecs, "query_id")
         .select(
-            query_id_col,
-            id_col,
+            "query_id",
+            "vec_id",
             # rerank_metric="exact"/"int": with rerank ≥ corpus size the
             # shortlist is the whole corpus and the refined ranking is
             # bit-identical to brute force — the oracle-paired limit
             # proof of the two-stage path (knn_pq_exact_rerankall)
             metric_score(
-                rerank_metric, F.col("_qvec"), F.col(vec_col)
+                rerank_metric, F.col("_qvec"), F.col("embedding")
             ).alias("score"),
         )
     )
-    return _rank_topk(refined, k, query_id_col, id_col)
+    return _rank_topk(refined, k)
 
 
 def rrf_fuse(
     ranked_lists: list[DataFrame],
-    query_col: str = "query_id",
-    cand_col: str = "cand_id",
-    rank_col: str = "rank",
     k0: int = 60,
     k: int = 5,
 ) -> DataFrame:
@@ -999,26 +960,26 @@ def rrf_fuse(
     immune to the incomparable score scales that make weighted-sum
     fusion fragile.
 
-    Inputs: each DataFrame carries (query_col, cand_col, rank_col) with
-    rank 1-based within query. Shape at scale: per-query candidate sets
+    Inputs: each DataFrame carries (``query_id``, ``cand_id``, ``rank``)
+    with rank 1-based within query. Shape at scale: per-query candidate sets
     are k-bounded upstream, so the full-outer rank join and the final
     per-query top-k window move k·|lists| rows per query — the fusion
     itself never touches corpus-sized data.
 
-    Returns (query_col, cand_col, ``rrf_score``, ``fused_rank`` ≤ k).
+    Returns (``query_id``, ``cand_id``, ``rrf_score``, ``fused_rank`` ≤ k).
     """
     from functools import reduce
 
     tagged = [
         df.select(
-            F.col(query_col),
-            F.col(cand_col),
-            F.col(rank_col).alias(f"_r{i}"),
+            F.col("query_id"),
+            F.col("cand_id"),
+            F.col("rank").alias(f"_r{i}"),
         )
         for i, df in enumerate(ranked_lists)
     ]
     fused = reduce(
-        lambda a, b: a.join(b, [query_col, cand_col], "full_outer"), tagged
+        lambda a, b: a.join(b, ["query_id", "cand_id"], "full_outer"), tagged
     )
     score = reduce(
         lambda a, b: a + b,
@@ -1031,14 +992,14 @@ def rrf_fuse(
             for i in range(len(tagged))
         ],
     )
-    win = Window.partitionBy(query_col).orderBy(
-        F.desc("rrf_score"), F.asc(cand_col)
+    win = Window.partitionBy("query_id").orderBy(
+        F.desc("rrf_score"), F.asc("cand_id")
     )
     return (
         fused.withColumn("rrf_score", score)
         .withColumn("fused_rank", F.row_number().over(win))
         .filter(F.col("fused_rank") <= k)
-        .select(query_col, cand_col, "rrf_score", "fused_rank")
+        .select("query_id", "cand_id", "rrf_score", "fused_rank")
     )
 
 
@@ -1047,10 +1008,6 @@ def mmr_rerank(
     corpus: DataFrame,
     k: int = 5,
     lam: float = 0.7,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
-    score_col: str = "score",
 ) -> DataFrame:
     """Maximal Marginal Relevance re-rank (Carbonell & Goldstein,
     SIGIR'98) — the diversity-aware final stage of a retrieval stack:
@@ -1061,7 +1018,7 @@ def mmr_rerank(
 
     Inputs: ``shortlist`` = (query_id, vec_id, score) from ANY upstream
     ranker (brute force, LSH, IVF-PQ — k-bounded per query by
-    construction); ``corpus`` supplies candidate vectors via one hash
+    construction); ``corpus`` supplies candidate ``embedding``s via one hash
     join. The greedy loop is inherently sequential per query, so it
     runs as an Arrow-batched grouped map (``applyInPandas`` per
     query_id) over shortlist-sized groups — corpus-scale work stays in
@@ -1072,13 +1029,13 @@ def mmr_rerank(
     Returns (query_id, vec_id, ``mmr_rank`` 1..k, score).
     """
     cands = shortlist.join(
-        corpus.select(F.col(id_col), F.col(vec_col).alias("_cvec")), id_col
+        corpus.select(F.col("vec_id"), F.col("embedding").alias("_cvec")), "vec_id"
     )
 
     def _mmr(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values([score_col, id_col], ascending=[False, True])
-        ids = pdf[id_col].to_numpy()
-        rel = pdf[score_col].to_numpy(dtype=np.float64)
+        pdf = pdf.sort_values(["score", "vec_id"], ascending=[False, True])
+        ids = pdf["vec_id"].to_numpy()
+        rel = pdf["score"].to_numpy(dtype=np.float64)
         vecs = np.asarray(pdf["_cvec"].tolist(), dtype=np.float64)
         norms = np.linalg.norm(vecs, axis=1)
         norms[norms == 0] = 1.0
@@ -1099,28 +1056,21 @@ def mmr_rerank(
             available[best] = False
             sims = unit @ unit[best]
             max_sim = np.maximum(max_sim, sims)
-        out = pdf.iloc[chosen][[query_id_col, id_col, score_col]].copy()
+        out = pdf.iloc[chosen][["query_id", "vec_id", "score"]].copy()
         out.insert(2, "mmr_rank", np.arange(1, len(chosen) + 1))
         return out
 
-    out_schema = (
-        f"{query_id_col} long, {id_col} long, mmr_rank int, "
-        f"{score_col} double"
-    )
-    return cands.groupBy(query_id_col).applyInPandas(_mmr, out_schema)
+    out_schema = "query_id long, vec_id long, mmr_rank int, score double"
+    return cands.groupBy("query_id").applyInPandas(_mmr, out_schema)
 
 
 def hard_negatives(
     corpus: DataFrame,
     anchors: DataFrame,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    label_col: str = "label",
-    anchor_id_col: str = "anchor_id",
 ) -> DataFrame:
     """Hard-negative mining for contrastive embedding training: for
-    each anchor, the top-k most similar corpus vectors whose label
+    each anchor, the top-k most similar corpus vectors whose ``label``
     DIFFERS from the anchor's (the negatives closest to the decision
     boundary — the pairs that actually move an InfoNCE loss).
 
@@ -1141,28 +1091,28 @@ def hard_negatives(
     """
     a = F.broadcast(
         anchors.select(
-            F.col(id_col).alias(anchor_id_col),
-            F.col(vec_col).alias("_avec"),
-            F.col(label_col).alias("_albl"),
+            F.col("vec_id").alias("anchor_id"),
+            F.col("embedding").alias("_avec"),
+            F.col("label").alias("_albl"),
         )
     )
     paired = (
         fan_out(corpus)
         .crossJoin(a)
         .filter(
-            (F.col(id_col) != F.col(anchor_id_col))
-            & (F.col(label_col) != F.col("_albl"))
+            (F.col("vec_id") != F.col("anchor_id"))
+            & (F.col("label") != F.col("_albl"))
         )
     )
     scored = paired.select(
-        anchor_id_col,
-        id_col,
+        "anchor_id",
+        "vec_id",
         nan_safe_score(
-            F.round(exact_dot(F.col("_avec"), F.col(vec_col)), 12)
+            F.round(exact_dot(F.col("_avec"), F.col("embedding")), 12)
         ).alias("score"),
     )
-    pruned = local_topk(scored, k, anchor_id_col, id_col)
-    return _rank_topk(pruned, k, anchor_id_col, id_col)
+    pruned = local_topk(scored, k, "anchor_id")
+    return _rank_topk(pruned, k, "anchor_id")
 
 
 def as_token_matrix(vec: Column, n_tokens: int) -> Column:
@@ -1202,9 +1152,6 @@ def maxsim_topk(
     queries: DataFrame,
     n_tokens: int,
     k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    query_id_col: str = "query_id",
 ) -> DataFrame:
     """Multi-vector (late-interaction) top-k retrieval: each document
     and query is a BAG of token sub-vectors; relevance is MaxSim
@@ -1224,20 +1171,20 @@ def maxsim_topk(
     """
     q = F.broadcast(
         queries.select(
-            F.col(id_col).alias(query_id_col),
-            as_token_matrix(F.col(vec_col), n_tokens).alias("_qmat"),
+            F.col("vec_id").alias("query_id"),
+            as_token_matrix(F.col("embedding"), n_tokens).alias("_qmat"),
         )
     )
     c = fan_out(corpus).select(
-        id_col, as_token_matrix(F.col(vec_col), n_tokens).alias("_dmat")
+        "vec_id", as_token_matrix(F.col("embedding"), n_tokens).alias("_dmat")
     )
-    paired = c.crossJoin(q).filter(F.col(id_col) != F.col(query_id_col))
+    paired = c.crossJoin(q).filter(F.col("vec_id") != F.col("query_id"))
     scored = paired.select(
-        query_id_col,
-        id_col,
+        "query_id",
+        "vec_id",
         nan_safe_score(maxsim_score(F.col("_qmat"), F.col("_dmat"))).alias(
             "score"
         ),
     )
-    pruned = local_topk(scored, k, query_id_col, id_col)
-    return _rank_topk(pruned, k, query_id_col, id_col)
+    pruned = local_topk(scored, k)
+    return _rank_topk(pruned, k)

@@ -35,10 +35,10 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = ["the", "a", "of", "and", "to", "in"]
 
 
-def tokens(col: str | Column = "text", sep: str = " ") -> Column:
+def tokens(col: str | Column = "text") -> Column:
     """Whitespace tokenizer as a column expression (array<string>)."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.split(c, sep)
+    return F.split(c, " ")
 
 
 def bpe_ish_tokens(col: str | Column = "text") -> Column:
@@ -127,14 +127,14 @@ def fingerprint(col: str | Column = "text") -> Column:
     return F.md5(c)
 
 
-def head_fingerprint(col: str | Column = "text", n_chars: int = 100) -> Column:
-    """Prefix fingerprint (md5 of the first ``n_chars`` characters) —
+def head_fingerprint(col: str | Column = "text") -> Column:
+    """Prefix fingerprint (md5 of the first 100 characters) —
     the cheap re-scrape detector: mirrored feeds and re-crawls share
     document HEADS while tails drift (timestamps, footers, ad blocks),
     so a head fingerprint clusters them where the full-text fingerprint
-    sees distinct documents. Oracle twin: ``MD5(SUBSTR(text, 1, n))``."""
+    sees distinct documents. Oracle twin: ``MD5(SUBSTR(text, 1, 100))``."""
     c = F.col(col) if isinstance(col, str) else col
-    return F.md5(F.substring(c, 1, n_chars))
+    return F.md5(F.substring(c, 1, 100))
 
 
 def tokens_long(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
@@ -363,19 +363,17 @@ def hashed_ngram_buckets(
 def dsir_importance_weights(
     raw: DataFrame,
     target: DataFrame | None = None,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     n_buckets: int = 1024,
     target_predicate: Column | None = None,
 ) -> DataFrame:
     """DSIR (Xie et al., 2023, arXiv:2302.03169): score every raw doc
-    by how target-like its hashed-n-gram distribution is — the
-    importance weight ``sum over features of ln(p_target / p_raw)``
-    with Laplace-smoothed bucket unigram models. Returns (id, weight,
-    n_feats); selection = top-k by weight (the paper adds Gumbel noise
-    for sampled selection; deterministic top-k keeps the pipeline
-    reproducible and oracle-checkable — inject noise at the caller if
-    sampling is wanted).
+    by how target-like the hashed-n-gram distribution of its ``text`` is
+    — the importance weight ``sum over features of ln(p_target /
+    p_raw)`` with Laplace-smoothed bucket unigram models. Returns
+    (``doc_id``, weight, n_feats); selection = top-k by weight (the
+    paper adds Gumbel noise for sampled selection; deterministic top-k
+    keeps the pipeline reproducible and oracle-checkable — inject noise
+    at the caller if sampling is wanted).
 
     Scale: feature explode is scan-side; the two bucket-count aggs are
     partial+final over ≤ ``n_buckets`` groups; the log-ratio table is
@@ -403,22 +401,22 @@ def dsir_importance_weights(
         raise ValueError("pass exactly one of target / target_predicate")
     if target_predicate is not None:
         feats_raw = fan_out(
-            raw.select(id_col, text_col, target_predicate.alias("_tgt"))
+            raw.select("doc_id", "text", target_predicate.alias("_tgt"))
         ).select(
-            id_col,
+            "doc_id",
             "_tgt",
-            F.explode(hashed_ngram_buckets(text_col, n_buckets)).alias("_b"),
+            F.explode(hashed_ngram_buckets("text", n_buckets)).alias("_b"),
         )
         model = feats_raw.groupBy("_b").agg(
             F.count("*").alias("_rc"),
             F.count(F.when(F.col("_tgt"), 1)).alias("_tc"),
         )
     else:
-        feats_raw = fan_out(raw.select(id_col, text_col)).select(
-            id_col, F.explode(hashed_ngram_buckets(text_col, n_buckets)).alias("_b")
+        feats_raw = fan_out(raw.select("doc_id", "text")).select(
+            "doc_id", F.explode(hashed_ngram_buckets("text", n_buckets)).alias("_b")
         )
-        feats_tgt = fan_out(target.select(text_col)).select(
-            F.explode(hashed_ngram_buckets(text_col, n_buckets)).alias("_b")
+        feats_tgt = fan_out(target.select("text")).select(
+            F.explode(hashed_ngram_buckets("text", n_buckets)).alias("_b")
         )
         rc = feats_raw.groupBy("_b").agg(F.count("*").alias("_rc"))
         tc = feats_tgt.groupBy("_b").agg(F.count("*").alias("_tc"))
@@ -450,9 +448,9 @@ def dsir_importance_weights(
         .alias("_lr"),
     )
     return (
-        feats_raw.select(id_col, "_b")
+        feats_raw.select("doc_id", "_b")
         .join(F.broadcast(ratio), "_b")
-        .groupBy(id_col)
+        .groupBy("doc_id")
         .agg(
             F.sum("_lr").cast("double").alias("weight"),
             F.count("*").alias("n_feats"),
@@ -489,19 +487,18 @@ def positional_kgrams(
 
 def repeated_kgram_spans(
     df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
     k: int = 5,
     min_count: int = 2,
 ) -> DataFrame:
     """Substring-level exact dedup primitive (Lee et al., 2022,
     arXiv:2107.06499 — suffix-array repeated-substring removal,
-    re-expressed for a shuffle engine): find every maximal token span
-    whose k-grams each occur ≥ ``min_count`` times across the corpus.
-    Returns (id, span_start, span_end, span_tokens), 1-based inclusive
-    token positions — the spans a cleaning pass would cut (the paper
-    removes one occurrence's worth of each repeat; keeping WHICH
-    occurrence is caller policy, same as the near-dup keeper split).
+    re-expressed for a shuffle engine): find every maximal token span of
+    ``text`` whose k-grams each occur ≥ ``min_count`` times across the
+    corpus. Returns (``doc_id``, span_start, span_end, span_tokens),
+    1-based inclusive token positions — the spans a cleaning pass would
+    cut (the paper removes one occurrence's worth of each repeat;
+    keeping WHICH occurrence is caller policy, same as the near-dup
+    keeper split).
 
     Plan: positional k-grams explode scan-side; occurrence counting
     groups on the md5 of the gram (32-byte shuffle rows, never the
@@ -513,11 +510,11 @@ def repeated_kgram_spans(
     from technical_test_data_engineer_spark.operators.partitioning import fan_out
     from pyspark.sql.window import Window
 
-    grams = fan_out(df.select(id_col, text_col)).select(
-        F.col(id_col),
-        F.posexplode(positional_kgrams(text_col, k)).alias("_p0", "_g"),
+    grams = fan_out(df.select("doc_id", "text")).select(
+        F.col("doc_id"),
+        F.posexplode(positional_kgrams("text", k)).alias("_p0", "_g"),
     ).select(
-        id_col,
+        "doc_id",
         (F.col("_p0") + 1).alias("_pos"),
         F.md5(F.col("_g")).alias("_h"),
     )
@@ -528,15 +525,15 @@ def repeated_kgram_spans(
         .select("_h")
     )
     hits = grams.join(repeated, "_h").select(
-        id_col, "_pos", (F.col("_pos") + (k - 1)).alias("_end")
+        "doc_id", "_pos", (F.col("_pos") + (k - 1)).alias("_end")
     )
     w_prev = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("_pos")
         .rowsBetween(Window.unboundedPreceding, -1)
     )
     w_run = (
-        Window.partitionBy(id_col)
+        Window.partitionBy("doc_id")
         .orderBy("_pos")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
@@ -551,13 +548,13 @@ def repeated_kgram_spans(
         ).over(w_run),
     )
     return (
-        islands.groupBy(id_col, "_island")
+        islands.groupBy("doc_id", "_island")
         .agg(
             F.min("_pos").alias("span_start"),
             F.max("_end").alias("span_end"),
         )
         .select(
-            id_col,
+            "doc_id",
             "span_start",
             "span_end",
             (F.col("span_end") - F.col("span_start") + 1).alias("span_tokens"),
@@ -648,7 +645,6 @@ def corpus_mix_sample(
     shares: dict[str, float],
     group_col: str = "lang",
     text_col: str = "text",
-    n_buckets: int = 1_000_000,
     rates: DataFrame | None = None,
 ) -> DataFrame:
     """Apply ``corpus_mix_rates`` (or a precomputed ``rates`` frame —
@@ -664,7 +660,7 @@ def corpus_mix_sample(
         rates = corpus_mix_rates(df, shares, group_col)
     return df.join(
         F.broadcast(rates.select(group_col, "rate")), group_col
-    ).filter(md5_bucket(text_col, n_buckets) < F.col("rate") * n_buckets)
+    ).filter(md5_bucket(text_col, 1_000_000) < F.col("rate") * 1_000_000)
 
 
 def tfidf_cosine_neighbors(
@@ -673,7 +669,6 @@ def tfidf_cosine_neighbors(
     text_col: str = "text",
     k: int = 3,
     max_df_frac: float = 0.1,
-    order_round: int | None = 12,
 ) -> DataFrame:
     """Sparse-vector document similarity ("more like this"): top-k
     nearest neighbors per document under TF-IDF cosine, computed via an
@@ -681,12 +676,11 @@ def tfidf_cosine_neighbors(
     sparse complement to the dense-embedding ANN family
     (operators/similarity.py).
 
-    ``order_round``: decimal places the cosine is rounded to BEFORE the
-    per-doc rank ordering (the returned ``cos`` stays unrounded). A
-    sub-ulp ``log()`` difference between engines can flip a near-tie
-    neighbor ordering; ranking on a 12-dp-rounded score makes rank
-    ties break identically on any engine that applies the same
-    rounding (the DuckDB oracles do). ``None`` ranks on the raw value.
+    The per-doc rank orders on the cosine rounded to 12 decimals (the
+    returned ``cos`` stays unrounded). A sub-ulp ``log()`` difference
+    between engines can flip a near-tie neighbor ordering; ranking on
+    a 12-dp-rounded score makes rank ties break identically on any
+    engine that applies the same rounding (the DuckDB oracles do).
 
     Scale shape: candidate pairs are generated ONLY through shared
     terms (postings self-join on term), so the quadratic blowup lives
@@ -765,13 +759,8 @@ def tfidf_cosine_neighbors(
     )
     from pyspark.sql.window import Window
 
-    order_key = (
-        F.round(F.col("cos"), order_round)
-        if order_round is not None
-        else F.col("cos")
-    )
     win = Window.partitionBy("doc_a").orderBy(
-        F.desc(order_key), F.asc("doc_b")
+        F.desc(F.round(F.col("cos"), 12)), F.asc("doc_b")
     )
     return (
         cos.withColumn("rank", F.row_number().over(win))
@@ -828,22 +817,21 @@ def template_key(col: str | Column = "text") -> Column:
     )
 
 
-def template_dup_clusters(
-    df: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Group documents by :func:`template_key`; emit one row per
+def template_dup_clusters(df: DataFrame) -> DataFrame:
+    """Group (``doc_id``, ``text``) documents by :func:`template_key`;
+    emit one row per
     template with >1 member: (template_md5, n_docs, keep_id) where
     ``keep_id`` is the lowest member id (the deterministic keeper, the
     exact-dedup convention). One keyed shuffle of (32-byte key, id)
     rows — text never moves."""
     keyed = df.select(
-        F.col(id_col), template_key(text_col).alias("template_md5")
+        F.col("doc_id"), template_key("text").alias("template_md5")
     )
     return (
         keyed.groupBy("template_md5")
         .agg(
             F.count("*").alias("n_docs"),
-            F.min(id_col).alias("keep_id"),
+            F.min("doc_id").alias("keep_id"),
         )
         .filter(F.col("n_docs") > 1)
     )
@@ -853,11 +841,9 @@ def epoch_shard_plan(
     df: DataFrame,
     n_epochs: int,
     n_shards: int,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Deterministic multi-epoch shard plan for a training dataloader:
-    epoch e assigns each document to shard
+    epoch e assigns each (``doc_id``, ``text``) document to shard
     ``md5_bucket(text || ':' || e, n_shards)`` — a fresh pseudo-random
     but fully reproducible permutation per epoch (any worker can
     recompute its shard membership from the data alone, no shuffle
@@ -869,10 +855,10 @@ def epoch_shard_plan(
     shuffle of ~24-byte rows to the (epoch, shard) histogram."""
     e = F.explode(F.sequence(F.lit(0), F.lit(n_epochs - 1))).alias("epoch")
     fanned = df.select(
-        F.col(id_col),
-        token_count(text_col).alias("_ntok"),
-        md5_hash64(F.col(text_col)).alias("_h64"),
-        F.col(text_col).alias("_t"),
+        F.col("doc_id"),
+        token_count("text").alias("_ntok"),
+        md5_hash64(F.col("text")).alias("_h64"),
+        F.col("text").alias("_t"),
     ).select("*", e)
     assigned = fanned.select(
         # bigint to match the oracle's UNNEST(RANGE(...)) epoch type

@@ -66,9 +66,8 @@ def grouped_ewma(
     order_cols: list[str],
     value_col: str,
     alpha: float,
-    out_col: str = "ewma",
 ) -> DataFrame:
-    """Exponentially-weighted moving average per key:
+    """Exponentially-weighted moving average per key, as column ``ewma``:
     ``y₀ = x₀;  yᵢ = α·xᵢ + (1−α)·yᵢ₋₁`` over ``order_cols`` order.
 
     A TRUE sequential recurrence — no window frame expresses it
@@ -91,7 +90,7 @@ def grouped_ewma(
 
     from pyspark.sql.types import DoubleType, StructField, StructType
 
-    schema = StructType(list(df.schema.fields) + [StructField(out_col, DoubleType())])
+    schema = StructType(list(df.schema.fields) + [StructField("ewma", DoubleType())])
     a = float(alpha)
 
     def _fn(pdf: _pd.DataFrame) -> _pd.DataFrame:
@@ -100,7 +99,7 @@ def grouped_ewma(
         y = x.copy()
         for i in range(1, len(y)):
             y[i] = a * x[i] + (1.0 - a) * y[i - 1]
-        pdf[out_col] = y
+        pdf["ewma"] = y
         return pdf
 
     return df.groupBy(*key_cols).applyInPandas(_fn, schema)
@@ -113,11 +112,10 @@ def grouped_holt(
     value_col: str,
     alpha: float,
     beta: float,
-    level_col: str = "lvl",
-    trend_col: str = "trend",
 ) -> DataFrame:
-    """Holt's linear exponential smoothing per key — the level+trend
-    extension of ``grouped_ewma``'s recurrence discipline:
+    """Holt's linear exponential smoothing per key, as columns ``lvl``
+    (level) and ``trend`` — the level+trend extension of
+    ``grouped_ewma``'s recurrence discipline:
 
     ``l₀ = x₀;  b₀ = 0``
     ``lᵢ = α·xᵢ + (1−α)·(lᵢ₋₁ + bᵢ₋₁)``
@@ -142,7 +140,7 @@ def grouped_holt(
 
     schema = StructType(
         list(df.schema.fields)
-        + [StructField(level_col, DoubleType()), StructField(trend_col, DoubleType())]
+        + [StructField("lvl", DoubleType()), StructField("trend", DoubleType())]
     )
     a, bt = float(alpha), float(beta)
 
@@ -155,8 +153,8 @@ def grouped_holt(
             new_l = a * x[i] + (1.0 - a) * (lvl[i - 1] + trd[i - 1])
             trd[i] = bt * (new_l - lvl[i - 1]) + (1.0 - bt) * trd[i - 1]
             lvl[i] = new_l
-        pdf[level_col] = lvl
-        pdf[trend_col] = trd
+        pdf["lvl"] = lvl
+        pdf["trend"] = trd
         return pdf
 
     return df.groupBy(*key_cols).applyInPandas(_fn, schema)

@@ -132,24 +132,18 @@ _FRONT_50 = [
 # Earlier windows (rotation rationale for rounds 4-8) are preserved in
 # git history — see _FRONT_50 at commits 9688206 (r7) / 97a6b66 (r8).
 
-# Rows-only queries deliberately pinned into the driver window: NONE
-# since round 7 — the r6 rotation proved the driver scores rows-only
-# window entries err=no_oracle (zero credit). Every _FRONT_50 entry
-# must be oracle-paired; this set stays for the mechanism.
+# Every _FRONT_50 entry must be oracle-paired: the r6 rotation proved
+# the driver scores rows-only window entries err=no_oracle (zero
+# credit).
 # Round-16 rotation head (if one exists): the 7 r08 greens that did
 # not fit this window (listed in the _FRONT_50 header) first, then the
 # r09 cohort, plus any plan rewritten after its latest green. Recompute
 # mechanically from the CORRECTNESS union as always.
 
-_FRONT_ROWS_ONLY: set[str] = set()
-
 
 def _reorder() -> None:
     missing = [n for n in _FRONT_50 if n not in QUERIES]
-    unpaired = [
-        n for n in _FRONT_50
-        if n not in ORACLE and n not in _FRONT_ROWS_ONLY
-    ]
+    unpaired = [n for n in _FRONT_50 if n not in ORACLE]
     if missing or unpaired:
         raise RuntimeError(
             f"registry front-window broken: missing={missing} unpaired={unpaired}"

@@ -56,10 +56,10 @@ def _require(spark: SparkSession) -> None:
         )
 
 
-def write_avro(df: DataFrame, path: str, mode: str = "overwrite") -> None:
+def write_avro(df: DataFrame, path: str) -> None:
     """Full-replace Avro sink (landing-zone hand-off shape)."""
     _require(df.sparkSession)
-    df.write.format("avro").mode(mode).save(path)
+    df.write.format("avro").mode("overwrite").save(path)
 
 
 def read_avro(spark: SparkSession, path: str) -> DataFrame:

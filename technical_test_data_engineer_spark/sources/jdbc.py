@@ -79,11 +79,7 @@ def write_jdbc_table(
 # choices so a production deploy is a URL swap, not a re-tune.
 
 
-def postgres_write_options(
-    df: DataFrame | None = None,
-    batchsize: int = 10000,
-    replace_via_truncate: bool = True,
-) -> dict[str, str]:
+def postgres_write_options(replace_via_truncate: bool = True) -> dict[str, str]:
     """Production option set for a full-replace write to Postgres 16.
 
     Dialect deltas vs the Derby the tests run on:
@@ -99,7 +95,7 @@ def postgres_write_options(
       has no TRUNCATE fast path in Spark's dialect, so the tests
       exercise drop+recreate (which is also exactly the reference's
       ``if_exists='replace'`` behavior).
-    - **Batch sizing**: the Postgres driver turns ``batchsize`` row
+    - **Batch sizing**: the Postgres driver turns 10k-row ``batchsize``
       batches into single round-trips only with
       ``reWriteBatchedInserts=true`` on the URL — without it each
       batched row is still its own INSERT statement server-side.
@@ -107,7 +103,7 @@ def postgres_write_options(
       ``max_allowed_packet``-free Postgres, driver memory per task).
     """
     opts = {
-        "batchsize": str(batchsize),
+        "batchsize": "10000",
         # URL-level driver knob; harmless if repeated on the URL itself
         "reWriteBatchedInserts": "true",
         "isolationLevel": "READ_COMMITTED",
@@ -117,10 +113,10 @@ def postgres_write_options(
     return opts
 
 
-def postgres_read_options(fetchsize: int = 10000) -> dict[str, str]:
+def postgres_read_options() -> dict[str, str]:
     """Production option set for partitioned Postgres reads.
 
-    ``fetchsize`` matters on Postgres specifically: the driver defaults
+    ``fetchsize`` (10k rows) matters on Postgres specifically: the driver defaults
     to fetching the ENTIRE result set into executor memory unless a
     cursor fetch size is set (Derby streams by default) — at a 100 TB
     table even one unpartitioned range query would OOM the task.
@@ -128,6 +124,6 @@ def postgres_read_options(fetchsize: int = 10000) -> dict[str, str]:
     ``prepareThreshold=0`` avoids server-side prepared-statement
     re-plans across the per-partition range queries."""
     return {
-        "fetchsize": str(fetchsize),
+        "fetchsize": "10000",
         "prepareThreshold": "0",
     }

@@ -22,12 +22,11 @@ from pyspark.sql import DataFrame, SparkSession
 def write_orc(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     partition_by: list[str] | None = None,
 ) -> None:
     """Full-replace ORC sink; ``partition_by`` lays out hive-style
     directories for partition pruning, same as the parquet sink."""
-    writer = df.write.format("orc").mode(mode)
+    writer = df.write.format("orc").mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.save(path)

@@ -85,29 +85,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: list[str] | None = None
-) -> dict[str, DataFrame]:
+def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     from technical_test_data_engineer_spark.schemas import STAR_SCHEMA
 
-    names = names or list(STAR_SCHEMA)
-    return {n: load_table(spark, sf_dir, n) for n in names}
+    return {n: load_table(spark, sf_dir, n) for n in STAR_SCHEMA}
 
 
 def write_table(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
+    df: DataFrame, path: str, partition_by: list[str] | None = None
 ) -> None:
-    """Engine-native sink: overwrite-by-default parquet, mirroring the
+    """Engine-native sink: overwrite parquet, mirroring the
     reference's full-replace semantics (``to_sql(if_exists='replace')``,
     /root/reference/tasks/scraper/src/scraper.py:23-24; SURVEY.md S2).
 
     ``partition_by`` enables partition pruning for fact tables at scale
     (e.g. a date column) — the reference has no notion of this.
     """
-    writer = df.write.mode(mode)
+    writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(path)
@@ -118,10 +112,8 @@ def write_bucketed_table(
     name: str,
     bucket_cols: list[str],
     n_buckets: int = 16,
-    sort_cols: list[str] | None = None,
     mode: str = "overwrite",
     partition_cols: list[str] | None = None,
-    coalesce_buckets: bool = True,
 ) -> None:
     """Bucketed managed table: rows hash-distributed into ``n_buckets``
     files by ``bucket_cols`` at WRITE time. Two tables bucketed the same
@@ -129,14 +121,6 @@ def write_bucketed_table(
     way to pre-pay the shuffle for a fact table that joins on the same
     key every day. At 100 TB this converts the nightly join's dominant
     exchange into a free scan-side zip.
-
-    ``coalesce_buckets`` (default True) pre-shuffles onto the bucket
-    keys for a one-file-per-bucket layout — the contract the loop's
-    band tables rely on. It also CAPS write parallelism at
-    ``n_buckets`` tasks and concentrates a skewed bucket key into a
-    single task, so a large caller whose input dwarfs its bucket count
-    should pass False and keep full input parallelism (layout then
-    reverts to up-to input-partitions files per bucket).
     """
     from pyspark.sql import functions as F
 
@@ -148,12 +132,8 @@ def write_bucketed_table(
     # and at 100 TB it is the difference between a clean bucket layout
     # and a small-file explosion on every daily refresh. The bucket
     # count is the parallelism dial: size n_buckets for the table, not
-    # the cluster.
-    dfp = (
-        df.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
-        if coalesce_buckets
-        else df
-    )
+    # the cluster. It also caps write parallelism at n_buckets tasks.
+    dfp = df.repartition(n_buckets, *[F.col(c) for c in bucket_cols])
     writer = dfp.write.mode(mode).bucketBy(n_buckets, *bucket_cols)
     if partition_cols:
         # Hive-style partition dirs UNDER the bucket layout: each
@@ -163,8 +143,6 @@ def write_bucketed_table(
         # partition column becomes a directory prune instead of a
         # footer scan — what makes per-batch stamp probes O(1)
         writer = writer.partitionBy(*partition_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
     writer.format("parquet").saveAsTable(name)
 
 
@@ -216,7 +194,6 @@ def write_zordered(
     path: str,
     zorder_cols: list[str],
     n_files: int = 16,
-    bits: int = 16,
 ) -> None:
     """Z-order clustered rewrite: range-partition + sort rows by their
     Morton value, drop the helper column, write ``n_files`` parquet
@@ -228,7 +205,7 @@ def write_zordered(
     turns a 100 TB full scan into a few-file read for selective
     queries. One range shuffle (sampled bounds) + local sort; cost is
     the rewrite, amortized over every subsequent scan."""
-    zdf = zorder_value(df, zorder_cols, bits)
+    zdf = zorder_value(df, zorder_cols)
     (
         zdf.repartitionByRange(n_files, "_z")
         .sortWithinPartitions("_z")

@@ -48,16 +48,14 @@ def write_xml(
     df: DataFrame,
     path: str,
     row_tag: str,
-    root_tag: str = "rows",
-    mode: str = "overwrite",
     **options: str,
 ) -> None:
-    """Full-replace XML write (one file part per partition, standard
-    distributed-sink layout), matching the parquet/ORC/JDBC replace
-    semantics of the S2 family."""
+    """Full-replace XML write under a ``rows`` root tag (one file part
+    per partition, standard distributed-sink layout), matching the
+    parquet/ORC/JDBC replace semantics of the S2 family."""
     (
-        df.write.options(rowTag=row_tag, rootTag=root_tag, **options)
-        .mode(mode)
+        df.write.options(rowTag=row_tag, rootTag="rows", **options)
+        .mode("overwrite")
         .format("xml")
         .save(path)
     )

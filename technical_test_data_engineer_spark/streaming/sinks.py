@@ -21,16 +21,16 @@ def snapshot_overwrite_sink(
     sdf: DataFrame,
     path: str,
     checkpoint: str,
-    output_mode: str = "complete",
     trigger_available_now: bool = False,
 ) -> StreamingQuery:
-    """Write each micro-batch as a full-replace parquet snapshot."""
+    """Write each micro-batch of a ``complete``-mode stream as a
+    full-replace parquet snapshot."""
 
     def _write(batch_df: DataFrame, batch_id: int) -> None:
         batch_df.write.mode("overwrite").parquet(path)
 
     writer = (
-        sdf.writeStream.outputMode(output_mode)
+        sdf.writeStream.outputMode("complete")
         .option("checkpointLocation", checkpoint)
         .foreachBatch(_write)
     )
@@ -43,17 +43,16 @@ def memory_sink(
     sdf: DataFrame,
     name: str,
     output_mode: str = "complete",
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
-    """In-memory table sink — test/debug only (driver-resident)."""
-    writer = (
+    """In-memory table sink under ``Trigger.AvailableNow`` — test/debug
+    only (driver-resident)."""
+    return (
         sdf.writeStream.format("memory")
         .queryName(name)
         .outputMode(output_mode)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def upsert_sink(
@@ -62,13 +61,13 @@ def upsert_sink(
     name: str,
     key_cols: list[str],
     checkpoint: str,
-    trigger_available_now: bool = True,
 ) -> StreamingQuery:
-    """CDC-apply sink: each micro-batch of keyed updates MERGEs into the
-    atomically-published table (sources/maintenance.publish_upsert) —
-    last write per key wins, inserts appear, untouched rows persist,
-    and a crash mid-batch leaves readers on the previous complete
-    snapshot (the publish is a pointer flip).
+    """CDC-apply sink under ``Trigger.AvailableNow``: each micro-batch
+    of keyed updates MERGEs into the atomically-published table
+    (sources/maintenance.publish_upsert) — last write per key wins,
+    inserts appear, untouched rows persist, and a crash mid-batch leaves
+    readers on the previous complete snapshot (the publish is a pointer
+    flip).
 
     The batch is deduped to one row per key first (latest by the whole
     row's order within the batch is NOT defined on a stream — callers
@@ -84,14 +83,13 @@ def upsert_sink(
             updates = batch_df.dropDuplicates(key_cols)
             publish_upsert(batch_df.sparkSession, root, name, updates, key_cols)
 
-    writer = (
+    return (
         sdf.writeStream.outputMode("append")
         .option("checkpointLocation", checkpoint)
         .foreachBatch(_apply)
+        .trigger(availableNow=True)
+        .start()
     )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def audited_publish_sink(

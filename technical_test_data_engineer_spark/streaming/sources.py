@@ -16,44 +16,31 @@ from pyspark.sql import types as T
 
 from technical_test_data_engineer_spark.streaming.transforms import with_event_time
 
-def _events_schema(ts_type: T.DataType) -> T.StructType:
-    return T.StructType(
-        [
-            T.StructField("event_id", T.LongType()),
-            T.StructField("ts", ts_type),
-            T.StructField("user_id", T.LongType()),
-            T.StructField("event_type", T.StringType()),
-            T.StructField("value", T.DoubleType()),
-            T.StructField("props", T.StringType()),
-        ]
-    )
-
-
 # Engine-written event files carry a real timestamp column.
-EVENTS_STREAM_SCHEMA = _events_schema(T.TimestampType())
-# The driver's raw events.parquet stores ts as TIMESTAMP(NANOS); under
-# spark.sql.legacy.parquet.nanosAsLong it surfaces as bigint nanos,
-# converted to a proper timestamp by with_event_time.
-EVENTS_STREAM_SCHEMA_NANOS = _events_schema(T.LongType())
+EVENTS_STREAM_SCHEMA = T.StructType(
+    [
+        T.StructField("event_id", T.LongType()),
+        T.StructField("ts", T.TimestampType()),
+        T.StructField("user_id", T.LongType()),
+        T.StructField("event_type", T.StringType()),
+        T.StructField("value", T.DoubleType()),
+        T.StructField("props", T.StringType()),
+    ]
+)
 
 
 def read_events_stream(
     spark: SparkSession,
     path: str,
     max_files_per_trigger: int | None = None,
-    nanos_ts: bool = False,
 ) -> DataFrame:
     """Open ``path`` (a directory of parquet files, or a glob) as an
     unbounded stream of events with a normalized timestamp column.
 
     ``max_files_per_trigger`` caps each micro-batch — the backpressure
-    knob when catching up on a large backlog. Set ``nanos_ts`` when
-    streaming the driver's raw nanos-timestamped files.
+    knob when catching up on a large backlog.
     """
-    schema = EVENTS_STREAM_SCHEMA_NANOS if nanos_ts else EVENTS_STREAM_SCHEMA
-    if nanos_ts:
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    reader = spark.readStream.schema(schema)
+    reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return with_event_time(reader.parquet(path))

@@ -23,23 +23,22 @@ from pyspark.sql import functions as F
 from technical_test_data_engineer_spark.functions.scalars import exact_sum
 
 
-def with_event_time(df: DataFrame, ts_col: str = "ts") -> DataFrame:
-    """Normalize the event-time column (truncate to µs precision if the
-    source delivered raw nanos as long — see sources/parquet_source)."""
-    if dict(df.dtypes).get(ts_col) == "bigint":
-        df = df.withColumn(ts_col, F.timestamp_micros(F.expr(f"{ts_col} div 1000")))
+def with_event_time(df: DataFrame) -> DataFrame:
+    """Normalize the ``ts`` event-time column (truncate to µs precision
+    if the source delivered raw nanos as long — see
+    sources/parquet_source)."""
+    if dict(df.dtypes).get("ts") == "bigint":
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
     return df
 
 
 def tumbling_rollup(
     df: DataFrame,
     window: str = "1 hour",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
     watermark: str | None = None,
 ) -> DataFrame:
-    """Tumbling event-time window: count + exact sum per (window, key).
+    """Tumbling event-time window over ``ts``: count + exact sum of
+    ``value`` per (window, ``event_type``).
 
     Batch twin of the reference's "refresh then re-aggregate" loop —
     with a stream source this maintains the same rollup incrementally
@@ -47,15 +46,15 @@ def tumbling_rollup(
     (/root/reference/tasks/visualization/src/visualization.py:226-233).
     """
     if watermark:
-        df = df.withWatermark(ts_col, watermark)
+        df = df.withWatermark("ts", watermark)
     return df.groupBy(
-        F.window(ts_col, window).alias("win"), F.col(key_col)
+        F.window("ts", window).alias("win"), F.col("event_type")
     ).agg(
         F.count("*").alias("n_events"),
-        exact_sum(F.col(value_col), "total_value"),
+        exact_sum(F.col("value"), "total_value"),
     ).select(
         F.col("win.start").alias("window_start"),
-        key_col,
+        "event_type",
         "n_events",
         "total_value",
     )
@@ -65,23 +64,22 @@ def sliding_rollup(
     df: DataFrame,
     window: str = "1 hour",
     slide: str = "15 minutes",
-    ts_col: str = "ts",
-    key_col: str = "event_type",
-    value_col: str = "value",
     watermark: str | None = None,
 ) -> DataFrame:
-    """Sliding event-time window — each event lands in window/slide
-    overlapping windows; Spark expands them scan-side (no UDTF)."""
+    """Sliding event-time window over ``ts``: count + exact sum of
+    ``value`` per (window, ``event_type``) — each event lands in
+    window/slide overlapping windows; Spark expands them scan-side (no
+    UDTF)."""
     if watermark:
-        df = df.withWatermark(ts_col, watermark)
+        df = df.withWatermark("ts", watermark)
     return df.groupBy(
-        F.window(ts_col, window, slide).alias("win"), F.col(key_col)
+        F.window("ts", window, slide).alias("win"), F.col("event_type")
     ).agg(
         F.count("*").alias("n_events"),
-        exact_sum(F.col(value_col), "total_value"),
+        exact_sum(F.col("value"), "total_value"),
     ).select(
         F.col("win.start").alias("window_start"),
-        key_col,
+        "event_type",
         "n_events",
         "total_value",
     )
@@ -90,26 +88,24 @@ def sliding_rollup(
 def session_rollup(
     df: DataFrame,
     gap: str = "30 minutes",
-    ts_col: str = "ts",
-    key_col: str = "user_id",
-    value_col: str = "value",
     watermark: str | None = None,
 ) -> DataFrame:
-    """Session windows: events for one key belong to one session while
+    """Session windows over ``ts`` (count + exact sum of ``value``):
+    events for one ``user_id`` belong to one session while
     consecutive gaps stay < ``gap``; a gap ≥ ``gap`` starts a new
     session. ``session_window``'s end is last_event + gap, so we emit
     the start plus aggregates (the stable, engine-independent part).
     """
     if watermark:
-        df = df.withWatermark(ts_col, watermark)
+        df = df.withWatermark("ts", watermark)
     return df.groupBy(
-        F.session_window(ts_col, gap).alias("win"), F.col(key_col)
+        F.session_window("ts", gap).alias("win"), F.col("user_id")
     ).agg(
         F.count("*").alias("n_events"),
-        exact_sum(F.col(value_col), "total_value"),
+        exact_sum(F.col("value"), "total_value"),
     ).select(
         F.col("win.start").alias("session_start"),
-        key_col,
+        "user_id",
         "n_events",
         "total_value",
     )
@@ -118,7 +114,6 @@ def session_rollup(
 def stream_exact_dedup(
     df: DataFrame,
     key_cols: list[str],
-    ts_col: str = "ts",
     watermark: str | None = None,
 ) -> DataFrame:
     """Streaming exact dedup: drop repeat keys across micro-batches.
@@ -129,7 +124,7 @@ def stream_exact_dedup(
     plain ``dropDuplicates`` — unbounded state, test/batch use only.
     """
     if watermark and df.isStreaming:
-        return df.withWatermark(ts_col, watermark).dropDuplicatesWithinWatermark(
+        return df.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
             key_cols
         )
     return df.dropDuplicates(key_cols)
@@ -138,12 +133,10 @@ def stream_exact_dedup(
 def view_click_attribution_join(
     events: DataFrame,
     within: str = "30 minutes",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
     watermark: str | None = None,
 ) -> DataFrame:
     """Stream-stream interval join (batch self-join twin): every
-    (view, click) pair for one user where the click lands in
+    (view, click) pair for one ``user_id`` where the click lands in
     (view_ts, view_ts + ``within``]. The canonical Structured Streaming
     stream-stream join shape: BOTH sides watermarked and the join
     condition time-bounded, so the state store retains only rows within
@@ -157,36 +150,32 @@ def view_click_attribution_join(
     execution.
     """
     views = events.filter(F.col("event_type") == "view").select(
-        F.col(user_col), F.col(ts_col).alias("view_ts")
+        F.col("user_id"), F.col("ts").alias("view_ts")
     )
     clicks = events.filter(F.col("event_type") == "click").select(
-        F.col(user_col).alias("_c_user"), F.col(ts_col).alias("click_ts")
+        F.col("user_id").alias("_c_user"), F.col("ts").alias("click_ts")
     )
     if watermark:
         views = views.withWatermark("view_ts", watermark)
         clicks = clicks.withWatermark("click_ts", watermark)
     cond = (
-        (F.col(user_col) == F.col("_c_user"))
+        (F.col("user_id") == F.col("_c_user"))
         & (F.col("click_ts") > F.col("view_ts"))
         & (F.col("click_ts") <= F.col("view_ts") + F.expr(f"interval {within}"))
     )
     return views.join(clicks, cond, "inner").select(
-        user_col, "view_ts", "click_ts"
+        "user_id", "view_ts", "click_ts"
     )
 
 
 def unconverted_views(
-    events: DataFrame,
-    within: str = "30 minutes",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
-    watermark: str | None = None,
+    events: DataFrame, watermark: str | None = None
 ) -> DataFrame:
-    """Views with NO click inside (view_ts, view_ts + ``within``] for
-    the same user — the abandonment side of the attribution join, and
+    """Views with NO click inside (view_ts, view_ts + 30 minutes] for
+    the same ``user_id`` — the abandonment side of the attribution join, and
     the stream-stream OUTER join shape: on a stream, Spark can only
     declare a view unconverted once the watermark has passed
-    view_ts + ``within`` (no earlier click can still arrive), so the
+    view_ts + 30 minutes (no earlier click can still arrive), so the
     null-matched rows flush as state expires — bounded state, late
     results by construction (exactly the semantics a funnel alert
     needs). Requires watermarks on BOTH sides for streaming; on batch
@@ -195,31 +184,29 @@ def unconverted_views(
     (plans/streaming_queries.views_unconverted_30m).
     """
     views = events.filter(F.col("event_type") == "view").select(
-        F.col(user_col), F.col(ts_col).alias("view_ts")
+        F.col("user_id"), F.col("ts").alias("view_ts")
     )
     clicks = events.filter(F.col("event_type") == "click").select(
-        F.col(user_col).alias("_c_user"), F.col(ts_col).alias("click_ts")
+        F.col("user_id").alias("_c_user"), F.col("ts").alias("click_ts")
     )
     if watermark:
         views = views.withWatermark("view_ts", watermark)
         clicks = clicks.withWatermark("click_ts", watermark)
     cond = (
-        (F.col(user_col) == F.col("_c_user"))
+        (F.col("user_id") == F.col("_c_user"))
         & (F.col("click_ts") > F.col("view_ts"))
-        & (F.col("click_ts") <= F.col("view_ts") + F.expr(f"interval {within}"))
+        & (F.col("click_ts") <= F.col("view_ts") + F.expr("interval 30 minutes"))
     )
     return (
         views.join(clicks, cond, "left_outer")
         .filter(F.col("click_ts").isNull())
-        .select(user_col, "view_ts")
+        .select("user_id", "view_ts")
     )
 
 
 def attribution_full_outer(
     events: DataFrame,
     within: str = "30 minutes",
-    ts_col: str = "ts",
-    user_col: str = "user_id",
     watermark: str | None = None,
 ) -> DataFrame:
     """The COMPLETE attribution picture in one relation — stream-stream
@@ -238,10 +225,10 @@ def attribution_full_outer(
     predicate as join filter; user_id equality carries the shuffle, so
     there is never a cross product."""
     views = events.filter(F.col("event_type") == "view").select(
-        F.col(user_col).alias("_v_user"), F.col(ts_col).alias("view_ts")
+        F.col("user_id").alias("_v_user"), F.col("ts").alias("view_ts")
     )
     clicks = events.filter(F.col("event_type") == "click").select(
-        F.col(user_col).alias("_c_user"), F.col(ts_col).alias("click_ts")
+        F.col("user_id").alias("_c_user"), F.col("ts").alias("click_ts")
     )
     if watermark:
         views = views.withWatermark("view_ts", watermark)
@@ -252,7 +239,7 @@ def attribution_full_outer(
         & (F.col("click_ts") <= F.col("view_ts") + F.expr(f"interval {within}"))
     )
     return views.join(clicks, cond, "full_outer").select(
-        F.coalesce(F.col("_v_user"), F.col("_c_user")).alias(user_col),
+        F.coalesce(F.col("_v_user"), F.col("_c_user")).alias("user_id"),
         "view_ts",
         "click_ts",
     )
@@ -261,9 +248,6 @@ def attribution_full_outer(
 def source_mixture_rollup(
     docs: DataFrame,
     batch_size: int = 200,
-    id_col: str = "doc_id",
-    source_col: str = "source",
-    text_col: str = "text",
 ) -> DataFrame:
     """Per-ingest-batch source mixture: (batch_id, source) → doc count +
     whitespace-token count. The shared kernel behind the batch
@@ -281,11 +265,11 @@ def source_mixture_rollup(
     """
     return (
         docs.select(
-            F.floor(F.col(id_col) / batch_size)
+            F.floor(F.col("doc_id") / batch_size)
             .cast("bigint")
             .alias("batch_id"),
-            F.col(source_col).alias("source"),
-            F.size(F.split(F.col(text_col), " ")).alias("_ntok"),
+            F.col("source").alias("source"),
+            F.size(F.split(F.col("text"), " ")).alias("_ntok"),
         )
         .groupBy("batch_id", "source")
         .agg(

@@ -159,9 +159,7 @@ def test_hot_bucket_report_lists_dropped_buckets(spark):
         hot_bucket_report,
     )
 
-    _, banded = _minhash_base_and_bands(
-        _hot_corpus(spark), "doc_id", "text", 3, 32, 8, 42, False
-    )
+    _, banded = _minhash_base_and_bands(_hot_corpus(spark), False)
     hot = hot_bucket_report(banded, ["_band", "_bh"], cap=50).collect()
     # all 8 bands of the identical-100 group are hot, population 100
     assert len(hot) == 8 and all(r.bucket_n == 100 for r in hot)

@@ -140,3 +140,70 @@ def test_driver_fetches_go_through_collect_bounded():
         if "collect_dict" in path.read_text():
             found.append(f"{path.relative_to(_PKG)}: collect_dict")
     assert not found, "\n".join(found)
+
+
+def _call_name(call: ast.Call) -> str | None:
+    f = call.func
+    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+
+
+def _sets(call: ast.Call, name: str, position: int | None) -> bool:
+    """Whether ``call`` may pass parameter ``name`` (at ``position`` when
+    positional): by keyword, by position, or through a ``*``/``**``
+    splat, which the scan cannot see into."""
+    if any(k.arg in (name, None) for k in call.keywords):
+        return True
+    if position is None:
+        return False
+    return len(call.args) > position or any(
+        isinstance(a, ast.Starred) for a in call.args
+    )
+
+
+def test_every_defaulted_parameter_has_a_caller():
+    """Operators keep only the parameters a caller sets: every defaulted
+    parameter of a public function in ``operators/``, ``functions/``,
+    ``sources/`` and ``streaming/`` is passed, by keyword or position,
+    by some call in the package, the root scripts, ``perfbench/`` or
+    ``tests/``. Calls match by bare function name, so a same-named call
+    elsewhere counts as a caller. A value no caller changes is a
+    constant, not an option."""
+    root = _PKG.parent
+    sources = [
+        *_PKG.rglob("*.py"),
+        *root.glob("*.py"),
+        *(root / "perfbench").glob("*.py"),
+        *(root / "tests").rglob("*.py"),
+    ]
+    calls: dict[str, list[ast.Call]] = {}
+    for path in sources:
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Call) and _call_name(node):
+                calls.setdefault(_call_name(node), []).append(node)
+    found = []
+    for layer in ("operators", "functions", "sources", "streaming"):
+        for path in sorted((_PKG / layer).glob("*.py")):
+            for fn in ast.parse(path.read_text()).body:
+                if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
+                    continue
+                a = fn.args
+                positional = a.posonlyargs + a.args
+                first = len(positional) - len(a.defaults)
+                params = [
+                    (p, i) for i, p in enumerate(positional) if i >= first
+                ] + [
+                    (p, None)
+                    for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                    if d is not None
+                ]
+                for p, i in params:
+                    if not any(
+                        _sets(c, p.arg, i) for c in calls.get(fn.name, [])
+                    ):
+                        found.append(
+                            f"{path.relative_to(_PKG)}:{p.lineno} "
+                            f"{fn.name}({p.arg})"
+                        )
+    assert not found, f"{len(found)} unset defaulted parameters:\n" + "\n".join(
+        found
+    )
