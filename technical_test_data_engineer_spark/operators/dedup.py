@@ -507,7 +507,9 @@ def embedding_near_dup_pairs(
     vectors) is ≥ threshold.
 
     With ``planes_tables``: SRP-LSH bucket self-join (scale path),
-    scored with the 5× cheaper double fold. Without: full pair scoring
+    scored with the 5× cheaper double fold; buckets over
+    ``DEFAULT_HOT_BUCKET_CAP`` rows never pair (see
+    :func:`cap_hot_buckets`). Without: full pair scoring
     with the decimal-exact dot — only for small/filtered inputs.
     ``score_metric="int"`` scores either path with the integer-scaled
     BIGINT dot (int_scaled_dot — the r10 convention; the threshold
@@ -537,6 +539,10 @@ def embedding_near_dup_pairs(
             )
             .repartition("_t", "_s")
         )
+        # the cap's window reads the same (_t, _s) partitioning, so it
+        # adds no exchange: a bucket of m near-identical vectors would
+        # otherwise emit m² pairs on one task
+        bucketed = cap_hot_buckets(bucketed, ["_t", "_s"], DEFAULT_HOT_BUCKET_CAP)
         # Pair-dedup placement depends on the scorer: re-scoring a pair
         # once per agreeing table (≤ n_tables×) costs a few extra
         # fast_dot folds — cheaper than the extra shuffle stage a

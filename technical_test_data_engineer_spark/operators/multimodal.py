@@ -30,7 +30,11 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from technical_test_data_engineer_spark.operators.dedup import _bucket_self_join
+from technical_test_data_engineer_spark.operators.dedup import (
+    DEFAULT_HOT_BUCKET_CAP,
+    _bucket_self_join,
+    cap_hot_buckets,
+)
 
 MEDIA_META_SCHEMA = T.StructType(
     [
@@ -254,8 +258,9 @@ def media_near_dups(
     certainty at ``max_hamming`` must set ``n_bands > max_hamming``
     (the shipped query uses ``n_bands=8`` for exactly that). Same
     band-then-verify shape as the text SimHash path — pixels never
-    join, only 8-byte signatures. Returns (``id_a``, ``id_b``,
-    ``hamming``)."""
+    join, only 8-byte signatures, and band buckets over
+    ``DEFAULT_HOT_BUCKET_CAP`` rows never pair. Returns (``id_a``,
+    ``id_b``, ``hamming``)."""
     # pigeonhole: Hamming ≤ n_bands−1 GUARANTEES a shared band; the
     # default (6 > 3) trades guaranteed recall for the conventional
     # threshold — same knob/trade as the text SimHash operator
@@ -280,8 +285,12 @@ def media_near_dups(
         ).alias("bb"),
     ).select("doc_id", "ahash", "bb.band", "bb.bh")
     # both join sides read this one shuffle (AQE reuses it), so the
-    # signature kernel runs once, not once per side
-    bands = bands.repartition("band", "bh")
+    # signature kernel runs once, not once per side; the hot-bucket cap
+    # reads the same partitioning (blank or templated images put every
+    # band of the corpus into one bucket, m² pairs on one task)
+    bands = cap_hot_buckets(
+        bands.repartition("band", "bh"), ["band", "bh"], DEFAULT_HOT_BUCKET_CAP
+    )
     cands = (
         _bucket_self_join(bands, "doc_id", ["band", "bh"], ["ahash"])
         .select("id_a", "id_b", "ahash_a", "ahash_b")

@@ -390,3 +390,25 @@ def test_null_bucket_key_never_pairs(spark):
     pairs = spark.createDataFrame([(14, 15), (14, 99)], "id_a long, id_b long")
     got = _attach_both(pairs, nulls, "id", ["p"]).select("id_a", "id_b", "p_a", "p_b")
     assert [tuple(r) for r in got.collect()] == [(14, 15, "p14", "p15")]
+
+
+def test_srp_lsh_hot_bucket_cap(spark, monkeypatch):
+    # 100 identical unit vectors share their SRP bucket in every table —
+    # 100² join rows on one task without a guard. Past the cap (50 here)
+    # the bucket never pairs, while the planted pair, exactly opposite
+    # the hot vector and so never in its bucket, still verifies.
+    from technical_test_data_engineer_spark.operators import dedup
+    from technical_test_data_engineer_spark.operators.similarity import (
+        seeded_planes,
+    )
+
+    monkeypatch.setattr(dedup, "DEFAULT_HOT_BUCKET_CAP", 50)
+    rows = [(i, [1.0, 0.0, 0.0, 0.0]) for i in range(100)]
+    rows += [(1000, [-1.0, 0.0, 0.0, 0.0]), (1001, [-1.0, 0.0, 0.0, 0.0])]
+    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+    pairs = dedup.embedding_near_dup_pairs(
+        df, threshold=0.9, planes_tables=seeded_planes(4, 3, 4)
+    )
+    got = {(r.id_a, r.id_b) for r in pairs.collect()}
+    assert not any(a < 100 and b < 100 for a, b in got), len(got)
+    assert (1000, 1001) in got

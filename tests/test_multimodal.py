@@ -186,3 +186,25 @@ def test_chunk_media_boundaries_and_checksums(spark):
     payload = text.encode()
     assert rows[0]["chunk_md5"] == hashlib.md5(payload[:256]).hexdigest()
     assert rows[1]["chunk_md5"] == hashlib.md5(payload[256:]).hexdigest()
+
+
+def test_media_near_dups_hot_bucket_cap(spark, monkeypatch):
+    # 100 identical blobs share all 8 aHash band buckets — 100² join
+    # rows on one task without a guard. Past the cap (50 here) those
+    # buckets never pair; the planted pair, whose other bands stay cold,
+    # still verifies.
+    from technical_test_data_engineer_spark.operators import multimodal
+
+    monkeypatch.setattr(multimodal, "DEFAULT_HOT_BUCKET_CAP", 50, raising=False)
+    base = "lorem ipsum dolor sit amet " * 20
+    other = "zzz completely different payload qqq " * 14
+    rows = [(i, base) for i in range(100)] + [(1000, other), (1001, other)]
+    df = spark.createDataFrame(rows, "doc_id long, text string").select(
+        "doc_id", fake_media_binary("text").alias("media")
+    )
+    got = {
+        (r["id_a"], r["id_b"])
+        for r in multimodal.media_near_dups(df, max_hamming=7, n_bands=8).collect()
+    }
+    assert not any(a < 100 and b < 100 for a, b in got), len(got)
+    assert (1000, 1001) in got
