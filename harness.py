@@ -51,6 +51,10 @@ def warm(spark, cpus: int) -> None:
     from pyspark.sql.functions import pandas_udf
 
     from technical_test_data_engineer_spark.operators.dedup import (
+        BANDS,
+        NUM_HASHES,
+        SEED,
+        SHINGLE_N,
         lsh_band_keys,
         minhash_signature,
         simhash_packed,
@@ -91,8 +95,9 @@ def warm(spark, cpus: int) -> None:
         "doc_id long, text string",
     )
     for portable in (False, True):
-        sig = minhash_signature(word_shingles("text", 3), 32, 42, portable)
-        bands = lsh_band_keys(sig, 8, 4, portable)
+        shingles = word_shingles("text", SHINGLE_N)
+        sig = minhash_signature(shingles, NUM_HASHES, SEED, portable)
+        bands = lsh_band_keys(sig, BANDS, NUM_HASHES // BANDS, portable)
         _noop(docs.select(F.explode(bands).alias("_b")))
     _noop(docs.select(simhash_packed("text").alias("_s")))
     # the numpy-backed pandas-UDF families (IVF assignment, IVF-PQ
