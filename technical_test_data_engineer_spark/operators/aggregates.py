@@ -32,8 +32,9 @@ def count_distinct(df: DataFrame, keys: list[str], col: str, alias: str) -> Data
 
 
 def approx_count_distinct(
-    df: DataFrame, keys: list[str], col: str, alias: str, rsd: float = 0.01
+    df: DataFrame, keys: list[str], col: str, alias: str
 ) -> DataFrame:
-    """HyperLogLog++ distinct count — one shuffle, fixed memory; the
-    100 TB-scale answer to COUNT(DISTINCT)."""
-    return df.groupBy(*keys).agg(F.approx_count_distinct(col, rsd).alias(alias))
+    """HyperLogLog++ distinct count (1% relative standard deviation) —
+    one shuffle, fixed memory; the 100 TB-scale answer to
+    COUNT(DISTINCT)."""
+    return df.groupBy(*keys).agg(F.approx_count_distinct(col, 0.01).alias(alias))

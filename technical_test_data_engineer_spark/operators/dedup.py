@@ -548,8 +548,9 @@ def embedding_near_dup_pairs(
         # fast_dot folds — cheaper than the extra shuffle stage a
         # dropDuplicates on the full candidate set adds, so the fast
         # path dedups only the survivors below. The integer-scaled fold
-        # rounds every element product to BIGINT, so on that path
-        # duplicates are dropped BEFORE any scoring happens.
+        # (an interpreted zip_with rounding every element product to
+        # BIGINT) costs far more per pair, so on that path the shuffle
+        # is the cheap side and duplicates are dropped BEFORE scoring.
         cands = _bucket_self_join(bucketed, "vec_id", ["_t", "_s"]).select(
             "id_a", "id_b"
         )

@@ -6325,11 +6325,7 @@ def user_funnel_staged_24h(spark: SparkSession, sf_dir: str) -> DataFrame:
     purchase and strict `>` skips them on both engines). Per-user
     event lists are activity-bounded (the sessionization assumption).
     Funnel rollup is a 1-row agg exploded to 4 atomic rows."""
-    from technical_test_data_engineer_spark.streaming.transforms import (
-        with_event_time,
-    )
-
-    events = with_event_time(load_table(spark, sf_dir, "events"))
+    events = load_table(spark, sf_dir, "events")
     tcode = (
         F.when(F.col("event_type") == "signup", 1)
         .when(F.col("event_type") == "view", 2)

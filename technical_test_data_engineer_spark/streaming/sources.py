@@ -14,8 +14,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from technical_test_data_engineer_spark.streaming.transforms import with_event_time
-
 # Engine-written event files carry a real timestamp column.
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
@@ -35,7 +33,7 @@ def read_events_stream(
     max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """Open ``path`` (a directory of parquet files, or a glob) as an
-    unbounded stream of events with a normalized timestamp column.
+    unbounded stream of events read with ``EVENTS_STREAM_SCHEMA``.
 
     ``max_files_per_trigger`` caps each micro-batch — the backpressure
     knob when catching up on a large backlog.
@@ -43,4 +41,4 @@ def read_events_stream(
     reader = spark.readStream.schema(EVENTS_STREAM_SCHEMA)
     if max_files_per_trigger is not None:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return with_event_time(reader.parquet(path))
+    return reader.parquet(path)

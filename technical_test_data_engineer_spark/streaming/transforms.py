@@ -23,15 +23,6 @@ from pyspark.sql import functions as F
 from technical_test_data_engineer_spark.functions.scalars import exact_sum
 
 
-def with_event_time(df: DataFrame) -> DataFrame:
-    """Normalize the ``ts`` event-time column (truncate to µs precision
-    if the source delivered raw nanos as long — see
-    sources/parquet_source)."""
-    if dict(df.dtypes).get("ts") == "bigint":
-        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-    return df
-
-
 def tumbling_rollup(
     df: DataFrame,
     window: str = "1 hour",

@@ -142,9 +142,34 @@ def test_driver_fetches_go_through_collect_bounded():
     assert not found, "\n".join(found)
 
 
-def _call_name(call: ast.Call) -> str | None:
+def _foreign_names(tree: ast.Module) -> set[str]:
+    """Names a file binds by importing from outside the package (``pq``
+    in ``import pyarrow.parquet as pq``)."""
+    out: set[str] = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Import):
+            out |= {
+                a.asname or a.name.split(".")[0]
+                for a in node.names
+                if not a.name.startswith(_PKG.name)
+            }
+        elif isinstance(node, ast.ImportFrom) and node.level == 0:
+            if not node.module.startswith(_PKG.name):
+                out |= {a.asname or a.name for a in node.names}
+    return out
+
+
+def _call_name(call: ast.Call, foreign: set[str]) -> str | None:
+    """The called function's bare name, or None for a call through a
+    name from ``foreign``, which is never a package function."""
     f = call.func
-    return f.id if isinstance(f, ast.Name) else getattr(f, "attr", None)
+    if isinstance(f, ast.Name):
+        return None if f.id in foreign else f.id
+    if isinstance(f, ast.Attribute):
+        if isinstance(f.value, ast.Name) and f.value.id in foreign:
+            return None
+        return f.attr
+    return None
 
 
 def _sets(call: ast.Call, name: str, position: int | None) -> bool:
@@ -165,9 +190,10 @@ def test_every_defaulted_parameter_has_a_caller():
     parameter of a public function in ``operators/``, ``functions/``,
     ``sources/`` and ``streaming/`` is passed, by keyword or position,
     by some call in the package, the root scripts, ``perfbench/`` or
-    ``tests/``. Calls match by bare function name, so a same-named call
-    elsewhere counts as a caller. A value no caller changes is a
-    constant, not an option."""
+    ``tests/``. Calls match by bare function name, except calls through
+    a name imported from outside the package (``pq.write_table``), so a
+    same-named method call still counts as a caller. A value no caller
+    changes is a constant, not an option."""
     root = _PKG.parent
     sources = [
         *_PKG.rglob("*.py"),
@@ -177,9 +203,11 @@ def test_every_defaulted_parameter_has_a_caller():
     ]
     calls: dict[str, list[ast.Call]] = {}
     for path in sources:
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Call) and _call_name(node):
-                calls.setdefault(_call_name(node), []).append(node)
+        tree = ast.parse(path.read_text())
+        foreign = _foreign_names(tree)
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Call) and _call_name(node, foreign):
+                calls.setdefault(_call_name(node, foreign), []).append(node)
     found = []
     for layer in ("operators", "functions", "sources", "streaming"):
         for path in sorted((_PKG / layer).glob("*.py")):
