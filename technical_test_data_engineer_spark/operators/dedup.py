@@ -501,7 +501,7 @@ def embedding_near_dup_pairs(
     df: DataFrame,
     threshold: float,
     planes_tables: list[list[list[float]]] | None = None,
-    score_metric: str | None = None,
+    int_scores: bool = False,
 ) -> DataFrame:
     """``vec_id`` pairs whose ``embedding`` cosine (dot for unit
     vectors) is ≥ threshold.
@@ -511,7 +511,7 @@ def embedding_near_dup_pairs(
     ``DEFAULT_HOT_BUCKET_CAP`` rows never pair (see
     :func:`cap_hot_buckets`). Without: full pair scoring
     with the decimal-exact dot — only for small/filtered inputs.
-    ``score_metric="int"`` scores either path with the integer-scaled
+    ``int_scores=True`` scores either path with the integer-scaled
     BIGINT dot (int_scaled_dot — the r10 convention; the threshold
     compares as round(t·1e10) in the same scaled domain, so the filter
     is the exact integer image of ``score ≥ t``).
@@ -554,7 +554,7 @@ def embedding_near_dup_pairs(
         cands = _bucket_self_join(bucketed, "vec_id", ["_t", "_s"]).select(
             "id_a", "id_b"
         )
-        if score_metric == "int":
+        if int_scores:
             cands = cands.dropDuplicates(["id_a", "id_b"])
         cands = _attach_both(
             cands, df.select("vec_id", "embedding"), "vec_id", ["embedding"]
@@ -565,9 +565,9 @@ def embedding_near_dup_pairs(
         l = fan_out(_id_side(df, "vec_id", "a", ["embedding"]))
         r = _id_side(df, "vec_id", "b", ["embedding"])
         cands = l.crossJoin(F.broadcast(r)).filter(F.col("id_a") < F.col("id_b"))
-    # the "int" path compares in the scaled integer domain — same
+    # the integer path compares in the scaled integer domain — same
     # predicate image, no float anywhere
-    if score_metric == "int":
+    if int_scores:
         dot = int_scaled_dot
         thresh = F.lit(int(round(threshold * 1e10))).cast("bigint")
     else:

@@ -319,7 +319,7 @@ def embedding_near_dups_lsh_exact(spark: SparkSession, sf_dir: str) -> DataFrame
             emb,
             threshold=_NEARDUP_THRESHOLD,
             planes_tables=_neardup_planes(),
-            score_metric="int",
+            int_scores=True,
         )
         .withColumnRenamed("score", "score_e10")
         .orderBy("id_a", "id_b")

@@ -111,11 +111,18 @@ EMPTY_NATION = "ZZ_NO_CUSTOMERS"
 NULL_ORDER_KEY = 90 * 10**6
 
 
-def _write_fixture(root, sf_dir, orders_files=3):
+def _write_fixture(root, sf_dir, orders_files=3, keep=None, edges=False):
     """sf_dir's orders/customer/nation with one NULL-priority order
     appended, a nation no customer belongs to, and orders split into
     ``orders_files`` files (so the cached fact has that many
-    partitions)."""
+    partitions). ``keep``, a predicate on the orders' pandas frame,
+    narrows the orders written. ``edges`` adds NULL keys and edge days:
+    a NULL ``c_mktsegment`` for every seventh customer; an order with a
+    NULL ``o_orderdate`` (NULL ``debut`` and ``fin``); one with a NULL
+    ``o_orderkey`` (NULL ``fin`` only) starting after every other
+    order ends; and one with ``o_orderkey`` -1 starting before every
+    other order, whose ``fin`` is the day before its ``debut``, so its
+    start and its end cancel on one day."""
     orders = pq.read_table(os.path.join(sf_dir, "orders.parquet"))
     o = orders.to_pandas()
     debut = o["o_orderdate"].dt.normalize()
@@ -129,9 +136,18 @@ def _write_fixture(root, sf_dir, orders_files=3):
         o_orderdate=dt.datetime.combine(DAY, dt.time()),
         o_orderpriority=None,
     )
+    extra_rows = [null_row]
+    if edges:
+        extra_rows += [
+            {**null_row, "o_orderkey": NULL_ORDER_KEY + 1, "o_orderdate": None},
+            {**null_row, "o_orderkey": None, "o_orderdate": dt.datetime(2030, 1, 1)},
+            {**null_row, "o_orderkey": -1, "o_orderdate": dt.datetime(1990, 1, 1)},
+        ]
     orders = pa.concat_tables(
-        [orders, pa.Table.from_pylist([null_row], schema=orders.schema)]
+        [orders, pa.Table.from_pylist(extra_rows, schema=orders.schema)]
     )
+    if keep is not None:
+        orders = orders.filter(pa.array(keep(orders.to_pandas()).to_numpy()))
     os.makedirs(os.path.join(root, "orders.parquet"))
     step = -(-orders.num_rows // orders_files)
     for i in range(orders_files):
@@ -139,10 +155,12 @@ def _write_fixture(root, sf_dir, orders_files=3):
             orders.slice(i * step, step),
             os.path.join(root, "orders.parquet", f"part-{i}.parquet"),
         )
-    pq.write_table(
-        pq.read_table(os.path.join(sf_dir, "customer.parquet")),
-        os.path.join(root, "customer.parquet"),
-    )
+    customer = pq.read_table(os.path.join(sf_dir, "customer.parquet"))
+    if edges:
+        c = customer.to_pandas()
+        c.loc[c["c_custkey"] % 7 == 0, "c_mktsegment"] = None
+        customer = pa.Table.from_pandas(c, schema=customer.schema, preserve_index=False)
+    pq.write_table(customer, os.path.join(root, "customer.parquet"))
     nation = pq.read_table(os.path.join(sf_dir, "nation.parquet"))
     extra = {"n_nationkey": 999, "n_name": EMPTY_NATION, "n_regionkey": 0}
     nation = pa.concat_tables(
@@ -225,6 +243,110 @@ def test_plot1_plot2_equal_the_window_formulation(spark, fixture_dir):
     assert EMPTY_NATION in {r["nation"] for r in empty}
 
 
+def _spark_date_bounds(svc):
+    """date_bounds as one global aggregate over the cached fact."""
+    span = svc.prepare().agg(F.min("debut"), F.max("fin"))
+    return tuple(span.collect()[0])
+
+
+def _spark_plot4(svc):
+    """plot 4 as one Spark plan: delta explode, (day, segment) sums,
+    running sum and next delta day per segment, interval explode, and a
+    one-task sort."""
+    from pyspark.sql.window import Window
+
+    deltas = (
+        svc.prepare()
+        .select(
+            "c_mktsegment",
+            F.explode(
+                F.array(
+                    F.struct(
+                        F.col("debut").alias("day"),
+                        F.lit(1).cast("bigint").alias("dn"),
+                    ),
+                    F.struct(
+                        F.date_add("fin", 1).alias("day"),
+                        F.lit(-1).cast("bigint").alias("dn"),
+                    ),
+                )
+            ).alias("_d"),
+        )
+        .select("c_mktsegment", "_d.day", "_d.dn")
+        .groupBy("day", "c_mktsegment")
+        .agg(F.sum("dn").alias("dn"))
+    )
+    wcum = (
+        Window.partitionBy("c_mktsegment")
+        .orderBy("day")
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    wlead = Window.partitionBy("c_mktsegment").orderBy("day")
+    seg = deltas.select(
+        "day",
+        "c_mktsegment",
+        F.sum("dn").over(wcum).alias("n_active"),
+        F.lead("day").over(wlead).alias("_next"),
+    )
+    return (
+        seg.filter(F.col("n_active") > 0)
+        .select(
+            F.explode(
+                F.sequence(
+                    "day",
+                    F.date_sub(F.coalesce("_next", F.date_add("day", 1)), 1),
+                    F.expr("interval 1 day"),
+                )
+            ).alias("day"),
+            "c_mktsegment",
+            "n_active",
+        )
+        .repartition(1)
+        .sortWithinPartitions("day", "c_mktsegment")
+    )
+
+
+def _assert_plot4_and_date_bounds_equal_spark(svc):
+    assert svc.date_bounds() == _spark_date_bounds(svc)
+    got, want = svc.plot4_daily_series(), _spark_plot4(svc)
+    assert got.schema == want.schema
+    assert got.collect() == want.collect()
+
+
+def test_plot4_and_date_bounds_equal_the_spark_formulation(
+    spark, fixture_dir, sf_dir, tmp_path
+):
+    cases = {
+        "fixture": fixture_dir,
+        "empty fact": _write_fixture(
+            tmp_path / "empty", sf_dir, keep=lambda o: o["o_orderkey"] < 0
+        ),
+        # every interval is one day long: each start meets its own end
+        # on the next day, in both the deltas and the bounds
+        "one-day intervals": _write_fixture(
+            tmp_path / "one_day", sf_dir, keep=lambda o: o["o_orderkey"] % 90 == 0
+        ),
+        # the first and the last delta day each hold only a start or a
+        # start cancelled by an end: the bounds cannot come from the
+        # extreme days or the signs of their sums
+        "NULL keys, edge days": _write_fixture(tmp_path / "edges", sf_dir, edges=True),
+    }
+    for name, root in cases.items():
+        svc = _svc(spark, root)
+        assert svc.prepare().count() > 0 or name == "empty fact", name
+        _assert_plot4_and_date_bounds_equal_spark(svc)
+    empty = _svc(spark, cases["empty fact"])
+    assert empty.date_bounds() == (None, None)
+    assert empty.plot4_daily_series().collect() == []
+    one_day = _svc(spark, cases["one-day intervals"])
+    assert one_day.prepare().filter(F.col("debut") != F.col("fin")).count() == 0
+    edges = _svc(spark, cases["NULL keys, edge days"])
+    assert None in {r["c_mktsegment"] for r in edges.plot4_daily_series().collect()}
+    assert edges.prepare().filter(F.col("fin").isNull()).count() == 2
+    lo, hi = edges.date_bounds()
+    assert lo == dt.date(1990, 1, 1) and hi < dt.date(2030, 1, 1)
+
+
 def test_null_priority_tops_its_customer(spark, fixture_dir):
     svc = _svc(spark, fixture_dir)
     hist = {
@@ -248,6 +370,9 @@ def test_refresh_drops_day_memo_and_nation_list(spark, sf_dir, tmp_path):
     root = _write_fixture(tmp_path, sf_dir, orders_files=1)
     svc = _svc(spark, root)
     assert svc.plot1_priority_histogram(DAY).collect()
+    lo, _ = svc.date_bounds()
+    assert lo < dt.date(1998, 1, 1)
+    assert svc.plot4_daily_series().filter(F.col("day") == F.lit(DAY)).collect()
     names = [r["nation"] for r in svc.plot2_nation_breakdown(DAY).collect()]
     # the scrape: no order active on DAY any more, one more nation
     opath = os.path.join(root, "orders.parquet", "part-0.parquet")
@@ -273,6 +398,10 @@ def test_refresh_drops_day_memo_and_nation_list(spark, sf_dir, tmp_path):
     after = svc.plot2_nation_breakdown(DAY).collect()
     assert [r["nation"] for r in after] == sorted(names + ["ZZ_NEW"])
     assert all(r["nb_customers"] == 0 for r in after)
+    lo, _ = svc.date_bounds()
+    assert lo > dt.date(1998, 1, 1)
+    _assert_plot4_and_date_bounds_equal_spark(svc)
+    assert not svc.plot4_daily_series().filter(F.col("day") == F.lit(DAY)).collect()
 
 
 def test_plot3_unknown_customer_is_empty_with_same_schema(spark, sf_dir):
@@ -306,10 +435,7 @@ def test_plot3_plot4_sort_in_one_task_after_a_parallel_scan(spark, fixture_dir):
     sc = spark.sparkContext
     tracker = sc.statusTracker()
     some_cust = svc.prepare().select("o_custkey").first()[0]
-    for name, df in (
-        ("plot3", svc.plot3_entity_gantt(some_cust)),
-        ("plot4", svc.plot4_daily_series()),
-    ):
+    for name, df in (("plot3", svc.plot3_entity_gantt(some_cust)),):
         assert "rangepartitioning" not in _formatted_plan(df).lower(), name
         group = f"test-{name}"
         sc.setJobGroup(group, group)
@@ -326,3 +452,42 @@ def test_plot3_plot4_sort_in_one_task_after_a_parallel_scan(spark, fixture_dir):
         ]
         assert max(tasks) == n_parts, (name, tasks)
         assert df.rdd.getNumPartitions() == 1, name
+
+
+def _group_stages(sc, group, action) -> list[int]:
+    """Stages per job that ``action()`` launches under the job ``group``."""
+    tracker = sc.statusTracker()
+    sc.setJobGroup(group, group)
+    try:
+        action()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    jobs = tracker.getJobIdsForGroup(group)
+    return [len(tracker.getJobInfo(j).stageIds) for j in jobs]
+
+
+def test_plot4_runs_no_job_over_the_fact_once_the_deltas_are_kept(spark, fixture_dir):
+    """The delta fetch shuffles the scan of the cached fact into its
+    aggregate (two stages at least); once it is kept, plot 4 is a local
+    frame, whose fetch is one stage reading no fact."""
+    svc = _svc(spark, fixture_dir)
+    svc.prepare().count()
+    sc = spark.sparkContext
+    fill = _group_stages(sc, "test-delta-fill", svc.date_bounds)
+    assert max(fill) >= 2, fill
+    df = svc.plot4_daily_series()
+    assert "inmemorytablescan" not in _formatted_plan(df).lower()
+    rows = []
+    stages = _group_stages(sc, "test-plot4", lambda: rows.extend(df.collect()))
+    assert rows
+    assert all(n == 1 for n in stages), stages
+    assert svc.date_bounds() == _spark_date_bounds(svc)
+
+
+def test_delta_fetch_past_its_bound_raises(spark, sf_dir, monkeypatch):
+    from technical_test_data_engineer_spark import service
+
+    monkeypatch.setattr(service, "_MAX_DELTA_GROUPS", 10)
+    svc = _svc(spark, sf_dir)
+    with pytest.raises(ValueError, match=r"deltas per \(day, segment\): more than 10"):
+        svc.plot4_daily_series()
