@@ -43,6 +43,8 @@ from __future__ import annotations
 
 import datetime as dt
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -98,8 +100,8 @@ class QueryService:
         # (as-of day, [{n_name, top, n}]) of the last day plot 1/2 asked
         self._day_groups: tuple[dt.date, list[dict]] | None = None
         self._nations: list[str] | None = None
-        # [{day, c_mktsegment, dn, starts, ends}] of the cached fact
-        self._deltas: list[dict] | None = None
+        # (day, c_mktsegment, dn, starts, ends) of the cached fact
+        self._deltas: pa.Table | None = None
 
     # -- E2: session bootstrap -------------------------------------------
 
@@ -145,7 +147,7 @@ class QueryService:
 
     # -- widget helpers (S6/S7) ------------------------------------------
 
-    def _delta_groups(self) -> list[dict]:
+    def _delta_groups(self) -> pa.Table:
         """The fact's interval deltas summed per (``day``,
         ``c_mktsegment``): ``dn`` adds 1 at ``debut`` and -1 at
         ``fin + 1``. ``starts``/``ends`` flag a group holding a start or
@@ -169,19 +171,19 @@ class QueryService:
                     (F.min("_d.dn") < 0).alias("ends"),
                 )
             )
-            table = collect_bounded(
+            self._deltas = collect_bounded(
                 groups, _MAX_DELTA_GROUPS, "deltas per (day, segment)"
             )
-            self._deltas = table.to_pylist()
         return self._deltas
 
     def date_bounds(self) -> tuple[dt.date | None, dt.date | None]:
         """(min ``debut``, max ``fin``) of the fact, read off the deltas:
         the first day holding a start, and the day before the last one
-        holding an end; (None, None) for an empty fact."""
-        groups = [g for g in self._delta_groups() if g["day"] is not None]
-        lo = min((g["day"] for g in groups if g["starts"]), default=None)
-        end = max((g["day"] for g in groups if g["ends"]), default=None)
+        holding an end (a NULL day is neither); (None, None) for an empty
+        fact. Read in Arrow: a first answer builds no row objects."""
+        groups = self._delta_groups()
+        lo = pc.min(groups.filter(groups["starts"])["day"]).as_py()
+        end = pc.max(groups.filter(groups["ends"])["day"]).as_py()
         return lo, None if end is None else end - _ONE_DAY
 
     def priority_legend(self) -> dict:
@@ -294,10 +296,12 @@ class QueryService:
         ascending sort, NULLs come first: a NULL day adds to its
         segment's running sum but emits no row, and a NULL segment is a
         series of its own."""
+        groups = self._delta_groups()
         series: dict = {}
-        for g in self._delta_groups():
-            deltas = series.setdefault(g["c_mktsegment"], [])
-            deltas.append((_asc(g["day"]), g["dn"]))
+        for seg, day, dn in zip(
+            *(groups.column(c).to_pylist() for c in ("c_mktsegment", "day", "dn"))
+        ):
+            series.setdefault(seg, []).append((_asc(day), dn))
         segments = sorted(series, key=_asc)
         rows = []
         for rank, seg in enumerate(segments):
