@@ -179,8 +179,9 @@ class QueryService:
     def date_bounds(self) -> tuple[dt.date | None, dt.date | None]:
         """(min ``debut``, max ``fin``) of the fact, read off the deltas:
         the first day holding a start, and the day before the last one
-        holding an end (a NULL day is neither); (None, None) for an empty
-        fact. Read in Arrow: a first answer builds no row objects."""
+        holding an end, NULL days skipped as ``min``/``max`` skip them;
+        (None, None) for an empty fact. Read in Arrow: the first answer
+        builds no row objects."""
         groups = self._delta_groups()
         lo = pc.min(groups.filter(groups["starts"])["day"]).as_py()
         end = pc.max(groups.filter(groups["ends"])["day"]).as_py()
