@@ -65,9 +65,9 @@ _MAX_PRIORITIES = 100
 _MAX_DAY_GROUPS = _MAX_NATIONS * _MAX_PRIORITIES
 # construction bound of the (day, segment) deltas: one group per
 # calendar day that starts or ends an interval, per market segment.
-# TPC-H order dates span 2,406 days and an interval adds at most 90
-# (``fin + 1``), about 2,500 delta days over 5 segments (12,415 groups
-# at sf0.01); the bound allows 27 years of days and 100 segments.
+# The order dates span about 2,400 days and an interval adds at most
+# 90 (``fin + 1``): about 2,500 delta days over 5 segments (11,217
+# groups at sf0.01). The bound allows 27 years of days, 100 segments.
 _MAX_DAYS = 10_000
 _MAX_SEGMENTS = 100
 _MAX_DELTA_GROUPS = _MAX_DAYS * _MAX_SEGMENTS

@@ -326,9 +326,9 @@ def test_plot4_and_date_bounds_equal_the_spark_formulation(
         "one-day intervals": _write_fixture(
             tmp_path / "one_day", sf_dir, keep=lambda o: o["o_orderkey"] % 90 == 0
         ),
-        # the first and the last delta day each hold only a start or a
-        # start cancelled by an end: the bounds cannot come from the
-        # extreme days or the signs of their sums
+        # the first delta day holds a start cancelled by an end, the
+        # last one only a start: the bounds come neither from the
+        # extreme days nor from the signs of their sums
         "NULL keys, edge days": _write_fixture(tmp_path / "edges", sf_dir, edges=True),
     }
     for name, root in cases.items():
