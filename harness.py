@@ -53,7 +53,6 @@ def warm(spark, cpus: int) -> None:
     from technical_test_data_engineer_spark.operators.dedup import (
         BANDS,
         NUM_HASHES,
-        SEED,
         SHINGLE_N,
         lsh_band_keys,
         minhash_signature,
@@ -95,11 +94,11 @@ def warm(spark, cpus: int) -> None:
         "doc_id long, text string",
     )
     for portable in (False, True):
-        shingles = word_shingles("text", SHINGLE_N)
-        sig = minhash_signature(shingles, NUM_HASHES, SEED, portable)
+        shingles = word_shingles(SHINGLE_N)
+        sig = minhash_signature(shingles, portable)
         bands = lsh_band_keys(sig, BANDS, NUM_HASHES // BANDS, portable)
         _noop(docs.select(F.explode(bands).alias("_b")))
-    _noop(docs.select(simhash_packed("text").alias("_s")))
+    _noop(docs.select(simhash_packed().alias("_s")))
     # the numpy-backed pandas-UDF families (IVF assignment, IVF-PQ
     # encode, which plain PQ runs too) and the grouped-map path: their
     # first use pays a per-worker numpy import plus Arrow grouped-map

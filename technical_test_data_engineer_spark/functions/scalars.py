@@ -1,5 +1,5 @@
-"""Scalar function surface (SURVEY.md §2.8, F1-F6) and the Spark-side
-exact-sum convention.
+"""Scalar function surface (SURVEY.md §2.8, F1-F3) and the Spark-side
+exact-sum convention. F4, the display format, is ``F.date_format``.
 
 Everything here is a thin composition of built-in ``pyspark.sql.functions``
 — JVM-side, whole-stage-codegen'd. No Python UDFs: the reference's two
@@ -40,12 +40,6 @@ def inclusive_duration_days(debut: Column | str, fin: Column | str) -> Column:
     """F3 — inclusive interval length in days: ``fin − debut + 1 day``
     (visualization.py:60). Both endpoints count."""
     return (F.datediff(fin, debut) + F.lit(1)).alias("duration_days")
-
-
-def display_date(col: Column | str) -> Column:
-    """F4 — presentation date format (``strftime('%d/%m/%Y')``,
-    visualization.py:107/:133), column-capable in the engine."""
-    return F.date_format(col, "dd/MM/yyyy")
 
 
 # ---------------------------------------------------------------------------

@@ -1,5 +1,6 @@
-"""Aggregation operators (SURVEY.md §2.4, A4) + the free Spark
-extensions (exact and approximate count-distinct).
+"""Aggregation operators (SURVEY.md §2.4, A4). Exact and approximate
+count-distinct are Spark's own ``F.count_distinct`` and
+``F.approx_count_distinct``, called in the plans directly.
 
 All hash aggregations: Spark plans partial (map-side) + final
 aggregation automatically, so a groupBy over 100 TB shuffles only the
@@ -24,17 +25,3 @@ def distinct_pairs_by_freq(df: DataFrame, cols: list[str]) -> DataFrame:
         .drop("count")
     )
 
-
-def count_distinct(df: DataFrame, keys: list[str], col: str, alias: str) -> DataFrame:
-    """Exact distinct-count per group (expand+dedup+count under the hood
-    — two shuffles; prefer approx at extreme scale)."""
-    return df.groupBy(*keys).agg(F.countDistinct(col).alias(alias))
-
-
-def approx_count_distinct(
-    df: DataFrame, keys: list[str], col: str, alias: str
-) -> DataFrame:
-    """HyperLogLog++ distinct count (1% relative standard deviation) —
-    one shuffle, fixed memory; the 100 TB-scale answer to
-    COUNT(DISTINCT)."""
-    return df.groupBy(*keys).agg(F.approx_count_distinct(col, 0.01).alias(alias))

@@ -64,9 +64,9 @@ def cap_hot_buckets(
 
     One windowed count over the same keys the candidate self-join
     shuffles on (the exchange is shared, so the guard costs no extra
-    corpus-sized shuffle). ``cap=None`` disables. Diagnostic: feed the
-    same banded relation to :func:`hot_bucket_report` to see what was
-    dropped."""
+    corpus-sized shuffle). ``cap=None`` disables. To see what was
+    dropped, group the same banded relation on ``key_cols`` and keep the
+    counts over ``cap``."""
     if cap is None:
         return banded
     w = Window.partitionBy(*key_cols)
@@ -76,19 +76,6 @@ def cap_hot_buckets(
         .drop("_bucket_n")
     )
 
-
-def hot_bucket_report(
-    banded: DataFrame, key_cols: list[str], cap: int
-) -> DataFrame:
-    """Buckets over ``cap`` with their populations — the audit a
-    production run logs next to the dedup output (which corpora slices
-    are degenerate, how many candidates the cap suppressed)."""
-    return (
-        banded.groupBy(*key_cols)
-        .agg(F.count("*").alias("bucket_n"))
-        .filter(F.col("bucket_n") > cap)
-        .orderBy(F.desc("bucket_n"))
-    )
 
 # ---------------------------------------------------------------------------
 # exact
@@ -108,15 +95,15 @@ def exact_dedup(
 # ---------------------------------------------------------------------------
 
 
-def word_shingles(text_col: str | Column = "text", n: int = 3) -> Column:
-    """Distinct word n-gram shingles (array<string>) — the unit set for
+def word_shingles(n: int = 3) -> Column:
+    """Distinct word n-gram shingles of ``text`` (array<string>) — the unit set for
     Jaccard similarity. Grams built via ``slice`` + ``array_join`` (ANSI-
     safe: slice past the array end returns the available suffix, so no
     out-of-bounds indexing regardless of session ANSI mode); docs shorter
     than n words yield their whole text as one shingle. The token array
     is let-bound (``bind``) so split() runs once per row, not once per
     gram — see functions/hof.py for the Catalyst lambda-body pitfall."""
-    raw = F.split(text_col if isinstance(text_col, str) else text_col, " ")
+    raw = F.split("text", " ")
 
     def _with_toks(toks: Column) -> Column:
         idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
@@ -139,14 +126,9 @@ def jaccard(a: Column, b: Column) -> Column:
 # ---------------------------------------------------------------------------
 
 
-def minhash_signature(
-    shingles: Column,
-    num_hashes: int = NUM_HASHES,
-    seed: int = SEED,
-    portable: bool = False,
-) -> Column:
-    """MinHash signature (array<long>, length ``num_hashes``): the i-th
-    element is min over shingles of xxhash64(seed_i, shingle). Each scan
+def minhash_signature(shingles: Column, portable: bool = False) -> Column:
+    """MinHash signature (array<long>, length ``NUM_HASHES``): the i-th
+    element is min over shingles of xxhash64(SEED + i, shingle). Each scan
     task computes signatures for its rows independently — embarrassingly
     parallel, no shuffle.
 
@@ -155,11 +137,11 @@ def minhash_signature(
     reproducible in DuckDB, which makes the WHOLE MinHash pipeline
     oracle-pairable (see plans/dedup_queries.minhash_near_dups_md5)."""
     # Hash each variable-length shingle string ONCE, then derive the
-    # num_hashes functions by rehashing the fixed 8-byte value — ~num_
-    # hashes× less string traversal. The base-hash array is let-bound:
-    # without bind, each of the num_hashes transforms re-evaluates the
+    # NUM_HASHES functions by rehashing the fixed 8-byte value — ~NUM_
+    # HASHES× less string traversal. The base-hash array is let-bound:
+    # without bind, each of the NUM_HASHES transforms re-evaluates the
     # base expression (and the shingle expression under it), so string
-    # hashing would run num_hashes× per row.
+    # hashing would run NUM_HASHES× per row.
     # NB: closures, not default args — PySpark counts lambda parameters
     # to decide how many lambda variables to bind, so `lambda s, i=i`
     # would receive the ARRAY INDEX as `i`, not the hash index.
@@ -170,14 +152,14 @@ def minhash_signature(
 
         def rehash(i: int, h: Column) -> Column:
             return md5_hash64(
-                F.concat_ws(":", F.lit(str(seed + i)), h.cast("string"))
+                F.concat_ws(":", F.lit(str(SEED + i)), h.cast("string"))
             )
 
     else:
         base_hash = F.xxhash64
 
         def rehash(i: int, h: Column) -> Column:
-            return F.xxhash64(F.lit(seed + i), h)
+            return F.xxhash64(F.lit(SEED + i), h)
 
     raw = F.transform(shingles, lambda s: base_hash(s))
 
@@ -185,7 +167,7 @@ def minhash_signature(
         def _minhash(i: int) -> Column:
             return F.array_min(F.transform(base, lambda h: rehash(i, h)))
 
-        return F.array(*[_minhash(i) for i in range(num_hashes)])
+        return F.array(*[_minhash(i) for i in range(NUM_HASHES)])
 
     return bind(raw, _with_base)
 
@@ -246,9 +228,9 @@ def _minhash_base_and_bands(
     after pair dedup."""
     base = (
         fan_out(df.select("doc_id", "text"))
-        .select(F.col("doc_id"), word_shingles("text", SHINGLE_N).alias("_sh"))
+        .select(F.col("doc_id"), word_shingles(SHINGLE_N).alias("_sh"))
         .withColumn(
-            "_sig", minhash_signature(F.col("_sh"), NUM_HASHES, SEED, portable)
+            "_sig", minhash_signature(F.col("_sh"), portable)
         )
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
@@ -388,8 +370,8 @@ def minhash_candidates(
 # ---------------------------------------------------------------------------
 
 
-def simhash_bits(text_col: str | Column = "text", hash_fn=None) -> Column:
-    """SimHash as an array<int> of 64 sign bits: per-token
+def simhash_bits(hash_fn=None) -> Column:
+    """SimHash of ``text`` as an array<int> of 64 sign bits: per-token
     xxhash64, majority vote per bit position. ``hash_fn`` swaps the
     token hash (e.g. text.md5_hash64 — 60 meaningful bits — for the
     oracle-paired twin; bits beyond the hash width vote all-negative
@@ -401,7 +383,7 @@ def simhash_bits(text_col: str | Column = "text", hash_fn=None) -> Column:
     array once per bit, and still 100% JVM expressions.
     """
     h = hash_fn or F.xxhash64
-    toks = F.split(text_col if isinstance(text_col, str) else text_col, " ")
+    toks = F.split("text", " ")
     hashes = F.transform(toks, lambda t: h(t))
     positions = F.sequence(F.lit(0), F.lit(63))
     votes = F.aggregate(
@@ -414,15 +396,15 @@ def simhash_bits(text_col: str | Column = "text", hash_fn=None) -> Column:
     return F.transform(votes, lambda v: F.when(v > 0, 1).otherwise(0))
 
 
-def simhash_packed(text_col: str | Column = "text", hash_fn=None) -> Column:
-    """SimHash packed into struct(h1, h2) — two 32-bit halves in longs.
+def simhash_packed(hash_fn=None) -> Column:
+    """SimHash of ``text`` packed into struct(h1, h2) — two 32-bit halves in longs.
 
     Pairwise work (joins, Hamming) should use this form: two longs ship
     through shuffles for free and Hamming is two ``bit_count`` XORs,
     vs dragging a 64-element array through every candidate pair.
     ``conv(binary-string)`` keeps each half ≤ 2^32, inside bigint range.
     """
-    bits = simhash_bits(text_col, hash_fn=hash_fn)
+    bits = simhash_bits(hash_fn=hash_fn)
     raw = F.concat_ws("", F.transform(bits, lambda b: b.cast("string")))
 
     def _with_s(s: Column) -> Column:
@@ -443,15 +425,13 @@ def hamming_packed(a: Column, b: Column) -> Column:
 
 def simhash_near_dup_pairs(
     df: DataFrame,
-    max_hamming: int = 7,
     hot_bucket_cap: int | None = DEFAULT_HOT_BUCKET_CAP,
 ) -> DataFrame:
     """SimHash near-dup ``doc_id`` pairs over ``text`` via band blocking:
     with ``SIMHASH_BANDS`` bands over 64 bits, pigeonhole guarantees any
     pair with Hamming < ``SIMHASH_BANDS`` shares at least one exact band
-    — so ``max_hamming`` ≤ ``SIMHASH_BANDS - 1`` is exhaustive, above it
-    probabilistic. Bucket-join
-    on (band_idx, band_value), verify exact Hamming. ``hot_bucket_cap``
+    — so the verified Hamming ≤ 7 = ``SIMHASH_BANDS - 1`` is exhaustive.
+    Bucket-join on (band_idx, band_value), verify exact Hamming. ``hot_bucket_cap``
     guards the self-join against degenerate buckets (boilerplate
     corpora hash-collide entire slices into one band value — m² join
     rows without the cap); capped buckets weaken the ≤ SIMHASH_BANDS - 1
@@ -464,7 +444,7 @@ def simhash_near_dup_pairs(
     # (id, 2×long) is ~24 B/row and feeds both self-join sides.
     base = (
         fan_out(df.select("doc_id", "text"))
-        .select(F.col("doc_id"), simhash_packed("text").alias("_sh"))
+        .select(F.col("doc_id"), simhash_packed().alias("_sh"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
 
@@ -486,7 +466,7 @@ def simhash_near_dup_pairs(
     return (
         _bucket_self_join(banded, "doc_id", ["_i", "_v"], ["_sh"])
         .withColumn("hamming", hamming_packed(F.col("_sh_a"), F.col("_sh_b")))
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 7)
         .select("id_a", "id_b", "hamming")
         .dropDuplicates(["id_a", "id_b"])
     )
@@ -588,7 +568,7 @@ def band_table(df: DataFrame) -> DataFrame:
     ``text``) corpus on its own — what a production deployment STORES
     (≈ bands × 16 B per doc) instead of recomputing shingles +
     signatures from text per ingest."""
-    sig = minhash_signature(word_shingles("text", SHINGLE_N), NUM_HASHES, SEED)
+    sig = minhash_signature(word_shingles(SHINGLE_N))
     return minhash_band_rows(
         fan_out(df.select("doc_id", "text")), "doc_id", sig, NUM_HASHES, BANDS
     )
@@ -770,8 +750,8 @@ def semantic_dedup(
     ``hot_cluster_cap`` guards degenerate cells — the cap applies to
     the PAIRING relation only, never the universe, so capped-cell rows
     are still emitted as kept (they just aren't pruned; a production
-    run logs them via ``hot_bucket_report`` and re-clusters the slice
-    with a larger K)."""
+    run logs the cells over the cap and re-clusters the slice with a
+    larger K)."""
     from technical_test_data_engineer_spark.operators.similarity import (
         exact_dot,
         fast_dot,

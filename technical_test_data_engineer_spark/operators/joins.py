@@ -1,4 +1,4 @@
-"""Join operators (SURVEY.md §2.3, J1-J2) plus the full Spark join
+"""Join operators (SURVEY.md §2.3, J1) plus the full Spark join
 surface the reference lacked (semi/anti/range/as-of).
 
 Scale notes baked into each helper:
@@ -22,20 +22,6 @@ def inner_equi_join(
     (``merge(how='inner', on='id_zone')``, visualization.py:59). The
     reference's zone dim is small → broadcast."""
     return left.join(F.broadcast(right), on=on, how="inner")
-
-
-def left_join_differing_keys(
-    left: DataFrame,
-    right: DataFrame,
-    left_key: str,
-    right_key: str,
-) -> DataFrame:
-    """J2 — left outer join with differing key names
-    (``merge(how='left', left_on='code', right_on='code_departement')``,
-    visualization.py:153). Keeps the duplicate key column dropped, like
-    pandas suffixing never fires in the reference."""
-    r = F.broadcast(right)
-    return left.join(r, left[left_key] == r[right_key], "left").drop(right_key)
 
 
 def semi_join(left: DataFrame, right: DataFrame, on: str | list[str]) -> DataFrame:

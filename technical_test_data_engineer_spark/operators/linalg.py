@@ -50,10 +50,8 @@ MAX_DIM = 1024
 _MAX_MOMENT_ROWS = MAX_DIM * (MAX_DIM + 1) // 2 + MAX_DIM
 
 
-def covariance_matrix(
-    df: DataFrame, vec_col: str = "embedding", id_col: str = "vec_id"
-) -> DataFrame:
-    """Sample covariance of the vector column as an upper-triangle
+def covariance_matrix(df: DataFrame) -> DataFrame:
+    """Sample covariance of the ``embedding`` column as an upper-triangle
     long-form relation (``i`` ≤ ``j``, ``cov``): cov(i,j) =
     (Σx_ix_j − Σx_i·Σx_j / n) / (n − 1), moment sums integer-scaled
     exact, the final arithmetic in double on both engines (the
@@ -74,7 +72,7 @@ def covariance_matrix(
     round_half_up_1e10 guarantee (tests/test_linalg.py). Raggedness,
     n < 2, int64 overflow and vectors wider than ``MAX_DIM`` fail loud
     exactly like pca_components."""
-    rows = _moment_agg(df, vec_col, id_col, "covariance_matrix")
+    rows = _moment_agg(df, "covariance_matrix")
     spark = df.sparkSession
     schema = "i int, j int, cov double"
     if not rows:
@@ -136,9 +134,7 @@ def _half_up_rounder():
 round_half_up_1e10 = _half_up_rounder()
 
 
-def _moment_agg(
-    df: DataFrame, vec_col: str, id_col: str, label: str
-) -> list[dict]:
+def _moment_agg(df: DataFrame, label: str) -> list[dict]:
     """The shared one-action Arrow moment fold (r13, factored out of
     pca_components in r15 so covariance_matrix rides it too): each task
     reduces its Arrow batches to D(D+1)/2 + D integer partial sums in
@@ -151,8 +147,7 @@ def _moment_agg(
         fan_out,
     )
 
-    dfp = fan_out(df.select(id_col, vec_col))
-    vec_field = vec_col
+    dfp = fan_out(df.select("vec_id", "embedding"))
 
     def _partial_fold(batches):
         from collections import defaultdict
@@ -160,7 +155,7 @@ def _moment_agg(
         acc: dict = defaultdict(lambda: None)
         for pdf in batches:
             groups = defaultdict(list)
-            for v in pdf[vec_field]:
+            for v in pdf["embedding"]:
                 if v is not None:
                     groups[len(v)].append(v)
             for dlen, vs in groups.items():
@@ -265,13 +260,9 @@ def _validate_moments(rows, label: str) -> tuple[int, np.ndarray]:
     return int(n), s
 
 
-def pca_components(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 8,
-):
-    """Top-k principal components from the distributed covariance.
+def pca_components(df: DataFrame, k: int = 8):
+    """Top-k principal components of ``embedding`` from the distributed
+    covariance.
 
     The D×D matrix (a few KB) collects to the driver; ``numpy.linalg
     .eigh`` factorizes it there — the textbook split: O(corpus) work
@@ -296,7 +287,7 @@ def pca_components(
     # aggregate is D²-bounded, and a vector wider than MAX_DIM fails the
     # fetch. Ragged/null vectors, n < 2 and int64 overflow fail loud in
     # _validate_moments.
-    rows = _moment_agg(df, vec_col, id_col, "pca_components")
+    rows = _moment_agg(df, "pca_components")
     if not rows:
         raise ValueError(
             "pca_components: empty corpus (no embedding rows to factor)"
@@ -325,8 +316,6 @@ def project_embeddings(
     df: DataFrame,
     mean,
     comps,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
     int_scaled: bool = False,
 ) -> DataFrame:
     """The Arrow-batched projection pass shared by the self-trained PCA
@@ -341,7 +330,7 @@ def project_embeddings(
     matching DuckDB's ``SUM(CAST(ROUND(t·1e10, 0) AS BIGINT))`` exactly
     — the projection arithmetic becomes order-independent and
     oracle-hashable (a float matmul's pairwise-summation order is not).
-    Returns (id_col, ``pc`` array<double> or array<long>).
+    Returns (``vec_id``, ``pc`` array<double> or array<long>).
     One corpus scan, zero shuffles. The UDF runs once per query as long
     as nothing calls it twice: ``pc`` is never NULL or empty, so explode
     it with ``posexplode_outer`` (``posexplode``'s inferred non-empty
@@ -375,17 +364,12 @@ def project_embeddings(
             out = (m - mean) @ comps.T
             return pd.Series(list(out))
 
-    return df.select(F.col(id_col), _proj(F.col(vec_col)).alias("pc"))
+    return df.select(F.col("vec_id"), _proj(F.col("embedding")).alias("pc"))
 
 
-def pca_project(
-    df: DataFrame,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    k: int = 8,
-) -> DataFrame:
-    """Project every vector onto the top-k PCs: (x − mean) @ Wᵀ —
+def pca_project(df: DataFrame, k: int = 8) -> DataFrame:
+    """Project every ``embedding`` onto the top-k PCs: (x − mean) @ Wᵀ —
     self-trained path: components from the distributed covariance +
     driver eigh, projection via :func:`project_embeddings`."""
-    mean, comps, _ = pca_components(df, vec_col, id_col, k)
-    return project_embeddings(df, mean, comps, vec_col, id_col)
+    mean, comps, _ = pca_components(df, k)
+    return project_embeddings(df, mean, comps)

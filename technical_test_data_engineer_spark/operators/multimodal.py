@@ -9,10 +9,8 @@ codec call is a STUB (the container ships no image/audio libraries):
   deterministic fake header (see ``fake_media_binary``) instead of
   calling Pillow/ffmpeg. Swap `_parse_header` for the real codec and
   nothing else changes.
-- ``frame_sample``: every-Nth-frame sampling over a video-like binary,
+- ``frame_sample``: every-4th-frame sampling over a video-like binary,
   emitting one row per sampled frame (explode-shaped mapInPandas).
-- ``real decode``: ``decode_image_real`` raises NotImplementedError —
-  the clearly-marked seam where Pillow/libav would be invoked.
 
 Scale design: media rows are KB–MB sized, so the operative knobs are
 ``spark.sql.files.maxPartitionBytes`` (scan split sizing — a 128 MB
@@ -91,43 +89,14 @@ def _header_parser():
 _parse_header = _header_parser()
 
 
-def decode_image_real(blob: bytes) -> tuple[str, int, int, int, int]:
-    """Real image decode — the seam for an actual codec. Uses Pillow
-    when importable (optional extra; not shipped in this container) and
-    returns the same tuple shape as :func:`_parse_header`, so it plugs
-    straight into ``decode_media_meta(df, parse=decode_image_real)``.
-    Without Pillow it raises NotImplementedError — callers fall back to
-    the stub header decode."""
-    try:
-        from PIL import Image  # optional extra, import-gated
-    except ImportError as exc:
-        raise NotImplementedError(
-            "real image decoding requires Pillow, which is not installed "
-            "in this environment; use decode_media_meta (stub header "
-            "decode)"
-        ) from exc
-    import io
-
-    with Image.open(io.BytesIO(blob)) as im:
-        n_frames = int(getattr(im, "n_frames", 1))
-        return (
-            (im.format or "unknown").lower(),
-            int(im.width),
-            int(im.height),
-            n_frames,
-            len(blob),
-        )
-
-
-def decode_media_meta(df: DataFrame, parse=_parse_header) -> DataFrame:
+def decode_media_meta(df: DataFrame) -> DataFrame:
     """Extract a typed metadata struct from each ``media`` blob via
     mapInPandas (Arrow-batched; one batch of blobs in memory per task).
 
     Output: (``doc_id``, meta struct, plus passthrough of media bytes
     count) — the schema/partitioning pattern any real decoder plugs
-    into: ``parse`` is any ``bytes -> (format, width, height, n_frames,
-    n_bytes)`` callable (default: the stub header decode;
-    ``decode_image_real`` when Pillow is installed).
+    into: a real codec replaces the stub header decode, any ``bytes ->
+    (format, width, height, n_frames, n_bytes)`` callable.
     """
     out_schema = T.StructType(
         [
@@ -144,7 +113,7 @@ def decode_media_meta(df: DataFrame, parse=_parse_header) -> DataFrame:
                 else dict(
                     zip(
                         ("format", "width", "height", "n_frames", "n_bytes"),
-                        parse(bytes(blob)),
+                        _parse_header(bytes(blob)),
                     )
                 )
                 for blob in pdf["media"]
@@ -154,8 +123,8 @@ def decode_media_meta(df: DataFrame, parse=_parse_header) -> DataFrame:
     return df.select("doc_id", "media").mapInPandas(_decode, out_schema)
 
 
-def frame_sample(df: DataFrame, every_n: int = 4) -> DataFrame:
-    """Sample every ``every_n``-th frame of each video-like ``media``
+def frame_sample(df: DataFrame) -> DataFrame:
+    """Sample every 4th frame of each video-like ``media``
     blob (rows keyed by ``doc_id``): one
     output row per sampled frame with a (stub) frame payload slice.
 
@@ -181,7 +150,7 @@ def frame_sample(df: DataFrame, every_n: int = 4) -> DataFrame:
                 body = blob[12:]
                 # stub frame extraction: equal byte slices per frame
                 step = max(len(body) // max(n_frames, 1), 1)
-                for i in range(0, n_frames, every_n):
+                for i in range(0, n_frames, 4):
                     ids.append(doc_id)
                     idxs.append(i)
                     payloads.append(body[i * step : (i + 1) * step])
@@ -192,10 +161,9 @@ def frame_sample(df: DataFrame, every_n: int = 4) -> DataFrame:
     return df.select("doc_id", "media").mapInPandas(_sample, out_schema)
 
 
-def media_ahash(
-    df: DataFrame, media_col: str = "media", id_col: str = "doc_id"
-) -> DataFrame:
-    """64-bit average-hash (aHash) per media blob — the perceptual
+def media_ahash(df: DataFrame) -> DataFrame:
+    """64-bit average-hash (aHash) per ``media`` blob, keyed by
+    ``doc_id`` — the perceptual
     near-dup signature for images: downsample the pixel plane to an
     8×8 grid of means, threshold at the median, pack the bits.
     Perceptually-similar images differ in a few bits (compare by
@@ -203,16 +171,15 @@ def media_ahash(
     flips everything.
 
     Decode seam: the stub treats the post-header payload bytes as the
-    luma plane (a real decoder yields exactly that — swap
-    ``decode_image_real``'s pixels in; every downstream stage is
-    unchanged). The grid/threshold/bitpack kernel is REAL and
+    luma plane (a real decoder yields exactly that — swap its pixels
+    in; every downstream stage is unchanged). The grid/threshold/bitpack kernel is REAL and
     vectorized per Arrow batch in numpy; output is one int64 per blob,
     so the signature relation the near-dup join consumes is 8 bytes ×
     corpus, never pixels.
     """
     out_schema = T.StructType(
         [
-            T.StructField(id_col, T.LongType()),
+            T.StructField("doc_id", T.LongType()),
             T.StructField("ahash", T.LongType()),
         ]
     )
@@ -222,7 +189,7 @@ def media_ahash(
 
         for pdf in batches:
             ids, sigs = [], []
-            for i, blob in zip(pdf[id_col], pdf[media_col]):
+            for i, blob in zip(pdf["doc_id"], pdf["media"]):
                 b = bytes(blob)[12:]  # skip the 12-byte stub header
                 arr = np.frombuffer(b, dtype=np.uint8).astype(np.float64)
                 if arr.size == 0:
@@ -240,9 +207,9 @@ def media_ahash(
                     sig -= 1 << 64  # two's-complement into int64
                 ids.append(i)
                 sigs.append(sig)
-            yield pd.DataFrame({id_col: ids, "ahash": sigs})
+            yield pd.DataFrame({"doc_id": ids, "ahash": sigs})
 
-    return df.select(id_col, media_col).mapInPandas(_hash, out_schema)
+    return df.select("doc_id", "media").mapInPandas(_hash, out_schema)
 
 
 def media_near_dups(
@@ -304,14 +271,14 @@ def media_near_dups(
     )
 
 
-def chunk_media(df: DataFrame, chunk_size: int = 256) -> DataFrame:
+def chunk_media(df: DataFrame) -> DataFrame:
     """Fixed-window byte chunking of the binary ``media`` column — the
     preprocessing shape every audio/ASR and video pipeline needs
     (windowed segments + per-chunk integrity checksum) expressed for
     Spark: an Arrow-batched ``mapInPandas`` slices each blob's payload
-    (12-byte stub header stripped) into ``chunk_size`` windows and emits
+    (12-byte stub header stripped) into 256-byte windows and emits
     (``doc_id``, ``chunk_idx``, ``chunk_len``, ``chunk_md5``) — explode-shaped
-    output, rows-per-input bounded by payload/chunk_size, blobs never
+    output, rows-per-input bounded by payload/256, blobs never
     shuffled (chunking happens in the scan task; only the ~50-byte
     checksum rows move). The md5 is over raw payload bytes, so an
     oracle that knows the payload construction can recompute every
@@ -328,10 +295,10 @@ def chunk_media(df: DataFrame, chunk_size: int = 256) -> DataFrame:
             ids, idxs, lens, sums = [], [], [], []
             for i, blob in zip(pdf["doc_id"], pdf["media"]):
                 payload = bytes(blob)[12:]
-                for c in range(0, max(len(payload), 1), chunk_size):
-                    piece = payload[c : c + chunk_size]
+                for c in range(0, max(len(payload), 1), 256):
+                    piece = payload[c : c + 256]
                     ids.append(i)
-                    idxs.append(c // chunk_size)
+                    idxs.append(c // 256)
                     lens.append(len(piece))
                     sums.append(hashlib.md5(piece).hexdigest())
             yield pd.DataFrame(

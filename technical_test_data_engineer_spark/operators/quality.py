@@ -54,25 +54,3 @@ def referential_check(
         "observed",
         (F.col("observed") == 0).alias("passed"),
     )
-
-
-def observed_write(
-    df: DataFrame,
-    writer: Callable[[DataFrame], None],
-    metrics: dict[str, Column],
-):
-    """In-flight metrics: attach ``metrics`` (aggregate expressions) to
-    the SAME job that materializes ``df`` via ``pyspark.sql.
-    Observation`` — the write and the audit share one scan, so
-    per-snapshot row counts / null counts / sums cost ZERO extra
-    passes (vs constraint_audit, which is the right tool when the
-    check must run WITHOUT materializing). Returns the observed dict.
-
-    ``writer`` receives the observed frame and must trigger exactly
-    one action (e.g. ``lambda d: d.write.parquet(path)``)."""
-    from pyspark.sql import Observation
-
-    obs = Observation()
-    named = df.observe(obs, *[c.alias(n) for n, c in metrics.items()])
-    writer(named)
-    return obs.get

@@ -1,115 +1,38 @@
-"""Projection, filter, and null-repair operators (SURVEY.md §2.2, P1-P6).
+"""Interval filter, null repair and skyline operators (SURVEY.md §2.2,
+P2 and P5, plus the Pareto front).
 
-All declarative: Catalyst pushes these predicates into the parquet scan
-(check with ``.explain`` → ``PushedFilters``) and prunes unread columns
-— the automation of the reference's hand-rolled column lists
-(/root/reference/tasks/visualization/src/visualization.py:54-59).
+The interval predicate is declarative: Catalyst pushes it into the
+parquet scan (check with ``.explain`` → ``PushedFilters``). Projection,
+equality and IN-list filters and post-join null repair (P1, P3, P4, P6)
+are one DataFrame call each, written in the plans directly.
 """
 
 from __future__ import annotations
 
 import datetime as dt
-from collections.abc import Iterable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def project(df: DataFrame, cols: Iterable[str]) -> DataFrame:
-    """P1 — explicit column projection (visualization.py:54-59)."""
-    return df.select(*cols)
-
-
 def point_in_interval(
-    df: DataFrame,
-    point: dt.date | dt.datetime | str,
-    start_col: str = "debut",
-    end_col: str = "fin",
+    df: DataFrame, point: dt.date | dt.datetime | str
 ) -> DataFrame:
-    """P2 — rows whose ``[start, end]`` validity interval contains
+    """P2 — rows whose ``[debut, fin]`` validity interval contains
     ``point`` (inclusive both ends, visualization.py:97-98).
 
     At scale: both bounds are independent comparisons against a literal,
     so each pushes down to parquet min/max row-group pruning.
     """
     p = F.lit(point)
-    return df.filter((F.col(start_col) <= p) & (p <= F.col(end_col)))
+    return df.filter((F.col("debut") <= p) & (p <= F.col("fin")))
 
 
-def equality_filter(df: DataFrame, col: str, value) -> DataFrame:
-    """P3 — ``df[df.col == v]`` (visualization.py:170, :185)."""
-    return df.filter(F.col(col) == F.lit(value))
-
-
-def in_list(df: DataFrame, col: str, values: Iterable) -> DataFrame:
-    """P4 — IN-list membership (visualization.py:146)."""
-    return df.filter(F.col(col).isin(list(values)))
-
-
-def fill_interval_nulls(
-    df: DataFrame,
-    start_col: str,
-    end_col: str,
-    start_default: str = "1900-01-01",
-    end_default: str = "2024-12-31",
-) -> DataFrame:
+def fill_interval_nulls(df: DataFrame, start_col: str, end_col: str) -> DataFrame:
     """P5 — close open validity intervals by constant-filling null bounds
     (visualization.py:43, :45). Null start → epoch-ish floor, null end →
     horizon cap, so interval predicates (P2) see closed intervals."""
-    return df.na.fill({start_col: start_default, end_col: end_default})
-
-
-def coalesce_after_outer_join(df: DataFrame, col: str, default) -> DataFrame:
-    """P6 — repair nulls introduced by an outer join's unmatched side
-    (``fillna(0)`` on alert level, visualization.py:154)."""
-    return df.withColumn(col, F.coalesce(F.col(col), F.lit(default)))
-
-
-def where(df: DataFrame, condition: Column) -> DataFrame:
-    """General predicate entry point for composed conditions."""
-    return df.filter(condition)
-
-
-def split_by_cast(
-    df: DataFrame, casts: dict[str, str]
-) -> tuple[DataFrame, DataFrame]:
-    """Typed-ingest quarantine: split a stringly-staged frame into
-    (clean, quarantine) by cast success. ``casts`` maps column →
-    target type; clean rows carry every column cast, quarantine rows
-    keep the ORIGINAL strings plus ``_bad_cols`` naming each failing
-    column — the triage key an ingest dashboard groups on.
-
-    The S1 story completed: PERMISSIVE CSV capture catches rows that
-    don't PARSE; this catches values that parse but don't TYPE
-    (``'12,5'`` in a double column, ``'0023-01-05'`` pre-repair).
-    ``try_cast`` (ANSI-safe NULL on failure) keeps the whole split
-    scan-side — two pruned passes over the stage, no UDF, no shuffle;
-    a NULL input is not a cast failure (nullability is a
-    constraint-audit concern, operators/quality.py)."""
-    fail_flags = [
-        (c, F.col(c).isNotNull() & F.col(c).try_cast(t).isNull())
-        for c, t in casts.items()
-    ]
-    any_bad = F.lit(False)
-    for _, flag in fail_flags:
-        any_bad = any_bad | flag
-    clean = df.filter(~any_bad).select(
-        *[
-            F.col(c).try_cast(casts[c]).alias(c) if c in casts else F.col(c)
-            for c in df.columns
-        ]
-    )
-    bad_cols = F.filter(
-        F.array(
-            *[
-                F.when(flag, F.lit(c)).otherwise(F.lit(None))
-                for c, flag in fail_flags
-            ]
-        ),
-        lambda x: x.isNotNull(),
-    )
-    quarantine = df.filter(any_bad).withColumn("_bad_cols", bad_cols)
-    return clean, quarantine
+    return df.na.fill({start_col: "1900-01-01", end_col: "2024-12-31"})
 
 
 def pareto_front(

@@ -270,24 +270,23 @@ def brute_force_topk(
 
 
 def seeded_planes(
-    n_tables: int, n_planes: int, dim: int, seed: int = 42
+    n_tables: int, n_planes: int, dim: int
 ) -> list[list[list[float]]]:
-    """Seeded Gaussian SRP hyperplanes — ONE definition shared by the
-    Spark LSH operators and the generated DuckDB oracles (the plane
+    """Gaussian SRP hyperplanes from seed 42 — ONE definition shared by
+    the Spark LSH operators and the generated DuckDB oracles (the plane
     literals are embedded in both, so buckets agree bit-for-bit)."""
     import random
 
-    rng = random.Random(seed)
+    rng = random.Random(42)
     return [
         [[rng.gauss(0, 1) for _ in range(dim)] for _ in range(n_planes)]
         for _ in range(n_tables)
     ]
 
 
-def adaptive_n_planes(n_vectors: int, target_bucket: int = 64) -> int:
-    """Planes-per-table sized so the EXPECTED bucket holds about
-    ``target_bucket`` vectors: ``ceil(log2(n / target_bucket))``,
-    clamped to [3, 24].
+def adaptive_n_planes(n_vectors: int) -> int:
+    """Planes-per-table sized so the EXPECTED bucket holds about 64
+    vectors: ``ceil(log2(n / 64))``, clamped to [3, 24].
 
     This is the knob that makes SRP-LSH bucket selectivity scale: with a
     FIXED plane count, bucket population is n / 2^planes — corpus-
@@ -301,28 +300,9 @@ def adaptive_n_planes(n_vectors: int, target_bucket: int = 64) -> int:
     tests/test_similarity.py."""
     import math
 
-    if n_vectors <= target_bucket:
+    if n_vectors <= 64:
         return 3
-    return max(3, min(24, math.ceil(math.log2(n_vectors / target_bucket))))
-
-
-def srp_signature(vec: Column, planes: list[list[float]]) -> Column:
-    """Signed-random-projection signature: one sign bit per hyperplane,
-    packed into a long. Planes are fixed literals (seeded driver-side),
-    so the signature is deterministic and computable scan-side."""
-    bits = []
-    for i, plane in enumerate(planes):
-        p = F.array(*[F.lit(float(v)) for v in plane])
-        d = F.aggregate(
-            F.zip_with(vec, p, lambda x, y: x.cast("double") * y),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-        bits.append(F.when(d >= 0, F.lit(1 << i)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out.cast("long")
+    return max(3, min(24, math.ceil(math.log2(n_vectors / 64))))
 
 
 def ivf_assignment_udf(centroids, n_probe: int = 1):
@@ -526,14 +506,14 @@ def srp_signatures_batch(planes_tables: list[list[list[float]]]):
     ``pandas_udf`` returning ``array<long>`` (one packed signature per
     table).
 
-    Why a UDF when :func:`srp_signature` exists: inlining n_tables ×
+    Why a UDF and not a Spark expression per plane: inlining n_tables ×
     n_planes × dim literal hyperplanes builds a ~10⁵-node expression
     tree — past codegen limits Catalyst falls back to interpreted eval,
     ~50× slower. Here the planes live in ONE numpy array captured by
     the closure and each Arrow batch is a single (batch × dim) @
     (dim × tables·planes) matmul — the sanctioned vectorized-UDF
     escape hatch for linear algebra Spark expressions can't express.
-    Sign convention matches ``srp_signature`` (dot ≥ 0 → bit set).
+    Sign convention: dot ≥ 0 → bit set, bit i for plane i.
     """
     P = np.asarray(planes_tables, dtype=np.float64)  # (T, B, D)
     n_tables, n_bits, dim = P.shape
@@ -707,14 +687,6 @@ def _zero_cell(codebooks: np.ndarray) -> np.ndarray:
     is +0.0, so codes and ADC scores equal raw-vector PQ's."""
     m, _, sub = np.shape(codebooks)
     return np.zeros((1, m * sub))
-
-
-def pq_encode_udf(codebooks: np.ndarray):
-    """Vectorized PQ encoder: per Arrow batch, one distance matrix per
-    subspace → argmin code. Returns array<int> of length m per vector
-    (the IVF-PQ encoder over :func:`_zero_cell`)."""
-    encode = ivfpq_encode_udf(_zero_cell(codebooks), codebooks)
-    return lambda c: encode(c)["codes"]
 
 
 def pq_adc_topk(
@@ -947,15 +919,11 @@ def ivfpq_topk(
     return _rank_topk(refined, k)
 
 
-def rrf_fuse(
-    ranked_lists: list[DataFrame],
-    k0: int = 60,
-    k: int = 5,
-) -> DataFrame:
+def rrf_fuse(ranked_lists: list[DataFrame], k: int = 5) -> DataFrame:
     """Reciprocal Rank Fusion (Cormack, Clarke & Buettcher, SIGIR'09) —
     THE standard way hybrid retrieval merges a sparse (lexical) and a
     dense (embedding) ranking without score calibration: each list
-    contributes 1/(k0 + rank) per candidate, candidates missing from a
+    contributes 1/(60 + rank) per candidate, candidates missing from a
     list contribute 0, and the fused ordering depends only on RANKS —
     immune to the incomparable score scales that make weighted-sum
     fusion fragile.
@@ -986,7 +954,7 @@ def rrf_fuse(
         [
             F.coalesce(
                 F.lit(1.0)
-                / (F.lit(float(k0)) + F.col(f"_r{i}").cast("double")),
+                / (F.lit(60.0) + F.col(f"_r{i}").cast("double")),
                 F.lit(0.0),
             )
             for i in range(len(tagged))

@@ -35,26 +35,29 @@ LANG_MARKERS: dict[str, list[str]] = {
 STOPWORDS = ["the", "a", "of", "and", "to", "in"]
 
 
-def tokens(col: str | Column = "text") -> Column:
-    """Whitespace tokenizer as a column expression (array<string>)."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.split(c, " ")
+def tokens() -> Column:
+    """Whitespace tokenizer over ``text`` as a column expression
+    (array<string>)."""
+    return F.split(F.col("text"), " ")
 
 
-def bpe_ish_tokens(col: str | Column = "text") -> Column:
-    """BPE-ish subword proxy: split on word boundaries AND punctuation,
-    keeping digits/word-pieces — a regex approximation of a learned
-    tokenizer's segmentation for counting purposes."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(c, r"[^A-Za-z0-9']+"), lambda t: t != F.lit(""))
+def bpe_ish_tokens() -> Column:
+    """BPE-ish subword proxy over ``text``: split on word boundaries AND
+    punctuation, keeping digits/word-pieces — a regex approximation of a
+    learned tokenizer's segmentation for counting purposes."""
+    return F.filter(
+        F.split(F.col("text"), r"[^A-Za-z0-9']+"), lambda t: t != F.lit("")
+    )
 
 
-def token_count(col: str | Column = "text") -> Column:
-    return F.size(tokens(col)).cast("bigint")
+def token_count() -> Column:
+    """Whitespace tokens in ``text``."""
+    return F.size(tokens()).cast("bigint")
 
 
-def unique_token_count(col: str | Column = "text") -> Column:
-    return F.size(F.array_distinct(tokens(col))).cast("bigint")
+def unique_token_count() -> Column:
+    """Distinct whitespace tokens in ``text``."""
+    return F.size(F.array_distinct(tokens())).cast("bigint")
 
 
 def marker_hits(toks: Column, markers: list[str]) -> Column:
@@ -103,13 +106,14 @@ def predicted_language(toks: Column) -> Column:
     return bind(toks, _with_toks)
 
 
-def quality_columns(text_col: str = "text") -> list[Column]:
-    """Quality-score battery: token count, mean token length, stopword
-    ratio, distinct-token ratio. All exact-integer-derived doubles so
-    cross-engine comparison is bit-stable."""
-    toks = tokens(text_col)
+def quality_columns() -> list[Column]:
+    """Quality-score battery over ``text``: token count, mean token
+    length, stopword ratio, distinct-token ratio. All
+    exact-integer-derived doubles so cross-engine comparison is
+    bit-stable."""
+    toks = tokens()
     n_tok = F.size(toks).cast("bigint")
-    n_char = F.length(text_col).cast("bigint")
+    n_char = F.length("text").cast("bigint")
     return [
         n_tok.alias("n_tokens"),
         (n_char.cast("double") / n_tok).alias("avg_token_len"),
@@ -127,20 +131,19 @@ def fingerprint(col: str | Column = "text") -> Column:
     return F.md5(c)
 
 
-def head_fingerprint(col: str | Column = "text") -> Column:
-    """Prefix fingerprint (md5 of the first 100 characters) —
+def head_fingerprint() -> Column:
+    """Prefix fingerprint (md5 of the first 100 characters of ``text``) —
     the cheap re-scrape detector: mirrored feeds and re-crawls share
     document HEADS while tails drift (timestamps, footers, ad blocks),
     so a head fingerprint clusters them where the full-text fingerprint
     sees distinct documents. Oracle twin: ``MD5(SUBSTR(text, 1, 100))``."""
-    c = F.col(col) if isinstance(col, str) else col
-    return F.md5(F.substring(c, 1, 100))
+    return F.md5(F.substring(F.col("text"), 1, 100))
 
 
-def tokens_long(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Explode to one row per (doc, token) — the long-form input for
-    TF-IDF and n-gram statistics."""
-    return df.select(id_col, F.explode(tokens(text_col)).alias("term"))
+def tokens_long(df: DataFrame) -> DataFrame:
+    """Explode (``doc_id``, ``text``) to one row per (doc, token) — the
+    long-form input for TF-IDF and n-gram statistics."""
+    return df.select("doc_id", F.explode(tokens()).alias("term"))
 
 
 def md5_hash64(c: Column) -> Column:
@@ -163,9 +166,9 @@ def md5_bucket(c: Column | str, n_buckets: int = 100) -> Column:
     return F.conv(F.substring(F.md5(c), 1, 8), 16, 10).cast("bigint") % n_buckets
 
 
-def adaptive_buckets(n: int, target_bucket: int = 64, floor: int = 16) -> int:
+def adaptive_buckets(n: int) -> int:
     """Bucket count sized so the EXPECTED bucket population stays about
-    ``target_bucket`` as ``n`` grows: ``max(floor, n // target_bucket)``.
+    64 as ``n`` grows: ``max(16, n // 64)``.
 
     The blocked-self-join discipline (negative sampling, record-linkage
     blocking) generates ~n²/(2B) candidate pairs; with a FIXED B that is
@@ -173,19 +176,18 @@ def adaptive_buckets(n: int, target_bucket: int = 64, floor: int = 16) -> int:
     — and therefore candidates-per-node — constant at any scale (the
     modulus twin of ``similarity.adaptive_n_planes``, which does the
     same for SRP-LSH plane counts). Engine-portable: the oracle computes
-    the identical B via ``GREATEST(floor, CAST(FLOOR(COUNT(*)/target)
+    the identical B via ``GREATEST(16, CAST(FLOOR(COUNT(*)/64)
     AS BIGINT))`` in a scalar subquery."""
-    return max(floor, n // target_bucket)
+    return max(16, n // 64)
 
 
-def winnow_fingerprints(
-    text_col: str | Column = "text", k: int = 5, w: int = 4, hash_fn=None
-) -> Column:
-    """Winnowing fingerprint set (Schleimer/Wilkerson/Aiken, the MOSS
-    algorithm): hash every ``k``-token shingle (rolling k-gram), then
-    keep the minimum hash of every ``w``-wide window — guaranteeing any
-    shared run of ≥ w+k-1 tokens between two documents shares a selected
-    hash, at ~1/w the fingerprint density of full shingling.
+def winnow_fingerprints(hash_fn=None) -> Column:
+    """Winnowing fingerprint set of ``text`` (Schleimer/Wilkerson/Aiken,
+    the MOSS algorithm): hash every 5-token shingle (rolling k-gram,
+    k = 5), then keep the minimum hash of every 4-wide window (w = 4) —
+    guaranteeing any shared run of ≥ w+k-1 tokens between two documents
+    shares a selected hash, at ~1/w the fingerprint density of full
+    shingling.
 
     Pure JVM expressions: shingle hashes via transform+xxhash64, window
     minima via transform over a position sequence + slice + array_min,
@@ -195,43 +197,41 @@ def winnow_fingerprints(
     lambda re-derives the whole hash array per window — quadratic;
     measured 14× slower).
     """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
     h = hash_fn or F.xxhash64  # md5_hash64 for the oracle-paired twin
 
     def _with_toks(toks: Column) -> Column:
-        n_sh = F.greatest(F.size(toks) - (k - 1), F.lit(1))
+        n_sh = F.greatest(F.size(toks) - 4, F.lit(1))
         idx = F.sequence(F.lit(1), n_sh)
         # slice+array_join, not element_at: ANSI-safe for docs < k tokens
         hashes = F.transform(
-            idx, lambda i: h(F.array_join(F.slice(toks, i, k), " "))
+            idx, lambda i: h(F.array_join(F.slice(toks, i, 5), " "))
         )
 
         def _with_hashes(h: Column) -> Column:
-            n_win = F.greatest(F.size(h) - (w - 1), F.lit(1))
+            n_win = F.greatest(F.size(h) - 3, F.lit(1))
             wins = F.sequence(F.lit(1), n_win)
             return F.array_sort(
                 F.array_distinct(
-                    F.transform(wins, lambda i: F.array_min(F.slice(h, i, w)))
+                    F.transform(wins, lambda i: F.array_min(F.slice(h, i, 4)))
                 )
             )
 
         return bind(hashes, _with_hashes)
 
-    return bind(F.split(c, " "), _with_toks)
+    return bind(F.split(F.col("text"), " "), _with_toks)
 
 
-def token_ngrams(text_col: str | Column = "text", n: int = 2) -> Column:
-    """ALL word n-grams in order, repeats kept (array<string>) — the
+def token_ngrams(n: int = 2) -> Column:
+    """ALL word n-grams of ``text`` in order, repeats kept (array<string>) — the
     counting form for repetition metrics, vs ``dedup.word_shingles``
     which dedups for set similarity. ANSI-safe slice+array_join grams;
     token array let-bound (split runs once per row)."""
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
 
     def _with_toks(toks: Column) -> Column:
         idx = F.sequence(F.lit(1), F.greatest(F.size(toks) - (n - 1), F.lit(1)))
         return F.transform(idx, lambda i: F.array_join(F.slice(toks, i, n), " "))
 
-    return bind(F.split(c, " "), _with_toks)
+    return bind(F.split(F.col("text"), " "), _with_toks)
 
 
 # audit patterns (PII-ish plumbing): keep the regex subset common to
@@ -251,10 +251,10 @@ def pattern_count(text_col: str | Column, pattern: str) -> Column:
     )
 
 
-def charclass_struct(text_col: str = "text") -> Column:
-    """C4-style character-class ratios as ONE let-bound struct (r15):
+def charclass_struct() -> Column:
+    """C4-style character-class ratios of ``text`` as ONE let-bound struct (r15):
     tokenizer and both regex filters evaluate once per row instead of
-    once per referencing column (the list form ran split() 7× and each
+    once per referencing column (one column per field ran split() 7× and each
     filter 2× per row). Fields: n_tokens, n_digit_tokens,
     n_symbol_tokens, digit_token_ratio, symbol_token_ratio."""
 
@@ -285,37 +285,16 @@ def charclass_struct(text_col: str = "text") -> Column:
 
         return bind(counts, _ratios)
 
-    return bind(tokens(text_col), _with_toks)
+    return bind(tokens(), _with_toks)
 
 
-def charclass_columns(text_col: str = "text") -> list[Column]:
-    """C4-style character-class token ratios: digit-only tokens and
-    tokens containing any non-alphanumeric symbol, as counts + ratios.
-    Exact-int ÷ exact-int doubles, bit-stable across engines.
-    (List-of-columns view of ``charclass_struct``.)"""
-    c = charclass_struct(text_col)
-    return [
-        c[f].alias(f)
-        for f in (
-            "n_tokens",
-            "n_digit_tokens",
-            "n_symbol_tokens",
-            "digit_token_ratio",
-            "symbol_token_ratio",
-        )
-    ]
-
-
-def token_chunks(
-    text_col: str | Column = "text", chunk_size: int = 100, stride: int = 80
-) -> Column:
-    """Overlapping token-window chunks (array<string>): windows of
+def token_chunks(chunk_size: int = 100, stride: int = 80) -> Column:
+    """Overlapping token-window chunks of ``text`` (array<string>): windows of
     ``chunk_size`` tokens every ``stride`` tokens — the chunking step
     before embedding/indexing long documents. Pure JVM expressions
     (sequence → slice → array_join); explode the result for one row per
     chunk. Chunks shorter than ``chunk_size`` appear only at the tail.
     """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
 
     def _with_toks(toks: Column) -> Column:
         starts = F.sequence(
@@ -326,23 +305,25 @@ def token_chunks(
         )
 
     # bind: without it the slice lambda re-runs split() once per chunk
-    return bind(F.split(c, " "), _with_toks)
+    return bind(F.split(F.col("text"), " "), _with_toks)
 
 
 # ---------------------------------------------------------------------------
 # DSIR — importance-weighted data selection
 # ---------------------------------------------------------------------------
 
+# DSIR's hashed feature space: n-grams hash into this many buckets.
+DSIR_BUCKETS = 1024
 
-def hashed_ngram_buckets(
-    col: str | Column = "text", n_buckets: int = 1024
-) -> Column:
-    """Array of hashed-n-gram feature buckets (word unigrams + bigrams
-    → ``md5_bucket`` ids): DSIR's feature space, built as one JVM
+
+def hashed_ngram_buckets() -> Column:
+    """Array of hashed-n-gram feature buckets of ``text`` (word unigrams
+    + bigrams → ``md5_bucket`` ids mod ``DSIR_BUCKETS``): DSIR's feature
+    space, built as one JVM
     expression — no UDF, no shuffle. Bigrams come from zipping the
     token array with its own tail; the engine-portable md5 bucket
     convention makes the feature space recomputable in the oracle."""
-    toks = tokens(col)
+    toks = tokens()
 
     def _feats(t: Column) -> Column:
         bigrams = F.when(
@@ -356,14 +337,13 @@ def hashed_ngram_buckets(
         return F.concat(t, bigrams)
 
     return F.transform(
-        bind(toks, _feats), lambda s: md5_bucket(s, n_buckets)
+        bind(toks, _feats), lambda s: md5_bucket(s, DSIR_BUCKETS)
     )
 
 
 def dsir_importance_weights(
     raw: DataFrame,
     target: DataFrame | None = None,
-    n_buckets: int = 1024,
     target_predicate: Column | None = None,
 ) -> DataFrame:
     """DSIR (Xie et al., 2023, arXiv:2302.03169): score every raw doc
@@ -376,8 +356,8 @@ def dsir_importance_weights(
     at the caller if sampling is wanted).
 
     Scale: feature explode is scan-side; the two bucket-count aggs are
-    partial+final over ≤ ``n_buckets`` groups; the log-ratio table is
-    ≤ ``n_buckets`` rows → broadcast; per-doc scoring is one keyed agg.
+    partial+final over ≤ ``DSIR_BUCKETS`` groups; the log-ratio table is
+    ≤ ``DSIR_BUCKETS`` rows → broadcast; per-doc scoring is one keyed agg.
     One 1-row ``collect_bounded`` fetch brings the two scalar totals
     to the driver. Per-feature log-ratios are rounded to 9dp and
     summed in DECIMAL so doc weights are order-independent and match
@@ -391,7 +371,7 @@ def dsir_importance_weights(
     out of one grouped agg (conditional count) — so the whole model
     build is a single corpus pass, and scoring is the only other one.
     Totals for the smoothing denominators are summed from the
-    PERSISTED ≤ ``n_buckets``-row model table, never by re-counting
+    PERSISTED ≤ ``DSIR_BUCKETS``-row model table, never by re-counting
     the corpus."""
     from pyspark import StorageLevel
 
@@ -405,7 +385,7 @@ def dsir_importance_weights(
         ).select(
             "doc_id",
             "_tgt",
-            F.explode(hashed_ngram_buckets("text", n_buckets)).alias("_b"),
+            F.explode(hashed_ngram_buckets()).alias("_b"),
         )
         model = feats_raw.groupBy("_b").agg(
             F.count("*").alias("_rc"),
@@ -413,10 +393,10 @@ def dsir_importance_weights(
         )
     else:
         feats_raw = fan_out(raw.select("doc_id", "text")).select(
-            "doc_id", F.explode(hashed_ngram_buckets("text", n_buckets)).alias("_b")
+            "doc_id", F.explode(hashed_ngram_buckets()).alias("_b")
         )
         feats_tgt = fan_out(target.select("text")).select(
-            F.explode(hashed_ngram_buckets("text", n_buckets)).alias("_b")
+            F.explode(hashed_ngram_buckets()).alias("_b")
         )
         rc = feats_raw.groupBy("_b").agg(F.count("*").alias("_rc"))
         tc = feats_tgt.groupBy("_b").agg(F.count("*").alias("_tc"))
@@ -435,11 +415,11 @@ def dsir_importance_weights(
             F.log(
                 (
                     (F.col("_tc") + F.lit(1.0))
-                    / F.lit(float(n_tgt + n_buckets))
+                    / F.lit(float(n_tgt + DSIR_BUCKETS))
                 )
                 / (
                     (F.col("_rc") + F.lit(1.0))
-                    / F.lit(float(n_raw + n_buckets))
+                    / F.lit(float(n_raw + DSIR_BUCKETS))
                 )
             ),
             9,
@@ -463,15 +443,13 @@ def dsir_importance_weights(
 # ---------------------------------------------------------------------------
 
 
-def positional_kgrams(
-    col: str | Column = "text", k: int = 5
-) -> Column:
+def positional_kgrams(k: int = 5) -> Column:
     """Array of (1-based start position → k-token gram string) for every
-    k-gram window in the doc — the POSITIONAL counterpart of
+    k-gram window in ``text`` — the POSITIONAL counterpart of
     ``word_shingles`` (which dedups and drops positions). Docs shorter
     than ``k`` tokens yield an empty array (no whole-text fallback: a
     span needs a real k-window). One JVM expression, scan-side."""
-    toks = tokens(col)
+    toks = tokens()
 
     def _grams(t: Column) -> Column:
         return F.when(
@@ -485,15 +463,11 @@ def positional_kgrams(
     return bind(toks, _grams)
 
 
-def repeated_kgram_spans(
-    df: DataFrame,
-    k: int = 5,
-    min_count: int = 2,
-) -> DataFrame:
+def repeated_kgram_spans(df: DataFrame, k: int = 5) -> DataFrame:
     """Substring-level exact dedup primitive (Lee et al., 2022,
     arXiv:2107.06499 — suffix-array repeated-substring removal,
     re-expressed for a shuffle engine): find every maximal token span of
-    ``text`` whose k-grams each occur ≥ ``min_count`` times across the
+    ``text`` whose k-grams each occur at least twice across the
     corpus. Returns (``doc_id``, span_start, span_end, span_tokens),
     1-based inclusive token positions — the spans a cleaning pass would
     cut (the paper removes one occurrence's worth of each repeat;
@@ -512,7 +486,7 @@ def repeated_kgram_spans(
 
     grams = fan_out(df.select("doc_id", "text")).select(
         F.col("doc_id"),
-        F.posexplode(positional_kgrams("text", k)).alias("_p0", "_g"),
+        F.posexplode(positional_kgrams(k)).alias("_p0", "_g"),
     ).select(
         "doc_id",
         (F.col("_p0") + 1).alias("_pos"),
@@ -521,7 +495,7 @@ def repeated_kgram_spans(
     repeated = (
         grams.groupBy("_h")
         .agg(F.count("*").alias("_n"))
-        .filter(F.col("_n") >= min_count)
+        .filter(F.col("_n") >= 2)
         .select("_h")
     )
     hits = grams.join(repeated, "_h").select(
@@ -562,10 +536,8 @@ def repeated_kgram_spans(
     )
 
 
-def bpe_merge_pair_counts(
-    df: DataFrame, text_col: str = "text"
-) -> DataFrame:
-    """Corpus-wide adjacent-symbol-pair frequencies — the statistic the
+def bpe_merge_pair_counts(df: DataFrame) -> DataFrame:
+    """Corpus-wide adjacent-symbol-pair frequencies of ``text`` — the statistic the
     first BPE merge step ranks (Sennrich et al. 2016, "Neural Machine
     Translation of Rare Words with Subword Units"): tokenizer training
     at character granularity, here over single characters so one pass
@@ -584,7 +556,7 @@ def bpe_merge_pair_counts(
 
     Returns (``pair`` string, ``n_occurrences`` bigint), unordered.
     """
-    words = F.explode(bpe_ish_tokens(text_col)).alias("word")
+    words = F.explode(bpe_ish_tokens()).alias("word")
     vocab = (
         df.select(words)
         .filter(F.length("word") >= 2)
@@ -603,12 +575,8 @@ def bpe_merge_pair_counts(
     )
 
 
-def corpus_mix_rates(
-    df: DataFrame,
-    shares: dict[str, float],
-    group_col: str = "lang",
-) -> DataFrame:
-    """Per-group keep-rates that rebalance a corpus to target mixture
+def corpus_mix_rates(df: DataFrame, shares: dict[str, float]) -> DataFrame:
+    """Per-``lang`` keep-rates that rebalance a corpus to target mixture
     ``shares`` (the Pile/ROOTS corpus-mixing step: given weights per
     language/domain, downsample over-represented groups so the output
     matches the target distribution WITHOUT upsampling anything).
@@ -619,19 +587,17 @@ def corpus_mix_rates(
     budget·share_g rows. Two tiny aggregates (group counts, a 1-row
     min) — nothing corpus-sized moves.
 
-    Returns (group, ``n_docs``, ``share``, ``rate``).
+    Returns (``lang``, ``n_docs``, ``share``, ``rate``).
     """
     spark = df.sparkSession
-    share_df = local_frame(
-        spark, list(shares.items()), f"{group_col} string, share double"
-    )
-    counts = df.groupBy(group_col).agg(F.count("*").alias("n_docs"))
-    joined = counts.join(F.broadcast(share_df), group_col)
+    share_df = local_frame(spark, list(shares.items()), "lang string, share double")
+    counts = df.groupBy("lang").agg(F.count("*").alias("n_docs"))
+    joined = counts.join(F.broadcast(share_df), "lang")
     budget = joined.agg(
         F.min(F.col("n_docs") / F.col("share")).alias("_budget")
     )
     return joined.crossJoin(F.broadcast(budget)).select(
-        group_col,
+        "lang",
         "n_docs",
         "share",
         F.least(
@@ -643,11 +609,10 @@ def corpus_mix_rates(
 def corpus_mix_sample(
     df: DataFrame,
     shares: dict[str, float],
-    group_col: str = "lang",
-    text_col: str = "text",
     rates: DataFrame | None = None,
 ) -> DataFrame:
-    """Apply ``corpus_mix_rates`` (or a precomputed ``rates`` frame —
+    """Apply ``corpus_mix_rates`` per ``lang`` to the ``text`` content
+    hash (or a precomputed ``rates`` frame —
     pass it when the caller also reports the rates, so the group-count
     aggregation runs once): keep each row iff its content-hash
     bucket falls under its group's rate — deterministic (same doc kept
@@ -657,20 +622,17 @@ def corpus_mix_sample(
     filter: the corpus itself is never shuffled. Groups absent from
     ``shares`` are dropped (target weight zero)."""
     if rates is None:
-        rates = corpus_mix_rates(df, shares, group_col)
-    return df.join(
-        F.broadcast(rates.select(group_col, "rate")), group_col
-    ).filter(md5_bucket(text_col, 1_000_000) < F.col("rate") * 1_000_000)
+        rates = corpus_mix_rates(df, shares)
+    return df.join(F.broadcast(rates.select("lang", "rate")), "lang").filter(
+        md5_bucket("text", 1_000_000) < F.col("rate") * 1_000_000
+    )
 
 
 def tfidf_cosine_neighbors(
-    df: DataFrame,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    k: int = 3,
-    max_df_frac: float = 0.1,
+    df: DataFrame, k: int = 3, max_df_frac: float = 0.1
 ) -> DataFrame:
-    """Sparse-vector document similarity ("more like this"): top-k
+    """Sparse-vector similarity of (``doc_id``, ``text``) documents
+    ("more like this"): top-k
     nearest neighbors per document under TF-IDF cosine, computed via an
     INVERTED-INDEX join rather than any all-pairs comparison — the
     sparse complement to the dense-embedding ANN family
@@ -697,7 +659,7 @@ def tfidf_cosine_neighbors(
     with at least one candidate, its ≤k neighbors by descending
     cosine, id-ascending tiebreak.
     """
-    tok = tokens_long(df, id_col, text_col)
+    tok = tokens_long(df)
     # persist the tf aggregate: FIVE consumers derive from it (df
     # counts, weights for norms and both join sides) and without
     # materialization each re-derives the corpus scan + tokenize +
@@ -713,7 +675,7 @@ def tfidf_cosine_neighbors(
     # long-lived sessions that skip that are still bounded because
     # MEMORY_AND_DISK blocks are LRU-evicted under memory pressure —
     # the leak degrades to disk spill, never to OOM.
-    tf = tok.groupBy(id_col, "term").agg(F.count("*").alias("tf")).persist()
+    tf = tok.groupBy("doc_id", "term").agg(F.count("*").alias("tf")).persist()
     dfreq = tf.groupBy("term").agg(F.count("*").alias("df"))
     n_docs = df.count()  # scalar to the driver; literal in the plan
     kept = dfreq.filter(F.col("df") <= int(n_docs * max_df_frac))
@@ -722,13 +684,13 @@ def tfidf_cosine_neighbors(
         / (F.col("df").cast("double") + F.lit(1.0))
     )
     w = tf.join(F.broadcast(kept), "term").select(
-        id_col, "term", (F.col("tf").cast("double") * idf).alias("w")
+        "doc_id", "term", (F.col("tf").cast("double") * idf).alias("w")
     )
-    norms = w.groupBy(id_col).agg(
+    norms = w.groupBy("doc_id").agg(
         F.sqrt(F.sum(F.col("w") * F.col("w"))).alias("norm")
     )
-    a = w.select(F.col(id_col).alias("doc_a"), "term", F.col("w").alias("wa"))
-    b = w.select(F.col(id_col).alias("doc_b"), "term", F.col("w").alias("wb"))
+    a = w.select(F.col("doc_id").alias("doc_a"), "term", F.col("w").alias("wa"))
+    b = w.select(F.col("doc_id").alias("doc_b"), "term", F.col("w").alias("wb"))
     dots = (
         a.join(b, "term")
         .filter(F.col("doc_a") < F.col("doc_b"))
@@ -744,11 +706,11 @@ def tfidf_cosine_neighbors(
     )
     cos = (
         sym.join(
-            norms.select(F.col(id_col).alias("doc_a"), F.col("norm").alias("na")),
+            norms.select(F.col("doc_id").alias("doc_a"), F.col("norm").alias("na")),
             "doc_a",
         )
         .join(
-            norms.select(F.col(id_col).alias("doc_b"), F.col("norm").alias("nb")),
+            norms.select(F.col("doc_id").alias("doc_b"), F.col("norm").alias("nb")),
             "doc_b",
         )
         .select(
@@ -768,11 +730,8 @@ def tfidf_cosine_neighbors(
     )
 
 
-def redact_patterns(
-    text_col: str | Column = "text",
-    patterns: dict[str, str] | None = None,
-) -> Column:
-    """C4-style PII scrub as ONE column expression: each regex family
+def redact_patterns(patterns: dict[str, str] | None = None) -> Column:
+    """C4-style PII scrub of ``text`` as ONE column expression: each regex family
     is replaced by its placeholder tag, applied in deterministic
     (sorted-tag) order so engines and reruns agree byte-for-byte. Pure
     JVM expression — redaction at 100 TB is a scan-side rewrite, no
@@ -781,21 +740,20 @@ def redact_patterns(
 
     Default families: EMAIL/URL/NUM (the standard scrub trio).
     """
-    c = F.col(text_col) if isinstance(text_col, str) else text_col
     if patterns is None:
         patterns = {
             "EMAIL": EMAIL_RE,
             "NUM": DIGIT_RUN_RE,
             "URL": URL_RE,
         }
-    out = c
+    out = F.col("text")
     for tag in sorted(patterns):
         out = F.regexp_replace(out, patterns[tag], f"<{tag}>")
     return out
 
 
-def template_key(col: str | Column = "text") -> Column:
-    """Structural (template-level) fingerprint: md5 of the text after
+def template_key() -> Column:
+    """Structural (template-level) fingerprint: md5 of ``text`` after
     lowercasing, mapping every digit to ``0``, collapsing whitespace
     runs, and trimming. Boilerplate that differs only in numbers, ids,
     timestamps, or spacing (receipts, log lines, templated product
@@ -807,33 +765,12 @@ def template_key(col: str | Column = "text") -> Column:
     ASCII-equivalent regex classes (``[0-9]``, ``\\s``) keep the chain
     reproducible in DuckDB (``regexp_replace(..., 'g')``), so the
     md5 keys are oracle-checkable byte-for-byte."""
-    c = F.col(col) if isinstance(col, str) else col
     return F.md5(
         F.trim(
             F.regexp_replace(
-                F.regexp_replace(F.lower(c), "[0-9]", "0"), "\\s+", " "
+                F.regexp_replace(F.lower(F.col("text")), "[0-9]", "0"), "\\s+", " "
             )
         )
-    )
-
-
-def template_dup_clusters(df: DataFrame) -> DataFrame:
-    """Group (``doc_id``, ``text``) documents by :func:`template_key`;
-    emit one row per
-    template with >1 member: (template_md5, n_docs, keep_id) where
-    ``keep_id`` is the lowest member id (the deterministic keeper, the
-    exact-dedup convention). One keyed shuffle of (32-byte key, id)
-    rows — text never moves."""
-    keyed = df.select(
-        F.col("doc_id"), template_key("text").alias("template_md5")
-    )
-    return (
-        keyed.groupBy("template_md5")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.min("doc_id").alias("keep_id"),
-        )
-        .filter(F.col("n_docs") > 1)
     )
 
 
@@ -856,7 +793,7 @@ def epoch_shard_plan(
     e = F.explode(F.sequence(F.lit(0), F.lit(n_epochs - 1))).alias("epoch")
     fanned = df.select(
         F.col("doc_id"),
-        token_count("text").alias("_ntok"),
+        token_count().alias("_ntok"),
         md5_hash64(F.col("text")).alias("_h64"),
         F.col("text").alias("_t"),
     ).select("*", e)

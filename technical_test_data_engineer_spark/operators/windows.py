@@ -1,5 +1,7 @@
-"""Window operators (SURVEY.md §2.5, W1) — the reference's signature
-pattern, made deterministic.
+"""Window operators (SURVEY.md §2.5): W1, the reference's signature
+pattern made deterministic, and the per-key recurrences (EWMA, Holt)
+that no window frame expresses. Top-k and running sums are plain
+``row_number``/``rowsBetween`` windows, written in the plans directly.
 
 Reference: ``sort_values('numero_niveau', ascending=False)
 .drop_duplicates(key, keep='first')`` — top-1-per-group by pandas stable
@@ -34,30 +36,6 @@ def top1_per_group(
         .filter(F.col("_rn") == 1)
         .drop("_rn")
     )
-
-
-def topk_per_group(
-    df: DataFrame, group_cols: list[str], order_cols: list[Column], k: int
-) -> DataFrame:
-    """Top-k generalization (rank ≤ k), same determinism contract."""
-    w = Window.partitionBy(*group_cols).orderBy(*order_cols)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= k)
-        .drop("_rn")
-    )
-
-
-def running_sum(
-    df: DataFrame, col: str, group_cols: list[str], order_cols: list[Column], alias: str
-) -> DataFrame:
-    """Cumulative frame-spec window (rowsBetween unboundedPreceding)."""
-    w = (
-        Window.partitionBy(*group_cols)
-        .orderBy(*order_cols)
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    return df.withColumn(alias, F.sum(col).over(w))
 
 
 def grouped_ewma(

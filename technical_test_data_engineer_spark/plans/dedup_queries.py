@@ -108,7 +108,7 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ground-truth metric MinHash approximates; int/int division so
     the oracle matches bit-for-bit."""
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 25)
-    sh = docs.select("doc_id", word_shingles("text", 3).alias("sh"))
+    sh = docs.select("doc_id", word_shingles(3).alias("sh"))
     a = sh.select(F.col("doc_id").alias("id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("id_b"), F.col("sh").alias("sh_b"))
     pairs = a.crossJoin(b).filter(F.col("id_a") < F.col("id_b"))
@@ -197,7 +197,7 @@ def simhash_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``doc_simhash_md5`` (driver-green r03), which value-checks the same
     md5-derived 64-bit signature pipeline cell-by-cell."""
     docs = load_table(spark, sf_dir, "documents")
-    return simhash_near_dup_pairs(docs, max_hamming=7).orderBy("id_a", "id_b")
+    return simhash_near_dup_pairs(docs).orderBy("id_a", "id_b")
 
 
 @query("embedding_near_dups_lsh")
@@ -366,7 +366,6 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     from technical_test_data_engineer_spark.operators.text import (
         fingerprint,
         token_count,
-        tokens,
         unique_token_count,
     )
 
@@ -376,10 +375,10 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "source",
         "text",
-        token_count("text").alias("n_tokens"),
+        token_count().alias("n_tokens"),
         (
-            unique_token_count("text").cast("double")
-            / token_count("text")
+            unique_token_count().cast("double")
+            / token_count()
         ).alias("distinct_ratio"),
     )
     quality = scored.filter(
@@ -501,7 +500,7 @@ def dedup_clusters_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     # locally, so without it the ~100k-pair shingle intersections run
     # on a single task (measured 5.4 s single-threaded vs ~1 s spread)
     sh = fan_out(docs).select(
-        "doc_id", word_shingles("text", 3).alias("sh")
+        "doc_id", word_shingles(3).alias("sh")
     ).withColumn("n", F.size("sh"))
     a = sh.select(F.col("doc_id").alias("ia"), F.col("sh").alias("sha"), F.col("n").alias("na"))
     b = sh.select(F.col("doc_id").alias("ib"), F.col("sh").alias("shb"), F.col("n").alias("nb"))
@@ -984,7 +983,7 @@ def ingest_loop_exactly_once(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     cands = stored_candidates(spark, res_t).select("id_a", "id_b")
     shingled = docs.select(
-        "doc_id", word_shingles("text", 3).alias("_sh")
+        "doc_id", word_shingles(3).alias("_sh")
     )
     return _jaccard_verify(cands, shingled, "doc_id", 0.5).orderBy(
         "id_a", "id_b"
@@ -1034,7 +1033,7 @@ def doc_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     from technical_test_data_engineer_spark.operators.text import md5_hash64
 
     docs = load_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 120)
-    packed = simhash_packed("text", hash_fn=md5_hash64)
+    packed = simhash_packed(hash_fn=md5_hash64)
     return (
         docs.withColumn("_p", packed)
         .select(

@@ -88,7 +88,7 @@ def media_frame_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shaped mapInPandas fan-out row-for-row against arithmetic."""
     docs = load_table(spark, sf_dir, "documents")
     media = docs.select("doc_id", fake_media_binary("text").alias("media"))
-    frames = frame_sample(media, every_n=4)
+    frames = frame_sample(media)
     return (
         frames.groupBy("doc_id")
         .agg(
@@ -177,7 +177,7 @@ def media_chunk_checksums(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     return ordered_python_stage(
         media,
-        lambda m: chunk_media(m, chunk_size=256),
+        lambda m: chunk_media(m),
         ["doc_id", "chunk_idx"],
         range_first=False,
     )
@@ -254,7 +254,7 @@ def media_ahash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = docs.withColumn("media", fake_media_binary("text"))
     return ordered_python_stage(
         docs,
-        lambda d: media_ahash(d, "media", "doc_id").select("doc_id", "ahash"),
+        lambda d: media_ahash(d).select("doc_id", "ahash"),
         ["doc_id"],
         range_first=False,
     )

@@ -88,9 +88,7 @@ def prep_orders_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """E2 ``prep_data`` parity: dirty → null-fill → typo repair →
     date parse → dim join → inclusive duration, one lazy plan."""
     dirty = _dirty_orders(spark, sf_dir)
-    repaired = fill_interval_nulls(
-        dirty, "debut_str", "fin_str", "1900-01-01", "2024-12-31"
-    ).select(
+    repaired = fill_interval_nulls(dirty, "debut_str", "fin_str").select(
         "o_orderkey",
         "o_custkey",
         parse_iso_date("debut_str").alias("debut"),
@@ -155,7 +153,7 @@ def active_priority_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_orderdate").cast("date"), (F.col("o_orderkey") % 90).cast("int")
         ).alias("fin"),
     )
-    active = point_in_interval(intervals, dt.date(1997, 6, 15), "debut", "fin")
+    active = point_in_interval(intervals, dt.date(1997, 6, 15))
     top1 = top1_per_group(
         active,
         ["o_custkey"],

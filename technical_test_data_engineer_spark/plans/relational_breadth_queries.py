@@ -4039,7 +4039,7 @@ def copurchase_negative_samples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .persist()
     )
-    n_buckets = adaptive_buckets(nodes.count(), target_bucket=64, floor=16)
+    n_buckets = adaptive_buckets(nodes.count())
     bkt = nodes.select(
         "node", md5_bucket(F.col("node").cast("string"), n_buckets).alias("b")
     )

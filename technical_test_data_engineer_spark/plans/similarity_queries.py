@@ -109,7 +109,7 @@ def _exact_topk_oracle(bound: int | None = None, int_scaled: bool = False) -> st
 def _seeded_planes(n_tables: int = 8, n_planes: int = 3, dim: int = 64):
     """The seeded SRP hyperplanes shared by the Spark LSH queries and
     the generated DuckDB oracle — one definition, two consumers."""
-    return seeded_planes(n_tables, n_planes, dim, seed=42)
+    return seeded_planes(n_tables, n_planes, dim)
 
 
 def srp_sigs_sql(planes_tables, bound: int | None = None) -> str:
@@ -239,7 +239,7 @@ def knn_lsh_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_similarity.py."""
     emb = load_table(spark, sf_dir, "embeddings")
     probes = emb.filter(F.col("vec_id") < N_QUERIES)
-    n_planes = adaptive_n_planes(emb.count(), target_bucket=64)
+    n_planes = adaptive_n_planes(emb.count())
     out = lsh_topk(emb, probes, seeded_planes(8, n_planes, 64), k=TOP_K)
     return out.orderBy("query_id", "rank").withColumn(
         "rank", F.col("rank").cast("int")
@@ -1058,7 +1058,7 @@ def hybrid_rrf_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     dense = brute_force_topk(emb, qvecs, k=5).select(
         "query_id", F.col("vec_id").alias("cand_id"), "rank"
     )
-    out = rrf_fuse([sparse, dense], k0=60, k=5)
+    out = rrf_fuse([sparse, dense], k=5)
     return out.select(
         "query_id",
         "cand_id",
@@ -1181,7 +1181,7 @@ def embedding_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     emb = load_table(spark, sf_dir, "embeddings")
     return (
-        covariance_matrix(emb, "embedding", "vec_id")
+        covariance_matrix(emb)
         .select(
             F.col("i").cast("int").alias("i"),
             F.col("j").cast("int").alias("j"),
@@ -1215,7 +1215,7 @@ def embedding_pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    out = _long_form(pca_project(emb, "embedding", "vec_id", k=8), "value")
+    out = _long_form(pca_project(emb, k=8), "value")
     return out.withColumn("value", F.round("value", 6))
 
 

@@ -68,7 +68,7 @@ def events_sliding_1h_15m(spark: SparkSession, sf_dir: str) -> DataFrame:
     to window/slide = 4 overlapping windows; the oracle reproduces that
     by exploding k ∈ 0..3 slide offsets per event."""
     events = load_table(spark, sf_dir, "events")
-    return sliding_rollup(events, window="1 hour", slide="15 minutes").orderBy(
+    return sliding_rollup(events).orderBy(
         "window_start", "event_type"
     )
 
@@ -106,7 +106,7 @@ def events_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     falls strictly inside last_ts + gap; the oracle reproduces that with
     LAG-based gap detection + cumulative session ids."""
     events = load_table(spark, sf_dir, "events")
-    return session_rollup(events, gap="30 minutes").orderBy(
+    return session_rollup(events).orderBy(
         "user_id", "session_start"
     )
 
@@ -310,7 +310,7 @@ def view_click_within_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    return view_click_attribution_join(events, within="30 minutes").orderBy(
+    return view_click_attribution_join(events).orderBy(
         "user_id", "view_ts", "click_ts"
     )
 
@@ -730,7 +730,7 @@ def view_click_full_outer_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     events = load_table(spark, sf_dir, "events")
-    return attribution_full_outer(events, within="30 minutes").orderBy(
+    return attribution_full_outer(events).orderBy(
         "user_id", "view_ts", "click_ts"
     )
 
@@ -1643,7 +1643,7 @@ def source_mixture_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    rollup = source_mixture_rollup(docs, batch_size=200)
+    rollup = source_mixture_rollup(docs)
     w_batch = Window.partitionBy("batch_id")
     w_source = Window.partitionBy("source")
     w_all = Window.partitionBy()

@@ -48,8 +48,8 @@ def doc_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         "lang",
-        TX.token_count("text").alias("n_tokens"),
-        TX.unique_token_count("text").alias("n_unique"),
+        TX.token_count().alias("n_tokens"),
+        TX.unique_token_count().alias("n_unique"),
         "n_chars",
     ).orderBy("doc_id")
 
@@ -69,7 +69,7 @@ def shared_tfidf_neighbors(spark, sf_dir):
         spark,
         f"tfidf_nb_k3_df02_{sf_dir}",
         lambda: TX.tfidf_cosine_neighbors(
-            _docs(spark, sf_dir), "doc_id", "text", k=3, max_df_frac=0.2
+            _docs(spark, sf_dir), k=3, max_df_frac=0.2
         ),
     )
 
@@ -94,7 +94,7 @@ def doc_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Quality scoring: length / stopword / distinct ratios. All ratios
     are exact-int ÷ exact-int in double — bit-stable across engines."""
     docs = _docs(spark, sf_dir)
-    return docs.select("doc_id", *TX.quality_columns("text")).orderBy("doc_id")
+    return docs.select("doc_id", *TX.quality_columns()).orderBy("doc_id")
 
 
 def _lang_case_sql() -> str:
@@ -126,7 +126,7 @@ def doc_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID: marker-vocabulary hit scoring with an
     alphabetical argmax tiebreak (operators/text.predicted_language)."""
     docs = _docs(spark, sf_dir)
-    toks = TX.tokens("text")
+    toks = TX.tokens()
     return docs.select(
         "doc_id",
         F.col("lang").alias("labeled_lang"),
@@ -225,7 +225,7 @@ def doc_winnow_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     (driver-green r03), the same winnowing recurrence over the house
     md5-derived 64-bit hash."""
     docs = _docs(spark, sf_dir)
-    fp = TX.winnow_fingerprints("text", k=5, w=4)
+    fp = TX.winnow_fingerprints()
     # serialize the fingerprint set to a scalar string: the driver's
     # canonicalizer sorts result frames with pandas, which cannot
     # factorize list cells (round-1 harness crash) — array form stays
@@ -263,7 +263,7 @@ def doc_token_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     overlap) per document, one row per chunk — the pre-embedding
     segmentation step, entirely JVM expressions + explode."""
     docs = _docs(spark, sf_dir)
-    chunks = TX.token_chunks("text", chunk_size=100, stride=80)
+    chunks = TX.token_chunks(chunk_size=100, stride=80)
     out = docs.select(
         "doc_id", F.posexplode(chunks).alias("pos", "chunk")
     ).select(
@@ -445,10 +445,10 @@ def doc_bpe_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     dropped) — the ratio between the two is the standard
     chars-per-token sanity signal for corpus sizing."""
     docs = _docs(spark, sf_dir)
-    bpe = TX.bpe_ish_tokens("text")
+    bpe = TX.bpe_ish_tokens()
     return docs.select(
         "doc_id",
-        TX.token_count("text").alias("ws_tokens"),
+        TX.token_count().alias("ws_tokens"),
         F.size(bpe).cast("bigint").alias("bpe_ish_tokens"),
         F.size(F.array_distinct(bpe)).cast("bigint").alias("bpe_ish_unique"),
     ).orderBy("doc_id")
@@ -533,7 +533,7 @@ def doc_repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         docs.select(
             "doc_id",
-            bind(TX.token_ngrams("text", 2), _stats).alias("_s"),
+            bind(TX.token_ngrams(2), _stats).alias("_s"),
         )
         .select(
             "doc_id", "_s.n_bigrams", "_s.top_bigram_frac",
@@ -568,7 +568,7 @@ def doc_charclass_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r15: ONE let-bound charclass struct per row (split ran 7×/row,
     # each regex filter 2×, in the per-column form)
     return (
-        docs.select("doc_id", TX.charclass_struct("text").alias("_c"))
+        docs.select("doc_id", TX.charclass_struct().alias("_c"))
         .select("doc_id", "_c.*")
         .orderBy("doc_id")
     )
@@ -641,7 +641,7 @@ def doc_gopher_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus (43 short docs, 11 low-avg-len, ~15% low-diversity at
     sf0.01)."""
     docs = _docs(spark, sf_dir)
-    toks = TX.tokens("text")
+    toks = TX.tokens()
     n_tok = F.size(toks)
     avg_len = F.length("text").cast("double") / n_tok
     distinct_ratio = F.size(F.array_distinct(toks)).cast("double") / n_tok
@@ -806,7 +806,7 @@ def doc_winnow_fingerprints_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     production query keeps the fast hash. One row per (doc,
     fingerprint) — exploded, no array columns."""
     docs = _docs(spark, sf_dir).filter(F.col("doc_id") < 120)
-    fp = TX.winnow_fingerprints("text", k=5, w=4, hash_fn=TX.md5_hash64)
+    fp = TX.winnow_fingerprints(hash_fn=TX.md5_hash64)
     return (
         docs.select("doc_id", F.explode(fp).alias("fingerprint"))
         .orderBy("doc_id", "fingerprint")
@@ -870,7 +870,7 @@ def dsir_en_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale)."""
     docs = load_table(spark, sf_dir, "documents")
     weights = TX.dsir_importance_weights(
-        docs, n_buckets=1024, target_predicate=F.col("lang") == "en"
+        docs, target_predicate=F.col("lang") == "en"
     )
     return weights.orderBy(F.desc("weight"), "doc_id").limit(150)
 
@@ -930,7 +930,7 @@ def doc_repeated_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeated set and the gaps-and-islands merge; positions are 1-based
     inclusive in both engines."""
     docs = load_table(spark, sf_dir, "documents")
-    spans = TX.repeated_kgram_spans(docs, k=5, min_count=2)
+    spans = TX.repeated_kgram_spans(docs, k=5)
     return spans.select(
         "doc_id",
         F.col("span_start").cast("long").alias("span_start"),
@@ -1007,7 +1007,7 @@ def bpe_merge_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
     are broken by pair text, keeping the LIMIT deterministic."""
     docs = _docs(spark, sf_dir)
     return (
-        TX.bpe_merge_pair_counts(docs, "text")
+        TX.bpe_merge_pair_counts(docs)
         .orderBy(F.desc("n_occurrences"), "pair")
         .limit(50)
     )
@@ -1061,8 +1061,8 @@ def corpus_mix_rebalance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # otherwise re-runs the group-count scan. Caller owns cleanup
     # (clearCache per query in bench/verify; LRU-evictable otherwise)
     # — see the lifetime-contract note in tfidf_cosine_neighbors.
-    rates = TX.corpus_mix_rates(docs, _MIX_SHARES, "lang").persist()
-    kept = TX.corpus_mix_sample(docs, _MIX_SHARES, "lang", "text", rates=rates)
+    rates = TX.corpus_mix_rates(docs, _MIX_SHARES).persist()
+    kept = TX.corpus_mix_sample(docs, _MIX_SHARES, rates=rates)
     kept_counts = kept.groupBy("lang").agg(F.count("*").alias("n_kept"))
     return (
         rates.join(kept_counts, "lang", "left")
@@ -1189,7 +1189,7 @@ def doc_pii_redacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         n_red.alias("n_redactions"),
-        F.md5(TX.redact_patterns("text", pats)).alias("redacted_fp"),
+        F.md5(TX.redact_patterns(pats)).alias("redacted_fp"),
     ).orderBy("doc_id")
 
 
@@ -1247,7 +1247,7 @@ def doc_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = _docs(spark, sf_dir)
     tok = docs.select(
-        "doc_id", F.explode(TX.tokens("text")).alias("term")
+        "doc_id", F.explode(TX.tokens()).alias("term")
     )
     w = Window.orderBy(F.desc("cnt"), F.asc("term"))
     vocab = (
@@ -1272,7 +1272,7 @@ def doc_token_ids(spark: SparkSession, sf_dir: str) -> DataFrame:
             t, lambda term: F.coalesce(F.try_element_at(vmap, term), F.lit(0))
         )
 
-    ids = bind(TX.tokens("text"), _ids)
+    ids = bind(TX.tokens(), _ids)
     return (
         docs.select(
             "doc_id",
@@ -1341,7 +1341,7 @@ def corpus_stats_card(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     per_lang = docs.groupBy("lang").agg(
         F.count("*").alias("n"),
-        F.sum(F.size(TX.tokens("text"))).alias("toks"),
+        F.sum(F.size(TX.tokens())).alias("toks"),
     )
     card = per_lang.agg(
         F.sum("n").alias("n_docs"),
@@ -1425,7 +1425,7 @@ def corpus_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     tok = docs.select(
         (F.col("doc_id") < 250).alias("is_old"),
-        F.explode(TX.tokens("text")).alias("term"),
+        F.explode(TX.tokens()).alias("term"),
     )
     from pyspark.sql.window import Window
 
@@ -1499,7 +1499,7 @@ def doc_novelty_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     tg = (
         docs.select(
-            "doc_id", F.explode(TX.token_ngrams("text", 3)).alias("gram")
+            "doc_id", F.explode(TX.token_ngrams(3)).alias("gram")
         )
         .distinct()
     )
@@ -1623,16 +1623,14 @@ def doc_template_keys(spark: SparkSession, sf_dir: str) -> DataFrame:
     normalization chain (regex + lower + trim semantics) agrees across
     engines; the dup flag comes from a window count on the key (this
     synthetic fixture has no digit-varying templates, so flags are
-    false here — ``template_dup_clusters``'s grouping is proven by the
-    planted-duplicate pytest in tests/test_text_extra.py). Scan-side
+    false here — tests/test_text_extra.py shows texts that differ in
+    digits, case and spacing sharing one key). Scan-side
     expressions + one window on the 32-byte key; text never shuffles
     beyond the key."""
     docs = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("template_md5")
     return (
-        docs.select(
-            "doc_id", TX.template_key("text").alias("template_md5")
-        )
+        docs.select("doc_id", TX.template_key().alias("template_md5"))
         .withColumn("is_template_dup", F.count("*").over(w) > 1)
         .orderBy("doc_id")
     )
@@ -1723,8 +1721,8 @@ def source_score_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "source",
         (
-            TX.unique_token_count("text").cast("double")
-            / TX.token_count("text")
+            TX.unique_token_count().cast("double")
+            / TX.token_count()
         ).alias("raw_score"),
     )
     w = Window.partitionBy("source").orderBy("raw_score")
@@ -1791,7 +1789,7 @@ def eval_ngram_contamination(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         (md5_bucket("text") < 90).alias("is_train"),
         F.explode(
-            F.array_distinct(TX.token_ngrams("text", _NGRAM_N))
+            F.array_distinct(TX.token_ngrams(_NGRAM_N))
         ).alias("gram"),
     ).select("doc_id", "is_train", F.md5("gram").alias("gh"))
     # r15 (guide §2.4): the two-persist shape (df-cap agg → broadcast
@@ -1881,7 +1879,7 @@ def vocab_growth_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _docs(spark, sf_dir)
     t = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(TX.tokens("text"))).alias("term"),
+        F.explode(F.array_distinct(TX.tokens())).alias("term"),
     )
     first = t.groupBy("term").agg(F.min("doc_id").alias("doc_id"))
     n = first.groupBy("doc_id").agg(F.count("*").alias("n_new"))
@@ -1947,7 +1945,7 @@ def source_loo_impact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (ANSI-safe at every scale). Deltas rounded to 6 decimals for
     engine-portable hashing."""
     docs = _docs(spark, sf_dir)
-    t = docs.select("source", F.size(TX.tokens("text")).alias("n_tokens"))
+    t = docs.select("source", F.size(TX.tokens()).alias("n_tokens"))
     s = t.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         F.sum("n_tokens").cast("bigint").alias("sum_tokens"),
@@ -2024,7 +2022,7 @@ def source_token_js_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark import StorageLevel
 
     docs = _docs(spark, sf_dir)
-    tok = docs.select("source", F.explode(TX.tokens("text")).alias("term"))
+    tok = docs.select("source", F.explode(TX.tokens()).alias("term"))
     # persist: st feeds the per-source totals, the corpus term table,
     # AND the grid's left-join side — unpersisted, each consumer
     # replays the tokenize+count lineage (4 document scans; the ledger,
@@ -2138,7 +2136,7 @@ def doc_neyman_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     t = docs.select(
         "doc_id",
         "lang",
-        F.size(TX.tokens("text")).cast("bigint").alias("x"),
+        F.size(TX.tokens()).cast("bigint").alias("x"),
         TX.md5_hash64(F.col("text")).alias("hkey"),
     ).persist(StorageLevel.MEMORY_AND_DISK)
     h = t.groupBy("lang").agg(
@@ -2220,7 +2218,7 @@ def vocab_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     DECIMAL moments; round-6."""
     docs = _docs(spark, sf_dir)
     tf = (
-        docs.select(F.explode(TX.tokens("text")).alias("term"))
+        docs.select(F.explode(TX.tokens()).alias("term"))
         .groupBy("term")
         .agg(F.count("*").alias("c"))
     )
@@ -2299,7 +2297,7 @@ def doc_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     # re-ran the token split 3×, the sentence split+filter 2× and the
     # syllable regex 2× per row), then derive every output from ONE
     # counts struct expanded via select
-    words = F.size(TX.tokens("text"))
+    words = F.size(TX.tokens())
     sentences = F.greatest(
         F.size(
             F.filter(
@@ -2386,7 +2384,7 @@ def source_temperature_mixing(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     s = docs.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
-        F.sum(TX.token_count("text")).cast("bigint").alias("n_tokens"),
+        F.sum(TX.token_count()).cast("bigint").alias("n_tokens"),
     )
     # persisted: the source-sized weight frame feeds the normalizer agg
     # and the final select — one documents scan total (tests/PLAN_SHAPES.json)
@@ -2488,7 +2486,7 @@ def source_doremi_mixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-agg alternative measured SLOWER — see doc_unigram_logprob.)
     Same per-occurrence decimal sum; oracle unchanged."""
     docs = _docs(spark, sf_dir)
-    tok = docs.select("source", F.explode(TX.tokens("text")).alias("term"))
+    tok = docs.select("source", F.explode(TX.tokens()).alias("term"))
     counts = (
         tok.groupBy("term")
         .agg(F.count("*").alias("cnt"))
@@ -2592,7 +2590,7 @@ def source_best_of_n_yield(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplies rows by |grid| only. Group maxima round to 9dp into
     DECIMAL before the mean so the aggregate is order-free."""
     docs = _docs(spark, sf_dir)
-    toks = TX.tokens("text")
+    toks = TX.tokens()
     # r15: let-bind the token array (the ratio referenced it twice,
     # running split() twice per row)
     reward = bind(
@@ -2859,7 +2857,7 @@ def vocab_coverage_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     volume."""
     docs = load_table(spark, sf_dir, "documents")
     tf = (
-        docs.select(F.explode(TX.tokens("text")).alias("term"))
+        docs.select(F.explode(TX.tokens()).alias("term"))
         .groupBy("term")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
@@ -2967,7 +2965,7 @@ def doc_length_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: feeds the 1-row moment reduce AND the bin-assignment pass
     l = docs.select(
         F.round(
-            F.log(F.size(TX.tokens("text")).cast("double")), 12
+            F.log(F.size(TX.tokens()).cast("double")), 12
         ).alias("ll")
     ).persist()
     m = l.agg(
@@ -3062,7 +3060,7 @@ def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     so both engines emit identical doubles."""
     docs = load_table(spark, sf_dir, "documents")
     td = (
-        docs.select("doc_id", F.explode(TX.tokens("text")).alias("term"))
+        docs.select("doc_id", F.explode(TX.tokens()).alias("term"))
         .groupBy("doc_id", "term")
         .agg(F.count("*").cast("bigint").alias("c"))
     )
@@ -3145,7 +3143,7 @@ def quality_filter_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after is exact integer ratios, so both engines emit
     identical doubles."""
     docs = _docs(spark, sf_dir)
-    toks = TX.tokens("text")
+    toks = TX.tokens()
     n_tok = F.size(toks)
     avg_len = F.length("text").cast("double") / n_tok
     dr = F.size(F.array_distinct(toks)).cast("double") / n_tok
@@ -3218,8 +3216,8 @@ def doc_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     per_doc = docs.select(
         "lang",
-        F.size(TX.tokens("text")).alias("ws"),
-        F.size(TX.bpe_ish_tokens("text")).alias("bpe"),
+        F.size(TX.tokens()).alias("ws"),
+        F.size(TX.bpe_ish_tokens()).alias("bpe"),
     )
     return (
         per_doc.groupBy("lang")
@@ -3397,7 +3395,7 @@ def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-class and predicted-marginal frames join on the bounded
     language domain. Integer counts end-to-end."""
     docs = _docs(spark, sf_dir)
-    toks = TX.tokens("text")
+    toks = TX.tokens()
     pred = docs.select(
         F.col("lang").alias("actual"),
         TX.predicted_language(toks).alias("predicted"),
@@ -3580,7 +3578,7 @@ def source_vocab_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted: feeds the per-source sizes AND both sides of the
     # term-keyed intersection self-join
     st = (
-        docs.select("source", F.explode(TX.tokens("text")).alias("term"))
+        docs.select("source", F.explode(TX.tokens()).alias("term"))
         .distinct()
         .persist()
     )
@@ -3711,7 +3709,7 @@ def doc_gopher_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         return F.when(n >= 2, dup).otherwise(F.lit(0.0))
 
     per_doc = docs.select(
-        "source", bind(TX.tokens("text"), _dup_frac).alias("dup_frac")
+        "source", bind(TX.tokens(), _dup_frac).alias("dup_frac")
     )
     flagged = F.count(F.when(F.col("dup_frac") > 0.2, 1))
     return (
@@ -3778,7 +3776,7 @@ def source_cross_duplication(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-source set sizes."""
     docs = load_table(spark, sf_dir, "documents")
     fp = docs.select(
-        "source", TX.head_fingerprint("text").alias("f")
+        "source", TX.head_fingerprint().alias("f")
     ).distinct()
     fp = fp.persist()  # feeds the per-source sizes AND both join sides
     sz = fp.groupBy("source").agg(F.count("*").cast("bigint").alias("n_fps"))
@@ -3846,7 +3844,7 @@ def dedup_cluster_size_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ k·n_clusters over that same rollup (a window on the
     constant-size frame — documents scans exactly once)."""
     docs = load_table(spark, sf_dir, "documents")
-    cl = docs.groupBy(TX.head_fingerprint("text").alias("f")).agg(
+    cl = docs.groupBy(TX.head_fingerprint().alias("f")).agg(
         F.count("*").cast("bigint").alias("k")
     )
     return (

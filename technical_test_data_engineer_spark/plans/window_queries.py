@@ -835,7 +835,7 @@ def orders_cdc_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.when(k % 6 == 1, F.lit("D")).otherwise(F.lit("U")).alias("op"),
     )
     merged = apply_changelog(
-        base, v1.unionByName(v2), ["o_orderkey"], "seq", "op"
+        base, v1.unionByName(v2), ["o_orderkey"], "seq"
     )
     return merged.orderBy("o_orderkey")
 

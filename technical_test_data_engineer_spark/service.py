@@ -216,7 +216,7 @@ class QueryService:
         where a plain min would skip the NULLs. Memoized for the last
         ``day``."""
         if self._day_groups is None or self._day_groups[0] != day:
-            active = point_in_interval(self.prepare(), day, "debut", "fin")
+            active = point_in_interval(self.prepare(), day)
             p = F.col("o_orderpriority")
             top = F.min(F.struct(p.isNotNull().alias("known"), p.alias("p")))
             # n_name rides along: a customer belongs to one nation

@@ -117,7 +117,6 @@ def apply_changelog(
     changes: DataFrame,
     key_cols: list[str],
     seq_col: str,
-    op_col: str = "op",
 ) -> DataFrame:
     """CDC apply: collapse a MULTI-version changelog onto a base
     snapshot — the Debezium/Delta-CDF consumption pattern
@@ -126,7 +125,7 @@ def apply_changelog(
 
     ``changes`` = base schema + ``seq_col`` (per-key version order,
     must be unique per key — ties would make the survivor
-    nondeterministic) + ``op_col`` ('U' upsert / 'D' delete). Per key
+    nondeterministic) + ``op`` ('U' upsert / 'D' delete). Per key
     the HIGHEST seq wins: 'U' replaces-or-inserts the row, 'D' removes
     it (a delete of a never-seen key is a no-op, per CDC convention).
 
@@ -141,7 +140,7 @@ def apply_changelog(
     )
 
     data_cols = base.columns
-    extra = [c for c in (seq_col, op_col) if c not in changes.columns]
+    extra = [c for c in (seq_col, "op") if c not in changes.columns]
     if extra:
         raise ValueError(f"changelog missing columns: {extra}")
     # Validate op values BEFORE applying. Without this gate an unknown
@@ -150,17 +149,17 @@ def apply_changelog(
     # implicit delete. Fail loudly instead: CDC feeds with bad op codes
     # are corrupt and must not vanish data without error.
     bad = changes.filter(
-        F.col(op_col).isNull() | ~F.col(op_col).isin("U", "D")
+        F.col("op").isNull() | ~F.col("op").isin("U", "D")
     ).limit(1)
     bad_rows = collect_bounded(bad, 1, "apply_changelog bad-op probe").to_pylist()
     if bad_rows:
         raise ValueError(
-            f"apply_changelog: unknown {op_col!r} value "
-            f"{bad_rows[0][op_col]!r} in changelog (expected 'U'/'D')"
+            f"apply_changelog: unknown 'op' value "
+            f"{bad_rows[0]['op']!r} in changelog (expected 'U'/'D')"
         )
     latest = top1_per_group(changes, key_cols, [F.desc(seq_col)])
     surviving = base.join(latest.select(*key_cols), key_cols, "left_anti")
-    upserts = latest.filter(F.col(op_col) != "D").select(*data_cols)
+    upserts = latest.filter(F.col("op") != "D").select(*data_cols)
     return surviving.select(*data_cols).unionByName(upserts)
 
 

@@ -193,10 +193,9 @@ def write_zordered(
     df: DataFrame,
     path: str,
     zorder_cols: list[str],
-    n_files: int = 16,
 ) -> None:
     """Z-order clustered rewrite: range-partition + sort rows by their
-    Morton value, drop the helper column, write ``n_files`` parquet
+    Morton value, drop the helper column, write 16 parquet
     files. The data-SKIPPING layout for multi-dimensional predicates:
     after this, every file's footer min/max on EACH zorder column spans
     only a narrow slice, so predicate pushdown prunes most row groups
@@ -207,7 +206,7 @@ def write_zordered(
     the rewrite, amortized over every subsequent scan."""
     zdf = zorder_value(df, zorder_cols)
     (
-        zdf.repartitionByRange(n_files, "_z")
+        zdf.repartitionByRange(16, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
         .write.mode("overwrite")

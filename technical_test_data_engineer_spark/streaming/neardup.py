@@ -48,7 +48,6 @@ from technical_test_data_engineer_spark.operators.dedup import (
     BANDS,
     DEFAULT_HOT_BUCKET_CAP,
     NUM_HASHES,
-    SEED,
     SHINGLE_N,
     minhash_band_rows,
     minhash_signature,
@@ -100,7 +99,7 @@ def stream_minhash_candidates(
     loops timeout-cleanup batches indefinitely once any group arms a
     processing-time timeout (observed on Spark 4.1; the bounded-backfill
     trigger has no meaningful processing-time horizon anyway)."""
-    sig = minhash_signature(word_shingles("text", SHINGLE_N), NUM_HASHES, SEED)
+    sig = minhash_signature(word_shingles(SHINGLE_N))
     banded = minhash_band_rows(
         docs.select("doc_id", "text"), "doc_id", sig, NUM_HASHES, BANDS
     )

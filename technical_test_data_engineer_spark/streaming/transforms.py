@@ -51,20 +51,15 @@ def tumbling_rollup(
     )
 
 
-def sliding_rollup(
-    df: DataFrame,
-    window: str = "1 hour",
-    slide: str = "15 minutes",
-    watermark: str | None = None,
-) -> DataFrame:
+def sliding_rollup(df: DataFrame, watermark: str | None = None) -> DataFrame:
     """Sliding event-time window over ``ts``: count + exact sum of
-    ``value`` per (window, ``event_type``) — each event lands in
-    window/slide overlapping windows; Spark expands them scan-side (no
-    UDTF)."""
+    ``value`` per (1-hour window, ``event_type``), sliding every 15
+    minutes — each event lands in four overlapping windows; Spark
+    expands them scan-side (no UDTF)."""
     if watermark:
         df = df.withWatermark("ts", watermark)
     return df.groupBy(
-        F.window("ts", window, slide).alias("win"), F.col("event_type")
+        F.window("ts", "1 hour", "15 minutes").alias("win"), F.col("event_type")
     ).agg(
         F.count("*").alias("n_events"),
         exact_sum(F.col("value"), "total_value"),
@@ -76,21 +71,17 @@ def sliding_rollup(
     )
 
 
-def session_rollup(
-    df: DataFrame,
-    gap: str = "30 minutes",
-    watermark: str | None = None,
-) -> DataFrame:
+def session_rollup(df: DataFrame, watermark: str | None = None) -> DataFrame:
     """Session windows over ``ts`` (count + exact sum of ``value``):
     events for one ``user_id`` belong to one session while
-    consecutive gaps stay < ``gap``; a gap ≥ ``gap`` starts a new
+    consecutive gaps stay under 30 minutes; a longer gap starts a new
     session. ``session_window``'s end is last_event + gap, so we emit
     the start plus aggregates (the stable, engine-independent part).
     """
     if watermark:
         df = df.withWatermark("ts", watermark)
     return df.groupBy(
-        F.session_window("ts", gap).alias("win"), F.col("user_id")
+        F.session_window("ts", "30 minutes").alias("win"), F.col("user_id")
     ).agg(
         F.count("*").alias("n_events"),
         exact_sum(F.col("value"), "total_value"),
@@ -122,16 +113,14 @@ def stream_exact_dedup(
 
 
 def view_click_attribution_join(
-    events: DataFrame,
-    within: str = "30 minutes",
-    watermark: str | None = None,
+    events: DataFrame, watermark: str | None = None
 ) -> DataFrame:
     """Stream-stream interval join (batch self-join twin): every
     (view, click) pair for one ``user_id`` where the click lands in
-    (view_ts, view_ts + ``within``]. The canonical Structured Streaming
+    (view_ts, view_ts + 30 minutes]. The canonical Structured Streaming
     stream-stream join shape: BOTH sides watermarked and the join
     condition time-bounded, so the state store retains only rows within
-    watermark + ``within`` — without the time bound, stream-stream join
+    watermark + 30 minutes — without the time bound, stream-stream join
     state grows forever.
 
     On batch frames the watermark is a no-op and the same plan is a
@@ -152,7 +141,7 @@ def view_click_attribution_join(
     cond = (
         (F.col("user_id") == F.col("_c_user"))
         & (F.col("click_ts") > F.col("view_ts"))
-        & (F.col("click_ts") <= F.col("view_ts") + F.expr(f"interval {within}"))
+        & (F.col("click_ts") <= F.col("view_ts") + F.expr("interval 30 minutes"))
     )
     return views.join(clicks, cond, "inner").select(
         "user_id", "view_ts", "click_ts"
@@ -196,13 +185,11 @@ def unconverted_views(
 
 
 def attribution_full_outer(
-    events: DataFrame,
-    within: str = "30 minutes",
-    watermark: str | None = None,
+    events: DataFrame, watermark: str | None = None
 ) -> DataFrame:
     """The COMPLETE attribution picture in one relation — stream-stream
     FULL OUTER interval join: matched (view, click) pairs, views with
-    no click in (view_ts, view_ts + ``within``] (click side NULL), and
+    no click in (view_ts, view_ts + 30 minutes] (click side NULL), and
     clicks with no preceding view in the window (view side NULL).
     Completes the join family next to the inner
     (:func:`view_click_attribution_join`) and left-outer
@@ -227,7 +214,7 @@ def attribution_full_outer(
     cond = (
         (F.col("_v_user") == F.col("_c_user"))
         & (F.col("click_ts") > F.col("view_ts"))
-        & (F.col("click_ts") <= F.col("view_ts") + F.expr(f"interval {within}"))
+        & (F.col("click_ts") <= F.col("view_ts") + F.expr("interval 30 minutes"))
     )
     return views.join(clicks, cond, "full_outer").select(
         F.coalesce(F.col("_v_user"), F.col("_c_user")).alias("user_id"),
@@ -236,15 +223,12 @@ def attribution_full_outer(
     )
 
 
-def source_mixture_rollup(
-    docs: DataFrame,
-    batch_size: int = 200,
-) -> DataFrame:
+def source_mixture_rollup(docs: DataFrame) -> DataFrame:
     """Per-ingest-batch source mixture: (batch_id, source) → doc count +
     whitespace-token count. The shared kernel behind the batch
     ``source_mixture_drift`` monitor and its streaming twin — documents
     carry no event time, so the arrival axis is the ingest order proxy
-    ``doc_id div batch_size`` (exactly the micro-batch boundary a file
+    ``doc_id div 200`` (exactly the micro-batch boundary a file
     stream over doc_id-ordered shards sees).
 
     Streaming-safe by construction: one projection + one grouped
@@ -256,7 +240,7 @@ def source_mixture_rollup(
     """
     return (
         docs.select(
-            F.floor(F.col("doc_id") / batch_size)
+            F.floor(F.col("doc_id") / 200)
             .cast("bigint")
             .alias("batch_id"),
             F.col("source").alias("source"),

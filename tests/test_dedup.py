@@ -35,7 +35,7 @@ def test_exact_dedup_keeps_lowest_id(spark):
 
 def test_shingles_and_jaccard(spark):
     df = spark.createDataFrame([("a b c d",)], "text string")
-    sh = df.select(word_shingles("text", 3).alias("s")).collect()[0].s
+    sh = df.select(word_shingles(3).alias("s")).collect()[0].s
     assert sorted(sh) == ["a b c", "b c d"]
     df2 = spark.createDataFrame([(["x", "y"], ["y", "z"])], "a array<string>, b array<string>")
     j = df2.select(jaccard(F.col("a"), F.col("b")).alias("j")).collect()[0].j
@@ -78,7 +78,7 @@ def test_minhash_candidates_persist_for_multi_consumer(spark):
 
 def test_simhash_planted_near_dup(spark):
     # planted pair measures Hamming 7; 8 bands guarantee candidates ≤ 7
-    pairs = simhash_near_dup_pairs(_docs(spark), max_hamming=7)
+    pairs = simhash_near_dup_pairs(_docs(spark))
     got = {(r.id_a, r.id_b): r.hamming for r in pairs.collect()}
     assert got.get((1, 4)) == 0     # identical text → identical simhash
     assert got.get((1, 2)) == 7     # near-dup within hamming budget
@@ -153,24 +153,11 @@ def test_minhash_hot_bucket_cap_none_keeps_identical_pairs(spark):
     assert (0, 1) in got and (2000, 2001) in got
 
 
-def test_hot_bucket_report_lists_dropped_buckets(spark):
-    from technical_test_data_engineer_spark.operators.dedup import (
-        _minhash_base_and_bands,
-        hot_bucket_report,
-    )
-
-    _, banded = _minhash_base_and_bands(_hot_corpus(spark), False)
-    hot = hot_bucket_report(banded, ["_band", "_bh"], cap=50).collect()
-    # all 8 bands of the identical-100 group are hot, population 100
-    assert len(hot) == 8 and all(r.bucket_n == 100 for r in hot)
-
-
 def test_simhash_hot_bucket_cap(spark):
     # identical docs → identical simhash → every band bucket holds all
     # 100; the cap suppresses them while the unrelated planted pair
     # (distinct band values) still verifies
-    pairs = simhash_near_dup_pairs(_hot_corpus(spark), max_hamming=7,
-                                   hot_bucket_cap=50)
+    pairs = simhash_near_dup_pairs(_hot_corpus(spark), hot_bucket_cap=50)
     got = {(r.id_a, r.id_b) for r in pairs.collect()}
     assert not any(a < 100 and b < 100 for a, b in got), got
     assert (2000, 2001) in got

@@ -15,15 +15,6 @@ def test_inner_join_drops_orphans(spark):
     assert [r.id_zone for r in out.collect()] == [1]
 
 
-def test_left_join_differing_keys(spark):
-    deps = spark.createDataFrame([("75",), ("13",)], "code string")
-    alerts = spark.createDataFrame([("75", 4)], "code_departement string, niveau int")
-    out = J.left_join_differing_keys(deps, alerts, "code", "code_departement")
-    got = {r.code: r.niveau for r in out.collect()}
-    assert got == {"75": 4, "13": None}
-    assert "code_departement" not in out.columns
-
-
 def test_semi_anti(spark):
     facts = spark.createDataFrame([(1,), (2,), (3,)], "k long")
     dim = spark.createDataFrame([(1,), (3,)], "k long")

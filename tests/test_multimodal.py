@@ -8,12 +8,9 @@ from pyspark.sql import types as T
 
 from technical_test_data_engineer_spark.operators.multimodal import (
     decode_media_meta,
-    decode_image_real,
     fake_media_binary,
     frame_sample,
 )
-
-import pytest
 
 
 def _media_df(spark, texts):
@@ -71,49 +68,12 @@ def test_frame_sample_fanout(spark):
     each slice len//n bytes."""
     text = "x" * 47  # payload 47 → n_frames 0 % ... = 47%24+1 = 24
     df = _media_df(spark, [text])
-    rows = frame_sample(df, every_n=4).collect()
+    rows = frame_sample(df).collect()
     n_frames = 47 % 24 + 1  # 24
     assert len(rows) == (n_frames + 3) // 4
     assert sorted(r["frame_idx"] for r in rows) == list(range(0, n_frames, 4))
     step = 47 // n_frames
     assert all(len(r["frame_bytes"]) == step for r in rows)
-
-
-def _pillow():
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(_pillow(), reason="Pillow installed — real path active")
-def test_decode_image_real_raises_without_pillow():
-    with pytest.raises(NotImplementedError):
-        decode_image_real(b"\x89PNG")
-
-
-@pytest.mark.skipif(not _pillow(), reason="Pillow not installed")
-def test_decode_image_real_with_pillow(spark):
-    # real decode end-to-end through the same mapInPandas plumbing as
-    # the stub: a 5×3 PNG authored by Pillow, decoded by Pillow
-    import io
-
-    from PIL import Image
-
-    from technical_test_data_engineer_spark.operators.multimodal import (
-        decode_media_meta,
-    )
-
-    buf = io.BytesIO()
-    Image.new("RGB", (5, 3)).save(buf, format="PNG")
-    png = buf.getvalue()
-    fmt, w, h, n_frames, n_bytes = decode_image_real(png)
-    assert (fmt, w, h, n_frames, n_bytes) == ("png", 5, 3, 1, len(png))
-    df = spark.createDataFrame([(1, bytearray(png))], "doc_id long, media binary")
-    row = decode_media_meta(df, parse=decode_image_real).collect()[0]
-    assert (row.meta.format, row.meta.width, row.meta.height) == ("png", 5, 3)
 
 
 def test_media_ahash_deterministic_and_64bit(spark):
@@ -176,7 +136,7 @@ def test_chunk_media_boundaries_and_checksums(spark):
     df = spark.createDataFrame([(1, text)], "doc_id long, text string")
     media = df.select("doc_id", fake_media_binary("text").alias("media"))
     rows = sorted(
-        chunk_media(media, chunk_size=256).collect(),
+        chunk_media(media).collect(),
         key=lambda r: r["chunk_idx"],
     )
     assert [(r["chunk_idx"], r["chunk_len"]) for r in rows] == [

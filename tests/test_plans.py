@@ -220,7 +220,7 @@ def test_tfidf_neighbors_df_side_broadcast(spark, sf_dir):
 
     plan = _explain(
         TX.tfidf_cosine_neighbors(
-            _docs(spark, sf_dir), "doc_id", "text", k=3, max_df_frac=0.2
+            _docs(spark, sf_dir), k=3, max_df_frac=0.2
         )
     )
     assert "BroadcastHashJoin" in plan, plan

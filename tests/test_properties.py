@@ -182,7 +182,7 @@ def test_repeated_kgram_spans_matches_reference(spark, docs):
     df = spark.createDataFrame(rows, "doc_id long, text string")
     got = {
         (r.doc_id, r.span_start, r.span_end)
-        for r in repeated_kgram_spans(df, k=k, min_count=2).collect()
+        for r in repeated_kgram_spans(df, k=k).collect()
     }
 
     # reference: count grams, mark repeated positions, merge islands.
@@ -426,11 +426,11 @@ def test_rrf_fuse_is_list_order_invariant_and_matches_reference(
     dfb = spark.createDataFrame(rb, "query_id long, cand_id long, rank int")
     got = {
         (r["query_id"], r["cand_id"]): r["rrf_score"]
-        for r in rrf_fuse([dfa, dfb], k0=60, k=100).collect()
+        for r in rrf_fuse([dfa, dfb], k=100).collect()
     }
     flipped = {
         (r["query_id"], r["cand_id"]): r["rrf_score"]
-        for r in rrf_fuse([dfb, dfa], k0=60, k=100).collect()
+        for r in rrf_fuse([dfb, dfa], k=100).collect()
     }
     assert set(got) == set(flipped)
     for k in got:

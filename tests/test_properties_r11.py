@@ -178,7 +178,7 @@ def test_token_chunks_cover_exactly(spark, n_tokens, chunk, stride):
     got = {
         r.doc_id: r.chunks
         for r in df.select(
-            "doc_id", token_chunks("text", chunk, stride).alias("chunks")
+            "doc_id", token_chunks(chunk, stride).alias("chunks")
         ).collect()
     }
     for doc_id, text in rows:

@@ -106,33 +106,6 @@ def test_publish_if_clean_blocks_and_publishes(spark, tmp_path):
     assert read_published(spark, root, "t").count() == 2
 
 
-def test_observed_write_single_scan_metrics(spark, tmp_path):
-    """Observation metrics ride the write job itself — values match a
-    direct aggregate, and no second scan happens (the metric is
-    collected by the listener, not a query)."""
-    from technical_test_data_engineer_spark.operators.quality import (
-        observed_write,
-    )
-
-    df = spark.createDataFrame(
-        [(1, 5.0), (2, None), (3, 7.5)], "k long, v double"
-    )
-    path = str(tmp_path / "out")
-    got = observed_write(
-        df,
-        lambda d: d.write.mode("overwrite").parquet(path),
-        {
-            "n_rows": F.count(F.lit(1)),
-            "v_nulls": F.sum(F.col("v").isNull().cast("long")),
-            "v_sum": F.sum("v"),
-        },
-    )
-    assert got["n_rows"] == 3
-    assert got["v_nulls"] == 1
-    assert got["v_sum"] == 12.5
-    assert spark.read.parquet(path).count() == 3
-
-
 def test_audited_publish_sink_gates_bad_microbatches(spark, tmp_path):
     """Streaming circuit breaker: a micro-batch violating its audit is
     rejected (recorded, snapshot pointer untouched); clean batches

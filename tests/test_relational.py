@@ -35,48 +35,8 @@ def test_point_in_interval_inclusive_both_ends(spark):
     df = R.fill_interval_nulls(_arretes(spark), "debut", "fin")
     df = df.withColumn("debut", F.to_date("debut")).withColumn("fin", F.to_date("fin"))
     # probe exactly on the 1-day interval's single day
-    hit = R.point_in_interval(df, dt.date(2023, 8, 15), "debut", "fin")
+    hit = R.point_in_interval(df, dt.date(2023, 8, 15))
     ids = {r.id_zone for r in hit.collect()}
     assert 4 in ids          # boundary day matches (inclusive)
     assert 3 in ids          # open-ended interval, now capped, contains it
     assert 1 not in ids
-
-
-def test_equality_and_in_list(spark):
-    df = _arretes(spark)
-    assert R.equality_filter(df, "numero_niveau", 3).count() == 1
-    assert R.in_list(df, "numero_niveau", [1, 2]).count() == 2
-
-
-def test_coalesce_after_outer_join(spark):
-    left = spark.createDataFrame([("75",), ("13",)], "code string")
-    right = spark.createDataFrame([("75", 4)], "code string, niveau int")
-    joined = left.join(right, "code", "left")
-    fixed = R.coalesce_after_outer_join(joined, "niveau", 0)
-    got = {r.code: r.niveau for r in fixed.collect()}
-    assert got == {"75": 4, "13": 0}
-
-
-def test_split_by_cast_clean_vs_quarantine(spark):
-    from technical_test_data_engineer_spark.operators.relational import (
-        split_by_cast,
-    )
-
-    staged = spark.createDataFrame(
-        [
-            ("1", "12.5", "2023-01-05"),
-            ("2", "12,5", "2023-01-06"),     # bad double
-            ("x", "3.0", "not-a-date"),      # bad long AND bad date
-            ("4", None, "2023-01-07"),       # NULL is not a cast failure
-        ],
-        "id string, amount string, day string",
-    )
-    clean, quarantine = split_by_cast(
-        staged, {"id": "long", "amount": "double", "day": "date"}
-    )
-    assert dict(clean.dtypes) == {"id": "bigint", "amount": "double", "day": "date"}
-    assert sorted(r.id for r in clean.collect()) == [1, 4]
-    q = {r.id: sorted(r._bad_cols) for r in quarantine.collect()}
-    assert q == {"2": ["amount"], "x": ["day", "id"]}
-    # quarantine keeps original strings for repair
-    assert dict(quarantine.dtypes)["amount"] == "string"

@@ -1,40 +1,20 @@
-"""R1/R2 date-spine and F1-F4 scalar semantics (inclusive arithmetic,
-literal typo repair) — the edge cases SURVEY.md §7 ranks hardest — and
-the one home of the exact-sum convention in ``functions/scalars.py`` and
-of driver-side fetches in ``operators/bounded.py``."""
+"""F1-F3 scalar semantics (inclusive arithmetic, literal typo repair) —
+edge cases SURVEY.md §7 ranks hardest — the one home of the exact-sum
+convention in ``functions/scalars.py`` and of driver-side fetches in
+``operators/bounded.py``, and the guards that operators keep only the
+functions and parameters the engine calls."""
 
 from __future__ import annotations
 
 import ast
-import datetime as dt
 from pathlib import Path
-
-from pyspark.sql import functions as F
 
 import technical_test_data_engineer_spark
 from technical_test_data_engineer_spark.functions.scalars import (
-    display_date,
     inclusive_duration_days,
     parse_iso_date,
     repair_year_typo,
 )
-from technical_test_data_engineer_spark.operators.reshape import (
-    date_array,
-    date_spine,
-)
-
-
-def test_date_array_single_day(spark):
-    df = spark.createDataFrame([("2023-08-15", "2023-08-15")], "d string, f string")
-    out = date_array(df, "d", "f").collect()[0]
-    assert out.days_list == [dt.date(2023, 8, 15)]
-
-
-def test_date_spine_inclusive(spark):
-    df = spark.createDataFrame([(1, "2023-01-01", "2023-01-03")],
-                               "id int, d string, f string")
-    days = [r.day for r in date_spine(df, "d", "f").orderBy("day").collect()]
-    assert days == [dt.date(2023, 1, 1), dt.date(2023, 1, 2), dt.date(2023, 1, 3)]
 
 
 def test_repair_year_typo_literal_not_regex(spark):
@@ -49,12 +29,6 @@ def test_inclusive_duration(spark):
     df = df.select(parse_iso_date("d").alias("d"), parse_iso_date("f").alias("f"))
     out = [r[0] for r in df.select(inclusive_duration_days("d", "f")).collect()]
     assert out == [1, 31]  # same-day decree lasts 1 day, not 0
-
-
-def test_display_date(spark):
-    df = spark.createDataFrame([("2023-08-15",)], "d string")
-    out = df.select(display_date(F.to_date("d")).alias("x")).collect()[0].x
-    assert out == "15/08/2023"
 
 
 _PKG = Path(technical_test_data_engineer_spark.__file__).parent
@@ -142,96 +116,162 @@ def test_driver_fetches_go_through_collect_bounded():
     assert not found, "\n".join(found)
 
 
-def _foreign_names(tree: ast.Module) -> set[str]:
-    """Names a file binds by importing from outside the package (``pq``
-    in ``import pyarrow.parquet as pq``)."""
-    out: set[str] = set()
+def _package_bindings(tree: ast.Module) -> tuple[set[str], set[str]]:
+    """The names a file binds from the package: ``(functions, modules)``.
+
+    ``functions`` holds the names it imports from a package module
+    (``from ...operators.dedup import minhash_signature``) or defines at
+    top level; ``modules`` holds the names bound to a package import
+    (``TX`` in ``from ...operators import text as TX``). A relative
+    import is a package import. Which of the two an imported name is,
+    the scan cannot tell, so an imported name is in both."""
+    functions = {
+        n.name
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    modules: set[str] = set()
     for node in ast.walk(tree):
         if isinstance(node, ast.Import):
-            out |= {
+            modules |= {
                 a.asname or a.name.split(".")[0]
                 for a in node.names
-                if not a.name.startswith(_PKG.name)
+                if a.name.startswith(_PKG.name)
             }
-        elif isinstance(node, ast.ImportFrom) and node.level == 0:
-            if not node.module.startswith(_PKG.name):
-                out |= {a.asname or a.name for a in node.names}
-    return out
+        elif isinstance(node, ast.ImportFrom) and (
+            node.level or node.module.startswith(_PKG.name)
+        ):
+            names = {a.asname or a.name for a in node.names}
+            functions |= names
+            modules |= names
+    return functions, modules
 
 
-def _call_name(call: ast.Call, foreign: set[str]) -> str | None:
-    """The called function's bare name, or None for a call through a
-    name from ``foreign``, which is never a package function."""
-    f = call.func
-    if isinstance(f, ast.Name):
-        return None if f.id in foreign else f.id
-    if isinstance(f, ast.Attribute):
-        if isinstance(f.value, ast.Name) and f.value.id in foreign:
-            return None
-        return f.attr
+def _root_name(node: ast.expr) -> str | None:
+    """The name an attribute chain starts from (``TX`` in ``TX.a.b``)."""
+    while isinstance(node, ast.Attribute):
+        node = node.value
+    return node.id if isinstance(node, ast.Name) else None
+
+
+def _package_name(node: ast.expr, bindings: tuple[set[str], set[str]]) -> str | None:
+    """The package function ``node`` may name, or None: a bare name
+    counts only if the file imports it from the package or defines it at
+    top level, an attribute only through a name bound to a package
+    import. So ``F.count_distinct``, ``df.where(...)`` and a local
+    variable never name a package function."""
+    functions, modules = bindings
+    if isinstance(node, ast.Name):
+        return node.id if node.id in functions else None
+    if isinstance(node, ast.Attribute) and _root_name(node.value) in modules:
+        return node.attr
     return None
 
 
-def _sets(call: ast.Call, name: str, position: int | None) -> bool:
+def _sets(call: ast.Call, name: str, position: int | None, default: ast.expr) -> bool:
     """Whether ``call`` may pass parameter ``name`` (at ``position`` when
-    positional): by keyword, by position, or through a ``*``/``**``
-    splat, which the scan cannot see into."""
-    if any(k.arg in (name, None) for k in call.keywords):
-        return True
+    positional) a value other than its ``default`` expression: by keyword,
+    by position, or through a ``*``/``**`` splat, which the scan cannot
+    see into. Passing the default's own expression (``k0=60``,
+    ``num_hashes=NUM_HASHES``) does not set the parameter."""
+    same = ast.dump(default)
+    for k in call.keywords:
+        if k.arg is None or (k.arg == name and ast.dump(k.value) != same):
+            return True
     if position is None:
         return False
-    return len(call.args) > position or any(
-        isinstance(a, ast.Starred) for a in call.args
-    )
+    if any(isinstance(a, ast.Starred) for a in call.args[: position + 1]):
+        return True
+    return len(call.args) > position and ast.dump(call.args[position]) != same
+
+
+_ROOT = _PKG.parent
+_ENGINE = [
+    *_PKG.rglob("*.py"),
+    *_ROOT.glob("*.py"),
+    *(_ROOT / "perfbench").glob("*.py"),
+]
+
+
+def _public_functions(layers: tuple[str, ...]):
+    """``(path, FunctionDef)`` for every public top-level function in the
+    package ``layers``."""
+    for layer in layers:
+        for path in sorted((_PKG / layer).glob("*.py")):
+            for fn in ast.parse(path.read_text()).body:
+                if isinstance(fn, ast.FunctionDef) and not fn.name.startswith("_"):
+                    yield path, fn
 
 
 def test_every_defaulted_parameter_has_a_caller():
     """Operators keep only the parameters a caller sets: every defaulted
     parameter of a public function in ``operators/``, ``functions/``,
-    ``sources/`` and ``streaming/`` is passed, by keyword or position,
-    by some call in the package, the root scripts, ``perfbench/`` or
-    ``tests/``. Calls match by bare function name, except calls through
-    a name imported from outside the package (``pq.write_table``), so a
-    same-named method call still counts as a caller. A value no caller
-    changes is a constant, not an option."""
-    root = _PKG.parent
-    sources = [
-        *_PKG.rglob("*.py"),
-        *root.glob("*.py"),
-        *(root / "perfbench").glob("*.py"),
-        *(root / "tests").rglob("*.py"),
-    ]
+    ``sources/`` and ``streaming/`` is passed a value other than its
+    default, by keyword or position, by some call in the package, the
+    root scripts, ``perfbench/`` or ``tests/``. A call counts when it
+    names a package function (``_package_name``), so neither
+    ``pq.write_table`` nor a same-named method call (``df.join``) is a
+    caller. A value no caller changes is a constant, not an option."""
     calls: dict[str, list[ast.Call]] = {}
-    for path in sources:
+    for path in [*_ENGINE, *(_ROOT / "tests").rglob("*.py")]:
         tree = ast.parse(path.read_text())
-        foreign = _foreign_names(tree)
+        bindings = _package_bindings(tree)
         for node in ast.walk(tree):
-            if isinstance(node, ast.Call) and _call_name(node, foreign):
-                calls.setdefault(_call_name(node, foreign), []).append(node)
+            if isinstance(node, ast.Call) and (
+                name := _package_name(node.func, bindings)
+            ):
+                calls.setdefault(name, []).append(node)
     found = []
-    for layer in ("operators", "functions", "sources", "streaming"):
-        for path in sorted((_PKG / layer).glob("*.py")):
-            for fn in ast.parse(path.read_text()).body:
-                if not isinstance(fn, ast.FunctionDef) or fn.name.startswith("_"):
-                    continue
-                a = fn.args
-                positional = a.posonlyargs + a.args
-                first = len(positional) - len(a.defaults)
-                params = [
-                    (p, i) for i, p in enumerate(positional) if i >= first
-                ] + [
-                    (p, None)
-                    for p, d in zip(a.kwonlyargs, a.kw_defaults)
-                    if d is not None
-                ]
-                for p, i in params:
-                    if not any(
-                        _sets(c, p.arg, i) for c in calls.get(fn.name, [])
-                    ):
-                        found.append(
-                            f"{path.relative_to(_PKG)}:{p.lineno} "
-                            f"{fn.name}({p.arg})"
-                        )
+    for path, fn in _public_functions(
+        ("operators", "functions", "sources", "streaming")
+    ):
+        a = fn.args
+        positional = a.posonlyargs + a.args
+        first = len(positional) - len(a.defaults)
+        params = [
+            (p, i, d) for i, (p, d) in enumerate(zip(positional[first:], a.defaults), first)
+        ] + [
+            (p, None, d)
+            for p, d in zip(a.kwonlyargs, a.kw_defaults)
+            if d is not None
+        ]
+        for p, i, d in params:
+            if not any(_sets(c, p.arg, i, d) for c in calls.get(fn.name, [])):
+                found.append(
+                    f"{path.relative_to(_PKG)}:{p.lineno} {fn.name}({p.arg})"
+                )
     assert not found, f"{len(found)} unset defaulted parameters:\n" + "\n".join(
+        found
+    )
+
+
+def test_every_public_operator_has_a_reference():
+    """The engine keeps only the operators it calls: every public
+    function in ``operators/`` and ``functions/`` is loaded by name,
+    outside its own body, somewhere in the package, the root scripts or
+    ``perfbench/``. A name counts by ``_package_name``; ``tests/`` and an
+    ``__init__`` re-export do not count. A function only tests reach is
+    deleted with its tests."""
+    loaded: set[str] = set()
+    for path in _ENGINE:
+        tree = ast.parse(path.read_text())
+        bindings = _package_bindings(tree)
+        own = {
+            id(n): fn.name
+            for fn in tree.body
+            if isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef))
+            for n in ast.walk(fn)
+        }
+        for node in ast.walk(tree):
+            if isinstance(getattr(node, "ctx", None), ast.Load):
+                name = _package_name(node, bindings)
+                if name and own.get(id(node)) != name:
+                    loaded.add(name)
+    found = [
+        f"{path.relative_to(_PKG)}:{fn.lineno} {fn.name}"
+        for path, fn in _public_functions(("operators", "functions"))
+        if fn.name not in loaded
+    ]
+    assert not found, f"{len(found)} operators only tests reach:\n" + "\n".join(
         found
     )

@@ -176,7 +176,7 @@ def fixture_dir(tmp_path_factory, sf_dir):
 
 
 def _window_top(svc, day, nations=None):
-    active = point_in_interval(svc.prepare(), day, "debut", "fin")
+    active = point_in_interval(svc.prepare(), day)
     if nations:
         active = active.filter(F.col("n_name").isin(nations))
     return top1_per_group(
@@ -358,7 +358,7 @@ def test_null_priority_tops_its_customer(spark, fixture_dir):
     assert hist.get(None) == 1
     cust = svc.prepare().filter(F.col("o_orderkey") == NULL_ORDER_KEY).first()
     ranked = (
-        point_in_interval(svc.prepare(), DAY, "debut", "fin")
+        point_in_interval(svc.prepare(), DAY)
         .filter(F.col("o_custkey") == cust["o_custkey"])
         .filter(F.col("o_orderpriority").isNotNull())
         .count()

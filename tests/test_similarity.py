@@ -164,7 +164,7 @@ def test_pq_encoding_reconstruction_improves_with_codes(spark, sf_dir):
     import numpy as np
 
     from technical_test_data_engineer_spark.operators.similarity import (
-        pq_encode_udf,
+        ivfpq_encode_udf,
         train_pq_codebooks,
     )
 
@@ -173,9 +173,13 @@ def test_pq_encoding_reconstruction_improves_with_codes(spark, sf_dir):
 
     def mse(n_codes):
         books = train_pq_codebooks(emb, m=8, n_codes=n_codes)
-        enc = pq_encode_udf(books)
+        # plain PQ is IVF-PQ over one all-zero cell: the residual is x
+        enc = ivfpq_encode_udf(np.zeros((1, X.shape[1])), books)
         codes = np.array(
-            [list(r[0]) for r in emb.select(enc(F.col("embedding"))).collect()]
+            [
+                list(r[0])
+                for r in emb.select(enc(F.col("embedding"))["codes"]).collect()
+            ]
         )
         sub = X.shape[1] // 8
         rec = np.concatenate(
@@ -391,7 +395,7 @@ def test_rrf_fuse_hand_checked(spark):
     )
     out = {
         (r["query_id"], r["cand_id"]): (r["rrf_score"], r["fused_rank"])
-        for r in rrf_fuse([sparse, dense], k0=60, k=5).collect()
+        for r in rrf_fuse([sparse, dense], k=5).collect()
     }
     # cand 11: in both lists (1/62 + 1/61) beats cand 10 (1/61 only)
     # and cand 12 (1/62 only); cand 20 fused from both rank-1 lists

@@ -223,7 +223,7 @@ def test_zorder_write_narrows_file_stat_ranges(spark, tmp_path):
         "id AS payload",
     )
     zpath = str(tmp_path / "zordered")
-    write_zordered(df, zpath, ["k1", "k2"], n_files=16)
+    write_zordered(df, zpath, ["k1", "k2"])
 
     def max_span(path, col):
         spans = []

@@ -67,10 +67,10 @@ def test_sliding_stream_equals_batch(spark, events_dir, events_batch):
     stream = read_events_stream(spark, events_dir)
     got = _run_stream(
         spark,
-        sliding_rollup(stream, window="1 hour", slide="15 minutes", watermark="1 hour"),
+        sliding_rollup(stream, watermark="1 hour"),
         "t_sliding",
     )
-    want = sliding_rollup(events_batch, window="1 hour", slide="15 minutes")
+    want = sliding_rollup(events_batch)
     assert _rows(got, "window_start", "event_type") == _rows(
         want, "window_start", "event_type"
     )
@@ -80,10 +80,10 @@ def test_session_stream_equals_batch(spark, events_dir, events_batch):
     stream = read_events_stream(spark, events_dir)
     got = _run_stream(
         spark,
-        session_rollup(stream, gap="30 minutes", watermark="1 hour"),
+        session_rollup(stream, watermark="1 hour"),
         "t_sessions",
     )
-    want = session_rollup(events_batch, gap="30 minutes")
+    want = session_rollup(events_batch)
     assert _rows(got, "user_id", "session_start") == _rows(
         want, "user_id", "session_start"
     )
@@ -208,7 +208,7 @@ def test_stream_curation_filter_equals_batch(spark, sf_dir, tmp_path):
     batch = spark.read.parquet(docs_dir)
 
     def curate(df):
-        toks = TX.tokens("text")
+        toks = TX.tokens()
         n_tok = F.size(toks)
         avg_len = F.length("text").cast("double") / n_tok
         dr = F.size(F.array_distinct(toks)).cast("double") / n_tok
@@ -546,12 +546,12 @@ def test_source_mixture_rollup_stream_equals_batch(spark, sf_dir, tmp_path):
     stream = spark.readStream.schema(batch.schema).parquet(docs_dir)
     got = _rows(
         _run_stream(
-            spark, source_mixture_rollup(stream, batch_size=200), "mix_stream"
+            spark, source_mixture_rollup(stream), "mix_stream"
         ),
         "batch_id",
         "source",
     )
-    want = _rows(source_mixture_rollup(batch, batch_size=200), "batch_id", "source")
+    want = _rows(source_mixture_rollup(batch), "batch_id", "source")
     assert got == want and len(want) > 0
 
 
@@ -578,11 +578,11 @@ def test_source_mixture_rollup_incremental_microbatches(spark, sf_dir, tmp_path)
     got = _rows(
         _run_stream(
             spark,
-            source_mixture_rollup(stream, batch_size=200),
+            source_mixture_rollup(stream),
             "mix_incr",
         ),
         "batch_id",
         "source",
     )
-    want = _rows(source_mixture_rollup(batch, batch_size=200), "batch_id", "source")
+    want = _rows(source_mixture_rollup(batch), "batch_id", "source")
     assert got == want and len(want) > 0

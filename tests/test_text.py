@@ -18,8 +18,8 @@ def _docs(spark):
 def test_token_counts(spark):
     df = _docs(spark).select(
         "doc_id",
-        TX.token_count("text").alias("n"),
-        TX.unique_token_count("text").alias("u"),
+        TX.token_count().alias("n"),
+        TX.unique_token_count().alias("u"),
     )
     got = {r.doc_id: (r.n, r.u) for r in df.collect()}
     assert got == {1: (3, 3), 2: (3, 2), 3: (1, 1)}
@@ -27,7 +27,7 @@ def test_token_counts(spark):
 
 def test_bpe_ish_tokens_strip_punct(spark):
     df = spark.createDataFrame([("hello, world! it's 42",)], "text string")
-    toks = df.select(TX.bpe_ish_tokens("text").alias("t")).collect()[0].t
+    toks = df.select(TX.bpe_ish_tokens().alias("t")).collect()[0].t
     assert toks == ["hello", "world", "it's", "42"]
 
 
@@ -35,7 +35,7 @@ def test_predicted_language_argmax_and_tiebreak(spark):
     # doc 1 hits 'query' (en marker); doc 2 hits fr markers twice;
     # doc 3 hits nothing → all-zero tie → alphabetical first = 'de'
     df = _docs(spark).select(
-        "doc_id", TX.predicted_language(TX.tokens("text")).alias("p")
+        "doc_id", TX.predicted_language(TX.tokens()).alias("p")
     )
     got = {r.doc_id: r.p for r in df.collect()}
     assert got[1] == "en"
@@ -45,7 +45,7 @@ def test_predicted_language_argmax_and_tiebreak(spark):
 
 def test_quality_ratios(spark):
     df = spark.createDataFrame([(1, "the the data data")], "doc_id long, text string")
-    row = df.select(*TX.quality_columns("text")).collect()[0]
+    row = df.select(*TX.quality_columns()).collect()[0]
     assert row.n_tokens == 4
     assert row.stopword_ratio == 0.5   # 'the' twice of 4
     assert row.distinct_ratio == 0.5   # {the, data} of 4
@@ -67,14 +67,14 @@ def test_winnow_shared_run_guarantee(spark):
     b = "z1 " + shared + " w1 w2 w3"
     df = spark.createDataFrame([(0, a), (1, b)], "doc_id long, text string")
     rows = {r["doc_id"]: set(r["fp"]) for r in df.select(
-        "doc_id", winnow_fingerprints("text", k=5, w=4).alias("fp")).collect()}
+        "doc_id", winnow_fingerprints().alias("fp")).collect()}
     assert rows[0] & rows[1], "shared 8-token run produced no common fingerprint"
 
 
 def test_winnow_density_and_determinism(spark):
     text = " ".join(f"t{i % 7}" for i in range(60))
     df = spark.createDataFrame([(0, text)], "doc_id long, text string")
-    fp = lambda: df.select(winnow_fingerprints("text").alias("f")).collect()[0]["f"]
+    fp = lambda: df.select(winnow_fingerprints().alias("f")).collect()[0]["f"]
     f1, f2 = fp(), fp()
     assert f1 == f2
     n_shingles = 60 - 4
@@ -118,11 +118,11 @@ def test_quantile_sketch_tolerance(spark, sf_dir):
 
 def test_token_ngrams_keeps_repeats(spark):
     df = spark.createDataFrame([("a b a b",)], "text string")
-    grams = df.select(TX.token_ngrams("text", 2).alias("g")).collect()[0].g
+    grams = df.select(TX.token_ngrams(2).alias("g")).collect()[0].g
     # unlike word_shingles (distinct), counting form keeps the repeat
     assert grams == ["a b", "b a", "a b"]
     short = spark.createDataFrame([("solo",)], "text string")
-    assert short.select(TX.token_ngrams("text", 2).alias("g")).collect()[0].g == [
+    assert short.select(TX.token_ngrams(2).alias("g")).collect()[0].g == [
         "solo"
     ]
 
@@ -142,7 +142,7 @@ def test_pattern_count_email_url_digits(spark):
 
 def test_charclass_columns(spark):
     df = spark.createDataFrame([("abc 123 a-b xyz",)], "text string")
-    got = df.select(*TX.charclass_columns("text")).collect()[0]
+    got = df.select(TX.charclass_struct().alias("c")).collect()[0].c
     assert got.n_tokens == 4
     assert got.n_digit_tokens == 1
     assert got.n_symbol_tokens == 1  # only 'a-b' has a symbol
@@ -241,7 +241,7 @@ def test_corpus_mix_sample_deterministic_and_bounded(spark):
         + [("fr", f"texte {i}") for i in range(50)],
         "lang string, text string",
     )
-    kept1 = corpus_mix_sample(df, {"en": 0.5, "fr": 0.5}, "lang", "text")
+    kept1 = corpus_mix_sample(df, {"en": 0.5, "fr": 0.5})
     a = sorted(r["text"] for r in kept1.collect())
     b = sorted(r["text"] for r in kept1.collect())
     assert a == b  # hash-deterministic, no rand()
@@ -344,7 +344,7 @@ def test_adaptive_buckets_population_stays_constant():
     # B >= 16 (floor division); include non-divisible n so the bound
     # is the real invariant, not a sampling artifact
     for n in (4_096, 65_536, 1_048_576, 16_777_216, 1_151, 1_000_001):
-        b = TX.adaptive_buckets(n, target_bucket=64, floor=16)
+        b = TX.adaptive_buckets(n)
         pop = n / b
         assert 32 <= pop <= 68, (n, b, pop)       # ~target, never 2x over
     # monotone: more nodes never means fewer buckets
@@ -363,7 +363,7 @@ def test_head_fingerprint_clusters_shared_heads(spark):
     )
     out = df.select(
         "doc_id",
-        TX.head_fingerprint("text").alias("hf"),
+        TX.head_fingerprint().alias("hf"),
         TX.fingerprint("text").alias("f"),
     ).collect()
     by_id = {r.doc_id: r for r in out}

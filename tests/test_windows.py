@@ -5,11 +5,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from technical_test_data_engineer_spark.operators.windows import (
-    top1_per_group,
-    topk_per_group,
-    running_sum,
-)
+from technical_test_data_engineer_spark.operators.windows import top1_per_group
 
 
 def test_top1_tiebreak_deterministic(spark):
@@ -30,19 +26,6 @@ def test_top1_repartition_invariant(spark):
             df.repartition(nparts), ["g"], [F.desc("lvl"), F.asc("id")]
         )
         assert {(r.g, r.id) for r in top.collect()} == expect
-
-
-def test_topk(spark):
-    df = spark.createDataFrame([("a", i) for i in range(10)], "g string, v int")
-    top3 = topk_per_group(df, ["g"], [F.desc("v")], 3)
-    assert sorted(r.v for r in top3.collect()) == [7, 8, 9]
-
-
-def test_running_sum(spark):
-    df = spark.createDataFrame([("a", 1, 10), ("a", 2, 5), ("a", 3, 1)],
-                               "g string, t int, v int")
-    out = running_sum(df, "v", ["g"], [F.asc("t")], "cum")
-    assert [r.cum for r in out.orderBy("t").collect()] == [10, 15, 16]
 
 
 def test_grouped_ewma_hand_values_and_partition_invariance(spark):
